@@ -320,18 +320,6 @@ class VersionedStore(root: String) {
     * shape where adaptive replanning is pure scheduler overhead. */
   private val TinyMergeRows = 8000000L
 
-  /** Dev-only phase timer (`GRAFT_STORE_PROBE=1`): prints commit-path
-    * phase wall times. Zero-cost when off. */
-  private val probeEnabled = sys.env.contains("GRAFT_STORE_PROBE")
-  private def phase[A](label: String)(f: => A): A =
-    if (!probeEnabled) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[store] $label%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
-    }
-
   /** Write `df`'s rows as new immutable data files (names unique per
     * writer token — version-independent, so a rebased commit reuses them
     * unchanged); returns the new file names. The parquet job writes into
@@ -419,9 +407,9 @@ class VersionedStore(root: String) {
 
   /** Stage `df`'s rows and compute their per-file stats entries. */
   private def stageWithStats(df: DataFrame, name: String): Seq[FileEntry] = {
-    val staged = phase("  stage write")(stage(df, name))
+    val staged = stage(df, name)
     val schema = nullable(df.schema)
-    val stats = phase("  footer stats")(collectStats(df.sparkSession, name, schema, staged))
+    val stats = collectStats(df.sparkSession, name, schema, staged)
     staged.map(f => FileEntry(f, stats.getOrElse(f, Map.empty)))
   }
 
@@ -677,7 +665,7 @@ class VersionedStore(root: String) {
           case Some((w, b)) if txns(name, cur).getOrElse(w, -1L) >= b => return cur
           case _ =>
         }
-        val (tSchema, entries) = phase("manifest read")(manifestWithStats(name, cur))
+        val (tSchema, entries) = manifestWithStats(name, cur)
         // the source feeds TWO jobs (hit semi-join, merge write): pin it
         // ONCE. localCheckpoint, not persist — the pinned RDD makes every
         // downstream plan a trivial scan (r08: persist kept the full
@@ -714,7 +702,7 @@ class VersionedStore(root: String) {
             org.apache.spark.sql.functions.count(
               org.apache.spark.sql.functions.lit(1)).as("__nrows"))
         }
-        val source = phase("src checkpoint")(observed.localCheckpoint())
+        val source = observed.localCheckpoint()
         val metrics = obs.get
         val srcRows = metrics("__nrows").asInstanceOf[Long]
         val srcRange: Option[(String, String)] = keyField.flatMap { _ =>
@@ -769,7 +757,7 @@ class VersionedStore(root: String) {
               org.apache.spark.sql.functions.broadcast(srcKeys)
             else srcKeys
           import spark.implicits._
-          val hitNames: Set[String] = phase("hit detect")(
+          val hitNames: Set[String] =
             if (candidates.isEmpty) Set.empty
             else readEntries(spark, name, tSchema, candidates, withMeta = true)
               .select(keys.map(col) :+ col("__file"): _*)
@@ -783,7 +771,7 @@ class VersionedStore(root: String) {
               // the same driver footprint as a Delta log replay), and the
               // job has no shuffle stage at all on the broadcast path
               .mapPartitions(it => it.toSet.iterator)
-              .collect().toSet)
+              .collect().toSet
           val hit = candidates.filter(e => hitNames.contains(e.file))
           val hitSet = hit.map(_.file).toSet
           val rewriteTarget =
@@ -807,37 +795,30 @@ class VersionedStore(root: String) {
           // whole merge provably fits a handful of tasks, AQE is pure
           // overhead here (each exchange becomes its own stage-job plus
           // a replanning round-trip — the graph-superstep measurement),
-          // so it's disabled for THIS action and the reducer count is
-          // sized at ~2M rows/task, which also keeps the staged file
-          // count (and so manifest size and footer reads) at the few
-          // files the data warrants instead of shuffle.partitions many.
+          // so THIS action runs in the superstep scope at ~2M rows/task,
+          // which also keeps the staged file count (and so manifest size
+          // and footer reads) at the few files the data warrants instead
+          // of shuffle.partitions many.
           // A merge beyond the gate keeps AQE — skew-split and runtime
           // coalescing matter exactly there, and the gate uses measured
           // sizes, never guesses.
           val hitRowsOpt = hit.foldLeft(Option(0L)) { (acc, e) =>
             for (a <- acc; r <- e.stats.get("__rows")) yield a + r._1.toLong }
-          val tinyMergeParts = hitRowsOpt
+          val tinyMergeRows = hitRowsOpt
             .filter(_ => srcRows <= BroadcastKeyRows)
             .map(_ + srcRows).filter(_ <= TinyMergeRows)
-            .map(n => math.max(1L, n / 2000000L + 1L).toInt)
-          // conf override runs under ConfScope's lock: two CONCURRENT
-          // tiny merges on one session would otherwise interleave their
-          // capture/restore and leave the session stuck on the override
-          // (seen once in the parallel-writers spec).
-          val staged = tinyMergeParts match {
-            case None => phase("merge stage")(stageWithStats(merged, name))
-            case Some(parts) =>
-              ConfScope.withConf(spark, Seq(
-                "spark.sql.adaptive.enabled" -> "false",
-                "spark.sql.shuffle.partitions" -> parts.toString)) {
-                phase("merge stage")(stageWithStats(merged, name))
+          val staged = tinyMergeRows match {
+            case None => stageWithStats(merged, name)
+            case Some(n) =>
+              ConfScope.superstep(spark, rows = n, rowsPerTask = 2000000L) { _ =>
+                stageWithStats(merged, name)
               }
           }
           // CHECK constraints vet the staged merge output (carried rows
           // were vetted when they entered or by addCheck's declaration
           // scan, so only churn-sized files pay the pass); a violation
           // deletes the staged files and refuses — table untouched.
-          phase("validate")(validateStaged(spark, name, outSchema, staged.map(_.file)))
+          validateStaged(spark, name, outSchema, staged.map(_.file))
           beforeCommitHook()
           // optimistic commit loop: each rebase re-targets the SAME staged
           // files onto the new head — zero recompute — after proving the

@@ -104,14 +104,11 @@ object Bpe {
     // the ONE corpus-sized pass (dictionary aggregation + top-K) pins
     // HERE under the session conf — AQE stays available to it; the 8
     // learn rounds below (16 jobs: argmax collect + checkpoint each)
-    // touch only the HeadWords-row dictionary, so they run AQE-off on
-    // single-partition shuffles (the graph_hits superstep recipe: a
-    // fixed-shape model-sized loop pays 2-3 stage-jobs + a replanning
-    // round-trip per round under AQE for nothing). Conf restored before
-    // returning.
+    // touch only the HeadWords-row dictionary, so they run in the
+    // superstep scope at width 1.
     var words = dictionary(s, dir).localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    Superstep.scoped(s) {
+    graft.engine.ConfScope.superstep(s) { _ =>
       for (r <- 1 to Rounds) {
         val best = pairCounts(words)
           .orderBy(desc("cnt"), asc("x"), asc("y")).limit(1).collect()

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * unscoped ones do.
   *
   * Serialized through [[graft.engine.ConfScope]] like every other
-  * session-conf override (the monitor is reentrant, so bodies may nest
-  * Superstep scopes).
+  * session-conf override, for the WHOLE query execution (the monitor is
+  * reentrant, so bodies may nest `ConfScope.superstep` scopes).
   */
 object Codegen {
   def materialized(s: SparkSession)(body: => DataFrame): DataFrame =

@@ -59,35 +59,17 @@ object Wave47 {
       .observe(obsE, count(lit(1)).as("ne"))
       .localCheckpoint()
     val ne = obsE.get("ne").asInstanceOf[Long]
-    // AQE off for the SUPERSTEP BUILD only (restored before returning;
-    // the caller's action runs under its own conf): each of the 16
-    // half-step pins is a tiny fixed-shape job, and AQE turns every one
-    // into 2-3 stage-jobs plus a re-planning round-trip — measured
-    // ~0.15 s/half-step of pure driver overhead at sf0.1. Nothing past
-    // this point needs runtime re-planning: joins are hint-pinned
-    // SHUFFLE_HASH, partitioning is explicit, and the edge aggregate is
-    // already pinned above.
-    // baseline width read INSIDE the scope lock (r10 ADVICE: outside it,
-    // a racing scope's transient override could be captured as the
-    // session value and pin the whole loop to it)
-    graft.engine.ConfScope.withConfFrom(s, Seq("spark.sql.shuffle.partitions"))(
-      _ => Seq("spark.sql.adaptive.enabled" -> "false")) { base =>
-      graphHitsBody(s, edges0, ne, base("spark.sql.shuffle.partitions").toLong)
+    // The 16 half-step pins are tiny fixed-shape jobs: they run in the
+    // superstep scope sized by the edge count. Nothing past this point
+    // needs runtime re-planning: joins are hint-pinned SHUFFLE_HASH,
+    // partitioning is explicit, and the edge aggregate is already
+    // pinned above.
+    graft.engine.ConfScope.superstep(s, rows = ne) { superParts =>
+      graphHitsBody(edges0, superParts)
     }
   }
 
-  private def graphHitsBody(s: SparkSession, edges0: DataFrame, ne: Long,
-      sessParts: Long): DataFrame = {
-    // superstep width ∝ edge count (~64k edges/task), never above the
-    // session's shuffle.partitions: the 16 half-step jobs each shuffle a
-    // NODE-sized vector, and running 32 half-empty tasks per stage at
-    // test scale is pure launch overhead, while at 100 TB the clamp
-    // keeps full cluster width. AQE's coalescing would do this too but
-    // pays 2-3 stage-jobs + a replanning round-trip per half-step (the
-    // reason AQE is off for the build, above).
-    val superParts = math.max(1L,
-      math.min(sessParts, ne / 65536L + 1L)).toInt
-    s.conf.set("spark.sql.shuffle.partitions", superParts.toString)
+  private def graphHitsBody(edges0: DataFrame, superParts: Int): DataFrame = {
     // lazy cache build: each layout materializes inside its first
     // half-step join job (the partitioning is plan-level, so the SHJ
     // recognizes it either way) — two fewer scheduler round-trips

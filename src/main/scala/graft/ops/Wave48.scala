@@ -36,12 +36,8 @@ object Wave48 {
     // edge aggregate — materializes HERE, under the session conf, so
     // AQE's skew mitigation stays available to it (localCheckpoint is
     // eager); its row count rides the checkpoint job as an observed
-    // metric instead of a separate count() job (the graph_hits r9
-    // recipe). Only then is AQE turned off for the fixed-shape peel
-    // loop, where each tiny round would otherwise pay 2-3 stage-jobs +
-    // a replanning round-trip; partitioning is sized to the observed
-    // edge count (~64k edges/task, clamped to session width so 100 TB
-    // keeps full cluster width). Conf restored before returning.
+    // metric instead of a separate count() job. The fixed-shape peel
+    // loop then runs in the superstep scope sized by that edge count.
     val obs0 = org.apache.spark.sql.Observation()
     val edges0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
@@ -51,13 +47,7 @@ object Wave48 {
       .observe(obs0, count(lit(1)).as("ne"))
       .localCheckpoint()
     val ne = obs0.get("ne").asInstanceOf[Long]
-    // baseline width read INSIDE the scope lock (r10 ADVICE)
-    graft.engine.ConfScope.withConfFrom(s, Seq("spark.sql.shuffle.partitions"))(
-      base => Seq(
-        "spark.sql.adaptive.enabled" -> "false",
-        "spark.sql.shuffle.partitions" ->
-          math.max(1L, math.min(base("spark.sql.shuffle.partitions").toLong,
-            ne / 65536L + 1L)).toString)) { _ =>
+    graft.engine.ConfScope.superstep(s, rows = ne) { _ =>
       graphKcoreBody(s, edges0, ne)
     }
   }

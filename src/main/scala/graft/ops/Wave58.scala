@@ -149,21 +149,13 @@ object Wave58 {
       .localCheckpoint()
     // Every data-sized (and triangular) pass is pinned above under the
     // session conf; the Bellman loop below is fixed-shape over the
-    // pinned ≤ nVals²-row seg table, so it runs AQE-off on
-    // seg-count-sized partitions (the graph_hits superstep recipe —
-    // 7 rounds × join + 2 aggregates + checkpoint each otherwise pay
-    // session-width exchanges and AQE replanning for a model-sized
-    // frame). The result unions are pinned INSIDE the scope; conf
-    // restored before returning.
+    // pinned ≤ nVals²-row seg table, so it runs in the superstep scope
+    // sized by the seg count (7 rounds × join + 2 aggregates +
+    // checkpoint each otherwise pay session-width exchanges and AQE
+    // replanning for a model-sized frame).
     val nSeg = obsSeg.get("ns").asInstanceOf[Long]
-    // baseline width read INSIDE the scope lock (r10 ADVICE)
     val outPinned =
-      graft.engine.ConfScope.withConfFrom(s, Seq("spark.sql.shuffle.partitions"))(
-        base => Seq(
-          "spark.sql.adaptive.enabled" -> "false",
-          "spark.sql.shuffle.partitions" ->
-            math.max(1L, math.min(base("spark.sql.shuffle.partitions").toLong,
-              nSeg / 65536L + 1L)).toString)) { _ =>
+      graft.engine.ConfScope.superstep(s, rows = nSeg) { _ =>
         // dp_1 = whole prefix as one bucket
         var dp = seg.filter(col("lov") === Long.MinValue)
           .select(col("hiv").as("j"), col("sse_q").as("cost"))

@@ -546,39 +546,29 @@ object Wave6 {
       // Every data-sized pass (the co-occurrence pair pipeline) is
       // already pinned above under the session conf (edges/ew
       // localCheckpoints, nNodes count). The 8 iterations below touch
-      // only the VOCABULARY-sized edge/rank frames, so the fixed-shape
-      // loop runs with AQE off and node-count-sized partitioning — the
-      // deep nested plan otherwise pays 8 levels of AQE replanning and
-      // 8 default-width aggregate exchanges for a few-thousand-row
-      // frame; the final rank is pinned INSIDE the scope so the loop
-      // genuinely executes under it (conf restored before returning —
-      // the graph_hits superstep recipe).
-      // baseline width read INSIDE the scope lock (r10 ADVICE)
-      val ranked =
-        graft.engine.ConfScope.withConfFrom(s, Seq("spark.sql.shuffle.partitions"))(
-          base => Seq(
-            "spark.sql.adaptive.enabled" -> "false",
-            "spark.sql.shuffle.partitions" ->
-              math.max(1L, math.min(base("spark.sql.shuffle.partitions").toLong,
-                nNodes / 65536L + 1L)).toString)) { _ =>
-          var rank = edges.select(col("src").as("token")).distinct()
-            .withColumn("r", lit(r0))
-          for (_ <- 1 to trIters) {
-            val contrib = round(col("r") * col("w") / col("wt"), 9)
-              .cast(DecimalType(20, 9))
-            // no per-superstep checkpoint: the rank frame is VOCABULARY-sized,
-            // and each iteration's broadcast materializes its subtree exactly
-            // once inside the single final job — 8 nested levels of linear
-            // work beats 8 separate checkpoint jobs. (Data-sized iterative
-            // frames — dedup_components — still checkpoint per superstep.)
-            rank = ew.join(broadcast(rank), ew("src") === rank("token"))
-              .groupBy(col("dst"))
-              .agg(sum(contrib).as("m"))
-              .select(col("dst").as("token"),
-                round(lit(base) + lit(damping) * col("m").cast("double"), 9).as("r"))
-          }
-          rank.localCheckpoint()
+      // only the VOCABULARY-sized edge/rank frames, so they run in the
+      // superstep scope sized by the node count — the deep nested plan
+      // otherwise pays 8 levels of AQE replanning and 8 default-width
+      // aggregate exchanges for a few-thousand-row frame.
+      val ranked = graft.engine.ConfScope.superstep(s, rows = nNodes) { _ =>
+        var rank = edges.select(col("src").as("token")).distinct()
+          .withColumn("r", lit(r0))
+        for (_ <- 1 to trIters) {
+          val contrib = round(col("r") * col("w") / col("wt"), 9)
+            .cast(DecimalType(20, 9))
+          // no per-superstep checkpoint: the rank frame is VOCABULARY-sized,
+          // and each iteration's broadcast materializes its subtree exactly
+          // once inside the single final job — 8 nested levels of linear
+          // work beats 8 separate checkpoint jobs. (Data-sized iterative
+          // frames — dedup_components — still checkpoint per superstep.)
+          rank = ew.join(broadcast(rank), ew("src") === rank("token"))
+            .groupBy(col("dst"))
+            .agg(sum(contrib).as("m"))
+            .select(col("dst").as("token"),
+              round(lit(base) + lit(damping) * col("m").cast("double"), 9).as("r"))
         }
+        rank.localCheckpoint()
+      }
       ranked.select(col("token"), col("r").as("rank_score"))
         .orderBy(col("rank_score").desc, col("token"))
         .limit(20)

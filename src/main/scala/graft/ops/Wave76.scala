@@ -47,7 +47,7 @@ object Wave76 {
     // Newton state is 2 longs — MODEL-sized driver state (the ml_em_gmm
     // contract): each IRLS step is ONE aggregate-collect over the pinned
     // (x_m, y) table with the coefficients inlined as literals, run in
-    // the superstep scope (AQE off, 1 reducer — the exchange carries one
+    // the superstep scope (width 1 — the exchange carries one
     // partial row per map partition). The r6 form carried a 1-row
     // coefficient frame: same arithmetic, but each round paid a broadcast
     // build + a checkpoint job on top of the aggregate. The per-row
@@ -59,7 +59,7 @@ object Wave76 {
     // decimal div and BigInt / truncate toward zero.
     var b0m = 0L; var b1m = 0L
     for (_ <- 1 to 6) {
-      val r = Superstep.scoped(s) { base
+      val r = graft.engine.ConfScope.superstep(s) { _ => base
         .withColumn("mu", lit(1.0) /
           (lit(1.0) + exp(-((lit(b0m) * 1000 + lit(b1m) * col("x_m"))
             .cast("double") / 1e9))))

@@ -59,10 +59,10 @@ object Wave77 {
     // the two moment aggregates (means broadcast build + cm) and the
     // 1-row Cramer solve are a fixed shape over the pinned orders table:
     // every exchange carries one partial row per map partition, so the
-    // superstep scope (AQE off, 1 reducer) is the right width at any
+    // superstep scope at width 1 is the right shape at any
     // scale; the data-sized orders⋈lineitem pass pinned above under
     // session AQE. Arithmetic unchanged.
-    val beta = Superstep.scoped(s) { cm
+    val beta = graft.engine.ConfScope.superstep(s) { _ => cm
       .withColumn("det", expr("s11 * s22 - s12 * s12"))
       .withColumn("nb1", expr("s1y * s22 - s2y * s12"))
       .withColumn("nb2", expr("s2y * s11 - s1y * s12"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 80: perplexity-tier curation + customer segmentation —
   * CCNet-style head/middle/tail bucketing of the corpus by LM score
@@ -135,7 +135,7 @@ object Wave80 {
     // right width at any scale. The data-sized passes (cust aggregate, z
     // quantization, the kernel's range shuffle) all materialized above
     // under session AQE; arithmetic and tie-breaks are unchanged.
-    var centArr: Array[(Long, Long, Long)] = Superstep.scoped(s) { ranked
+    var centArr: Array[(Long, Long, Long)] = ConfScope.superstep(s) { _ => ranked
       .filter(col("rk") === expr("nn div 8 + 1") ||
         col("rk") === expr("3 * nn div 8 + 1") ||
         col("rk") === expr("5 * nn div 8 + 1") ||
@@ -150,7 +150,7 @@ object Wave80 {
         lit(cl).as("cl"))
     }: _*))
     for (_ <- 1 to 5) {
-      val r = Superstep.scoped(s) { zs.withColumn("cl", bestStruct.getField("cl"))
+      val r = ConfScope.superstep(s) { _ => zs.withColumn("cl", bestStruct.getField("cl"))
         .groupBy("cl")
         .agg(sum("z1").as("s1"), sum("z2").as("s2"), count(lit(1)).as("nc"))
         .collect() }

@@ -30,12 +30,9 @@ object Wave82 {
     // the data-sized pass (the basket self-join inside BrandGraph.edges)
     // materializes HERE under the session conf; the peel loop below runs
     // on the pinned catalog-sized edge list (≤ brands² rows at any data
-    // scale), so AQE — 2-3 stage-jobs + a replanning round-trip per tiny
-    // fixed-shape round — is off for the loop, with single-partition
-    // shuffles (the graph_hits superstep recipe). Conf restored before
-    // returning.
+    // scale), so the loop runs in the superstep scope at width 1.
     val edges0 = BrandGraph.edges(s, dir).localCheckpoint()
-    Superstep.scoped(s) { graphKtrussBody(s, edges0) }
+    graft.engine.ConfScope.superstep(s) { _ => graphKtrussBody(s, edges0) }
   }
 
   private def graphKtrussBody(s: SparkSession, edges0: DataFrame): DataFrame = {
@@ -158,8 +155,8 @@ object Wave82 {
     // pinned z table. Data-sized work (the orders scan + z quantization)
     // materialized in the checkpoint above under session AQE; the loop's
     // only exchange carries (#map-partitions x 1 group) partial rows, so
-    // the superstep scope (AQE off, 1 reducer) is the right shape at any
-    // scale — same arithmetic, same literals, bit-identical rn.
+    // the superstep scope at width 1 is the right shape at any scale —
+    // same arithmetic, same literals, bit-identical rn.
     def scored = zs
       .withColumn("t1", lit(p1.toDouble / 1e6) *
         exp(-((col("z") - lit(mu1)) * (col("z") - lit(mu1)))
@@ -170,7 +167,7 @@ object Wave82 {
       .withColumn("rn",
         round(col("t1") / (col("t1") + col("t2")) * 1e9).cast("long"))
     for (_ <- 1 to 6) {
-      val r = Superstep.scoped(s) { scored.agg(
+      val r = graft.engine.ConfScope.superstep(s) { _ => scored.agg(
         count(lit(1)).as("n"),
         sum("rn").as("s1"),
         sum(expr("cast(rn as decimal(38,0)) * z")).as("z1"),

@@ -383,13 +383,10 @@ object Wave9 {
     // The data-sized pass (keyed per-user window + distinct) pins HERE,
     // under the session conf — AQE coalescing/skew handling stays
     // available to it. The recursion below then runs over the PINNED
-    // model-sized edge table ((type × band)² domain) with AQE off and
-    // band-domain-sized partitioning: Catalyst's UnionLoop replans and
-    // re-plans each iteration under AQE, paying 2-3 stage-jobs per hop
-    // for a graph that is a few hundred rows at any data scale (the
-    // graph_hits superstep recipe). The result is pinned inside the
-    // scope so the recursion genuinely executes under it; conf restored
-    // before returning.
+    // model-sized edge table ((type × band)² domain) in the superstep
+    // scope: Catalyst's UnionLoop re-plans each iteration under AQE,
+    // paying 2-3 stage-jobs per hop for a graph that is a few hundred
+    // rows at any data scale.
     val obsE = org.apache.spark.sql.Observation()
     val edges = t(s, dir, "events")
       .select(col("user_id"), col("event_id"),
@@ -400,24 +397,24 @@ object Wave9 {
       .observe(obsE, count(lit(1)).as("ne"))
       .localCheckpoint()
     val ne = obsE.get("ne").asInstanceOf[Long]
-    edges.createOrReplaceTempView("graft_edges")
-    val partsBefore = s.conf.get("spark.sql.shuffle.partitions")
-    graft.engine.ConfScope.withConf(s, Seq(
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" ->
-        math.max(1L, math.min(partsBefore.toLong, ne / 65536L + 1L)).toString)) {
+    // the recursive CTE needs the edges as a named relation: a per-call
+    // view name (concurrent callers on one session never see each
+    // other's edges), dropped once the pinned result no longer needs it
+    val view = "graft_edges_" + java.util.UUID.randomUUID().toString.replace('-', '_')
+    edges.createTempView(view)
+    try graft.engine.ConfScope.superstep(s, rows = ne) { _ =>
       s.sql(
-        """WITH RECURSIVE reach(node, hops) AS (
+        s"""WITH RECURSIVE reach(node, hops) AS (
           |  SELECT 'click#0', 0
           |  UNION ALL
           |  SELECT e.dst, r.hops + 1
-          |  FROM reach r JOIN graft_edges e ON e.src = r.node
+          |  FROM reach r JOIN $view e ON e.src = r.node
           |  WHERE r.hops < 3)
           |SELECT node, CAST(MIN(hops) AS INT) AS min_hops,
           |  CAST(COUNT(*) AS BIGINT) AS n_walks
           |FROM reach GROUP BY node ORDER BY node""".stripMargin)
         .localCheckpoint()
-    }
+    } finally s.catalog.dropTempView(view)
   }
 
   private val graphReachabilityOracle =

@@ -41,31 +41,19 @@ object Wave98 {
     // The data-sized pair-weight aggregate ([[SupplierGraph.pairWeights]]
     // — the one skew-prone shuffle here) materializes FIRST, under the
     // session conf, so AQE's skew mitigation stays available to it
-    // (localCheckpoint is eager). Only then is AQE turned off for the
-    // fixed-shape superstep build (the graph_hits r9 recipe — AQE pays
-    // 2-3 stage-jobs + a replanning round-trip per tiny half-step, and
-    // 32 half-empty tasks per stage at test scale is launch overhead;
-    // the clamp keeps full cluster width at 100 TB). Conf restored
-    // before returning.
+    // (localCheckpoint is eager). The fixed-shape rounds then run in
+    // the superstep scope sized by the undirected edge count (2·ne).
     val obsE = org.apache.spark.sql.Observation()
     val e = SupplierGraph.pairWeights(s, dir)
       .select(col("p1"), col("p2"), col("w"))
       .observe(obsE, count(lit(1)).as("ne")).localCheckpoint()
     val ne = obsE.get("ne").asInstanceOf[Long]
-    // baseline width read INSIDE the scope lock (r10 ADVICE: outside it,
-    // a racing scope's transient override could be captured as the
-    // session value and pin the whole loop to it)
-    graft.engine.ConfScope.withConfFrom(s, Seq("spark.sql.shuffle.partitions"))(
-      _ => Seq("spark.sql.adaptive.enabled" -> "false")) { base =>
-      graphLabelPropBody(s, e, ne, base("spark.sql.shuffle.partitions").toLong)
+    graft.engine.ConfScope.superstep(s, rows = 2L * ne) { superParts =>
+      graphLabelPropBody(e, superParts)
     }
   }
 
-  private def graphLabelPropBody(s: SparkSession, e: DataFrame, ne: Long,
-      sessParts: Long): DataFrame = {
-    val superParts = math.max(1L,
-      math.min(sessParts, 2L * ne / 65536L + 1L)).toInt
-    s.conf.set("spark.sql.shuffle.partitions", superParts.toString)
+  private def graphLabelPropBody(e: DataFrame, superParts: Int): DataFrame = {
     val und = e.select(col("p1").as("s"), col("p2").as("nb"), col("w"))
       .unionByName(e.select(col("p2").as("s"), col("p1").as("nb"), col("w")))
       .repartition(superParts, col("s")).persist()

@@ -70,8 +70,6 @@ class BroadcastAuditSpec extends AnyFunSuite {
   private val registry: Map[(String, String), String] = Map(
     ("engine/VersionedStore.scala", "srcKeys") ->
       "upsert hit-probe keys: gated by the measured source row count (srcRows <= BroadcastKeyRows = 262144) — a larger feed takes the shuffle semi-join branch, never this hint",
-    ("StoreProbe.scala", "ckpt") ->
-      "dev-only probe main (not a declared query): 1000-row literal range frame",
     ("ops/Bpe.scala", "encoded") ->
       "distinct-token encodings: vocabulary-sized (tokens/terms)",
     ("ops/BrandGraph.scala", "o.as(\"e2\")") ->
