@@ -12,13 +12,16 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * its operational surface).
   *
   * Layout: `root/table/files/` holds immutable, uniquely-named parquet
-  * data files; `root/table/v{N}.manifest` is snapshot N — line 1 the
-  * snapshot's schema JSON, then one data-file name per line; `root/table/
-  * _current` is the commit pointer (a one-line file naming the live
-  * version). Writers stage data files and the manifest fully, then
-  * commit by rewriting the pointer — readers of version K never observe
-  * a partial write because data files and manifests are immutable after
-  * commit. Single-writer semantics, like [[ParquetStore]]'s staged swap.
+  * data files; `root/table/v{N}.manifest` is snapshot N. Its line 1 is
+  * the snapshot's schema JSON, then come `#txn`, writer, batch-id header
+  * lines (tab-separated), then one line per data file: the file name, a
+  * tab and its per-column stats JSON, and — when deletion vectors are
+  * attached — a tab and a comma-separated list of deletion-vector file
+  * names (older manifests may lack either field). `root/table/_current`
+  * is an advisory pointer naming the live version. Writers stage data
+  * files and the manifest fully, then commit by linking the manifest
+  * into place — readers of version K never observe a partial write
+  * because data files and manifests are immutable after commit.
   *
   * This is the Delta-log file-reuse design, not copy-on-write snapshots:
   * `upsert` rewrites ONLY the data files that contain a matched key
@@ -42,8 +45,10 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * keys (manifest-stats range check), it REBASES — re-targets its
   * already-staged output onto the new head's manifest, no recompute — and
   * retries; otherwise it cleans up its staged files and refuses with
-  * `ConcurrentModificationException`. `_current` is a monotonic advisory
-  * cache only; the head is always max(v{N}.manifest).
+  * `ConcurrentModificationException`. The protocol is written once, in
+  * [[commitLoop]]; each writer supplies only its rule for a new head.
+  * `_current` is a monotonic advisory cache only; the head is always
+  * max(v{N}.manifest).
   */
 class VersionedStore(root: String) {
 
@@ -109,7 +114,10 @@ class VersionedStore(root: String) {
     * foreachBatch sinks. Carried forward by every commit. */
   def txns(name: String, v: Long): Map[String, Long] = readManifest(name, v)._3
 
-  /** Parsed-manifest cache. Manifests are IMMUTABLE once committed (the
+  /** A parsed manifest: schema, file entries, `#txn` watermarks. */
+  private type Parsed = (StructType, Seq[FileEntry], Map[String, Long])
+
+  /** Parsed-manifest cache, one map per table. Manifests are IMMUTABLE once committed (the
     * hard link is the durability point and nothing ever rewrites one), so
     * a (table, version) entry can never go stale — the only lifecycle
     * event is deletion by vacuum, which the exists() probe below honors
@@ -122,39 +130,44 @@ class VersionedStore(root: String) {
     * snapshot and one per call (Delta caches its reconstructed snapshot
     * state the same way). */
   private val mfCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long),
-      (StructType, Seq[FileEntry], Map[String, Long])]()
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.LinkedHashMap[Long, Parsed]]()
 
   /** Per-table bound on cached parsed manifests. Unbounded, a long-lived
     * streaming writer (thousands of micro-batch commits) leaks memory
     * proportional to versions × file count even after vacuum deletes the
-    * manifest files (r10 ADVICE). Access is recency-biased — commit
-    * carry-forward reads v−1, changesSince walks recent ranges — so past
-    * the bound the OLDEST versions evict; a miss on an evicted version
-    * just re-parses the immutable manifest file. */
+    * manifest files (r10 ADVICE). Past the bound the LEAST RECENTLY USED
+    * version evicts — commits, carry-forward reads of v−1 and
+    * changesSince walks keep recent versions hot, while a time-travel
+    * read of an old version stays cached for its next read instead of
+    * evicting itself on insert; a miss just re-parses the immutable
+    * manifest file. */
   private[graft] val MfCacheKeepVersions = 64
 
-  /** Cache insert + per-table oldest-version pruning (one definition for
-    * both the parse path and the commit's seed-on-write). */
-  private def cachePut(name: String, v: Long,
-      parsed: (StructType, Seq[FileEntry], Map[String, Long])): Unit = {
-    mfCache.put((name, v), parsed)
-    val vs = mfCache.keySet.asScala.collect { case (`name`, ver) => ver }.toSeq
-    if (vs.size > MfCacheKeepVersions)
-      vs.sorted.dropRight(MfCacheKeepVersions)
-        .foreach(old => mfCache.remove((name, old)))
+  /** Run `f` under the lock of `name`'s cache: an access-ordered map, so
+    * its eldest entry is the least recently used version. */
+  private def withCache[A](name: String)(
+      f: java.util.LinkedHashMap[Long, Parsed] => A): A = {
+    val c = mfCache.computeIfAbsent(name, _ =>
+      new java.util.LinkedHashMap[Long, Parsed](16, 0.75f, true) {
+        override protected def removeEldestEntry(
+            e: java.util.Map.Entry[Long, Parsed]): Boolean =
+          size > MfCacheKeepVersions
+      })
+    c.synchronized(f(c))
   }
+
+  private def cachePut(name: String, v: Long, parsed: Parsed): Unit =
+    withCache(name) { c => c.put(v, parsed); () }
 
   /** Versions currently held in the parsed-manifest cache for `name`
     * (retention-spec observability). */
   private[graft] def cachedManifestVersions(name: String): Seq[Long] =
-    mfCache.keySet.asScala.collect { case (`name`, v) => v }.toSeq.sorted
+    withCache(name)(_.keySet.asScala.toSeq.sorted)
 
-  private def readManifest(name: String, v: Long)
-      : (StructType, Seq[FileEntry], Map[String, Long]) = {
+  private def readManifest(name: String, v: Long): Parsed = {
     val mf = manifestFile(name, v)
     require(mf.exists, s"$name has no version $v (history: ${history(name)})")
-    val cached = mfCache.get((name, v))
+    val cached = withCache(name)(_.get(v))
     if (cached != null) return cached
     val lines = java.nio.file.Files.readAllLines(mf.toPath).asScala.toSeq
     val entries = lines.tail.filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
@@ -226,20 +239,6 @@ class VersionedStore(root: String) {
   private def statable(f: StructField): Boolean =
     f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
 
-  /** Can a file with stats `(mn, mx)` contain a key in `[srcMin, srcMax]`?
-    * Missing/unparseable stats → conservatively yes. Compared in
-    * BigDecimal: exact for 64-bit integers (a double round-trip could
-    * narrow a range at the 2^53 boundary and wrongly dismiss a file). */
-  private[engine] def rangesOverlap(dt: DataType,
-      file: Option[(String, String)], src: (String, String)): Boolean =
-    file match {
-      case None => true
-      case Some((mn, mx)) =>
-        try {
-          BigDecimal(mn) <= BigDecimal(src._2) && BigDecimal(mx) >= BigDecimal(src._1)
-        } catch { case _: NumberFormatException => true }
-    }
-
   /** Per-file (min, max) of every numeric column, read from the PARQUET
     * FOOTERS of the just-staged files — row-group stats already exist
     * there, so collection is a driver-side metadata read (milliseconds),
@@ -305,7 +304,11 @@ class VersionedStore(root: String) {
   private def newToken(): String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
+  /** Commit attempts a writer makes before giving up; the two optimize
+    * variants restage the whole snapshot on every attempt, so they stop
+    * after [[MaxRestageRetries]]. */
   private val MaxCommitRetries = 50
+  private val MaxRestageRetries = 5
 
   /** Source feeds at or below this observed row count broadcast their
     * keys into the hit-detection semi-join (≤ ~8 MB of key data at
@@ -353,9 +356,10 @@ class VersionedStore(root: String) {
     * the manifest being superseded (v-1), updated with `addTxn` — atomic
     * with the commit itself. Returns false when the race was lost (the
     * caller re-reads the head, conflict-checks, and rebases or refuses).
-    * The advisory pointer advances only after a WON commit. */
+    * The advisory pointer advances only after a WON commit. Called only
+    * by [[commitLoop]]. */
   private def tryCommitManifest(name: String, v: Long, schema: StructType,
-      entries: Seq[FileEntry], addTxn: Option[(String, Long)] = None): Boolean = {
+      entries: Seq[FileEntry], addTxn: Option[(String, Long)]): Boolean = {
     tdir(name).mkdirs()
     val carried =
       if (v > 1L && manifestFile(name, v - 1L).exists) txns(name, v - 1L)
@@ -413,8 +417,64 @@ class VersionedStore(root: String) {
     staged.map(f => FileEntry(f, stats.getOrElse(f, Map.empty)))
   }
 
-  private def dropStaged(name: String, staged: Seq[FileEntry]): Unit =
-    staged.foreach(e => new java.io.File(absPath(name, e.file)).delete())
+  private def dropFiles(name: String, files: Seq[String]): Unit =
+    files.foreach(f => new java.io.File(absPath(name, f)).delete())
+
+  /** What a writer's rule makes of the head it would commit on top of. */
+  private sealed trait Attempt
+  /** Commit `entries` as head + 1. `fresh` names files this attempt
+    * staged for itself (a restaging rule); they are dropped if it loses. */
+  private case class Commit(schema: StructType, entries: Seq[FileEntry],
+      fresh: Seq[String] = Nil) extends Attempt
+  /** Nothing (more) to commit: the call returns `version`. */
+  private case class Done(version: Long) extends Attempt
+  /** The head logically conflicts: refuse with a
+    * `ConcurrentModificationException`. */
+  private case class Refuse(why: String) extends Attempt
+
+  /** The optimistic commit protocol, written once. Each attempt reads the
+    * head (0 before the first commit) and asks the writer's `rule` what
+    * to do on top of it; a [[Commit]] links the next manifest, and a lost
+    * link race re-reads the head and asks the rule again — a rebase, or a
+    * refusal when the winner conflicts. The loop owns the retry bound,
+    * the single [[beforeCommitHook]] call (after the first rule, before
+    * the first link), the exactly-once short-circuit (a head whose `#txn`
+    * watermark already covers `addTxn` is returned as is), and cleanup:
+    * on every exit except a won commit — done, refused, out of retries,
+    * or a rule that throws — it deletes `staged` and the last attempt's
+    * fresh files. */
+  private def commitLoop(op: String, name: String, staged: Seq[String] = Nil,
+      retries: Int = MaxCommitRetries, addTxn: Option[(String, Long)] = None)(
+      rule: Long => Attempt): Long = {
+    var fresh = Seq.empty[String]
+    var won = false
+    @annotation.tailrec
+    def attempt(n: Int): Long = {
+      val head = currentVersion(name).getOrElse(0L)
+      val replayed = head > 0L && addTxn.exists { case (w, b) =>
+        txns(name, head).getOrElse(w, -1L) >= b }
+      if (replayed) head
+      else rule(head) match {
+        case Done(v) => v
+        case Refuse(why) =>
+          throw new java.util.ConcurrentModificationException(s"$op('$name'): $why")
+        case Commit(schema, entries, attemptFiles) =>
+          fresh = attemptFiles
+          if (n == 0) beforeCommitHook()
+          won = tryCommitManifest(name, head + 1L, schema, entries, addTxn)
+          if (won) head + 1L
+          else if (n + 1 >= retries)
+            throw new IllegalStateException(s"$op('$name'): $retries commit attempts lost")
+          else {
+            dropFiles(name, fresh)
+            fresh = Nil
+            attempt(n + 1)
+          }
+      }
+    }
+    try attempt(0)
+    finally if (!won) dropFiles(name, staged ++ fresh)
+  }
 
   /** Commit `df` as the next version (a full snapshot: an overwrite
     * genuinely replaces the table, so nothing is shareable). A blind
@@ -423,14 +483,7 @@ class VersionedStore(root: String) {
   def write(df: DataFrame, name: String): Long = {
     val staged = stageWithStats(df, name)
     validateStaged(df.sparkSession, name, df.schema, staged.map(_.file))
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val next = currentVersion(name).getOrElse(0L) + 1L
-      if (tryCommitManifest(name, next, df.schema, staged)) return next
-      attempt += 1
-    }
-    dropStaged(name, staged)
-    throw new IllegalStateException(s"write('$name'): $MaxCommitRetries commit attempts lost")
+    commitLoop("write", name, staged.map(_.file))(_ => Commit(df.schema, staged))
   }
 
   // ---- CHECK constraints (Delta ALTER TABLE ADD CONSTRAINT analog) -----
@@ -512,7 +565,7 @@ class VersionedStore(root: String) {
       spark.read.schema(nullable(schema)).parquet(files.map(absPath(name, _)): _*),
       cs, name)
     catch { case scala.util.control.NonFatal(e) =>
-      files.foreach(f => new java.io.File(absPath(name, f)).delete())
+      dropFiles(name, files)
       throw e
     }
   }
@@ -601,42 +654,49 @@ class VersionedStore(root: String) {
       Some(writerId -> batchId))
   }
 
-  /** The source's first-key [min, max] as stat strings: the range both
-    * stats PRUNING and rebase CONFLICT checks compare against. First the
-    * key field when stat-able, then the range — None when the key is not
-    * range-comparable or every source key is NULL. One aggregate job. */
-  private def sourceKeyRange(schema: StructType, source: DataFrame,
-      key: String): (Option[StructField], Option[(String, String)]) = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val kf = schema.fields.find(_.name == key).filter(statable)
-    val rng = kf.flatMap { f =>
-      val r = source.agg(
-        min(col(f.name)).cast("string"), max(col(f.name)).cast("string")).head()
-      if (r.isNullAt(0)) None else Some((r.getString(0), r.getString(1)))
-    }
-    (kf, rng)
-  }
+  /** The table field an upsert's first key prunes on: present in both
+    * table and source, and stat-able. None when the key is not range-
+    * comparable. */
+  private def keyField(schema: StructType, source: DataFrame,
+      key: String): Option[StructField] =
+    schema.fields.find(_.name == key).filter(statable)
+      .filter(f => source.columns.contains(f.name))
 
-  /** Stats pruning: the manifest entries whose first-key [min,max] range
-    * can overlap `source`'s — files dismissed here cost ZERO I/O (the
-    * Delta data-skipping move); only survivors pay the key scan. The
-    * single implementation behind both upserts and [[pruneCandidates]]. */
-  private def pruneEntries(schema: StructType, entries: Seq[FileEntry],
-      source: DataFrame, key: String): Seq[FileEntry] =
-    sourceKeyRange(schema, source, key) match {
-      case (Some(kf), rng) if entries.nonEmpty =>
-        rng match {
-          case None => Seq.empty  // all-NULL source keys match nothing
-          case Some(src) =>
-            entries.filter(e => rangesOverlap(kf.dataType, e.stats.get(kf.name), src))
-        }
+  /** The first-key overlap rule: the entries whose `key` [min, max] stats
+    * range can overlap the source's key range `src` (rendered as Spark's
+    * string cast of the min and max). One definition behind upsert's
+    * stats pruning, its concurrent-append conflict check and
+    * [[pruneCandidates]]. Files dismissed here cost ZERO I/O (the Delta
+    * data-skipping move). All-NULL source keys (`src` None) match
+    * nothing; a key that is not range-comparable keeps every entry, and
+    * so does a file with missing or unparseable stats. Compared in
+    * BigDecimal: exact for 64-bit integers (a double round-trip could
+    * narrow a range at the 2^53 boundary and wrongly dismiss a file). */
+  private def overlapping(entries: Seq[FileEntry], key: Option[StructField],
+      src: Option[(String, String)]): Seq[FileEntry] =
+    (key, src) match {
+      case (Some(kf), Some((lo, hi))) =>
+        entries.filter(e => e.stats.get(kf.name).forall { case (mn, mx) =>
+          try BigDecimal(mn) <= BigDecimal(hi) && BigDecimal(mx) >= BigDecimal(lo)
+          catch { case _: NumberFormatException => true }
+        })
+      case (Some(_), None) => Seq.empty
       case _ => entries
     }
 
-  /** Test seam: runs after an upsert's merge output is fully staged,
-    * immediately before its first commit attempt — lets a spec inject a
-    * COMPETING COMMITTED WRITER at the exact race window, making the
-    * lost-commit → rebase / refuse paths deterministic. No-op otherwise. */
+  /** Did a commit since the base snapshot rewrite, remove or MOR-delete
+    * in any of `hit` (the base entries a writer rewrites)? True when the
+    * head lacks a hit file or lists it with other deletion vectors. */
+  private def touched(hit: Seq[FileEntry], head: Seq[FileEntry]): Boolean = {
+    val headDvs = head.map(e => e.file -> e.dvs).toMap
+    hit.exists(e => !headDvs.get(e.file).contains(e.dvs))
+  }
+
+  /** Test seam: runs after a writer's output is fully staged, immediately
+    * before its first commit attempt ([[commitLoop]] calls it for every
+    * writer) — lets a spec inject a COMPETING COMMITTED WRITER at the
+    * exact race window, making the lost-commit → rebase / refuse paths
+    * deterministic. No-op otherwise. */
   @volatile private[graft] var beforeCommitHook: () => Unit = () => ()
 
   private def upsertTxn(spark: SparkSession, name: String, rawSource: DataFrame,
@@ -649,22 +709,17 @@ class VersionedStore(root: String) {
       case None =>
         val staged = stageWithStats(rawSource, name)
         validateStaged(spark, name, rawSource.schema, staged.map(_.file))
-        if (tryCommitManifest(name, 1L, rawSource.schema, staged, addTxn)) 1L
-        else {
-          // lost the CREATE race — the table exists now; this writer's
-          // output must MERGE against it like any other upsert
-          dropStaged(name, staged)
-          upsertTxn(spark, name, rawSource, keys, evolveSchema, addTxn,
-            deleteWhen, updateWhen)
+        val created = commitLoop("upsert", name, staged.map(_.file), addTxn = addTxn) {
+          case 0L => Commit(rawSource.schema, staged)
+          case _ => Done(0L)
         }
+        // 0: lost the CREATE race — the table exists now; this writer's
+        // output must MERGE against it like any other upsert
+        if (created > 0L) created
+        else upsertTxn(spark, name, rawSource, keys, evolveSchema, addTxn,
+          deleteWhen, updateWhen)
       case Some(cur) =>
         import org.apache.spark.sql.functions.col
-        // replay shortcut re-checked here (not only in upsertBatch): two
-        // concurrent replays of the same batch must not both pass
-        addTxn match {
-          case Some((w, b)) if txns(name, cur).getOrElse(w, -1L) >= b => return cur
-          case _ =>
-        }
         val (tSchema, entries) = manifestWithStats(name, cur)
         // the source feeds TWO jobs (hit semi-join, merge write): pin it
         // ONCE. localCheckpoint, not persist — the pinned RDD makes every
@@ -688,11 +743,10 @@ class VersionedStore(root: String) {
         // range-aggregate job per upsert (~0.1 s of pure scheduler
         // round-trip at sf0.1; at cluster scale one fewer full source
         // pass). The string rendering stays Spark's own cast, exactly as
-        // sourceKeyRange produced.
-        val keyField = tSchema.fields.find(_.name == keys.head).filter(statable)
-          .filter(f => rawSource.columns.contains(f.name))
+        // pruneCandidates computes it.
+        val kf = keyField(tSchema, rawSource, keys.head)
         val obs = org.apache.spark.sql.Observation()
-        val observed = keyField match {
+        val observed = kf match {
           case Some(f) => rawSource.observe(obs,
             org.apache.spark.sql.functions.min(col(f.name)).cast("string").as("__kmin"),
             org.apache.spark.sql.functions.max(col(f.name)).cast("string").as("__kmax"),
@@ -705,7 +759,7 @@ class VersionedStore(root: String) {
         val source = observed.localCheckpoint()
         val metrics = obs.get
         val srcRows = metrics("__nrows").asInstanceOf[Long]
-        val srcRange: Option[(String, String)] = keyField.flatMap { _ =>
+        val srcRange: Option[(String, String)] = kf.flatMap { _ =>
           Option(metrics("__kmin").asInstanceOf[String])
             .map(mn => (mn, metrics("__kmax").asInstanceOf[String]))
         }
@@ -734,12 +788,7 @@ class VersionedStore(root: String) {
               s"upsert('$name'): source column types diverge from the " +
                 s"table schema: ${diverged.mkString("; ")}")
           }
-          val candidates = (keyField, srcRange) match {
-            case (Some(kf), Some(src)) =>
-              entries.filter(e => rangesOverlap(kf.dataType, e.stats.get(kf.name), src))
-            case (Some(_), None) => Seq.empty  // all-NULL source keys match nothing
-            case _ => entries
-          }
+          val candidates = overlapping(entries, kf, srcRange)
           // which surviving files hold a matched key? (the only rows a
           // MERGE changes)
           // live (DV-filtered) view of the candidate files: a key whose
@@ -819,78 +868,36 @@ class VersionedStore(root: String) {
           // scan, so only churn-sized files pay the pass); a violation
           // deletes the staged files and refuses — table untouched.
           validateStaged(spark, name, outSchema, staged.map(_.file))
-          beforeCommitHook()
-          // optimistic commit loop: each rebase re-targets the SAME staged
-          // files onto the new head — zero recompute — after proving the
-          // concurrent commit cannot have touched this merge's rows.
+          // each rebase re-targets the SAME staged files onto the new head
+          // — zero recompute — after proving the concurrent commit cannot
+          // have touched this merge's rows
           val origBase = entries.map(_.file).toSet
-          var head = cur
-          var keep = entries.filterNot(e => hitSet.contains(e.file))
-          var attempt = 0
-          while (true) {
-            if (tryCommitManifest(name, head + 1L, outSchema, keep ++ staged, addTxn))
-              return head + 1L
-            attempt += 1
-            if (attempt >= MaxCommitRetries) {
-              dropStaged(name, staged)
-              throw new IllegalStateException(
-                s"upsert('$name'): $MaxCommitRetries commit attempts lost")
-            }
-            head = currentVersion(name).get
+          commitLoop("upsert", name, staged.map(_.file), addTxn = addTxn) { head =>
             val (headSchema, headEntries) = manifestWithStats(name, head)
-            // a concurrent replay of this very batch may have won
-            addTxn match {
-              case Some((w, b)) if txns(name, head).getOrElse(w, -1L) >= b =>
-                dropStaged(name, staged)
-                return head
-              case _ =>
-            }
-            val headFiles = headEntries.map(_.file).toSet
             // conflict 1: the winner rewrote/removed a file this merge
             // also rewrote — true write-write conflict on the same rows.
             // A concurrent MOR delete that attached a deletion vector to
             // a hit file conflicts the same way: this merge's staged
             // rewrite materialized rows the winner just declared dead.
-            val baseDv = entries.filter(e => hitSet.contains(e.file))
-              .map(e => e.file -> e.dvs).toMap
-            val dvChanged = headEntries.exists(e =>
-              hitSet.contains(e.file) && e.dvs != baseDv.getOrElse(e.file, Nil))
-            if (!hitSet.subsetOf(headFiles) || dvChanged) {
-              dropStaged(name, staged)
-              throw new java.util.ConcurrentModificationException(
-                s"upsert('$name'): concurrent commit rewrote or MOR-deleted in " +
-                  s"files this merge also rewrote")
-            }
+            if (touched(hit, headEntries))
+              Refuse("concurrent commit rewrote or MOR-deleted in files this " +
+                "merge also rewrote")
             // conflict 2: the winner changed the table schema — this
             // merge's staged output and manifest schema predate it
-            if (nullable(headSchema) != nullable(tSchema)) {
-              dropStaged(name, staged)
-              throw new java.util.ConcurrentModificationException(
-                s"upsert('$name'): concurrent schema change")
-            }
+            else if (nullable(headSchema) != nullable(tSchema))
+              Refuse("concurrent schema change")
             // conflict 3 (concurrent append, stats-conservative like
             // Delta's ConcurrentAppendException): a file ADDED since this
             // merge's base snapshot whose key range can contain a source
             // key might hold a row this merge should have matched —
             // committing anyway could duplicate the key. Files without a
             // usable key range conflict conservatively.
-            val added = headEntries.filterNot(e => origBase.contains(e.file))
-            val appendConflict = (keyField, srcRange) match {
-              case (Some(kf), Some(src)) =>
-                added.exists(e => rangesOverlap(kf.dataType, e.stats.get(kf.name), src))
-              case (Some(_), None) => false  // all-NULL keys match nothing
-              case _ => added.nonEmpty
-            }
-            if (appendConflict) {
-              dropStaged(name, staged)
-              throw new java.util.ConcurrentModificationException(
-                s"upsert('$name'): concurrent commit added files overlapping " +
-                  "this merge's key range")
-            }
-            // disjoint — rebase: carry the new head's untouched files
-            keep = headEntries.filterNot(e => hitSet.contains(e.file))
+            else if (overlapping(headEntries.filterNot(e => origBase.contains(e.file)),
+                kf, srcRange).nonEmpty)
+              Refuse("concurrent commit added files overlapping this merge's key range")
+            // disjoint (or still the base) — carry the head's untouched files
+            else Commit(outSchema, headEntries.filterNot(e => hitSet.contains(e.file)) ++ staged)
           }
-          sys.error("unreachable")
         } finally {
           // release the checkpoint's block-store partitions NOW (r9):
           // Dataset.unpersist is a no-op on a checkpoint and GC-driven
@@ -937,32 +944,12 @@ class VersionedStore(root: String) {
     // touch the deleted files. Rows a concurrent writer ADDS that match
     // the predicate survive — snapshot semantics (Delta WriteSerializable:
     // DELETE removes what its snapshot contained).
-    var head = cur
-    var keep = entries.filterNot(e => hitSet.contains(e.file))
-    var attempt = 0
-    while (true) {
-      if (tryCommitManifest(name, head + 1L, tSchema, keep ++ survivors))
-        return head + 1L
-      attempt += 1
-      if (attempt >= MaxCommitRetries) {
-        dropStaged(name, survivors)
-        throw new IllegalStateException(
-          s"delete('$name'): $MaxCommitRetries commit attempts lost")
-      }
-      head = currentVersion(name).get
+    commitLoop("delete", name, survivors.map(_.file)) { head =>
       val (headSchema, headEntries) = manifestWithStats(name, head)
-      val baseDv = hit.map(e => e.file -> e.dvs).toMap
-      if (!hitSet.subsetOf(headEntries.map(_.file).toSet) ||
-          headEntries.exists(e => hitSet.contains(e.file) &&
-            e.dvs != baseDv.getOrElse(e.file, Nil)) ||
-          nullable(headSchema) != nullable(tSchema)) {
-        dropStaged(name, survivors)
-        throw new java.util.ConcurrentModificationException(
-          s"delete('$name'): concurrent commit touched the deleted files or schema")
-      }
-      keep = headEntries.filterNot(e => hitSet.contains(e.file))
+      if (touched(hit, headEntries) || nullable(headSchema) != nullable(tSchema))
+        Refuse("concurrent commit touched the deleted files or schema")
+      else Commit(tSchema, headEntries.filterNot(e => hitSet.contains(e.file)) ++ survivors)
     }
-    sys.error("unreachable")
   }
 
   /** Write a deletion-vector parquet (dvSchema rows) into `files/`,
@@ -1030,39 +1017,36 @@ class VersionedStore(root: String) {
       new java.io.File(absPath(name, dvFile)).delete()
       return cur
     }
-    beforeCommitHook()
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val head = currentVersion(name).get
+    commitLoop("deleteMor", name, Seq(dvFile)) { head =>
       val (headSchema, headEntries) = manifestWithStats(name, head)
       if (!hitFiles.subsetOf(headEntries.map(_.file).toSet) ||
-          nullable(headSchema) != nullable(tSchema)) {
-        new java.io.File(absPath(name, dvFile)).delete()
-        throw new java.util.ConcurrentModificationException(
-          s"deleteMor('$name'): concurrent commit rewrote a file this delete " +
-            "marked rows in, or changed the schema")
-      }
-      val next = headEntries.map { e =>
+          nullable(headSchema) != nullable(tSchema))
+        Refuse("concurrent commit rewrote a file this delete marked rows in, " +
+          "or changed the schema")
+      else Commit(headSchema, headEntries.map { e =>
         if (hitFiles.contains(e.file) && !e.dvs.contains(dvFile))
           e.copy(dvs = e.dvs :+ dvFile)
         else e
-      }
-      if (tryCommitManifest(name, head + 1L, headSchema, next)) return head + 1L
-      attempt += 1
+      })
     }
-    new java.io.File(absPath(name, dvFile)).delete()
-    throw new IllegalStateException(
-      s"deleteMor('$name'): $MaxCommitRetries commit attempts lost")
   }
 
-  /** Candidate files an upsert on `keys` would have to SCAN, after stats
-    * pruning (exposed for specs: proves skipping consults the manifest
-    * only). */
+  /** Candidate files an upsert on `key` would have to SCAN, after stats
+    * pruning — the same [[keyField]] and [[overlapping]] rule upsert runs
+    * (exposed for specs: proves skipping consults the manifest only). */
   def pruneCandidates(spark: SparkSession, name: String, source: DataFrame,
       key: String): Seq[String] = {
+    import org.apache.spark.sql.functions.{col, max, min}
     val cur = currentVersion(name).getOrElse(sys.error(s"no version for $name"))
     val (tSchema, entries) = manifestWithStats(name, cur)
-    pruneEntries(tSchema, entries, source, key).map(_.file)
+    val kf = keyField(tSchema, source, key)
+    // the source's key [min, max] in the string rendering upsert observes
+    val range = kf.flatMap { f =>
+      val r = source.agg(
+        min(col(f.name)).cast("string"), max(col(f.name)).cast("string")).head()
+      if (r.isNullAt(0)) None else Some((r.getString(0), r.getString(1)))
+    }
+    overlapping(entries, kf, range).map(_.file)
   }
 
   /** OPTIMIZE: compact the live snapshot's (typically many small,
@@ -1081,22 +1065,16 @@ class VersionedStore(root: String) {
     // OPTIMIZE rewrites the whole snapshot, so ANY concurrent data commit
     // invalidates its staged output — a lost race restarts the compaction
     // from the new head (it is idempotent maintenance, nothing to lose).
-    var attempt = 0
-    while (true) {
-      val cur = currentVersion(name).getOrElse(sys.error(s"no version for $name"))
-      val (schema, _) = manifestWithStats(name, cur)
-      val live = readVersion(spark, name, cur)
+    commitLoop("optimize", name, retries = MaxRestageRetries) { head =>
+      if (head == 0L) sys.error(s"no version for $name")
+      val (schema, _) = manifestWithStats(name, head)
+      val live = readVersion(spark, name, head)
       val compacted =
         if (zorderBy.isEmpty) live.coalesce(targetFiles)
         else graft.functions.ZOrder.cluster(live, zorderBy, bits, targetFiles)
       val staged = stageWithStats(compacted, name)
-      if (tryCommitManifest(name, cur + 1L, schema, staged)) return cur + 1L
-      dropStaged(name, staged)
-      attempt += 1
-      if (attempt >= 5) throw new IllegalStateException(
-        s"optimize('$name'): lost the commit race $attempt times")
+      Commit(schema, staged, fresh = staged.map(_.file))
     }
-    sys.error("unreachable")
   }
 
   /** Deletion-vector file schema: (data-file name, physical row index).
@@ -1166,23 +1144,19 @@ class VersionedStore(root: String) {
   def optimizeIncremental(spark: SparkSession, name: String,
       minBytes: Long, targetFiles: Int = 1): Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    var attempt = 0
-    while (attempt < 5) {
-      val cur = currentVersion(name).getOrElse(sys.error(s"no version for $name"))
-      val (schema, entries) = manifestWithStats(name, cur)
+    commitLoop("optimizeIncremental", name, retries = MaxRestageRetries) { head =>
+      if (head == 0L) sys.error(s"no version for $name")
+      val (schema, entries) = manifestWithStats(name, head)
       val small = entries.filter(e =>
         e.dvs.nonEmpty || new java.io.File(absPath(name, e.file)).length < minBytes)
-      if (small.size < 2 && small.forall(_.dvs.isEmpty)) return cur
-      val staged = stageWithStats(
-        readEntries(spark, name, schema, small).coalesce(targetFiles), name)
-      val keep = entries.filterNot(e => small.exists(_.file == e.file))
-      if (tryCommitManifest(name, cur + 1L, schema, keep ++ staged))
-        return cur + 1L
-      dropStaged(name, staged)
-      attempt += 1
+      if (small.size < 2 && small.forall(_.dvs.isEmpty)) Done(head)
+      else {
+        val staged = stageWithStats(
+          readEntries(spark, name, schema, small).coalesce(targetFiles), name)
+        val keep = entries.filterNot(e => small.exists(_.file == e.file))
+        Commit(schema, keep ++ staged, fresh = staged.map(_.file))
+      }
     }
-    throw new IllegalStateException(
-      s"optimizeIncremental('$name'): lost the commit race $attempt times")
   }
 
   /** COUNT(*) of the live snapshot without opening one DATA file: Σ
@@ -1418,14 +1392,7 @@ class VersionedStore(root: String) {
     val (schema, entries) = manifestWithStats(name, v)
     // an explicit rollback supersedes whatever it raced with: always
     // rebase to the newest head (pure manifest copy, nothing staged)
-    var attempt = 0
-    while (attempt < MaxCommitRetries) {
-      val next = currentVersion(name).get + 1L
-      if (tryCommitManifest(name, next, schema, entries)) return next
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"restore('$name'): $MaxCommitRetries commit attempts lost")
+    commitLoop("restore", name)(_ => Commit(schema, entries))
   }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE ... CLONE` analog): create `dst`
@@ -1456,11 +1423,11 @@ class VersionedStore(root: String) {
     }
     val cs = checks(src)
     if (cs.nonEmpty) writeChecks(dst, cs)
-    if (!tryCommitManifest(dst, 1L, schema, entries)) {
-      allFiles.foreach(f => new java.io.File(absPath(dst, f)).delete())
-      throw new IllegalStateException(s"shallowClone: commit race on fresh table '$dst'")
+    commitLoop("shallowClone", dst, allFiles) {
+      case 0L => Commit(schema, entries)
+      case _ => throw new IllegalStateException(
+        s"shallowClone: commit race on fresh table '$dst'")
     }
-    1L
   }
 
   /** Incremental change feed: every per-commit change between
@@ -1637,7 +1604,7 @@ class VersionedStore(root: String) {
       // refuses it), so its parsed entries are dead weight — evict
       // (r10 ADVICE: the cache otherwise retains every dropped
       // version's full schema + file-stats seq forever)
-      mfCache.remove((name, v))
+      withCache(name)(_.remove(v))
     }
     // deletion-vector files are referenced like data files: a dv lives
     // while any retained manifest's entry names it

@@ -2,7 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.engine.{Tables, VersionedStore}
+
+/** Walks adaptive plans, query stages included. */
+private object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** Time-travel store semantics: snapshot isolation, history, retention. */
 class VersionedStoreSpec extends SparkSuite {
@@ -67,6 +72,19 @@ class VersionedStoreSpec extends SparkSuite {
     assert(cached.size <= store.MfCacheKeepVersions)
     assert(cached.max === (n + 4).toLong) // head version stays cached
     assert(store.readVersion(spark, "t", 3L).count() === 1L) // evicted -> re-parse
+  }
+
+  test("manifest cache evicts by recency: a time-travel read of an old version stays cached") {
+    val store = freshStore()
+    store.write(Seq((1L, "a")).toDF("k", "v"), "t")
+    // restore copies a manifest and runs no Spark job: cheap versions
+    (1 to store.MfCacheKeepVersions + 5).foreach(_ => store.restore("t", 1L))
+    assert(!store.cachedManifestVersions("t").contains(3L))
+    assert(store.readVersion(spark, "t", 3L).count() === 1L)
+    val cached = store.cachedManifestVersions("t")
+    assert(cached.contains(3L), "the version just read evicted itself")
+    assert(cached.size === store.MfCacheKeepVersions)
+    assert(cached.max === store.currentVersion("t").get, "head version stays cached")
   }
 
   test("profile meta-table maintained with history (the reference's shape)") {
@@ -141,6 +159,45 @@ class VersionedStoreSpec extends SparkSuite {
     assert(store.read(spark, "t").count() === 400L)
     assert(store.read(spark, "t").filter(col("k") === 5L)
       .collect().map(_.getString(1)).toSeq === Seq("X"))
+  }
+
+  test("pruneCandidates and upsert's hit detection choose the same candidate files") {
+    val root = java.nio.file.Files.createTempDirectory("graft-versions").toString
+    val store = new VersionedStore(root)
+    store.write((1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
+      .repartitionByRange(4, col("k")), "t")
+    // keys 5 and 250: the range [5, 250] overlaps three of the four files,
+    // and only two of those hold a matched key
+    val source = Seq((5L, "X"), (250L, "Y")).toDF("k", "v")
+    val pruned = store.pruneCandidates(spark, "t", source, "k").toSet
+    assert(pruned.size === 3, s"stats must dismiss one file, got $pruned")
+    // every table file the upsert's queries open: the hit-detection scan
+    // reads its candidates, the merge rewrite only the hit files among them
+    val opened = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        Plans.collect(qe.executedPlan) {
+          case scan: org.apache.spark.sql.execution.FileSourceScanExec => scan
+        }.flatMap(_.relation.location.rootPaths.map(_.toString))
+          .filter(_.contains(s"$root/t/files/"))
+          .foreach(p => opened.add(p.split('/').last))
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      store.upsert(spark, "t", source, Seq("k"))
+      // listener events arrive asynchronously and in order, and the
+      // hit-detection scan is the upsert's first table read
+      val deadline = System.nanoTime + 30L * 1000000000L
+      while (opened.asScala.toSet != pruned && System.nanoTime < deadline)
+        Thread.sleep(50)
+      assert(opened.asScala.toSet === pruned,
+        "upsert opened other files than pruneCandidates names")
+    } finally spark.listenerManager.unregister(listener)
+    val rewritten = store.manifest("t", 1L)._2.toSet -- store.manifest("t", 2L)._2
+    assert(rewritten.size === 2 && rewritten.subsetOf(pruned))
   }
 
   test("optimize compacts accumulated small files into a new version") {
@@ -963,6 +1020,96 @@ class VersionedStoreSpec extends SparkSuite {
     val now = asMap(store)
     assert(!now.contains(10L) && !now.contains(11L) && now.size === 198)
     assert(store.countMeta(spark, "t") === Some(198L))
+  }
+
+  /** `files/` holds only names some retained manifest references: a
+    * refused or restaged commit left none of its staged files behind. */
+  private def assertNoStagedLeftovers(store: VersionedStore): Unit = {
+    val referenced = store.history("t").flatMap { v =>
+      val es = store.manifestWithStats("t", v)._2
+      es.map(_.file) ++ es.flatMap(_.dvs)
+    }.toSet
+    val onDisk = new java.io.File(s"${storeRoot(store)}/t/files")
+      .listFiles.map(_.getName).toSet
+    assert(onDisk -- referenced === Set.empty, "staged files leaked")
+  }
+
+  /** Make the next writer lose its first commit race to `winner`. */
+  private def raceWith(store: VersionedStore)(winner: => Long): Unit =
+    store.beforeCommitHook = () => {
+      store.beforeCommitHook = () => ()
+      assert(winner === 2L)
+    }
+
+  test("write racing a commit rebases blindly onto the new head") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t", Seq((10L, "B10")).toDF("k", "v"), Seq("k")))
+    assert(store.write(Seq((7L, "W7")).toDF("k", "v"), "t") === 3L)
+    assert(asMap(store) === Map(7L -> "W7"))
+    assert(store.readVersion(spark, "t", 2L).filter($"k" === 10L)
+      .collect().map(_.getString(1)).toSeq === Seq("B10"), "the winner's commit stands")
+    assertNoStagedLeftovers(store)
+  }
+
+  test("COW delete racing an upsert on disjoint files rebases; both land") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t", Seq((150L, "B150")).toDF("k", "v"), Seq("k")))
+    assert(store.delete(spark, "t", $"k" >= 5L && $"k" <= 7L) === 3L)
+    val now = asMap(store)
+    assert(now(150L) === "B150", "the upsert's update lost")
+    assert((5L to 7L).forall(k => !now.contains(k)) && now.size === 197)
+    assertNoStagedLeftovers(store)
+  }
+
+  test("COW delete racing an upsert on the SAME file refuses and leaves no trace") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t", Seq((20L, "B20")).toDF("k", "v"), Seq("k")))
+    intercept[java.util.ConcurrentModificationException] {
+      store.delete(spark, "t", $"k" === 10L)
+    }
+    assert(store.history("t") === Seq(1L, 2L))
+    val now = asMap(store)
+    assert(now(20L) === "B20" && now(10L) === "v10" && now.size === 200)
+    assertNoStagedLeftovers(store)
+  }
+
+  test("optimize that loses the race restarts from the new head, no rows lost") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t",
+      Seq((150L, "B150"), (300L, "B300")).toDF("k", "v"), Seq("k")))
+    assert(store.optimize(spark, "t", targetFiles = 1) === 3L)
+    assert(store.manifest("t", 3L)._2.size === 1)
+    val now = asMap(store)
+    assert(now(150L) === "B150" && now(300L) === "B300" && now.size === 201)
+    assertNoStagedLeftovers(store)
+  }
+
+  test("optimizeIncremental that loses the race restarts from the new head, no rows lost") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t",
+      Seq((10L, "B10"), (300L, "B300")).toDF("k", "v"), Seq("k")))
+    // every file is below the threshold: the whole head compacts
+    assert(store.optimizeIncremental(spark, "t", minBytes = 1L << 30) === 3L)
+    assert(store.manifest("t", 3L)._2.size === 1)
+    val now = asMap(store)
+    assert(now(10L) === "B10" && now(300L) === "B300" && now.size === 201)
+    assertNoStagedLeftovers(store)
+  }
+
+  test("restore racing a commit lands on the newest head") {
+    val store = freshStore()
+    twoFileBase(store)
+    raceWith(store)(store.upsert(spark, "t", Seq((150L, "B150")).toDF("k", "v"), Seq("k")))
+    assert(store.restore("t", 1L) === 3L)
+    assert(store.manifest("t", 3L)._2.toSet === store.manifest("t", 1L)._2.toSet)
+    assert(asMap(store)(150L) === "v150", "the rollback supersedes the winner")
+    assert(store.readVersion(spark, "t", 2L).filter($"k" === 150L)
+      .collect().map(_.getString(1)).toSeq === Seq("B150"), "history intact")
   }
 
   test("predicate pushdown survives the deletion-vector anti-join read") {
