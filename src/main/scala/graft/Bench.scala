@@ -59,8 +59,9 @@ object Bench {
     // rounds. Emit a compact summary (no per-query maps) as the LAST
     // stdout line so the tail always holds one complete, parseable JSON
     // object; the full line above and BENCH_full.json are unchanged
-    // (additions only — the timing methodology is untouched).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir","full":"BENCH_full.json"}""")
+    // (additions only — the timing methodology is untouched). Its own
+    // metric tag keeps line parsers from confusing it with the full line.
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir","full":"BENCH_full.json"}""")
     spark.stop()
   }
 }

@@ -18,11 +18,12 @@ import org.apache.spark.sql.SparkSession
   * little parallelism of TINY jobs for a session that always ends in its
   * configured state.
   *
-  * Hold times are not all short: `graft.ops.Codegen.materialized` holds
-  * the monitor for a whole query execution (its body plans AND runs the
-  * query under the codegen override — seconds for dedup_containment), so
-  * any other scope on any session, a streaming tiny-merge writer
-  * included, blocks until that query finishes. The monitor is reentrant,
+  * Hold times are not all short: on a codegen-off session,
+  * `graft.ops.Codegen.materialized` holds the monitor for a whole query
+  * execution (its body plans AND runs the query under the codegen
+  * override — seconds for dedup_containment), so any other scope on any
+  * session, a streaming tiny-merge writer included, blocks until that
+  * query finishes. The monitor is reentrant,
   * so such bodies may nest [[superstep]] scopes.
   */
 object ConfScope {
@@ -40,6 +41,10 @@ object ConfScope {
       case (k, None) => s.conf.unset(k)
     }
   }
+
+  /** `key`'s session value, read under the lock so that no other scope's
+    * transient override is mistaken for it. */
+  def get(s: SparkSession, key: String): String = lock.synchronized(s.conf.get(key))
 
   /** The fixed-shape-loop scope: run `body` with AQE off at a shuffle
     * width sized from a measured row count, then restore both keys.

@@ -19,18 +19,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pinned result whose later count/collect/write does no recompute), and
   * the session default stays off for everything else.
   *
-  * At cluster scale this scope is a no-op difference: engineConfs keep
-  * codegen on globally (with the 8 KB hugeMethodLimit guard, which this
-  * scope inherits from the session), so scoped queries run exactly as
-  * unscoped ones do.
+  * A session that already runs codegen on (the cluster path: engineConfs
+  * leave Spark's default on, with the 8 KB hugeMethodLimit guard) needs
+  * no override, so it gets the lazy body back: no lock is held, and no
+  * lineage-truncating pin turns an executor loss into a failed query.
   *
-  * Serialized through [[graft.engine.ConfScope]] like every other
-  * session-conf override, for the WHOLE query execution (the monitor is
-  * reentrant, so bodies may nest `ConfScope.superstep` scopes).
+  * The override is serialized through [[graft.engine.ConfScope]] like
+  * every other session-conf override, for the WHOLE query execution (the
+  * monitor is reentrant, so bodies may nest `ConfScope.superstep` scopes).
   */
 object Codegen {
   def materialized(s: SparkSession)(body: => DataFrame): DataFrame =
-    graft.engine.ConfScope.withConf(s, Seq(
+    if (graft.engine.ConfScope.get(s, "spark.sql.codegen.wholeStage").toBoolean) body
+    else graft.engine.ConfScope.withConf(s, Seq(
       "spark.sql.codegen.wholeStage" -> "true")) {
       val df = body
       val out = df.localCheckpoint()

@@ -312,12 +312,16 @@ object LlmPipeline {
     * blocks — blocked token join, exact set arithmetic, oracle-checked.
     * Blocking keys bound the join fan-out; at 100 TB the block key is
     * the shuffle partition key. */
-  private val dedupNgramJaccard: Q = (s, dir) =>
-    // The confirmed-pair table is a materialized intermediate (the dedup
-    // analog of the profiler's profileData meta-table): downstream
-    // consumers — dedup_components clustering, repeated audits — read it
-    // without re-running the blocked token join. At 100 TB this is the
-    // written candidates/pairs table every production dedup run keeps.
+  private val dedupNgramJaccard: Q = (s, dir) => jaccardPairs(s, dir).orderBy("i", "j")
+
+  /** dedup_ngram_jaccard's confirmed pairs (i, j, jacc), unordered.
+    * The pair table is a materialized intermediate (the dedup analog of
+    * the profiler's profileData meta-table): downstream consumers —
+    * dedup_components clustering, repeated audits — read it without
+    * re-running the blocked token join, and without a sort they do not
+    * need. At 100 TB this is the written candidates/pairs table every
+    * production dedup run keeps. */
+  private[ops] def jaccardPairs(s: SparkSession, dir: String): DataFrame =
     graft.engine.Materialize(s, s"jaccard-pairs:$dir") {
       val d = docs(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
@@ -367,7 +371,7 @@ object LlmPipeline {
           (col("szi") + col("szj") - col("inter")).cast("double"))
         .filter(col("jacc") >= 0.8)
         .select("i", "j", "jacc")
-    }.orderBy("i", "j")
+    }
 
   /** Embedding-cosine near-dup pairs over (label, sign-LSH cell) blocks —
     * the scale-safe embedding dedup: 8 independent sign-bit tables

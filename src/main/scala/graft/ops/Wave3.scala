@@ -38,71 +38,105 @@ object Wave3 {
     * the "keep one per cluster" step that turns pairwise dedup output
     * into actual drops. Converges in O(cluster diameter) supersteps and
     * is verified against the oracle's true transitive closure.
-    * Pregel supersteps: every round's state is localCheckpoint'ed —
-    * materialized to executor blocks with the LINEAGE TRUNCATED. A lazy
-    * loop stacks all rounds into one deep plan that re-runs pair
-    * generation per round (measured 36 s at sf0.1); persist+unpersist is
-    * no better because Spark's non-cascading unpersist (SPARK-24596)
-    * marks the dependent round's cache for rebuild, which recomputes the
-    * full lineage anyway (measured 55 s). Two propagation hops run per
-    * materialized superstep — per-round fixed cost (checkpoint +
-    * convergence check) dominates on shallow dup graphs.
+    *
+    * Two phases, split by plan shape (the graph_hits recipe):
+    *  - The data-sized edge set (pairs ∪ swapped pairs) is persisted and
+    *    counted ONCE under the session conf, so AQE's skew handling stays
+    *    available to the one pass whose size follows the data. The pin
+    *    keeps its lineage (persist, not localCheckpoint) and reads the
+    *    pairs once.
+    *  - The initial label table and every superstep run in
+    *    [[graft.engine.ConfScope.superstep]] (AQE off), sized by the edge
+    *    count. There the edges, plus one self-loop per node, are cached
+    *    again as `repartition(width, src)`. A hop is one SHUFFLE_HASH
+    *    join of that layout against the label table, which is already
+    *    hash-partitioned on the node at the same width (a checkpointed
+    *    or aggregated label table), then one min-label aggregate. The
+    *    join reads both sides in place; only the aggregate shuffles. (At
+    *    width 1, below 65536 edges, the cached scan reports no hash
+    *    partitioning, so the second hop re-shuffles its join inputs: two
+    *    more single-task stages per superstep, over at most that many
+    *    rows.) The self-loop keeps a node's own label, so the label
+    *    table is read once per hop and the superstep plan is a chain,
+    *    not a DAG (plans/r12 holds the plan pair).
+    *  - Labels are NODE-sized, so they are never broadcast: a broadcast
+    *    collects all of them into one process and copies them to every
+    *    executor, and under AQE each one was a job of its own.
+    *  Measured (local[4]): one job per superstep, where the loop under
+    *  the session conf ran about seven (one per query stage plus a
+    *  broadcast per hop): 9 jobs instead of 51 for the 7-superstep chain
+    *  in Wave3Spec, and 21 instead of 43 for dedup_components at sf0.01.
+    *
+    * Each superstep runs two hops and pins its state with
+    * localCheckpoint, truncating the lineage: a lazy loop stacks all
+    * rounds into one deep plan that re-runs every earlier round
+    * (measured 36 s at sf0.1), and persist+unpersist chains are no better
+    * because Spark's non-cascading unpersist (SPARK-24596) marks the
+    * dependent round's cache for rebuild (measured 55 s).
     *
     * Convergence check: min-label propagation is MONOTONE — a node's
     * label only ever decreases — and the node set is fixed, so the
     * rounds' label state is unchanged iff the label SUM is unchanged.
-    * One scalar aggregate on the already-checkpointed frame replaces the
-    * new-vs-old join per superstep (the sum is exact DECIMAL(38,0):
+    * The sum rides the checkpoint job as an observed metric, so no
+    * superstep runs a separate aggregate job. It is exact DECIMAL(38,0):
     * bigint doc-id sums overflow double above ~2^53 rows·ids and a long
     * above ~2^63/id, either of which could mask a decrease; past 10^38
     * the decimal itself nulls out and the loop fails loudly rather than
-    * faking convergence). */
+    * faking convergence. */
   def connectedComponents(pairs: DataFrame): DataFrame = {
     val edges = pairs.toDF("i", "j")
-      .union(pairs.toDF("i", "j").select(col("j"), col("i")))
-      .toDF("src", "dst").persist()
-    def hop(l: DataFrame): DataFrame = {
-      val prop = edges.as("e").join(l.as("l"), col("e.src") === col("l.v"))
-        .select(col("e.dst").as("v"), col("l.lbl").as("lbl"))
-      l.union(prop).groupBy("v").agg(min("lbl").as("lbl"))
-    }
-    // a NULL sum (decimal overflow under non-ANSI eval) must FAIL, not
-    // silently compare equal across rounds and fake convergence. Row
-    // count and label sum RIDE the checkpoint job as observed metrics —
-    // a separate aggregate job per superstep (plus the initial isEmpty
-    // probe) was pure per-round fixed cost, the term that dominates on
-    // shallow dup graphs.
-    def ckptWithSum(l: DataFrame): (DataFrame, Long, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val out = l.observe(obs, count(lit(1)).as("n"),
-        sum(col("lbl").cast("decimal(38,0)")).as("ls")).localCheckpoint()
-      val n = obs.get("n").asInstanceOf[Long]
-      val s = obs.get("ls").asInstanceOf[java.math.BigDecimal]
-      require(n == 0L || s != null,
-        "connectedComponents: label sum overflowed decimal(38,0)")
-      (out, n, s)
-    }
-    var (lbl, n0, prevSum) = ckptWithSum(
-      edges.select(col("src").as("v")).distinct().withColumn("lbl", col("v")))
-    var converged = n0 == 0L // no edges -> no nodes: already done
-    var supersteps = 0
+      .select(expr("stack(2, i, j, j, i) AS (src, dst)")).persist()
+    var bySrc: DataFrame = null
     try {
-      // 64 supersteps = 128 hops >= any realistic dup-graph diameter; the
-      // cap is a runaway backstop, and hitting it FAILS LOUDLY — silently
-      // returning unconverged labels would leave deep-chain duplicates
-      // labeled as their own component (wrongly kept by dedup_keep).
-      while (!converged && supersteps < 64) {
-        val (next, _, s) = ckptWithSum(hop(hop(lbl)))
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-        lbl = next
-        supersteps += 1
+      // counted on the RDD, which builds the cache in passing: a Dataset
+      // count adds a global-count shuffle, two more jobs under AQE
+      val ne = edges.queryExecution.toRdd.count()
+      graft.engine.ConfScope.superstep(pairs.sparkSession, rows = ne) { width =>
+        // every node is a src of the symmetric edge set, so this gives
+        // each node its self-loop
+        bySrc = edges.select(expr("stack(2, src, dst, src, src) AS (src, dst)"))
+          .repartition(width, col("src")).distinct().persist()
+        def hop(l: DataFrame): DataFrame =
+          bySrc.as("e")
+            .join(l.hint("shuffle_hash").as("l"), col("e.src") === col("l.v"))
+            .groupBy(col("e.dst").as("v")).agg(min(col("l.lbl")).as("lbl"))
+        // a NULL sum (decimal overflow under non-ANSI eval) must FAIL, not
+        // silently compare equal across rounds and fake convergence; with
+        // at least one edge the node set is non-empty, so its sum is set
+        def ckptWithSum(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
+          val obs = org.apache.spark.sql.Observation()
+          val out = l.observe(obs,
+            sum(col("lbl").cast("decimal(38,0)")).as("ls")).localCheckpoint()
+          val s = obs.get("ls").asInstanceOf[java.math.BigDecimal]
+          require(ne == 0L || s != null,
+            "connectedComponents: label sum overflowed decimal(38,0)")
+          (out, s)
+        }
+        // the self-loops are the node set, each node labeled by itself
+        var (lbl, prevSum) = ckptWithSum(bySrc.filter(col("src") === col("dst"))
+          .select(col("src").as("v"), col("src").as("lbl")))
+        var converged = ne == 0L // no edges -> no nodes: already done
+        var supersteps = 0
+        // 64 supersteps = 128 hops >= any realistic dup-graph diameter; the
+        // cap is a runaway backstop, and hitting it FAILS LOUDLY — silently
+        // returning unconverged labels would leave deep-chain duplicates
+        // labeled as their own component (wrongly kept by dedup_keep).
+        while (!converged && supersteps < 64) {
+          val (next, s) = ckptWithSum(hop(hop(lbl)))
+          converged = s.compareTo(prevSum) == 0
+          prevSum = s
+          lbl = next
+          supersteps += 1
+        }
+        require(converged,
+          s"connectedComponents did not converge in $supersteps supersteps (graph diameter > 128?)")
+        lbl.select(col("v").as("doc_id"), col("lbl").as("component"))
+          .orderBy("doc_id")
       }
-      require(converged,
-        s"connectedComponents did not converge in $supersteps supersteps (graph diameter > 128?)")
-    } finally edges.unpersist()
-    lbl.select(col("v").as("doc_id"), col("lbl").as("component"))
-      .orderBy("doc_id")
+    } finally {
+      if (bySrc != null) bySrc.unpersist()
+      edges.unpersist()
+    }
   }
 
   /** The recursive-CTE transitive-closure oracle over any pair SQL. */
@@ -120,8 +154,7 @@ object Wave3 {
     * assignment every downstream drop/keep decision reads). */
   private def jaccardComponents(s: SparkSession, dir: String): DataFrame =
     graft.engine.Materialize(s, s"cc-jaccard:$dir") {
-      connectedComponents(
-        LlmPipeline.queries("dedup_ngram_jaccard")(s, dir).select("i", "j"))
+      connectedComponents(LlmPipeline.jaccardPairs(s, dir).select("i", "j"))
     }
 
   private val dedupComponents: Q = (s, dir) =>
@@ -137,7 +170,7 @@ object Wave3 {
     * materialized; the union is their read + one CC run. */
   private val dedupComponentsMulti: Q = (s, dir) =>
     graft.engine.Materialize(s, s"cc-multi:$dir") {
-      val jacc = LlmPipeline.queries("dedup_ngram_jaccard")(s, dir).select("i", "j")
+      val jacc = LlmPipeline.jaccardPairs(s, dir).select("i", "j")
       val mh = LlmPipeline.queries("dedup_minhash_md5")(s, dir)
         .filter(col("est_sim") >= 0.5).select("i", "j")
       connectedComponents(jacc.union(mh).distinct())

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Wave3
@@ -7,17 +9,69 @@ import graft.ops.Wave3
 /** Properties of the round-3 wave beyond the DuckDB differential gate. */
 class Wave3Spec extends SparkSuite {
 
-  test("connectedComponents labels a deep chain in multiple supersteps") {
+  /** A 12-node path (diameter 11 -> 6 two-hop supersteps) plus an
+    * isolated self-contained pair. */
+  private def chainPairs: DataFrame = {
     import spark.implicits._
-    // a 12-node path (diameter 11 -> 6 two-hop supersteps) plus an
-    // isolated self-contained pair; every node must take the chain head's
-    // label, exercising repeated rounds of the monotone-sum convergence
     val chain = (100L until 111L).map(i => (i, i + 1))
-    val pairs = (chain :+ ((500L, 501L))).toDF("i", "j")
-    val comp = Wave3.connectedComponents(pairs).collect()
+    (chain :+ ((500L, 501L))).toDF("i", "j")
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched, counted on
+    * a job group of its own once the listener bus has drained. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"wave3spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "connectedComponents job budget")
+    try {
+      val out = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (out, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("connectedComponents labels a deep chain in multiple supersteps") {
+    // every node must take the chain head's label, exercising repeated
+    // rounds of the monotone-sum convergence
+    val comp = Wave3.connectedComponents(chainPairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert((100L to 111L).forall(comp(_) === 100L), comp.toString)
     assert(comp(500L) === 500L && comp(501L) === 500L)
+  }
+
+  test("connectedComponents runs one job per superstep") {
+    val pairs = chainPairs
+    val (comp, jobs) = withJobCount(Wave3.connectedComponents(pairs))
+    // 6 supersteps carry the head's label down the chain and a 7th
+    // changes nothing, confirming convergence; the rest of the budget is
+    // the edge-set pin and the initial label table
+    val supersteps = 7
+    assert(jobs <= supersteps + 3, s"$jobs jobs for $supersteps supersteps")
+    assert(comp.count() === 14L)
+  }
+
+  test("connectedComponents leaves no cached frame behind") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val empty = Seq.empty[(Long, Long)].toDF("i", "j")
+    for ((pairs, nodes) <- Seq(chainPairs -> 14L, empty -> 0L)) {
+      val before = sc.getPersistentRDDs
+      val comp = Wave3.connectedComponents(pairs)
+      // label checkpoints stay (the result reads the last one); both
+      // cached edge frames are gone
+      def uncheckpointed(m: collection.Map[Int, org.apache.spark.rdd.RDD[_]]) =
+        m.filterNot(_._2.isCheckpointed).keySet
+      assert(uncheckpointed(sc.getPersistentRDDs) === uncheckpointed(before))
+      assert(comp.count() === nodes)
+    }
   }
 
   test("dedup_components has converged (labels are a fixed point)") {
