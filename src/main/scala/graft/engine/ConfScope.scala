@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.graftx.Internals
 
 /** Mutually-exclusive session-conf override scope.
   *
@@ -58,8 +60,9 @@ object ConfScope {
     * scheduler round-trips on a cluster.
     *
     * The width is `max(1, min(session, rows / rowsPerTask + 1))`:
-    *  - `rows` is the caller's MEASURED input size (an observed count of
-    *    the pinned table the loop shuffles). `rows = 0` gives width 1,
+    *  - `rows` is the MEASURED size of the pinned table the loop
+    *    shuffles ([[superstepOver]] passes its input's count). `rows = 0`
+    *    gives width 1,
     *    right for loops whose every aggregate output is MODEL-sized: the
     *    reduce side receives only (#map-partitions x #groups) partial
     *    rows at any data scale, and the map side keeps the input's full
@@ -75,10 +78,10 @@ object ConfScope {
     * layouts.
     *
     * WHEN it is wrong: any data-sized pass (scan, join, explode, wide
-    * groupBy). Those must materialize EAGERLY (localCheckpoint) BEFORE
-    * entering the scope, so they run under the session's AQE with skew
-    * mitigation — the caller's responsibility, asserted per call site by
-    * the plan-contract specs. Results the loop builds must likewise be
+    * groupBy). Such a pass must materialize eagerly BEFORE the scope, so
+    * it runs under the session's AQE with skew mitigation: a loop over
+    * one data-sized input enters through [[superstepOver]], which pins
+    * and counts that input. Results the loop builds must likewise be
     * pinned INSIDE the scope, or they execute later under the session
     * conf. */
   def superstep[A](s: SparkSession, rows: Long = 0L, rowsPerTask: Long = 65536L)
@@ -88,5 +91,31 @@ object ConfScope {
     withConf(s, Seq(
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.shuffle.partitions" -> width.toString))(body(width))
+  }
+
+  /** The loop-input policy: a [[superstep]] loop over one data-sized
+    * `input`, in four steps.
+    *  1. `input` is pinned eagerly with `localCheckpoint`, under the
+    *     session conf, so AQE's skew handling stays available to the one
+    *     pass whose size follows the data.
+    *  2. Its row count rides that same job as an observed metric, so the
+    *     pin and the count are one Spark job. (`persist` plus a count is
+    *     one more job, and `Dataset.count` adds a global-count shuffle.)
+    *  3. `body(pinned, rows, width)` runs in `superstep(s, rows)`.
+    *  4. The pin is freed when the scope exits, also when `body` throws.
+    *     So `body` must return something that no longer reads `pinned`:
+    *     a checkpoint, a frame over checkpoints, or a collected value.
+    *
+    * The pin truncates lineage: losing an executor mid-loop fails the
+    * query instead of recomputing the input. Every superstep checkpoints
+    * its own state in the same way, so a lineage-keeping pin of the
+    * input alone would not make the loop recoverable. */
+  def superstepOver[A](input: DataFrame)(body: (DataFrame, Long, Int) => A): A = {
+    val obs = Observation()
+    val pinned = input.observe(obs, count(lit(1)).as("rows")).localCheckpoint()
+    try {
+      val rows = obs.get("rows").asInstanceOf[Long]
+      superstep(input.sparkSession, rows)(width => body(pinned, rows, width))
+    } finally Internals.freeLocalCheckpoint(pinned)
   }
 }

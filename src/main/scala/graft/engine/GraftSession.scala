@@ -61,23 +61,21 @@ object GraftSession {
       if (own.exists) Fs.deleteRec(own)))
   }
 
-  /** Local session sized by env (SPARK_GRAFT_CPUS), UTC, quiet UI —
-    * the shape Verify/Bench/tests run under. */
+  /** Local session sized by env (SPARK_GRAFT_CPUS: cores and shuffle
+    * partitions alike), UTC, quiet UI — the shape Verify/Bench/tests run
+    * under. */
   def local(appName: String): SparkSession = {
     // default to every core (the driver contract runs local[32]); the
     // env var still overrides for constrained runs
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.max(4, Runtime.getRuntime.availableProcessors).toString)
-    // Shuffle partitions default to cores but are independently
-    // overridable: with AQE coalescing, a smaller initial count measured
-    // faster AND stabler on small-SF local runs (less per-partition
-    // scheduling overhead), while a cluster run wants the core count.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
     val s = tuned(SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", shuffle)
+      // one shuffle partition per core; AQE coalesces small stages and
+      // superstep loops size their own width (ConfScope.superstep)
+      .config("spark.sql.shuffle.partitions", cpus)
       // One-shot local harness: every query runs exactly once in a fresh
       // JVM, so whole-stage codegen pays JIT compilation + interpreted
       // warmup it never amortizes (measured: 114 s -> 59 s total across

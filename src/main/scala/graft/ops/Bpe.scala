@@ -101,14 +101,14 @@ object Bpe {
   /** Run [[Rounds]] merge rounds; returns (round, left, right,
     * weighted pair count) — the learned merge table. */
   private[graft] def learnedMerges(s: SparkSession, dir: String): Seq[(Int, String, String, Long)] = {
-    // the ONE corpus-sized pass (dictionary aggregation + top-K) pins
-    // HERE under the session conf — AQE stays available to it; the 8
-    // learn rounds below (16 jobs: argmax collect + checkpoint each)
-    // touch only the HeadWords-row dictionary, so they run in the
+    // the ONE corpus-sized pass (dictionary aggregation + top-K) is the
+    // loop input, pinned under the session conf — AQE stays available to
+    // it; the 8 learn rounds below (16 jobs: argmax collect + checkpoint
+    // each) touch only the HeadWords-row dictionary, so they run in the
     // superstep scope at width 1.
-    var words = dictionary(s, dir).localCheckpoint()
     val merges = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    graft.engine.ConfScope.superstep(s) { _ =>
+    graft.engine.ConfScope.superstepOver(dictionary(s, dir)) { (dict, _, _) =>
+      var words = dict
       for (r <- 1 to Rounds) {
         val best = pairCounts(words)
           .orderBy(desc("cnt"), asc("x"), asc("y")).limit(1).collect()

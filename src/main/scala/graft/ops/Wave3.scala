@@ -39,15 +39,18 @@ object Wave3 {
     * into actual drops. Converges in O(cluster diameter) supersteps and
     * is verified against the oracle's true transitive closure.
     *
-    * Two phases, split by plan shape (the graph_hits recipe):
-    *  - The data-sized edge set (pairs ∪ swapped pairs) is persisted and
-    *    counted ONCE under the session conf, so AQE's skew handling stays
-    *    available to the one pass whose size follows the data. The pin
-    *    keeps its lineage (persist, not localCheckpoint) and reads the
-    *    pairs once.
-    *  - The initial label table and every superstep run in
-    *    [[graft.engine.ConfScope.superstep]] (AQE off), sized by the edge
-    *    count. There the edges, plus one self-loop per node, are cached
+    * Two phases, split by plan shape:
+    *  - The data-sized edge set (pairs ∪ swapped pairs, one read of the
+    *    pairs) is the loop input of
+    *    [[graft.engine.ConfScope.superstepOver]]: pinned and counted in
+    *    one job under the session conf, so AQE's skew handling stays
+    *    available to the one pass whose size follows the data, and freed
+    *    when the loop ends. The pin is a local checkpoint, not a
+    *    lineage-keeping persist: every superstep checkpoints its labels
+    *    anyway, so an executor loss mid-loop fails the query either way.
+    *  - The initial label table and every superstep run in the superstep
+    *    scope (AQE off), sized by the edge count. There the edges, plus
+    *    one self-loop per node, are cached
     *    again as `repartition(width, src)`. A hop is one SHUFFLE_HASH
     *    join of that layout against the label table, which is already
     *    hash-partitioned on the node at the same width (a checkpointed
@@ -65,7 +68,8 @@ object Wave3 {
     *  Measured (local[4]): one job per superstep, where the loop under
     *  the session conf ran about seven (one per query stage plus a
     *  broadcast per hop): 9 jobs instead of 51 for the 7-superstep chain
-    *  in Wave3Spec, and 21 instead of 43 for dedup_components at sf0.01.
+    *  in Wave3Spec, and 20 instead of 43 for dedup_components at sf0.01
+    *  (warm, perfbench `iterative`; 21 with the persisted edge pin).
     *
     * Each superstep runs two hops and pins its state with
     * localCheckpoint, truncating the lineage: a lazy loop stacks all
@@ -83,19 +87,15 @@ object Wave3 {
     * above ~2^63/id, either of which could mask a decrease; past 10^38
     * the decimal itself nulls out and the loop fails loudly rather than
     * faking convergence. */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
-    val edges = pairs.toDF("i", "j")
-      .select(expr("stack(2, i, j, j, i) AS (src, dst)")).persist()
-    var bySrc: DataFrame = null
-    try {
-      // counted on the RDD, which builds the cache in passing: a Dataset
-      // count adds a global-count shuffle, two more jobs under AQE
-      val ne = edges.queryExecution.toRdd.count()
-      graft.engine.ConfScope.superstep(pairs.sparkSession, rows = ne) { width =>
-        // every node is a src of the symmetric edge set, so this gives
-        // each node its self-loop
-        bySrc = edges.select(expr("stack(2, src, dst, src, src) AS (src, dst)"))
-          .repartition(width, col("src")).distinct().persist()
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    graft.engine.ConfScope.superstepOver(
+        pairs.toDF("i", "j").select(expr("stack(2, i, j, j, i) AS (src, dst)"))) {
+        (edges, ne, width) =>
+      // every node is a src of the symmetric edge set, so this gives
+      // each node its self-loop
+      val bySrc = edges.select(expr("stack(2, src, dst, src, src) AS (src, dst)"))
+        .repartition(width, col("src")).distinct().persist()
+      try {
         def hop(l: DataFrame): DataFrame =
           bySrc.as("e")
             .join(l.hint("shuffle_hash").as("l"), col("e.src") === col("l.v"))
@@ -132,12 +132,8 @@ object Wave3 {
           s"connectedComponents did not converge in $supersteps supersteps (graph diameter > 128?)")
         lbl.select(col("v").as("doc_id"), col("lbl").as("component"))
           .orderBy("doc_id")
-      }
-    } finally {
-      if (bySrc != null) bySrc.unpersist()
-      edges.unpersist()
+      } finally bySrc.unpersist()
     }
-  }
 
   /** The recursive-CTE transitive-closure oracle over any pair SQL. */
   private def componentsOracle(pairsSql: String): String =

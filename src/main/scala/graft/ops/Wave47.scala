@@ -44,30 +44,23 @@ object Wave47 {
     * of the vector per task — scale-free — where a broadcast holds ALL
     * of it on every executor and the driver.)
     * Output: every customer hub score and supplier authority score. */
-  private val graphHits: Q = (s, dir) => {
-    // The one data-sized, skew-prone pass — the orders ⋈ lineitem
-    // distinct-edge aggregate — materializes HERE, under the session
-    // conf, so AQE's skew-join mitigation stays available to it
-    // (localCheckpoint is eager). Its observed row count then sizes the
-    // superstep partitioning inside the body.
-    val obsE = org.apache.spark.sql.Observation()
-    val edges0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+  private val graphHits: Q = (s, dir) =>
+    hits(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
       .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("p"))
-      .agg(count(lit(1)).as("w"))
-      .observe(obsE, count(lit(1)).as("ne"))
-      .localCheckpoint()
-    val ne = obsE.get("ne").asInstanceOf[Long]
-    // The 16 half-step pins are tiny fixed-shape jobs: they run in the
-    // superstep scope sized by the edge count. Nothing past this point
-    // needs runtime re-planning: joins are hint-pinned SHUFFLE_HASH,
-    // partitioning is explicit, and the edge aggregate is already
-    // pinned above.
-    graft.engine.ConfScope.superstep(s, rows = ne) { superParts =>
+      .agg(count(lit(1)).as("w")))
+
+  /** The HITS kernel over a weighted bipartite edge list (c, p, w): the
+    * edge aggregate is the loop input of
+    * [[graft.engine.ConfScope.superstepOver]], and the 16 half-step pins
+    * are tiny fixed-shape jobs in its superstep scope. Nothing there
+    * needs runtime re-planning: joins are hint-pinned SHUFFLE_HASH and
+    * partitioning is explicit. */
+  private[graft] def hits(edges: DataFrame): DataFrame =
+    graft.engine.ConfScope.superstepOver(edges) { (edges0, _, superParts) =>
       graphHitsBody(edges0, superParts)
     }
-  }
 
   private def graphHitsBody(edges0: DataFrame, superParts: Int): DataFrame = {
     // lazy cache build: each layout materializes inside its first
@@ -75,63 +68,64 @@ object Wave47 {
     // recognizes it either way) — two fewer scheduler round-trips
     val edgesByC = edges0.repartition(superParts, col("c")).persist()
     val edgesByP = edges0.repartition(superParts, col("p")).persist()
-    // Long fast path for the 16 half-step aggregates, DATA-DERIVED:
-    // |Σ w·v| per node ≤ strengthMax · 1e9 (scores are nano-unit, so
-    // |v| ≤ 1e9 by normalization), so when the max node strength keeps
-    // that bound under 2^62 the decimal(38) accumulators — whose only
-    // job is overflow headroom — are provably unnecessary and the sums
-    // run on codegen'd longs (~2× per half-step locally). A pathological
-    // fixture falls back to the decimal path, and ANSI mode (session
-    // default) would throw loudly rather than wrap even if this bound
-    // were ever wrong. Values are bit-identical on both paths.
-    val strengthMax = edges0.groupBy("p").agg(sum("w").as("sw")).select("sw")
-      .unionByName(edges0.groupBy("c").agg(sum("w").as("sw")).select("sw"))
-      .agg(max("sw")).head.getLong(0)
-    val longSafe = strengthMax <= (Long.MaxValue >> 1) / 1000000000L
-    def wTimes(v: Column): Column =
-      if (longSafe) sum(col("w") * v) else sum(d38(col("w")) * v)
-    def normQ(df: DataFrame, key: String, raw: String): DataFrame = {
-      // pin the RAW scores (the data-sized edge join runs once) with the
-      // squared norm riding the SAME job as an observed metric
-      // (CollectMetrics): r8 ran a separate n2 aggregation job + a 1-row
-      // broadcast per half-step — 16 extra scheduler round-trips across
-      // the run; the observation is ONE scalar (scale-free) and the
-      // quantized division derives narrowly from the pinned table.
-      // q ≤ strengthMax·1e6 on the long path (raw div 1000), under 2^53
-      // by the longSafe bound, so the double cast below is exact either
-      // way; q² always accumulates in decimal (it exceeds long range)
-      val q = df.withColumn("q",
-        if (longSafe) signum(col(raw)).cast("long") * expr(s"abs($raw) div 1000")
-        else signum(col(raw)).cast(DecimalType(38, 0)) * expr(s"abs($raw) div 1000"))
-      val obs = org.apache.spark.sql.Observation()
-      val pinned = q.observe(obs, sum(d38(col("q")) * d38(col("q"))).as("n2"))
-        .localCheckpoint()
-      // same arithmetic as the former n2-column path: decimal -> double
-      // cast, then identical IEEE sqrt/divide/floor
-      val n2 = lit(obs.get("n2")).cast("double")
-      pinned.select(col(key),
-        floor(col("q").cast("double") * 1e9 / sqrt(n2) + 0.5)
-          .cast("long").as("v"))
-    }
-    var h = edgesByC.select(col("c")).distinct()
-      .withColumn("v", lit(1000000000L)).localCheckpoint()
-    var a: DataFrame = null
-    for (_ <- 1 to HitsIters) {
-      val araw = edgesByC
-        .join(h.withColumnRenamed("v", "hv").hint("shuffle_hash"), Seq("c"))
-        .groupBy("p").agg(wTimes(col("hv")).as("raw"))
-      a = normQ(araw, "p", "raw")
-      val hraw = edgesByP
-        .join(a.withColumnRenamed("v", "av").hint("shuffle_hash"), Seq("p"))
-        .groupBy("c").agg(wTimes(col("av")).as("raw"))
-      h = normQ(hraw, "c", "raw")
-    }
-    edgesByC.unpersist(false); edgesByP.unpersist(false)
-    h.select(lit("hub").as("side"), col("c").as("id"),
-        (col("v").cast("double") / 1e9).as("score"))
-      .unionByName(a.select(lit("authority").as("side"), col("p").as("id"),
-        (col("v").cast("double") / 1e9).as("score")))
-      .orderBy("side", "id")
+    try {
+      // Long fast path for the 16 half-step aggregates, DATA-DERIVED:
+      // |Σ w·v| per node ≤ strengthMax · 1e9 (scores are nano-unit, so
+      // |v| ≤ 1e9 by normalization), so when the max node strength keeps
+      // that bound under 2^62 the decimal(38) accumulators — whose only
+      // job is overflow headroom — are provably unnecessary and the sums
+      // run on codegen'd longs (~2× per half-step locally). A pathological
+      // fixture falls back to the decimal path, and ANSI mode (session
+      // default) would throw loudly rather than wrap even if this bound
+      // were ever wrong. Values are bit-identical on both paths.
+      val strengthMax = edges0.groupBy("p").agg(sum("w").as("sw")).select("sw")
+        .unionByName(edges0.groupBy("c").agg(sum("w").as("sw")).select("sw"))
+        .agg(max("sw")).head.getLong(0)
+      val longSafe = strengthMax <= (Long.MaxValue >> 1) / 1000000000L
+      def wTimes(v: Column): Column =
+        if (longSafe) sum(col("w") * v) else sum(d38(col("w")) * v)
+      def normQ(df: DataFrame, key: String, raw: String): DataFrame = {
+        // pin the RAW scores (the data-sized edge join runs once) with the
+        // squared norm riding the SAME job as an observed metric
+        // (CollectMetrics): r8 ran a separate n2 aggregation job + a 1-row
+        // broadcast per half-step — 16 extra scheduler round-trips across
+        // the run; the observation is ONE scalar (scale-free) and the
+        // quantized division derives narrowly from the pinned table.
+        // q ≤ strengthMax·1e6 on the long path (raw div 1000), under 2^53
+        // by the longSafe bound, so the double cast below is exact either
+        // way; q² always accumulates in decimal (it exceeds long range)
+        val q = df.withColumn("q",
+          if (longSafe) signum(col(raw)).cast("long") * expr(s"abs($raw) div 1000")
+          else signum(col(raw)).cast(DecimalType(38, 0)) * expr(s"abs($raw) div 1000"))
+        val obs = org.apache.spark.sql.Observation()
+        val pinned = q.observe(obs, sum(d38(col("q")) * d38(col("q"))).as("n2"))
+          .localCheckpoint()
+        // same arithmetic as the former n2-column path: decimal -> double
+        // cast, then identical IEEE sqrt/divide/floor
+        val n2 = lit(obs.get("n2")).cast("double")
+        pinned.select(col(key),
+          floor(col("q").cast("double") * 1e9 / sqrt(n2) + 0.5)
+            .cast("long").as("v"))
+      }
+      var h = edgesByC.select(col("c")).distinct()
+        .withColumn("v", lit(1000000000L)).localCheckpoint()
+      var a: DataFrame = null
+      for (_ <- 1 to HitsIters) {
+        val araw = edgesByC
+          .join(h.withColumnRenamed("v", "hv").hint("shuffle_hash"), Seq("c"))
+          .groupBy("p").agg(wTimes(col("hv")).as("raw"))
+        a = normQ(araw, "p", "raw")
+        val hraw = edgesByP
+          .join(a.withColumnRenamed("v", "av").hint("shuffle_hash"), Seq("p"))
+          .groupBy("c").agg(wTimes(col("av")).as("raw"))
+        h = normQ(hraw, "c", "raw")
+      }
+      h.select(lit("hub").as("side"), col("c").as("id"),
+          (col("v").cast("double") / 1e9).as("score"))
+        .unionByName(a.select(lit("authority").as("side"), col("p").as("id"),
+          (col("v").cast("double") / 1e9).as("score")))
+        .orderBy("side", "id")
+    } finally { edgesByC.unpersist(false); edgesByP.unpersist(false) }
   }
 
   private val graphHitsOracle: String = {

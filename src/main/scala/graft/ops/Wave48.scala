@@ -31,29 +31,20 @@ object Wave48 {
     * semi-joins over the current edge list, checkpointed — the
     * standard Pregel-style cost, no node ever sees more than its
     * neighborhood. Output: surviving nodes with their in-core degree. */
-  private val graphKcore: Q = (s, dir) => {
-    // The data-sized, skew-prone pass — the orders ⋈ lineitem distinct
-    // edge aggregate — materializes HERE, under the session conf, so
-    // AQE's skew mitigation stays available to it (localCheckpoint is
-    // eager); its row count rides the checkpoint job as an observed
-    // metric instead of a separate count() job. The fixed-shape peel
-    // loop then runs in the superstep scope sized by that edge count.
-    val obs0 = org.apache.spark.sql.Observation()
-    val edges0 = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
-      .distinct()
-      .observe(obs0, count(lit(1)).as("ne"))
-      .localCheckpoint()
-    val ne = obs0.get("ne").asInstanceOf[Long]
-    graft.engine.ConfScope.superstep(s, rows = ne) { _ =>
-      graphKcoreBody(s, edges0, ne)
+  private val graphKcore: Q = (s, dir) =>
+    // the data-sized, skew-prone pass — the orders ⋈ lineitem distinct
+    // edge aggregate — is the loop input: pinned and counted under the
+    // session conf, then peeled in the superstep scope
+    graft.engine.ConfScope.superstepOver(
+        t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+          .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
+            col("o_orderkey") === col("l_orderkey"))
+          .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
+          .distinct()) { (edges0, ne, _) =>
+      graphKcoreBody(edges0, ne)
     }
-  }
 
-  private def graphKcoreBody(s: SparkSession, edges0: DataFrame,
-      ne: Long): DataFrame = {
+  private def graphKcoreBody(edges0: DataFrame, ne: Long): DataFrame = {
     var edges = edges0
     // peeling is monotone: an unchanged edge count proves the surviving
     // set is unchanged (subset + equal size), i.e. the fixpoint — so the

@@ -139,44 +139,39 @@ object Wave58 {
         (col("s0") - col("p0")).as("n"),
         (col("s1") - col("p1")).as("m1"),
         (col("s2") - col("p2")).as("m2"))
-    val obsSeg = org.apache.spark.sql.Observation()
-    val seg = segPrefix.union(segPairs)
-      .withColumn("sse_q", expr(
-        "(2 * (cast(m2 as decimal(38,0)) * n - cast(m1 as decimal(38,0)) * m1) + n) div (2 * n)")
-        .cast("long"))
-      .select("hiv", "lov", "sse_q")
-      .observe(obsSeg, count(lit(1)).as("ns"))
-      .localCheckpoint()
-    // Every data-sized (and triangular) pass is pinned above under the
-    // session conf; the Bellman loop below is fixed-shape over the
-    // pinned ≤ nVals²-row seg table, so it runs in the superstep scope
-    // sized by the seg count (7 rounds × join + 2 aggregates +
-    // checkpoint each otherwise pay session-width exchanges and AQE
-    // replanning for a model-sized frame).
-    val nSeg = obsSeg.get("ns").asInstanceOf[Long]
-    val outPinned =
-      graft.engine.ConfScope.superstep(s, rows = nSeg) { _ =>
-        // dp_1 = whole prefix as one bucket
-        var dp = seg.filter(col("lov") === Long.MinValue)
-          .select(col("hiv").as("j"), col("sse_q").as("cost"))
+    // Every data-sized (and triangular) pass is pinned under the session
+    // conf: vc and pre above, and the ≤ nVals²-row seg table as the loop
+    // input here. The Bellman loop is fixed-shape over seg, so it runs in
+    // the superstep scope sized by the seg count (7 rounds × join + 2
+    // aggregates + checkpoint each otherwise pay session-width exchanges
+    // and AQE replanning for a model-sized frame).
+    val outPinned = graft.engine.ConfScope.superstepOver(
+        segPrefix.union(segPairs)
+          .withColumn("sse_q", expr(
+            "(2 * (cast(m2 as decimal(38,0)) * n - cast(m1 as decimal(38,0)) * m1) + n) div (2 * n)")
+            .cast("long"))
+          .select("hiv", "lov", "sse_q")) { (seg, _, _) =>
+      // dp_1 = whole prefix as one bucket
+      var dp = seg.filter(col("lov") === Long.MinValue)
+        .select(col("hiv").as("j"), col("sse_q").as("cost"))
+        .localCheckpoint()
+      val last = vc.agg(max("v").as("j"))
+      var out = dp.join(broadcast(last), "j")
+        .select(lit(1).as("k"), col("cost"))
+      for (k <- 2 to VoptMaxK) {
+        val prev = dp.select(col("j").as("i"), col("cost").as("pc"))
+        dp = seg.filter(col("lov") =!= Long.MinValue)
+          .join(prev, col("i") === col("lov"))
+          .groupBy(col("hiv").as("j"))
+          .agg(min(col("pc") + col("sse_q")).as("cost"))
+          .union(dp.select(col("j"), col("cost")))
+          .groupBy("j").agg(min("cost").as("cost"))
           .localCheckpoint()
-        val last = vc.agg(max("v").as("j"))
-        var out = dp.join(broadcast(last), "j")
-          .select(lit(1).as("k"), col("cost"))
-        for (k <- 2 to VoptMaxK) {
-          val prev = dp.select(col("j").as("i"), col("cost").as("pc"))
-          dp = seg.filter(col("lov") =!= Long.MinValue)
-            .join(prev, col("i") === col("lov"))
-            .groupBy(col("hiv").as("j"))
-            .agg(min(col("pc") + col("sse_q")).as("cost"))
-            .union(dp.select(col("j"), col("cost")))
-            .groupBy("j").agg(min("cost").as("cost"))
-            .localCheckpoint()
-          out = out.union(dp.join(broadcast(last), "j")
-            .select(lit(k).as("k"), col("cost")))
-        }
-        out.localCheckpoint()
+        out = out.union(dp.join(broadcast(last), "j")
+          .select(lit(k).as("k"), col("cost")))
       }
+      out.localCheckpoint()
+    }
     outPinned.select(col("k"), col("cost").cast("double").as("sse"))
       .orderBy("k")
   }

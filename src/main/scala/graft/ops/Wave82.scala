@@ -26,16 +26,16 @@ object Wave82 {
     * until the PROVEN fixpoint (monotone peel + unchanged edge count),
     * capped at 8 rounds like the unrolled oracle. Output: surviving
     * edges with their in-truss support. */
-  private val graphKtruss: Q = (s, dir) => {
+  private val graphKtruss: Q = (s, dir) =>
     // the data-sized pass (the basket self-join inside BrandGraph.edges)
-    // materializes HERE under the session conf; the peel loop below runs
-    // on the pinned catalog-sized edge list (≤ brands² rows at any data
-    // scale), so the loop runs in the superstep scope at width 1.
-    val edges0 = BrandGraph.edges(s, dir).localCheckpoint()
-    graft.engine.ConfScope.superstep(s) { _ => graphKtrussBody(s, edges0) }
-  }
+    // runs in the loop-input pin under the session conf; the peel loop
+    // runs on the pinned catalog-sized edge list (≤ brands² rows at any
+    // data scale) in the superstep scope
+    graft.engine.ConfScope.superstepOver(BrandGraph.edges(s, dir)) {
+      (edges0, ne, _) => graphKtrussBody(edges0, ne)
+    }
 
-  private def graphKtrussBody(s: SparkSession, edges0: DataFrame): DataFrame = {
+  private def graphKtrussBody(edges0: DataFrame, ne: Long): DataFrame = {
     var edges = edges0
     def support(e: DataFrame): DataFrame = {
       val tri = BrandGraph.trianglesOf(
@@ -45,7 +45,7 @@ object Wave82 {
         .unionByName(tri.select(col("b").as("u"), col("c").as("v")))
         .groupBy("u", "v").agg(count(lit(1)).as("supp"))
     }
-    var prev = edges.count()
+    var prev = ne
     var converged = false
     // carry each round's support table out of the loop: on the
     // converged round the filter kept EVERY edge, so that round's

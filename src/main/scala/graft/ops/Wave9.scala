@@ -380,30 +380,25 @@ object Wave9 {
     import org.apache.spark.sql.expressions.Window
     val band = least(floor(col("value") / 125.0), lit(3.0)).cast("int")
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    // The data-sized pass (keyed per-user window + distinct) pins HERE,
-    // under the session conf — AQE coalescing/skew handling stays
-    // available to it. The recursion below then runs over the PINNED
-    // model-sized edge table ((type × band)² domain) in the superstep
-    // scope: Catalyst's UnionLoop re-plans each iteration under AQE,
-    // paying 2-3 stage-jobs per hop for a graph that is a few hundred
-    // rows at any data scale.
-    val obsE = org.apache.spark.sql.Observation()
-    val edges = t(s, dir, "events")
-      .select(col("user_id"), col("event_id"),
-        concat(col("event_type"), lit("#"), band.cast("string")).as("src"))
-      .withColumn("dst", lead("src", 1).over(w))
-      .filter(col("dst").isNotNull)
-      .select("src", "dst").distinct()
-      .observe(obsE, count(lit(1)).as("ne"))
-      .localCheckpoint()
-    val ne = obsE.get("ne").asInstanceOf[Long]
-    // the recursive CTE needs the edges as a named relation: a per-call
-    // view name (concurrent callers on one session never see each
-    // other's edges), dropped once the pinned result no longer needs it
-    val view = "graft_edges_" + java.util.UUID.randomUUID().toString.replace('-', '_')
-    edges.createTempView(view)
-    try graft.engine.ConfScope.superstep(s, rows = ne) { _ =>
-      s.sql(
+    // The data-sized pass (keyed per-user window + distinct) is the loop
+    // input: pinned under the session conf, where AQE coalescing/skew
+    // handling stays available to it. The recursion then runs over the
+    // pinned model-sized edge table ((type × band)² domain) in the
+    // superstep scope: Catalyst's UnionLoop re-plans each iteration
+    // under AQE, paying 2-3 stage-jobs per hop for a graph that is a few
+    // hundred rows at any data scale.
+    graft.engine.ConfScope.superstepOver(t(s, dir, "events")
+        .select(col("user_id"), col("event_id"),
+          concat(col("event_type"), lit("#"), band.cast("string")).as("src"))
+        .withColumn("dst", lead("src", 1).over(w))
+        .filter(col("dst").isNotNull)
+        .select("src", "dst").distinct()) { (edges, _, _) =>
+      // the recursive CTE needs the edges as a named relation: a per-call
+      // view name (concurrent callers on one session never see each
+      // other's edges), dropped once the pinned result no longer needs it
+      val view = "graft_edges_" + java.util.UUID.randomUUID().toString.replace('-', '_')
+      edges.createTempView(view)
+      try s.sql(
         s"""WITH RECURSIVE reach(node, hops) AS (
           |  SELECT 'click#0', 0
           |  UNION ALL
@@ -414,7 +409,8 @@ object Wave9 {
           |  CAST(COUNT(*) AS BIGINT) AS n_walks
           |FROM reach GROUP BY node ORDER BY node""".stripMargin)
         .localCheckpoint()
-    } finally s.catalog.dropTempView(view)
+      finally s.catalog.dropTempView(view)
+    }
   }
 
   private val graphReachabilityOracle =

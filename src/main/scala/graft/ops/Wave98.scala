@@ -37,43 +37,39 @@ object Wave98 {
     * aggregate — label tables are never broadcast and never leave the
     * cluster; the superstep pins via localCheckpoint exactly like the
     * wave-3/47 loops. Output: each node's community plus its size. */
-  private val graphLabelProp: Q = (s, dir) => {
-    // The data-sized pair-weight aggregate ([[SupplierGraph.pairWeights]]
-    // — the one skew-prone shuffle here) materializes FIRST, under the
-    // session conf, so AQE's skew mitigation stays available to it
-    // (localCheckpoint is eager). The fixed-shape rounds then run in
-    // the superstep scope sized by the undirected edge count (2·ne).
-    val obsE = org.apache.spark.sql.Observation()
-    val e = SupplierGraph.pairWeights(s, dir)
-      .select(col("p1"), col("p2"), col("w"))
-      .observe(obsE, count(lit(1)).as("ne")).localCheckpoint()
-    val ne = obsE.get("ne").asInstanceOf[Long]
-    graft.engine.ConfScope.superstep(s, rows = 2L * ne) { superParts =>
-      graphLabelPropBody(e, superParts)
-    }
-  }
+  private val graphLabelProp: Q = (s, dir) =>
+    labelPropagation(SupplierGraph.pairWeights(s, dir))
 
-  private def graphLabelPropBody(e: DataFrame, superParts: Int): DataFrame = {
-    val und = e.select(col("p1").as("s"), col("p2").as("nb"), col("w"))
-      .unionByName(e.select(col("p2").as("s"), col("p1").as("nb"), col("w")))
-      .repartition(superParts, col("s")).persist()
-    var lab = und.select(col("s")).distinct()
-      .withColumn("lab", col("s")).localCheckpoint()
-    for (_ <- 1 to LpaRounds) {
-      val votes = und
-        .join(lab.select(col("s").as("nb"), col("lab")), Seq("nb"))
-        .groupBy("s", "lab").agg(sum("w").as("sw"))
-      val pick = Window.partitionBy("s").orderBy(desc("sw"), asc("lab"))
-      lab = votes.withColumn("rn", row_number().over(pick))
-        .filter(col("rn") === 1).select(col("s"), col("lab"))
-        .localCheckpoint()
+  /** Sync LPA over a weighted pair list (p1, p2, w). The undirected edge
+    * list (each pair both ways, 2·ne rows) is the loop input of
+    * [[graft.engine.ConfScope.superstepOver]]: the data-sized
+    * pair-weight aggregate behind it — the one skew-prone shuffle here —
+    * runs in that pin, under the session conf. The fixed-shape rounds run
+    * in the superstep scope, and the cached edge layout is released on
+    * every exit. */
+  private[graft] def labelPropagation(e: DataFrame): DataFrame =
+    graft.engine.ConfScope.superstepOver(
+        e.select(expr("stack(2, p1, p2, w, p2, p1, w) AS (s, nb, w)"))) {
+        (edges, _, superParts) =>
+      val und = edges.repartition(superParts, col("s")).persist()
+      try {
+        var lab = und.select(col("s")).distinct()
+          .withColumn("lab", col("s")).localCheckpoint()
+        for (_ <- 1 to LpaRounds) {
+          val votes = und
+            .join(lab.select(col("s").as("nb"), col("lab")), Seq("nb"))
+            .groupBy("s", "lab").agg(sum("w").as("sw"))
+          val pick = Window.partitionBy("s").orderBy(desc("sw"), asc("lab"))
+          lab = votes.withColumn("rn", row_number().over(pick))
+            .filter(col("rn") === 1).select(col("s"), col("lab"))
+            .localCheckpoint()
+        }
+        val sizes = lab.groupBy("lab").agg(count(lit(1)).as("csize"))
+        lab.join(sizes, "lab")
+          .select(col("s").as("supplier"), col("lab").as("community"), col("csize"))
+          .orderBy("supplier")
+      } finally und.unpersist(false)
     }
-    und.unpersist(false)
-    val sizes = lab.groupBy("lab").agg(count(lit(1)).as("csize"))
-    lab.join(sizes, "lab")
-      .select(col("s").as("supplier"), col("lab").as("community"), col("csize"))
-      .orderBy("supplier")
-  }
 
   private val graphLabelPropOracle: String = {
     def round(k: Int): String = {

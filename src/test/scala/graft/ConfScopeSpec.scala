@@ -2,11 +2,12 @@ package graft
 
 import graft.engine.ConfScope
 
-/** The session-conf override scopes: mutual exclusion, restoration and
-  * the superstep width policy. Pins the r10 fix for the capture/restore
-  * interleaving that left `spark.sql.adaptive.enabled=false` on the
-  * shared session after the parallel-writers spec (capture(true) /
-  * capture(false) / restore(true) / restore(false)). */
+/** The session-conf override scopes: mutual exclusion, restoration, the
+  * superstep width policy and the loop-input pin of `superstepOver`.
+  * Pins the r10 fix for the capture/restore interleaving that left
+  * `spark.sql.adaptive.enabled=false` on the shared session after the
+  * parallel-writers spec (capture(true) / capture(false) / restore(true)
+  * / restore(false)). */
 class ConfScopeSpec extends SparkSuite {
 
   private val Key = "spark.sql.adaptive.enabled"
@@ -118,5 +119,60 @@ class ConfScopeSpec extends SparkSuite {
     val rows = SparkEntry.queries("graph_reachability")(s, sf).collect()
     assert(rows.nonEmpty)
     assert(views === before, "the query left a temp view registered on the session")
+  }
+
+  /** `body`'s result and the number of Spark jobs it launched, counted on
+    * a job group of its own once the listener bus has drained. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"confscopespec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "superstepOver job budget")
+    try {
+      val out = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (out, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("superstepOver: pin plus count is one job; body sees rows and width") {
+    val input = spark.range(0L, 140000L, 1L, 2)
+    val (seenInBody, jobs) = withJobCount(ConfScope.superstepOver(input.toDF()) {
+      (pinned, rows, width) =>
+        (pinned.schema, rows, width, spark.conf.get(Key), spark.conf.get(Width))
+    })
+    assert(jobs === 1, "pin and count must share one job")
+    // 140000 / 65536 + 1 = 3, under the session width of 4
+    assert(seenInBody === ((input.schema, 140000L, 3, "false", "3")))
+  }
+
+  test("superstepOver frees the input's pin, also when the body throws") {
+    val sc = spark.sparkContext
+    def ids = sc.getPersistentRDDs.keySet.toSet
+    for (fail <- Seq(false, true)) {
+      val before = ids
+      var pin = Set.empty[Int]
+      val run = () => ConfScope.superstepOver(spark.range(1000L).toDF()) { (_, _, _) =>
+        pin = ids -- before
+        if (fail) throw new IllegalStateException("body failed")
+      }
+      if (fail) intercept[IllegalStateException](run()) else run()
+      assert(pin.nonEmpty, "the input was not pinned during the body")
+      assert((ids intersect pin).isEmpty, s"the pin outlived the scope (body threw: $fail)")
+    }
+  }
+
+  test("superstepOver: an empty input gives rows 0 and width 1, and the body runs") {
+    import spark.implicits._
+    for (empty <- Seq(Seq.empty[Long].toDF("v"), spark.range(10L).filter("id < 0").toDF())) {
+      assert(ConfScope.superstepOver(empty) { (_, rows, width) => (rows, width) } === ((0L, 1)))
+    }
   }
 }

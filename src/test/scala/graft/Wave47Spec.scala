@@ -70,4 +70,20 @@ class Wave47Spec extends SparkSuite {
       assert(math.abs(ratio - ns.toDouble / nc) < 1e-6 + 1e-9)
     }
   }
+
+  test("graph_hits leaves no cached frame behind") {
+    import spark.implicits._
+    // checkpoints may stay (the result reads the last ones); both
+    // cached edge layouts must go, also when a half-step fails: a
+    // negative weight keeps the long path, and w * 1e9 then overflows
+    // under ANSI in the first half-step, after the by-customer layout is
+    // built
+    def cached = org.apache.spark.graftspec.Pins.cached(spark.sparkContext)
+    val before = cached
+    assert(SparkEntry.queries("graph_hits")(spark, sf).collect().nonEmpty)
+    assert(cached === before)
+    val failing = Seq((1L, 1L, -1000000000000L)).toDF("c", "p", "w")
+    intercept[Exception](graft.ops.Wave47.hits(failing).collect())
+    assert(cached === before)
+  }
 }

@@ -66,4 +66,22 @@ class Wave98Spec extends SparkSuite {
     assert(got === expect,
       s"pair sets diverge: extra=${got -- expect} missing=${expect -- got}")
   }
+
+  test("graph_label_prop leaves no cached frame behind") {
+    import spark.implicits._
+    val q = SparkEntry.queries("graph_label_prop")
+    // the first run builds the session's pair-weight memo, which stays
+    assert(q(spark, sf).collect().nonEmpty)
+    // checkpoints may stay (the result reads the last one); the cached
+    // edge layout must go, also when a round fails: two equal
+    // pairs of weight Long.MaxValue overflow the first round's vote sum
+    // under ANSI, after the layout is built
+    def cached = org.apache.spark.graftspec.Pins.cached(spark.sparkContext)
+    val before = cached
+    assert(q(spark, sf).collect().nonEmpty)
+    assert(cached === before)
+    val failing = Seq((1L, 2L, Long.MaxValue), (1L, 2L, Long.MaxValue)).toDF("p1", "p2", "w")
+    intercept[Exception](graft.ops.Wave98.labelPropagation(failing).collect())
+    assert(cached === before)
+  }
 }
