@@ -1,15 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Driver-run benchmark: one JSON line with per-query wall-clock seconds
   * at SPARK_GRAFT_SF_DIR.
   *
-  * Each query is executed twice: a warm-up pass (JIT + codegen + parquet
-  * footer caches — in a one-query-per-JVM deployment this cost is
+  * Each query is executed three times: a warm-up pass (JIT + codegen +
+  * parquet footer caches — in a one-query-per-JVM deployment this cost is
   * amortized across the billions of rows a 100 TB run processes, but in a
   * fresh local JVM it lands arbitrarily on whichever queries run first,
-  * producing 3-10x run-to-run noise), then the timed pass. `value` is the
-  * timed total; `cold_total` reports the warm-up pass for transparency.
+  * producing 3-10x run-to-run noise), then two timed passes. `value` is
+  * the total of each query's faster timed run; `cold_total` reports the
+  * warm-up pass for transparency.
+  * `cold_compiles` and `warm_compiles` (one per warm pass) count the
+  * Janino classes each pass compiled; a warm pass should compile none.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -30,20 +33,29 @@ object Bench {
       System.err.println(f"[bench] $name%-32s $sec%8.2f s")
       sec
     }
-    val cold = names.map(n => n -> one(n)).toMap
+    // one pass over every query, with the Janino classes it compiled
+    // (CodegenMetrics counts each compile JVM-wide): a warm pass that
+    // still compiles means Spark's compiled-class cache missed
+    def pass(): (Map[String, Double], Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val secs = names.map(n => n -> one(n)).toMap
+      (secs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+    }
+    val (cold, coldCompiles) = pass()
     // best-of-two warm passes per query: this sandbox shows bursty
     // multi-x contention windows (same-tree totals measured 66-168 s
     // across an idle hour); the per-query min is the figure least
     // polluted by whichever window a pass happened to land in
-    val warm1 = names.map(n => n -> one(n)).toMap
-    val warm2 = names.map(n => n -> one(n)).toMap
+    val (warm1, warm1Compiles) = pass()
+    val (warm2, warm2Compiles) = pass()
+    val compiles = s""""cold_compiles":$coldCompiles,"warm_compiles":[$warm1Compiles,$warm2Compiles]"""
     val warm = names.map(n => n -> math.min(warm1(n), warm2(n))).toMap
     val qs = names.map(n => s""""$n":${warm(n)}""").mkString("{", ",", "}")
     val cqs = names.map(n => s""""$n":${cold(n)}""").mkString("{", ",", "}")
     val total = warm.values.sum
     val coldTotal = cold.values.sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold_total":$coldTotal,"cold_queries":$cqs,"failed":$failedJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"cold_total":$coldTotal,"cold_queries":$cqs,$compiles,"failed":$failedJson,"sf":"$sfDir"}"""
     println(line)
     // the driver tail-truncates long stdout lines; persist the full
     // per-query JSON so rounds stay diffable without a re-run (committed
@@ -61,7 +73,7 @@ object Bench {
     // object; the full line above and BENCH_full.json are unchanged
     // (additions only — the timing methodology is untouched). Its own
     // metric tag keeps line parsers from confusing it with the full line.
-    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","cold_total":$coldTotal,"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir","full":"BENCH_full.json"}""")
+    println(s"""{"metric":"total_summary","value":$total,"unit":"sec","cold_total":$coldTotal,$compiles,"n_queries":${names.size},"failed":$failedJson,"sf":"$sfDir","full":"BENCH_full.json"}""")
     spark.stop()
   }
 }

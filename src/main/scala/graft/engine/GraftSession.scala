@@ -7,6 +7,25 @@ import org.apache.spark.sql.SparkSession
   * SURVEY.md §2.1 session_conf, §4.1):
   * AQE with partition coalescing / skew-join / local shuffle reads,
   * 20 MiB broadcast threshold, shuffled-hash preferred over sort-merge.
+  *
+  * Two defaults make generated code compile once per JVM rather than
+  * once per session. Spark keys its compiled-class cache
+  * (`CodeGenerator.cache`) by the task thread's context classloader as
+  * well as the code, and bounds it with a JVM-wide LRU:
+  *  - `spark.sql.artifact.isolation.enabled=false`: with isolation on,
+  *    every `newSession()` gets its own artifact classloader, so a fresh
+  *    session recompiles every Janino class the JVM already holds and
+  *    repeats the JVM's class lookups. The engine adds no per-session
+  *    jars, files or classes, so isolation buys nothing here; with it
+  *    off, all sessions share one loader.
+  *  - `spark.sql.codegen.cache.maxEntries=8192`: Spark's default of 100
+  *    entries evicts within one cold pass of dedup_components,
+  *    graph_label_prop and graph_reachability at sf0.01, which compiles
+  *    146 distinct classes. A full pass over all 442 queries compiles
+  *    4,634, and 8192 holds them with headroom; at the end of that pass
+  *    (`graft.Verify`, sf0.01) metaspace holds 215 MB.
+  * Both are static: they act through the session that creates the
+  * SparkContext, and sessions made from it inherit them.
   */
 object GraftSession {
 
@@ -32,6 +51,9 @@ object GraftSession {
     // and Spark's 64 KB default the fused method runs INTERPRETED, which
     // measured 3-5x slower with 10x CPU on the wide profiler melt+agg plan.
     "spark.sql.codegen.hugeMethodLimit" -> "8000",
+    // compile generated code once per JVM (see the object's Scaladoc)
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "8192",
     "spark.sql.session.timeZone" -> "UTC")
 
   def tuned(b: SparkSession.Builder): SparkSession.Builder =

@@ -34,9 +34,13 @@ object Wave98 {
     * in the oracle; symmetric constant per the fixture-pin ledger).
     * Scale shape: per round one join of the edge list against the
     * node-sized label table keyed by supplier + one (node, label)
-    * aggregate — label tables are never broadcast and never leave the
-    * cluster; the superstep pins via localCheckpoint exactly like the
-    * wave-3/47 loops. Output: each node's community plus its size. */
+    * aggregate. The join is chosen by the label table's size: under the
+    * broadcast threshold (at sf0.01 the checkpoint holds 100 rows) every
+    * round runs a one-task broadcast job for it, and the cached edge
+    * layout, partitioned by `s` rather than the join key `nb`, is read
+    * in place instead of shuffled again; above it, the edges re-shuffle
+    * each round. The superstep pins via localCheckpoint exactly like
+    * the wave-3/47 loops. Output: each node's community plus its size. */
   private val graphLabelProp: Q = (s, dir) =>
     labelPropagation(SupplierGraph.pairWeights(s, dir))
 

@@ -23,10 +23,16 @@ object Internals {
     * MUST only be called after every consumer of the checkpointed data
     * has finished: unpersisting invalidates the local checkpoint, and
     * any later access fails rather than recomputing. No-op for frames
-    * that are not local-checkpoint results. */
+    * that are not local-checkpoint results.
+    *
+    * Releases through `SparkContext.unpersistRDD` (private to Spark's
+    * package) rather than `RDD.unpersist`, which logs a WARN that the
+    * RDD's lineage is truncated on every call — expected here, since the
+    * caller is done with the data, and noise that would hide real
+    * warnings in every superstep loop and upsert. */
   def freeLocalCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical match {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.sparkContext.unpersistRDD(lr.rdd.id, blocking = false)
       case _ => ()
     }
 }

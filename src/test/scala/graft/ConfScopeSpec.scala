@@ -169,6 +169,40 @@ class ConfScopeSpec extends SparkSuite {
     }
   }
 
+  test("superstepOver frees its pin without logging a warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // `RDD.unpersist` on a local checkpoint warns that its lineage is
+    // truncated, on every loop exit; the release must not go through it
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("superstepOverWarns", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          warns.add(s"${e.getLoggerName}: ${e.getMessage.getFormattedMessage}")
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    val sc = spark.sparkContext
+    def ids = sc.getPersistentRDDs.keySet.toSet
+    val before = ids
+    var pin = Set.empty[Int]
+    capture.start()
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try ConfScope.superstepOver(spark.range(1000L).toDF()) { (_, _, _) => pin = ids -- before }
+    finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(pin.nonEmpty, "the input was not pinned during the body")
+    assert((ids intersect pin).isEmpty, "the pin outlived the scope")
+    assert(warns.isEmpty, s"warnings logged around superstepOver: ${warns.toArray.mkString("; ")}")
+  }
+
   test("superstepOver: an empty input gives rows 0 and width 1, and the body runs") {
     import spark.implicits._
     for (empty <- Seq(Seq.empty[Long].toDF("v"), spark.range(10L).filter("id < 0").toDF())) {
