@@ -59,9 +59,11 @@ object Bench {
     println(line)
     // the driver tail-truncates long stdout lines; persist the full
     // per-query JSON so rounds stay diffable without a re-run (committed
-    // per round, so git history keeps every round's copy)
+    // per round, so git history keeps every round's copy). Written to the
+    // working directory, the checkout for sbt's forked run, so a run from
+    // another checkout never overwrites this one's copy
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("/root/repo/BENCH_full.json"),
+      java.nio.file.Paths.get("BENCH_full.json"),
       (line + "\n").getBytes("UTF-8"))
     catch { case e: Exception =>
       System.err.println(s"[bench] BENCH_full.json not written: $e") }

@@ -103,19 +103,8 @@ object GraftSession {
       // warmup it never amortizes (measured: 114 s -> 59 s total across
       // the bench suite at sf0.1). Cluster deployments (engineConfs) keep
       // codegen on - at 100 TB the generated code runs billions of rows
-      // and compilation cost vanishes. SPARK_GRAFT_CODEGEN overrides for
-      // dev A/Bs of the trade (default unchanged — the driver's bench
-      // methodology is untouched).
-      .config("spark.sql.codegen.wholeStage", {
-        // fail fast with the env var's NAME on a typo value — unvalidated,
-        // a 'TRUE ' or '1' surfaces as an opaque Spark
-        // IllegalArgumentException far from its source (r10 ADVICE)
-        val raw = sys.env.getOrElse("SPARK_GRAFT_CODEGEN", "false")
-        val norm = raw.trim.toLowerCase
-        require(norm == "true" || norm == "false",
-          s"SPARK_GRAFT_CODEGEN must be 'true' or 'false', got: '$raw'")
-        norm
-      })
+      // and compilation cost vanishes.
+      .config("spark.sql.codegen.wholeStage", "false")
       .config("spark.ui.enabled", "false"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

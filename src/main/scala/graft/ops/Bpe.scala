@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -248,10 +248,11 @@ object Bpe {
        |GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  /** Persist the learned merge table into a store (the train-once /
-    * encode-many production shape, like Ivf.buildIndex): one tiny
-    * parquet table, ordered by round. */
-  def saveMerges(store: graft.engine.ParquetStore, s: SparkSession,
+  /** Persist the learned merge table as the parquet table
+    * `root/bpe_merges`, overwritten (the train-once / encode-many
+    * production shape, like Ivf.buildIndex): one tiny table, ordered by
+    * round. */
+  def saveMerges(root: String, s: SparkSession,
       merges: Seq[(Int, String, String, Long)]): Unit = {
     val rows = merges.map { case (r, x, y, c) => Row(r.toLong, x, y, c) }
     val schema = StructType(Seq(
@@ -259,15 +260,15 @@ object Bpe {
       StructField("left", StringType, nullable = false),
       StructField("right", StringType, nullable = false),
       StructField("pair_count", LongType, nullable = false)))
-    store.overwrite(
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema), "bpe_merges")
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/bpe_merges")
   }
 
   /** Load a persisted merge table in round order — model-sized driver
     * state, the same contract as loading centroids or codebooks. */
-  def loadMerges(store: graft.engine.ParquetStore,
+  def loadMerges(root: String,
       s: SparkSession): Seq[(Int, String, String, Long)] =
-    store.read(s, "bpe_merges").orderBy("round").collect()
+    s.read.parquet(s"$root/bpe_merges").orderBy("round").collect()
       .map(r => (r.getLong(0).toInt, r.getString(1), r.getString(2), r.getLong(3)))
       .toSeq
 

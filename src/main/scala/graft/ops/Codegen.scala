@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * interpreted warm-up never amortizes (measured suite-wide: 289.9 s
   * codegen-on vs 258.7 s off). A handful of queries invert that trade:
   * their hot pass is a tight expression loop over enough rows that
-  * generated code wins even with compile cost included (r10 A/B under
-  * SPARK_GRAFT_CODEGEN=true: dedup_containment 3.9 -> 2.5 s,
+  * generated code wins even with compile cost included (r10 A/B with
+  * session-wide codegen on: dedup_containment 3.9 -> 2.5 s,
   * text_script_mix 0.66 -> 0.25 s, ml_em_gmm 3.65 -> 2.4 s). Those
   * queries opt in HERE: the body plans and MATERIALIZES inside a
   * ConfScope'd codegen=true override (localCheckpoint is eager, so every
@@ -33,15 +33,6 @@ object Codegen {
     if (graft.engine.ConfScope.get(s, "spark.sql.codegen.wholeStage").toBoolean) body
     else graft.engine.ConfScope.withConf(s, Seq(
       "spark.sql.codegen.wholeStage" -> "true")) {
-      val df = body
-      val out = df.localCheckpoint()
-      // dev-only plan dump (the PLANQ_MODE pattern): the returned frame's
-      // own plan is just the checkpoint scan, so plan artifacts need the
-      // INNER plan — dumped AFTER execution so AQE has finalized it and
-      // the [codegen id : n] annotations prove the scope took effect
-      if (sys.env.contains("GRAFT_CODEGEN_EXPLAIN"))
-        System.err.println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-      out
+      body.localCheckpoint()
     }
 }

@@ -1,10 +1,11 @@
 package graft.ops
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
 import graft.SparkEntry.Q
-import graft.engine.{ParquetStore, Tables}
+import graft.engine.{Fs, Tables, VersionedStore}
 
 /** Second-wave operators: schema drift (the reference README's open TODO),
   * extra window frames, cube rollups, and the sink/optimize round-trips
@@ -47,36 +48,50 @@ object Extras {
       .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
 
   /** sink_create_replace + scan round-trip (ref: `create or replace table`,
-    * dbc cmd8/9): overwrite the SchemaInformation meta-table into a store
+    * dbc cmd8/9): write the SchemaInformation meta-table into a store
     * and read it back, hash-checked against the declared-registry oracle
     * (a lossy write would diverge). */
   private val sinkRoundtrip: Q = (s, dir) => {
-    val root = graft.engine.Fs.freshScratch(s, "sink")
-    val store = new ParquetStore(root)
-    store.overwrite(Profiler.schemaInformation(s, dir), "SchemaInformation")
+    val store = new VersionedStore(Fs.freshScratch(s, "sink"))
+    store.write(Profiler.schemaInformation(s, dir), "SchemaInformation")
     store.read(s, "SchemaInformation").orderBy("tableName", "columnName")
   }
 
-  /** The reference's maintenance pass (ref: OPTIMIZE/ZORDER, dbc cmd16/17):
-    * write small files, compact to target, z-order cluster, and emit the
-    * metrics struct in the reference's result shape (SURVEY Appendix B.3).
-    * The file counts are deterministic from the fixture geometry —
-    * repartition(8) writes 8 files, a 1 GiB bin-pack target folds any
-    * test-scale table to ceil(total/1GiB) = 1 (repartition(1), one
-    * task, one file), and the Z-order rewrite is repartitionByRange over
-    * targetFiles = 1 — so the full metrics row hash-checks against a
-    * declared VALUES oracle (file SIZES stay out of the result: byte
-    * counts are compression-env-dependent). */
+  /** The reference's maintenance pass (ref: OPTIMIZE/ZORDER, dbc
+    * cmd16/17) on a fresh store under `root`: write `part` as 8 small
+    * files, bin-pack to ceil(head bytes / 1 GiB) files, then Z-order
+    * cluster over the head's file count. Returns one row per step in the
+    * reference's OPTIMIZE metrics shape (SURVEY Appendix B.3): files
+    * added and removed are the file-set differences between the
+    * manifests before and after the step. */
+  private def optimizePart(s: SparkSession, dir: String,
+      root: String): Seq[(String, Long, Long, String)] = {
+    val store = new VersionedStore(root)
+    val v0 = store.write(Tables.load(s, dir, "part").repartition(8), "part")
+    val files0 = store.manifest("part", v0)._2
+    val headBytes = files0.map(f => new java.io.File(s"$root/part/files/$f").length).sum
+    val v1 = store.optimize(s, "part",
+      targetFiles = math.max(1, math.ceil(headBytes / 1073741824.0).toInt))
+    val files1 = store.manifest("part", v1)._2
+    val v2 = store.optimize(s, "part", targetFiles = files1.size,
+      zorderBy = Seq("p_size", "p_partkey"), bits = 8)
+    val files2 = store.manifest("part", v2)._2
+    def step(op: String, before: Seq[String], after: Seq[String], strategy: String) =
+      (op, after.diff(before).size.toLong, before.diff(after).size.toLong, strategy)
+    Seq(step("compact", files0, files1, "binPack(1073741824)"),
+      step("zorder", files1, files2, "zorder(p_size,p_partkey)"))
+  }
+
+  /** OPTIMIZE metrics of the maintenance pass. The file counts are
+    * deterministic from the fixture geometry — repartition(8) writes 8
+    * files, a 1 GiB bin-pack target folds any test-scale table to one
+    * file, and the Z-order rewrite keeps that one file — so the full
+    * metrics row hash-checks against a declared VALUES oracle (file
+    * SIZES stay out of the result: byte counts are
+    * compression-env-dependent). */
   private val maintenanceOptimize: Q = (s, dir) => {
     import s.implicits._
-    val root = graft.engine.Fs.freshScratch(s, "opt")
-    val store = new ParquetStore(root)
-    store.overwrite(Tables.load(s, dir, "part").repartition(8), "part")
-    val c = store.compact(s, "part", targetBytes = 1073741824L)
-    val z = store.cluster(s, "part", Seq("p_size", "p_partkey"), bits = 8)
-    Seq(
-      ("compact", c.numFilesAdded, c.numFilesRemoved, c.strategyName),
-      ("zorder", z.numFilesAdded, z.numFilesRemoved, z.strategyName))
+    optimizePart(s, dir, Fs.freshScratch(s, "opt"))
       .toDF("op", "numFilesAdded", "numFilesRemoved", "strategyName")
       .orderBy("op")
   }
@@ -88,12 +103,9 @@ object Extras {
     * DuckDB-checkable half of maintenance_optimize (whose file-count
     * metrics are engine-specific and stay rows-only). */
   private val maintenanceOptimizeContent: Q = (s, dir) => {
-    val root = graft.engine.Fs.freshScratch(s, "optc")
-    val store = new ParquetStore(root)
-    store.overwrite(Tables.load(s, dir, "part").repartition(8), "part")
-    store.compact(s, "part", targetBytes = 1073741824L)
-    store.cluster(s, "part", Seq("p_size", "p_partkey"), bits = 8)
-    store.read(s, "part")
+    val root = Fs.freshScratch(s, "optc")
+    optimizePart(s, dir, root)
+    new VersionedStore(root).read(s, "part")
       .select(col("p_partkey"), col("p_name"), col("p_size").cast("int").as("p_size"),
         col("p_retailprice").cast("double").as("p_retailprice"))
       .orderBy("p_partkey")

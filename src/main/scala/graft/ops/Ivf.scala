@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -139,20 +139,21 @@ object Ivf {
       .limit(10)
   }
 
-  /** Build the IVF index ONCE into a store: the centroid table
-    * (model-sized) and the cell-assigned vector table (the "inverted
-    * file", partitioned by cell on disk so a probe reads only its
-    * cells' files). Production shape: train/assign is a batch job;
-    * queries touch the materialized index only. */
-  def buildIndex(store: graft.engine.ParquetStore, e: DataFrame,
-      k: Int, iters: Int): Unit = {
+  /** Build the IVF index ONCE as two parquet tables under `root`
+    * (overwritten): the centroid table (model-sized) and the
+    * cell-assigned vector table (the "inverted file", partitioned by cell
+    * on disk so a probe reads only its cells' files). Production shape:
+    * train/assign is a batch job; queries touch the materialized index
+    * only. */
+  def buildIndex(root: String, e: DataFrame, k: Int, iters: Int): Unit = {
     val spark = e.sparkSession
     import spark.implicits._
     val cdf = train(e, k, iters).toSeq.toDF("cell", "centroid")
-    store.overwrite(cdf, "ivf_centroids")
+    cdf.write.mode(SaveMode.Overwrite).parquet(s"$root/ivf_centroids")
     // repartition by cell: each file holds few cells, so each file's
     // cell min/max row-group stats make probe filters skip it entirely
-    store.overwrite(assign(e, cdf).repartition(col("cell")), "ivf_assigned")
+    assign(e, cdf).repartition(col("cell"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/ivf_assigned")
   }
 
   /** Query the PERSISTED index: nearest `nprobe` cells from the centroid
@@ -161,14 +162,14 @@ object Ivf {
     * PUSHES to the parquet scan: with cell-clustered files, row-group
     * stats skip every non-probed file, so I/O is the nprobe/k fraction
     * of the index (a broadcast join would scan everything). */
-  def queryIndex(spark: SparkSession, store: graft.engine.ParquetStore,
+  def queryIndex(spark: SparkSession, root: String,
       queryVec: Array[Float], nprobe: Int, k: Int): DataFrame = {
     val qv = array(queryVec.map(lit(_)): _*).cast("array<float>")
-    val probeCells = store.read(spark, "ivf_centroids")
+    val probeCells = spark.read.parquet(s"$root/ivf_centroids")
       .select(col("cell"), Native.cosineSim(col("centroid"), qv).as("sim"))
       .orderBy(desc("sim"), asc("cell")).limit(nprobe)
       .select("cell").collect().map(_.getInt(0)).toSeq
-    store.read(spark, "ivf_assigned")
+    spark.read.parquet(s"$root/ivf_assigned")
       .filter(col("cell").isin(probeCells: _*))
       .select(col("vec_id"), round(Native.cosineSim(col("embedding"), qv), 6).as("cos"))
       .orderBy(desc("cos"), asc("vec_id"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Native
@@ -22,14 +22,13 @@ import graft.functions.Native
   */
 object LshIndex {
 
-  /** Build the inverted file ONCE: one (table, bucket) row per vector
+  /** Build the inverted file ONCE as the parquet table
+    * `root/lsh_buckets` (overwritten): one (table, bucket) row per vector
     * per hash table, bucket-clustered on disk. */
-  def buildIndex(store: graft.engine.ParquetStore, e: DataFrame,
-      planes: Int, tables: Int): Unit =
-    store.overwrite(
-      LlmPipeline.lshTables(e, planes, tables)
-        .repartition(col("table"), col("bucket")),
-      "lsh_buckets")
+  def buildIndex(root: String, e: DataFrame, planes: Int, tables: Int): Unit =
+    LlmPipeline.lshTables(e, planes, tables)
+      .repartition(col("table"), col("bucket"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$root/lsh_buckets")
 
   /** Query the PERSISTED index: the query vector's bucket per table
     * comes from the same native expression evaluated on one row (so the
@@ -38,7 +37,7 @@ object LshIndex {
     * with exact cosine against the embedding table. Returns top-k
     * (vec_id, cos) excluding nothing — callers filter the query row out
     * if it is part of the corpus. */
-  def queryIndex(spark: SparkSession, store: graft.engine.ParquetStore,
+  def queryIndex(spark: SparkSession, root: String,
       embeddings: DataFrame, queryVec: Array[Float],
       planes: Int, tables: Int, k: Int): DataFrame = {
     val qv = array(queryVec.map(lit(_)): _*).cast("array<float>")
@@ -48,7 +47,7 @@ object LshIndex {
     val probe = qBuckets.map { case (t, b) =>
       col("table") === t && col("bucket") === b
     }.reduce(_ || _)
-    val cands = store.read(spark, "lsh_buckets")
+    val cands = spark.read.parquet(s"$root/lsh_buckets")
       .filter(probe)
       .select("vec_id").distinct()
     embeddings.join(cands, "vec_id")

@@ -54,8 +54,8 @@ object Wave56 {
   // Codegen scope (r11): the agreement-vector expressions over the salted
   // block join are a tight per-pair expression loop — the largest single
   // codegen delta on the surface (same-window alternating A/B: scoped
-  // 1.5-1.6 s warm vs unscoped 3.1-3.4 s, ~2x; the session-wide
-  // SPARK_GRAFT_CODEGEN probe agreed, 2.6-2.9 -> 1.0-1.2). Materialized
+  // 1.5-1.6 s warm vs unscoped 3.1-3.4 s, ~2x; a session-wide
+  // codegen-on probe agreed, 2.6-2.9 -> 1.0-1.2). Materialized
   // inside the scope (8-row output). text_textrank and
   // corpus_ccnet_buckets were probed for the same scope and DROPPED —
   // the scoped A/B showed a loss and a wash respectively (the loop-heavy

@@ -56,16 +56,16 @@ class BpeSpec extends SparkSuite {
   test("persisted merge table round-trips and encodes identically to in-session") {
     val merges = Bpe.learnedMerges(spark, sf)
     val dir = java.nio.file.Files.createTempDirectory("graft-bpe-model")
-    val store = new graft.engine.ParquetStore(dir.toString)
-    Bpe.saveMerges(store, spark, merges)
-    assert(Bpe.loadMerges(store, spark) === merges, "model round-trip lossless")
+    val root = dir.toString
+    Bpe.saveMerges(root, spark, merges)
+    assert(Bpe.loadMerges(root, spark) === merges, "model round-trip lossless")
     val vocab = graft.engine.Tables.load(spark, sf, "documents")
       .select(explode(graft.ops.LlmPipeline.tokens(col("text"))).as("token"))
       .distinct()
     val direct = Bpe.encodeTokens(vocab, merges)
       .select(col("token"), concat_ws(" ", col("syms")).as("enc"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val fromStore = Bpe.encodeTokens(vocab, Bpe.loadMerges(store, spark))
+    val fromStore = Bpe.encodeTokens(vocab, Bpe.loadMerges(root, spark))
       .select(col("token"), concat_ws(" ", col("syms")).as("enc"))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(direct === fromStore, "persisted-model encoding must match in-session")

@@ -93,13 +93,12 @@ class IvfSpec extends SparkSuite {
     val e = graft.engine.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val indexDir = java.nio.file.Files.createTempDirectory("graft-ivf-index")
-    val store = new graft.engine.ParquetStore(indexDir.toString)
-    Ivf.buildIndex(store, e, k = 16, iters = 2)
+    Ivf.buildIndex(indexDir.toString, e, k = 16, iters = 2)
     val qv = e.filter(col("vec_id") === 0).head()
       .getSeq[Float](1).toArray
     // the query vector is itself in the corpus: ask for one extra and
     // drop the self-hit, mirroring sim_ivf's exclusion
-    val fromIndex = Ivf.queryIndex(spark, store, qv, nprobe = 4, k = 11)
+    val fromIndex = Ivf.queryIndex(spark, indexDir.toString, qv, nprobe = 4, k = 11)
       .filter(col("vec_id") =!= 0)
       .limit(10)
       .collect().map(_.getLong(0)).toSeq

@@ -118,12 +118,11 @@ class LlmPipelineSpec extends SparkSuite {
     val e = graft.engine.Tables.load(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val indexDir = java.nio.file.Files.createTempDirectory("graft-lsh-index")
-    val store = new graft.engine.ParquetStore(indexDir.toString)
-    LshIndex.buildIndex(store, e, planes = 4, tables = 8)
+    LshIndex.buildIndex(indexDir.toString, e, planes = 4, tables = 8)
     val qv = e.filter(col("vec_id") === 0).head().getSeq[Float](1).toArray
     // the query vector is in the corpus: ask for one extra, drop the
     // self-hit, mirroring sim_ann_lsh's exclusion
-    val fromIndex = LshIndex.queryIndex(spark, store, e, qv,
+    val fromIndex = LshIndex.queryIndex(spark, indexDir.toString, e, qv,
         planes = 4, tables = 8, k = 11)
       .filter(col("vec_id") =!= 0)
       .limit(10)

@@ -4,26 +4,31 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Bucketing, ParquetStore, Tables}
+import graft.engine.{Bucketing, Tables, VersionedStore}
 
 /** Scale-mechanism proofs: the physical properties the 100 TB design
   * relies on, observed on real files/plans (SCALING.md). */
 class ScaleSpec extends SparkSuite {
 
   test("z-order clustering narrows per-file min/max ranges (data skipping)") {
-    val dir = Files.createTempDirectory("graft-scale").toString
-    val store = new ParquetStore(dir)
+    val store = new VersionedStore(Files.createTempDirectory("graft-scale").toString)
+    // per-file p_size [min, max] from the manifest stats: the statistics
+    // data skipping reads
+    def ranges(v: Long): Seq[(Double, Double)] =
+      store.manifestWithStats("p", v)._2.map { e =>
+        val (lo, hi) = e.stats("p_size")
+        (lo.toDouble, hi.toDouble)
+      }
     // unclustered: 4 round-robin files, each spanning ~the full p_size domain
-    store.overwrite(Tables.load(spark, sf, "part").repartition(4), "p")
-    val before = store.fileRanges(spark, "p", "p_size")
+    val before = ranges(store.write(Tables.load(spark, sf, "part").repartition(4), "p"))
     val globalSpan = before.map(_._2).max - before.map(_._1).min
     val avgBefore = before.map { case (lo, hi) => hi - lo }.sum / before.size
-    store.cluster(spark, "p", Seq("p_size", "p_partkey"), bits = 8)
-    val after = store.fileRanges(spark, "p", "p_size")
+    val after = ranges(store.optimize(spark, "p", targetFiles = 4,
+      zorderBy = Seq("p_size", "p_partkey"), bits = 8))
     val avgAfter = after.map { case (lo, hi) => hi - lo }.sum / after.size
     // round-robin files span nearly the whole domain; clustered files must
-    // cover materially narrower slices - that narrowing IS what parquet
-    // row-group stats skip on
+    // cover materially narrower slices - that narrowing IS what the
+    // manifest stats skip on
     assert(avgBefore > 0.8 * globalSpan, s"unclustered spans: $before")
     assert(avgAfter < 0.6 * globalSpan, s"clustered spans: $after (global $globalSpan)")
   }

@@ -4,22 +4,20 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.{ParquetStore, Tables}
+import graft.engine.{Tables, VersionedStore}
 import graft.functions.ZOrder
 import graft.ops.Joins
 
-/** TableStore semantics: upsert (MERGE parity), compaction, Z-order
-  * clustering (SURVEY.md §2.3 merge_upsert, §4.1). */
+/** MERGE semantics of the store's keyed upsert and the query-surface
+  * operator, plus the Z-order key (SURVEY.md §2.3 merge_upsert, §4.1). */
 class StoreSpec extends SparkSuite {
 
-  private def tmpStore(): (ParquetStore, String) = {
-    val dir = Files.createTempDirectory("graft-store").toString
-    (new ParquetStore(dir), dir)
-  }
+  private def tmpStore(): VersionedStore =
+    new VersionedStore(Files.createTempDirectory("graft-store").toString)
 
   test("upsert: source wins on match, inserts new, keeps unmatched target") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     store.upsert(spark, "t", base, Seq("k"))
     val src = Seq((2L, "B"), (4L, "D")).toDF("k", "v")
@@ -30,7 +28,7 @@ class StoreSpec extends SparkSuite {
 
   test("upsert: NULL keys never match (MERGE ON t.k = s.k semantics)") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val base = Seq((Option.empty[Long], "old-null"), (Some(1L), "a")).toDF("k", "v")
     store.upsert(spark, "t", base, Seq("k"))
     val src = Seq((Option.empty[Long], "new-null")).toDF("k", "v")
@@ -43,7 +41,7 @@ class StoreSpec extends SparkSuite {
 
   test("upsert is idempotent (MERGE re-run yields identical table)") {
     import spark.implicits._
-    val (store, _) = tmpStore()
+    val store = tmpStore()
     val src = Seq((1L, "x"), (2L, "y")).toDF("k", "v")
     store.upsert(spark, "t", src, Seq("k"))
     val first = store.read(spark, "t").collect().toSet
@@ -58,26 +56,6 @@ class StoreSpec extends SparkSuite {
     val got = Joins.mergeUpsert(t, s, Seq("k")).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got === Set((1L, "a"), (2L, "B"), (3L, "C")))
-  }
-
-  test("compact bin-packs many small files into the target count") {
-    val (store, _) = tmpStore()
-    val df = Tables.load(spark, sf, "lineitem").repartition(16)
-    store.overwrite(df, "li")
-    val metrics = store.compact(spark, "li", targetBytes = 64L * 1024 * 1024)
-    assert(metrics.numFilesRemoved === 16)
-    assert(metrics.numFilesAdded === 1)
-    assert(store.read(spark, "li").count() === df.count())
-  }
-
-  test("cluster preserves content and orders files along the z-curve") {
-    val (store, _) = tmpStore()
-    val df = Tables.load(spark, sf, "part")
-    store.overwrite(df.repartition(4), "p")
-    val before = store.read(spark, "p").collect().toSet
-    val m = store.cluster(spark, "p", Seq("p_size", "p_partkey"), bits = 8)
-    assert(m.strategyName.startsWith("zorder"))
-    assert(store.read(spark, "p").collect().toSet === before)
   }
 
   test("zvalue interleaves bits (Morton order)") {
@@ -99,22 +77,5 @@ class StoreSpec extends SparkSuite {
     val df = Tables.load(spark, sf, "part")
       .select(col("p_partkey"), ZOrder.zvalue(8, col("p_size"), col("p_partkey") % 256).as("z"))
     assert(df.select(countDistinct(col("z"))).head().getLong(0) > 1)
-  }
-
-  test("vacuum reclaims abandoned staged dirs but respects retention") {
-    val root = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
-    val store = new graft.engine.ParquetStore(root)
-    import spark.implicits._
-    store.overwrite(Seq((1L, "a")).toDF("k", "v"), "t")
-    // simulate a crash-abandoned staged write
-    val staged = new java.io.File(root + "/t__staged")
-    staged.mkdirs()
-    new java.io.File(staged, "part-0.parquet").createNewFile()
-    assert(store.vacuum(retainMs = 3600000L) === 0L)   // too young: retained
-    assert(staged.exists)
-    assert(store.vacuum(retainMs = 0L) === 1L)          // past horizon: gone
-    assert(!staged.exists)
-    // the live table is untouched
-    assert(store.read(spark, "t").count() === 1L)
   }
 }

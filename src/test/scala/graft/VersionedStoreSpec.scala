@@ -251,6 +251,28 @@ class VersionedStoreSpec extends SparkSuite {
     assert(onDisk === liveFiles.toSet, "exactly the referenced files remain")
   }
 
+  test("vacuum sweeps the stage dirs and temp files a crashed writer left") {
+    val root = java.nio.file.Files.createTempDirectory("graft-versions").toString
+    val store = new VersionedStore(root)
+    store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "t")
+    val t = new java.io.File(s"$root/t")
+    // one leftover per crash point: a stage dir mid-write, a manifest
+    // temp that never linked, a pointer temp that never moved
+    val stageDir = new java.io.File(t, "_stage_0123456789ab")
+    stageDir.mkdirs()
+    new java.io.File(stageDir, "part-00000.parquet").createNewFile()
+    val leftovers = Seq(stageDir,
+      new java.io.File(t, "_v2-0123456789ab.manifest.tmp"),
+      new java.io.File(t, "_current-0123456789ab.tmp"))
+    leftovers.drop(1).foreach(_.createNewFile())
+    val hourAgo = System.currentTimeMillis() - 3600L * 1000
+    leftovers.foreach(_.setLastModified(hourAgo))
+    store.vacuumVersions("t", keep = 1)
+    assert(leftovers.filter(_.exists).isEmpty, "crash leftovers must be swept")
+    assert(store.history("t") === Seq(1L))
+    assert(store.read(spark, "t").count() === 2L, "the head still reads")
+  }
+
   test("delete rewrites only files containing matches; others carry over") {
     val store = freshStore()
     store.write((1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
