@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Versioned parquet table store: Delta-style time travel without Delta
   * jars (design per "Delta Lake: High-Performance ACID Table Storage
@@ -17,7 +18,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * lines (tab-separated), then one line per data file: the file name, a
   * tab and its per-column stats JSON, and — when deletion vectors are
   * attached — a tab and a comma-separated list of deletion-vector file
-  * names (older manifests may lack either field). `root/table/_current`
+  * names (older manifests may lack either field). Reads drop the rows a
+  * file's own vectors list as they scan the file, with no join (see
+  * [[readEntries]]). `root/table/_current`
   * is an advisory pointer naming the live version. Writers stage data
   * files and the manifest fully, then commit by linking the manifest
   * into place — readers of version K never observe a partial write
@@ -163,6 +166,73 @@ class VersionedStore(root: String) {
     * (retention-spec observability). */
   private[graft] def cachedManifestVersions(name: String): Seq[Long] =
     withCache(name)(_.keySet.asScala.toSeq.sorted)
+
+  /** Dead row positions per data file, as one deletion-vector file lists
+    * them. */
+  private type DeadRows = Map[String, Roaring64Bitmap]
+
+  private val DvCacheKeep = 256
+
+  /** Parsed deletion vectors, keyed by (table, vector file name). Vector
+    * files are immutable like manifests, so an entry never goes stale;
+    * [[vacuumVersions]] evicts the entries of the files it deletes, and
+    * past [[DvCacheKeep]] entries the least recently used one goes (a
+    * miss re-reads the file on the driver). */
+  private val dvCache =
+    new java.util.LinkedHashMap[(String, String), DeadRows](16, 0.75f, true) {
+      override protected def removeEldestEntry(
+          e: java.util.Map.Entry[(String, String), DeadRows]): Boolean =
+        size > DvCacheKeep
+    }
+
+  /** Vector files of `name` currently held in the parsed-vector cache
+    * (observability for specs, like [[cachedManifestVersions]]). */
+  private[graft] def cachedVectors(name: String): Seq[String] =
+    dvCache.synchronized(dvCache.keySet.asScala.toSeq.filter(_._1 == name).map(_._2).sorted)
+
+  private def cacheVector(name: String, dv: String, parsed: DeadRows): Unit =
+    dvCache.synchronized { dvCache.put((name, dv), parsed); () }
+
+  /** Vector file `dv` of `name`, from the cache or read on the driver: a
+    * vector is deleted-rows-sized, so reading it costs no Spark job. */
+  private def vector(spark: SparkSession, name: String, dv: String): DeadRows = {
+    val cached = dvCache.synchronized(dvCache.get((name, dv)))
+    if (cached != null) cached
+    else {
+      val parsed = readVector(spark, name, dv)
+      cacheVector(name, dv, parsed)
+      parsed
+    }
+  }
+
+  private def readVector(spark: SparkSession, name: String, dv: String): DeadRows = {
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
+        new org.apache.hadoop.fs.Path(absPath(name, dv)))
+      .withConf(spark.sessionState.newHadoopConf()).build()
+    val sets = scala.collection.mutable.HashMap[String, Roaring64Bitmap]()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        sets.getOrElseUpdate(g.getString("__file", 0), new Roaring64Bitmap)
+          .addLong(g.getLong("__pos", 0))
+        g = reader.read()
+      }
+    } finally reader.close()
+    sets.valuesIterator.foreach(_.runOptimize())
+    sets.toMap
+  }
+
+  /** The dead positions of each of `entries`' files: a row is dead only
+    * when a vector attached to its OWN file's entry lists it (a rewrite
+    * that retired a shared vector on one file must not kill rows of the
+    * rewritten file). Files without dead rows are absent. */
+  private def deadSets(spark: SparkSession, name: String,
+      entries: Seq[FileEntry]): DeadRows =
+    entries.flatMap { e =>
+      e.dvs.flatMap(vector(spark, name, _).get(e.file))
+        .reduceOption(Roaring64Bitmap.or).map(e.file -> _)
+    }.toMap
 
   private def readManifest(name: String, v: Long): Parsed = {
     val mf = manifestFile(name, v)
@@ -952,12 +1022,16 @@ class VersionedStore(root: String) {
     }
   }
 
-  /** Write a deletion-vector parquet (dvSchema rows) into `files/`,
-    * returning its name. One output file: a DV is deleted-rows-sized by
+  /** Write a deletion-vector parquet into `files/`, returning its name.
+    * Its rows are (`__file` data-file name, `__pos` physical row index);
+    * positions are the parquet reader's stable `_metadata.row_index` —
+    * data files are immutable, so a position marked dead stays the same
+    * physical row forever. One output file: a DV is deleted-rows-sized by
     * construction (the whole point of merge-on-read is that the delete
     * is tiny next to the data), so a single columnar file is the right
     * shape — the per-commit analog of Delta's per-file roaring bitmaps,
-    * carrying the same (file, position) information. */
+    * carrying the same (file, position) information, which
+    * [[readVector]] turns back into per-file bitmaps. */
   private def stageDv(hits: DataFrame, name: String): String = {
     val tok = newToken()
     val stageDir = new java.io.File(tdir(name), s"_stage_$tok")
@@ -980,14 +1054,16 @@ class VersionedStore(root: String) {
   /** DELETE WHERE, merge-on-read: instead of rewriting the files that
     * hold matches ([[delete]]'s copy-on-write), commit a DELETION VECTOR
     * — the matches' (file, physical position) pairs — and attach it to
-    * each hit file's manifest entry; reads anti-join the vector. This is
-    * Delta's deletion-vector DELETE / Iceberg v2 position deletes: at
-    * 100 TB, deleting 0.1% of rows scattered across every file would
-    * force copy-on-write to rewrite the whole table, while merge-on-read
-    * writes kilobytes and touches no data file. The read-side anti-join
-    * is against a broadcast-sized vector; [[optimize]] compacts the debt
-    * away (its rewrite reads through the vectors and stages clean files
-    * with no dv association).
+    * each hit file's manifest entry; reads drop the listed positions as
+    * they scan each file ([[readEntries]]). This is Delta's
+    * deletion-vector DELETE / Iceberg v2 position deletes: at 100 TB,
+    * deleting 0.1% of rows scattered across every file would force
+    * copy-on-write to rewrite the whole table, while merge-on-read writes
+    * kilobytes and touches no data file. The call reads its staged vector
+    * back once, on the driver, for both the hit files and the parsed-
+    * vector cache, so no later read pays a job to load it; [[optimize]]
+    * compacts the debt away (its rewrite reads through the vectors and
+    * stages clean files with no dv association).
     *
     * Positions are computed on THIS snapshot's live view (already-dead
     * rows are excluded by the read path, though re-marking would be
@@ -1009,15 +1085,15 @@ class VersionedStore(root: String) {
       .filter(condition)
       .select(col("__file"), col("__pos"))
     val dvFile = stageDv(hits, name)
-    val hitFiles: Set[String] = spark.read.schema(dvSchema)
-      .parquet(absPath(name, dvFile))
-      .select("__file").distinct()
-      .collect().map(_.getString(0)).toSet
+    // the one read of the staged vector gives the hit files and, once
+    // committed, the cached dead sets every later read filters with
+    val dv = readVector(spark, name, dvFile)
+    val hitFiles = dv.keySet
     if (hitFiles.isEmpty) {
       new java.io.File(absPath(name, dvFile)).delete()
       return cur
     }
-    commitLoop("deleteMor", name, Seq(dvFile)) { head =>
+    val v = commitLoop("deleteMor", name, Seq(dvFile)) { head =>
       val (headSchema, headEntries) = manifestWithStats(name, head)
       if (!hitFiles.subsetOf(headEntries.map(_.file).toSet) ||
           nullable(headSchema) != nullable(tSchema))
@@ -1029,6 +1105,8 @@ class VersionedStore(root: String) {
         else e
       })
     }
+    cacheVector(name, dvFile, dv)
+    v
   }
 
   /** Candidate files an upsert on `key` would have to SCAN, after stats
@@ -1077,26 +1155,18 @@ class VersionedStore(root: String) {
     }
   }
 
-  /** Deletion-vector file schema: (data-file name, physical row index).
-    * Positions are the parquet reader's stable `_metadata.row_index` —
-    * data files are immutable, so a position marked dead stays the same
-    * physical row forever. */
-  private val dvSchema = StructType(Seq(
-    StructField("__file", org.apache.spark.sql.types.StringType, nullable = false),
-    StructField("__pos", org.apache.spark.sql.types.LongType, nullable = false)))
-
   /** Read the given snapshot entries with their deletion vectors applied.
-    * The scan keeps predicate pushdown intact (the metadata columns ride
-    * beside the data columns); dead rows drop out through ONE left-anti
-    * join against the union of the entries' dv files — deleted-rows-
-    * sized, so Spark broadcasts it at any realistic churn and AQE falls
-    * back to a shuffled anti-join only if a single delete was truly
-    * table-sized. `withMeta` keeps the (`__file`, `__pos`) identity
-    * columns for callers that need per-file row addressing (hit scans,
+    * Dead rows drop out of the data scan itself: one [[RowLive]] filter
+    * on (`_metadata.file_name`, `_metadata.row_index`) probes each row
+    * against its file's dead set, taken from the cached vectors — no
+    * vector scan, no join, and no Spark job beyond the data scan. The
+    * scan keeps predicate pushdown intact (the filter rides beside the
+    * caller's). `withMeta` adds the (`__file`, `__pos`) identity columns
+    * for callers that need per-file row addressing (hit scans,
     * [[deleteMor]]). */
   private def readEntries(spark: SparkSession, name: String, schema: StructType,
       entries: Seq[FileEntry], withMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.functions.col
     if (entries.isEmpty) {
       val base = emptyDf(spark, schema)
       return if (!withMeta) base
@@ -1107,27 +1177,20 @@ class VersionedStore(root: String) {
     }
     val raw = spark.read.schema(schema)
       .parquet(entries.map(e => absPath(name, e.file)): _*)
-    val dvFiles = entries.flatMap(_.dvs).distinct
-    if (!withMeta && dvFiles.isEmpty) return raw
-    // the row-identity columns are reserved while in use (like Delta's
-    // _metadata reservation): silently shadowing a user column here
-    // would corrupt it through the drop below
+    val dead = deadSets(spark, name, entries)
+    val live =
+      if (dead.isEmpty) raw
+      else raw.filter(org.apache.spark.sql.graftx.GraftNative.rowLive(
+        col("_metadata.file_name"), col("_metadata.row_index"), dead))
+    if (!withMeta) return live
+    // the row-identity columns are reserved (like Delta's _metadata
+    // reservation): silently shadowing a user column would corrupt it
     require(!schema.fieldNames.contains("__file") &&
       !schema.fieldNames.contains("__pos"),
       s"readEntries('$name'): __file/__pos are reserved row-identity names")
-    val base = raw
-      .withColumn("__file", substring_index(col("_metadata.file_path"), "/", -1))
+    live
+      .withColumn("__file", col("_metadata.file_name"))
       .withColumn("__pos", col("_metadata.row_index"))
-    val live =
-      if (dvFiles.isEmpty) base
-      else {
-        val dv = spark.read.schema(dvSchema)
-          .parquet(dvFiles.map(absPath(name, _)): _*)
-        base.join(dv,
-          base("__file") === dv("__file") && base("__pos") === dv("__pos"),
-          "left_anti")
-      }
-    if (withMeta) live else live.drop("__file", "__pos")
   }
 
   /** OPTIMIZE with the small-file policy (Delta OPTIMIZE's actual
@@ -1159,39 +1222,20 @@ class VersionedStore(root: String) {
     }
   }
 
-  /** COUNT(*) of the live snapshot without opening one DATA file: Σ
-    * per-file "__rows" manifest stats minus the dead-position count.
-    * The dead count reads the deletion vectors themselves (deleted-
-    * rows-sized — log-scale I/O, like Delta replaying DV metadata) and
-    * counts DISTINCT (file, pos) pairs restricted to positions whose
-    * data file still carries that vector: a rewrite that retired a
-    * vector on one of its files must not have that file's positions
-    * subtracted, and concurrent vectors that double-marked a position
-    * (both computed on the same base snapshot) must count it once.
-    * None when any entry predates row-count stats — caller falls back
-    * to a scan. */
+  /** COUNT(*) of the live snapshot without opening one DATA file and
+    * without a Spark job: Σ per-file "__rows" manifest stats minus, per
+    * entry, the distinct dead positions its OWN vectors list (the cached
+    * dead sets reads filter with). A rewrite that retired a vector on one
+    * of its files therefore subtracts nothing for the rewritten file, and
+    * concurrent vectors that double-marked a position (both computed on
+    * the same base snapshot) count it once. None when any entry predates
+    * row-count stats — caller falls back to a scan. */
   def countMeta(spark: SparkSession, name: String): Option[Long] = {
-    import org.apache.spark.sql.functions.{col, substring_index}
     val cur = currentVersion(name).getOrElse(sys.error(s"no version for $name"))
     val (_, entries) = manifestWithStats(name, cur)
     val per = entries.map(_.stats.get("__rows").flatMap(_._1.toLongOption))
     if (per.exists(_.isEmpty)) return None
-    // dv -> the data files still referencing it in THIS snapshot
-    val refs: Map[String, Set[String]] = entries
-      .flatMap(e => e.dvs.map(_ -> e.file))
-      .groupBy(_._1).map { case (dv, fs) => dv -> fs.map(_._2).toSet }
-    val dead =
-      if (refs.isEmpty) 0L
-      else {
-        val dv = spark.read.schema(dvSchema)
-          .parquet(refs.keys.toSeq.map(absPath(name, _)): _*)
-          .withColumn("__dv", substring_index(col("_metadata.file_path"), "/", -1))
-        val refRows = refs.toSeq.flatMap { case (d, fs) => fs.map(d -> _) }
-        import spark.implicits._
-        dv.join(refRows.toDF("__dv", "__file"), Seq("__dv", "__file"), "left_semi")
-          .select("__file", "__pos").distinct()
-          .count()
-      }
+    val dead = deadSets(spark, name, entries).valuesIterator.map(_.getLongCardinality).sum
     Some(per.flatten.sum - dead)
   }
 
@@ -1588,12 +1632,30 @@ class VersionedStore(root: String) {
     }
   }
 
+  /** Age past which vacuum treats a staging leftover as a crashed
+    * writer's: a writer links its temp manifest and moves its pointer
+    * temp within milliseconds, and a stage dir shows fresh mtimes while
+    * its write job runs ([[lastTouched]]). */
+  private val StagingHorizonMillis = 30L * 60 * 1000
+
+  /** Newest mtime of a staging leftover. A stage dir's own mtime changes
+    * only when its write job sets up and commits; the running tasks write
+    * under its `_temporary` subtree (Hadoop's output committer), so that
+    * subtree counts too. */
+  private def lastTouched(f: java.io.File): Long = {
+    def newest(g: java.io.File): Long =
+      (g.lastModified +: Option(g.listFiles).toSeq.flatten.map(newest)).max
+    val tmp = new java.io.File(f, "_temporary")
+    if (tmp.exists) math.max(f.lastModified, newest(tmp)) else f.lastModified
+  }
+
   /** Retention: drop all but the latest `keep` manifests (Delta VACUUM
     * for history), then garbage-collect every data file no retained
     * manifest references — file sharing means deletion must be
     * reference-counted, exactly like Delta's vacuum walking the log. The
-    * live version is always retained. Also sweeps `_stage_*` leftovers
-    * of crashed writers. */
+    * live version is always retained. Also sweeps the `_stage_*` dirs,
+    * temp manifests and pointer temps of crashed writers once they are
+    * older than [[StagingHorizonMillis]]. */
   def vacuumVersions(name: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the live version")
     val live = currentVersion(name).toSeq
@@ -1613,15 +1675,22 @@ class VersionedStore(root: String) {
       es.map(_.file) ++ es.flatMap(_.dvs)
     }.toSet
     val fd = filesDir(name)
-    if (fd.exists)
-      fd.listFiles.filter(f => !referenced.contains(f.getName)).foreach(_.delete())
-    tdir(name).listFiles.filter(f => f.isDirectory && f.getName.startsWith("_stage_"))
-      .foreach(Fs.deleteRec)
-    // temp manifests / pointer staging of crashed writers (committed ones
-    // delete their temp in the same call)
-    tdir(name).listFiles.filter(f => f.isFile && f.getName.endsWith(".tmp") &&
-      (f.getName.startsWith("_v") || f.getName.startsWith("_current-")))
-      .foreach(_.delete())
+    if (fd.exists) {
+      val gone = fd.listFiles.filter(f => !referenced.contains(f.getName))
+      gone.foreach(_.delete())
+      dvCache.synchronized(gone.foreach(f => dvCache.remove((name, f.getName))))
+    }
+    // stage dirs, temp manifests and pointer temps of crashed writers
+    // (committed writers delete theirs in the same call); a younger one
+    // may belong to a writer still at work, so it stays
+    val stale = System.currentTimeMillis() - StagingHorizonMillis
+    tdir(name).listFiles.filter { f =>
+      val n = f.getName
+      val leftover =
+        if (f.isDirectory) n.startsWith("_stage_")
+        else n.endsWith(".tmp") && (n.startsWith("_v") || n.startsWith("_current-"))
+      leftover && lastTouched(f) < stale
+    }.foreach(Fs.deleteRec)
     // key-index snapshots of vacuumed versions can never serve again
     val kept = history(name).toSet
     tdir(name).listFiles.filter(f => f.isDirectory && f.getName.startsWith("_index_"))

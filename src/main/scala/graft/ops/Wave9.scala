@@ -10,7 +10,7 @@ import graft.engine.Tables
   *
   * - `sink_delete_dv`: DELETE via deletion vectors (Delta DV / Iceberg
   *   v2 position deletes) — the delete writes kilobytes, never rewrites
-  *   a data file; reads anti-join the dead-position set.
+  *   a data file; reads drop the dead positions as they scan each file.
   * - `search_inverted` / `search_phrase`: the inverted-index retrieval
   *   pair over the documents corpus — conjunctive (AND) term search on
   *   a term-clustered posting-list index, and positional phrase search
@@ -40,8 +40,9 @@ object Wave9 {
     * aggregates the surviving rows per size band. At 100 TB this is the
     * only viable DELETE shape for scattered predicates: copy-on-write
     * rewrites every file that holds a match (here: all of them), while
-    * the vector costs O(deleted rows) bytes and one broadcast anti-join
-    * on read. OPTIMIZE later compacts the debt away
+    * the vector costs O(deleted rows) bytes and, on read, one bitmap
+    * probe per scanned row inside the scan. OPTIMIZE later compacts the
+    * debt away
     * (VersionedStoreSpec pins that, plus resurrection-safety of the
     * upsert/delete rewrite paths, vacuum refcounting, CDF visibility,
     * clone linking, and the OCC union of concurrent vectors). */

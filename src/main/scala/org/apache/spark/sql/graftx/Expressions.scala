@@ -12,6 +12,8 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expect
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.longlong.Roaring64Bitmap
 
 /** Native Catalyst expressions for the hot vector paths (SURVEY.md §4.3;
   * preference order: builtin > custom Expression with doGenCode > UDF).
@@ -343,6 +345,51 @@ case class PqCode(child: Expression, codebook: Array[Array[Float]])
     copy(child = newChild)
 }
 
+/** Deletion-vector filter of a data-file scan: true unless `dead` lists
+  * the row's position under its own file's name. `dead` maps each data
+  * file to its dead row positions and rides along as a reference object,
+  * the way [[PqCode]] carries its codebook, so the vector is applied as
+  * the scan reads each file (Delta Lake, VLDB 2020 §3): one hash probe
+  * and one bitmap probe per row, no second scan and no join. The sets
+  * are only read here, never changed. */
+case class RowLive(fileName: Expression, rowIndex: Expression,
+    dead: Map[String, Roaring64Bitmap])
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def left: Expression = fileName
+  override def right: Expression = rowIndex
+  override def inputTypes: Seq[AbstractDataType] = Seq(StringType, LongType)
+  override def dataType: DataType = BooleanType
+  override def prettyName: String = "row_live"
+
+  // plan strings name the set sizes, not every dead position
+  override protected def stringArgs: Iterator[Any] = Iterator(fileName, rowIndex,
+    s"${dead.valuesIterator.map(_.getLongCardinality).sum} dead in ${dead.size} files")
+
+  @transient private lazy val byFile = {
+    val m = new java.util.HashMap[UTF8String, Roaring64Bitmap]()
+    dead.foreach { case (f, d) => m.put(UTF8String.fromString(f), d) }
+    m
+  }
+
+  def live(file: UTF8String, pos: Long): Boolean = {
+    val d = byFile.get(file)
+    d == null || !d.contains(pos)
+  }
+
+  override def nullSafeEval(f: Any, p: Any): Any =
+    live(f.asInstanceOf[UTF8String], p.asInstanceOf[Long])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("rowLive", this, classOf[RowLive].getName)
+    defineCodeGen(ctx, ev, (f, p) => s"$ref.live($f, $p)")
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): RowLive =
+    copy(fileName = newLeft, rowIndex = newRight)
+}
+
 /** Column bridge used by graft.functions.Native. */
 object GraftNative {
   /** The catalyst expression behind a public Column (for the store's
@@ -376,6 +423,11 @@ object GraftNative {
 
   def pqCode(v: Column, codebook: Array[Array[Float]]): Column =
     ExpressionUtils.column(PqCode(ExpressionUtils.expression(v), codebook))
+
+  def rowLive(fileName: Column, rowIndex: Column,
+      dead: Map[String, Roaring64Bitmap]): Column =
+    ExpressionUtils.column(RowLive(ExpressionUtils.expression(fileName),
+      ExpressionUtils.expression(rowIndex), dead))
 
   def zvalue(bits: Int, cols: Column*): Column =
     ExpressionUtils.column(ZValue(

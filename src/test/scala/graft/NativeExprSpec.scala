@@ -79,6 +79,28 @@ class NativeExprSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.codegen.wholeStage", prev)
   }
 
+  test("RowLive: interpreted and generated predicates agree, per file") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedPredicate}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GeneratePredicate
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val deadInA = Set(0L, 5L, 1L << 40)
+    val e = org.apache.spark.sql.graftx.RowLive(BoundReference(0, StringType, false),
+      BoundReference(1, LongType, false),
+      Map("a.parquet" -> org.roaringbitmap.longlong.Roaring64Bitmap.bitmapOf(deadInA.toSeq: _*)))
+    val rows = for (f <- Seq("a.parquet", "b.parquet"); p <- Seq(0L, 1L, 5L, 6L, 1L << 40))
+      yield InternalRow(UTF8String.fromString(f), p)
+    val want = rows.map(r => !(r.getUTF8String(0).toString == "a.parquet" &&
+      deadInA(r.getLong(1))))
+    val generated = GeneratePredicate.generate(e)
+    generated.initialize(0)
+    assert(rows.map(generated.eval) === want)
+    assert(rows.map(InterpretedPredicate(e).eval) === want)
+    // plan strings carry the set sizes, not the positions
+    assert(e.toString.endsWith("3 dead in 1 files)"), e.toString)
+  }
+
   test("simhash_agg equals the composed 64-sum majority form") {
     val tok = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z0-9]+")).as("w"))

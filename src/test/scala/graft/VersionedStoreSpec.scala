@@ -273,6 +273,31 @@ class VersionedStoreSpec extends SparkSuite {
     assert(store.read(spark, "t").count() === 2L, "the head still reads")
   }
 
+  test("vacuum spares the staging leftovers of a writer still at work") {
+    val root = java.nio.file.Files.createTempDirectory("graft-versions").toString
+    val store = new VersionedStore(root)
+    store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "t")
+    val t = new java.io.File(s"$root/t")
+    // fresh: a stage dir, a manifest temp and a pointer temp just made
+    val fresh = new java.io.File(t, "_stage_0123456789ab")
+    fresh.mkdirs()
+    new java.io.File(fresh, "part-00000.parquet").createNewFile()
+    val temps = Seq(new java.io.File(t, "_v2-0123456789ab.manifest.tmp"),
+      new java.io.File(t, "_current-0123456789ab.tmp"))
+    temps.foreach(_.createNewFile())
+    // a stage dir set up an hour ago whose write job is still running:
+    // its task output under _temporary is fresh
+    val running = new java.io.File(t, "_stage_ba9876543210")
+    val attempt = new java.io.File(running, "_temporary/0/_temporary/attempt_0")
+    attempt.mkdirs()
+    new java.io.File(attempt, "part-00000.parquet").createNewFile()
+    running.setLastModified(System.currentTimeMillis() - 3600L * 1000)
+    store.vacuumVersions("t", keep = 1)
+    val gone = (Seq(fresh, running, attempt) ++ temps).filterNot(_.exists)
+    assert(gone.isEmpty, s"vacuum deleted a live writer's staging: $gone")
+    assert(store.read(spark, "t").count() === 2L)
+  }
+
   test("delete rewrites only files containing matches; others carry over") {
     val store = freshStore()
     store.write((1L to 400L).map(k => (k, s"v$k")).toDF("k", "v")
@@ -1021,6 +1046,87 @@ class VersionedStoreSpec extends SparkSuite {
     assert(store.read(spark, "t").count() === 198L)
     assert(store.countMeta(spark, "t") === Some(198L),
       "dv position of a retired file must not be subtracted")
+  }
+
+  /** `body`'s result and the Spark jobs it started, counted on its own
+    * job group. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"vstore-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "VersionedStoreSpec job count")
+    try {
+      val out = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (out, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("a head read after deleteMor runs one Spark job, also on a cold cache") {
+    val store = freshStore()
+    twoFileBase(store)
+    store.deleteMor(spark, "t", $"k" >= 50L && $"k" <= 149L)
+    val (rows, jobs) = withJobCount(store.read(spark, "t").collect())
+    assert(rows.length === 100)
+    assert(jobs === 1, "the vector must be a scan filter, not a second job")
+    // a fresh instance reads the vector file on the driver, not in a job
+    val cold = new VersionedStore(storeRoot(store))
+    val (coldRows, coldJobs) = withJobCount(cold.read(spark, "t").collect())
+    assert(coldRows.map(_.getLong(0)).toSet === ((0L to 49L) ++ (150L to 199L)).toSet)
+    assert(coldJobs === 1)
+  }
+
+  test("the deletion-vector read plans no broadcast and no anti-join") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val store = freshStore()
+    twoFileBase(store)
+    store.deleteMor(spark, "t", $"k" === 10L)
+    val df = store.read(spark, "t")
+    assert(df.collect().length === 199)
+    val plan = df.queryExecution.executedPlan
+    assert(Plans.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty, plan.toString)
+    assert(Plans.collect(plan) { case j: BaseJoinExec if j.joinType == LeftAnti => j }.isEmpty,
+      plan.toString)
+    assert(plan.toString.contains("row_live"), plan.toString)
+  }
+
+  test("countMeta runs no Spark job through deletion vectors") {
+    val store = freshStore()
+    twoFileBase(store)
+    store.deleteMor(spark, "t", $"k" < 5L)
+    store.deleteMor(spark, "t", $"k" === 150L)
+    val (n, jobs) = withJobCount(store.countMeta(spark, "t"))
+    assert(n === Some(194L))
+    assert(jobs === 0)
+    // a cold instance reads the vectors on the driver
+    assert(withJobCount(new VersionedStore(storeRoot(store)).countMeta(spark, "t")) ===
+      (Some(194L), 0))
+  }
+
+  test("vacuum evicts the cached vectors of the files it deletes") {
+    val store = freshStore()
+    twoFileBase(store)
+    store.deleteMor(spark, "t", $"k" === 10L)
+    val dv1 = store.manifestWithStats("t", 2L)._2.flatMap(_.dvs).distinct
+    assert(store.cachedVectors("t") === dv1, "deleteMor seeds the vector cache")
+    store.optimize(spark, "t")                       // retires dv1
+    store.deleteMor(spark, "t", $"k" === 11L)
+    val dv2 = store.manifestWithStats("t", 4L)._2.flatMap(_.dvs).distinct
+    assert(store.cachedVectors("t") === (dv1 ++ dv2).sorted)
+    store.vacuumVersions("t", keep = 1)
+    val onDisk = new java.io.File(s"${storeRoot(store)}/t/files").listFiles.map(_.getName)
+    assert(!onDisk.contains(dv1.head) && onDisk.contains(dv2.head))
+    assert(store.cachedVectors("t") === dv2, "a deleted vector stayed cached")
+    assert(store.read(spark, "t").count() === 198L)
   }
 
   test("concurrent MOR deletes on the same file union their vectors (both stand)") {
