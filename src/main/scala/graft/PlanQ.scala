@@ -1,22 +1,17 @@
 package graft
 
 /** Dev-side plan printer: `runMain graft.PlanQ <sfDir> <name ...>`
-  * prints each named query's physical plan (the PLANS.md source of
-  * truth) without executing it. `PLANQ_MODE=formatted` switches to
-  * `.explain("formatted")` output (operator list + details — the
-  * round-10 plans/r10 artifacts). */
+  * prints each named query's formatted physical plan (operator list +
+  * details, the format of PLANS.md and the plans/ artifacts) without
+  * executing it. */
 object PlanQ {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val mode =
-      if (sys.env.get("PLANQ_MODE").contains("formatted"))
-        org.apache.spark.sql.execution.FormattedMode
-      else org.apache.spark.sql.execution.SimpleMode
     val spark = graft.engine.GraftSession.local("graft-planq")
     for (n <- args.drop(1)) {
       println(s"===== $n =====")
       println(SparkEntry.queries(n)(spark, sfDir).queryExecution
-        .explainString(mode))
+        .explainString(org.apache.spark.sql.execution.FormattedMode))
     }
     spark.stop()
   }

@@ -11,8 +11,8 @@ import org.apache.spark.sql.catalyst.plans.logical.Window
   * aggregate), a serialization cliff when the input scales with the
   * data. [[WindowAuditSpec]] sweeps EVERY declared query's optimized
   * plan through [[globalWindows]] and fails on any site not enumerated
-  * with a size justification; `runMain graft.WindowSweep <sfDir>` is
-  * the dev-side enumerator that seeds/refreshes the registry.
+  * with a size justification, printing every unlisted site as a
+  * `query :: windows` line.
   *
   * Operating on the OPTIMIZED LOGICAL plan (not the physical one) keeps
   * the sweep AQE-agnostic and catches windows that arrive via SQL text
@@ -29,29 +29,4 @@ object WindowAudit {
       case w: Window if w.partitionSpec.isEmpty || w.partitionSpec.forall(_.foldable) =>
         w.windowExpressions.map(_.name).sorted.mkString(",")
     }
-}
-
-/** Dev-side enumerator: `runMain graft.WindowSweep <sfDir>` prints one
-  * `[globalwin] <query> :: <window cols>` line per query whose plan
-  * contains a partition-less window — the input to WindowAuditSpec's
-  * justification registry. */
-object WindowSweep {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = graft.engine.GraftSession.local("graft-windowsweep")
-    spark.sparkContext.setLogLevel("ERROR")
-    for (n <- SparkEntry.queries.keys.toSeq.sorted) {
-      try {
-        val t0 = System.nanoTime()
-        val gw = WindowAudit.globalWindows(SparkEntry.queries(n)(spark, sfDir))
-        val secs = (System.nanoTime() - t0) / 1e9
-        if (gw.nonEmpty)
-          println(f"[globalwin] $n%-36s $secs%5.1fs :: ${gw.mkString(" | ")}")
-      } catch {
-        case e: Throwable =>
-          println(s"[err] $n ${Option(e.getMessage).getOrElse(e.toString).take(120)}")
-      }
-    }
-    spark.stop()
-  }
 }

@@ -48,6 +48,12 @@ object ConfScope {
     * transient override is mistaken for it. */
   def get(s: SparkSession, key: String): String = lock.synchronized(s.conf.get(key))
 
+  /** The session's `spark.sql.shuffle.partitions`, read through [[get]].
+    * Inside a scope on the same thread it is that scope's width (the
+    * lock is reentrant); another thread waits for the scope to end. */
+  def shufflePartitions(s: SparkSession): Int =
+    get(s, "spark.sql.shuffle.partitions").toInt
+
   /** The fixed-shape-loop scope: run `body` with AQE off at a shuffle
     * width sized from a measured row count, then restore both keys.
     *
@@ -86,7 +92,7 @@ object ConfScope {
     * conf. */
   def superstep[A](s: SparkSession, rows: Long = 0L, rowsPerTask: Long = 65536L)
       (body: Int => A): A = lock.synchronized {
-    val session = s.conf.get("spark.sql.shuffle.partitions").toLong
+    val session = shufflePartitions(s).toLong
     val width = math.max(1L, math.min(session, rows / rowsPerTask + 1L)).toInt
     withConf(s, Seq(
       "spark.sql.adaptive.enabled" -> "false",

@@ -20,11 +20,11 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * attached — a tab and a comma-separated list of deletion-vector file
   * names (older manifests may lack either field). Reads drop the rows a
   * file's own vectors list as they scan the file, with no join (see
-  * [[readEntries]]). `root/table/_current`
-  * is an advisory pointer naming the live version. Writers stage data
-  * files and the manifest fully, then commit by linking the manifest
-  * into place — readers of version K never observe a partial write
-  * because data files and manifests are immutable after commit.
+  * [[readEntries]]). The head is the highest committed manifest
+  * ([[currentVersion]]). Writers stage data files and the manifest
+  * fully, then commit by linking the manifest into place — readers of
+  * version K never observe a partial write because data files and
+  * manifests are immutable after commit.
   *
   * This is the Delta-log file-reuse design, not copy-on-write snapshots:
   * `upsert` rewrites ONLY the data files that contain a matched key
@@ -50,8 +50,6 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
   * retries; otherwise it cleans up its staged files and refuses with
   * `ConcurrentModificationException`. The protocol is written once, in
   * [[commitLoop]]; each writer supplies only its rule for a new head.
-  * `_current` is a monotonic advisory cache only; the head is always
-  * max(v{N}.manifest).
   */
 class VersionedStore(root: String) {
 
@@ -59,7 +57,6 @@ class VersionedStore(root: String) {
   private def filesDir(name: String) = new java.io.File(tdir(name), "files")
   private def manifestFile(name: String, v: Long) =
     new java.io.File(tdir(name), s"v$v.manifest")
-  private def pointer(name: String) = new java.io.File(tdir(name), "_current")
 
   private def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
@@ -68,10 +65,9 @@ class VersionedStore(root: String) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** The live version number, or None before the first commit. The head
-    * is the MAX COMMITTED MANIFEST, not the `_current` pointer: manifest
-    * creation is the atomic commit point, so a manifest that exists is
-    * durable even if its writer crashed before refreshing the advisory
-    * pointer. */
+    * is the MAX COMMITTED MANIFEST: manifest creation is the atomic commit
+    * point, so a manifest that exists is durable even if its writer
+    * crashed right after linking it. */
   def currentVersion(name: String): Option[Long] = history(name).lastOption
 
   /** All committed versions, ascending. */
@@ -259,46 +255,20 @@ class VersionedStore(root: String) {
 
   // ---- per-file stats: render / parse / prune ---------------------------
 
-  /** Minimal JSON for {"col":["min","max"],...}: values are stat strings
-    * (numeric rendering or raw string), escaped like Verify's dumper. */
-  private def jsonEsc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  /** Stats JSON is `{"col":["min","max"],...}`, keys sorted, values the
+    * stat strings (numeric rendering or raw string). */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper
 
-  private def renderStats(stats: Map[String, (String, String)]): String =
-    stats.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s"${jsonEsc(c)}:[${jsonEsc(mn)},${jsonEsc(mx)}]"
-    }.mkString("{", ",", "}")
-
-  private def parseStats(json: String): Map[String, (String, String)] = {
-    // tolerant hand-rolled parser for the exact shape renderStats emits
-    val entry = """"((?:[^"\\]|\\.)*)":\["((?:[^"\\]|\\.)*)","((?:[^"\\]|\\.)*)"\]""".r
-    def un(s: String): String = {
-      val b = new StringBuilder
-      var i = 0
-      while (i < s.length) {
-        s(i) match {
-          case '\\' if i + 1 < s.length =>
-            s(i + 1) match {
-              case 'n' => b.append('\n'); i += 2
-              case 'r' => b.append('\r'); i += 2
-              case 't' => b.append('\t'); i += 2
-              case 'u' => b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-              case c => b.append(c); i += 2
-            }
-          case c => b.append(c); i += 1
-        }
-      }
-      b.toString
-    }
-    entry.findAllMatchIn(json).map(m => un(m.group(1)) -> (un(m.group(2)), un(m.group(3)))).toMap
+  private def renderStats(stats: Map[String, (String, String)]): String = {
+    val sorted = new java.util.TreeMap[String, java.util.List[String]]
+    stats.foreach { case (c, (mn, mx)) => sorted.put(c, java.util.Arrays.asList(mn, mx)) }
+    Json.writeValueAsString(sorted)
   }
+
+  private def parseStats(json: String): Map[String, (String, String)] =
+    Json.readTree(json).properties.asScala.map { e =>
+      e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
+    }.toMap
 
   /** Column types whose stats support range pruning: NUMERIC only.
     * Strings are deliberately excluded — parquet orders binary stats by
@@ -426,8 +396,7 @@ class VersionedStore(root: String) {
     * the manifest being superseded (v-1), updated with `addTxn` — atomic
     * with the commit itself. Returns false when the race was lost (the
     * caller re-reads the head, conflict-checks, and rebases or refuses).
-    * The advisory pointer advances only after a WON commit. Called only
-    * by [[commitLoop]]. */
+    * Called only by [[commitLoop]]. */
   private def tryCommitManifest(name: String, v: Long, schema: StructType,
       entries: Seq[FileEntry], addTxn: Option[(String, Long)]): Boolean = {
     tdir(name).mkdirs()
@@ -452,30 +421,11 @@ class VersionedStore(root: String) {
       // mirror a parse of the file byte-for-byte: renderStats/parseStats
       // round-trip exactly and the schema is stored nullable.
       cachePut(name, v, (nullable(schema), entries, allTxns))
-      advancePointer(name, v)
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
     } finally {
       java.nio.file.Files.deleteIfExists(mfTmp.toPath); ()
-    }
-  }
-
-  /** Best-effort monotonic refresh of the `_current` advisory pointer
-    * (debugging convenience only — the head is max manifest). */
-  private def advancePointer(name: String, v: Long): Unit = {
-    val p = pointer(name)
-    val cur =
-      if (!p.exists) 0L
-      else new String(java.nio.file.Files.readAllBytes(p.toPath))
-        .trim.toLongOption.getOrElse(0L)
-    if (v > cur) {
-      val tmp = new java.io.File(tdir(name), s"_current-${newToken()}.tmp")
-      java.nio.file.Files.write(tmp.toPath, v.toString.getBytes)
-      java.nio.file.Files.move(tmp.toPath, pointer(name).toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      ()
     }
   }
 
@@ -1633,8 +1583,8 @@ class VersionedStore(root: String) {
   }
 
   /** Age past which vacuum treats a staging leftover as a crashed
-    * writer's: a writer links its temp manifest and moves its pointer
-    * temp within milliseconds, and a stage dir shows fresh mtimes while
+    * writer's: a writer links its temp manifest within milliseconds,
+    * and a stage dir shows fresh mtimes while
     * its write job runs ([[lastTouched]]). */
   private val StagingHorizonMillis = 30L * 60 * 1000
 
@@ -1653,9 +1603,9 @@ class VersionedStore(root: String) {
     * for history), then garbage-collect every data file no retained
     * manifest references — file sharing means deletion must be
     * reference-counted, exactly like Delta's vacuum walking the log. The
-    * live version is always retained. Also sweeps the `_stage_*` dirs,
-    * temp manifests and pointer temps of crashed writers once they are
-    * older than [[StagingHorizonMillis]]. */
+    * live version is always retained. Also sweeps the `_stage_*` dirs
+    * and temp manifests of crashed writers once they are older than
+    * [[StagingHorizonMillis]]. */
   def vacuumVersions(name: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the live version")
     val live = currentVersion(name).toSeq
@@ -1680,7 +1630,7 @@ class VersionedStore(root: String) {
       gone.foreach(_.delete())
       dvCache.synchronized(gone.foreach(f => dvCache.remove((name, f.getName))))
     }
-    // stage dirs, temp manifests and pointer temps of crashed writers
+    // stage dirs and temp manifests of crashed writers
     // (committed writers delete theirs in the same call); a younger one
     // may belong to a writer still at work, so it stays
     val stale = System.currentTimeMillis() - StagingHorizonMillis
@@ -1688,7 +1638,7 @@ class VersionedStore(root: String) {
       val n = f.getName
       val leftover =
         if (f.isDirectory) n.startsWith("_stage_")
-        else n.endsWith(".tmp") && (n.startsWith("_v") || n.startsWith("_current-"))
+        else n.startsWith("_v") && n.endsWith(".tmp")
       leftover && lastTouched(f) < stale
     }.foreach(Fs.deleteRec)
     // key-index snapshots of vacuumed versions can never serve again

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,9 +22,6 @@ import graft.engine.Tables
   */
 object Analytics {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- reshaping --------------------------------------------------------
 
   /** Wide pivot: order counts per priority × status. Explicit pivot values
@@ -32,7 +29,7 @@ object Analytics {
     * form that scales: at 100 TB an implicit pivot first runs a distinct
     * scan to discover columns. */
   private val pivotWide: Q = (s, dir) =>
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy("o_orderpriority")
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(count(lit(1)))
@@ -46,7 +43,7 @@ object Analytics {
     * profiler's melt primitive exposed as a user operator. Narrow
     * transform: no shuffle at all. */
   private val unpivotMelt: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("double").as("p_size"),
         col("p_retailprice").cast("double").as("p_retailprice"))
       .unpivot(Array(col("p_partkey")),
@@ -61,7 +58,7 @@ object Analytics {
     * pass, and the same rows are selected on any engine or cluster
     * layout (seeded `df.sample` is neither). */
   private val sampleHash: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(Hashing.md5Bucket(
         concat_ws("#", col("l_orderkey"), col("l_linenumber")).cast("binary"),
         10) === 0)
@@ -71,7 +68,7 @@ object Analytics {
   // ---- subquery forms ----------------------------------------------------
 
   private def view(s: SparkSession, dir: String, name: String): Unit =
-    t(s, dir, name).createOrReplaceTempView(name)
+    Tables.load(s, dir, name).createOrReplaceTempView(name)
 
   /** Correlated EXISTS: customers having at least one urgent order.
     * Catalyst rewrites to a left-semi hash join — verified in
@@ -130,7 +127,7 @@ object Analytics {
   private val aggCorrRegr: Q = (s, dir) => {
     val x = col("l_quantity").cast("decimal(19,4)")
     val y = col("l_extendedprice").cast("decimal(19,4)")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         count(lit(1)).as("n"),
@@ -155,7 +152,7 @@ object Analytics {
   /** Extended conditional/boolean aggregates: count_if, bool_and, bool_or,
     * plus exact decimal avg — one map-combined shuffle. */
   private val aggBoolCond: Q = (s, dir) =>
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy("o_orderpriority")
       .agg(
         count_if(col("o_totalprice") > 150000).as("n_big"),
@@ -254,9 +251,6 @@ object Analytics {
     "timeseries_interpolate" -> timeseriesInterpolate
   )
 
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
   val oracles: Map[String, String] = Map(
     "pivot_wide" ->
       """SELECT o_orderpriority,
@@ -287,7 +281,7 @@ object Analytics {
         |ORDER BY p_partkey""".stripMargin,
     "fn_explode_pos" ->
       s"""SELECT doc_id, CAST(unnest(range(len(toks))) AS BIGINT) AS p, unnest(toks) AS w
-         |FROM (SELECT doc_id, $duckToks AS toks FROM documents WHERE doc_id < 100)
+         |FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS toks FROM documents WHERE doc_id < 100)
          |ORDER BY doc_id, p""".stripMargin,
     "agg_corr_regr" ->
       """WITH s AS (
@@ -319,7 +313,7 @@ object Analytics {
         |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
     "agg_mode" ->
       s"""WITH counts AS (
-         |  SELECT lang, unnest($duckToks) AS w FROM documents),
+         |  SELECT lang, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
          |agg AS (SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS n FROM counts GROUP BY lang, w),
          |ranked AS (SELECT lang, w, n, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, w ASC) AS rn FROM agg)
          |SELECT lang, w AS mode_token, n FROM ranked WHERE rn = 1 ORDER BY lang""".stripMargin,

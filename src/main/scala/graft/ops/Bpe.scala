@@ -39,17 +39,12 @@ object Bpe {
   private val HeadWords = 200
   private val Rounds = 8
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** Top-K word-frequency dictionary with each word's character symbol
     * array: the training input. Same scale shape as vocab_build —
     * per-partition k-head pruning, never a vocabulary-sized sort. */
   private def dictionary(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("token"))
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("token")).limit(HeadWords)
       .select(col("token"), col("freq"),
@@ -172,7 +167,7 @@ object Bpe {
          |  SELECT token, freq,
          |    list_transform(range(1, length(token) + 1), i -> substr(token, CAST(i AS INT), 1)) AS syms
          |  FROM (SELECT token, CAST(count(*) AS BIGINT) AS freq
-         |        FROM (SELECT unnest($duckToks) AS token FROM documents)
+         |        FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents)
          |        GROUP BY token ORDER BY freq DESC, token LIMIT $HeadWords))""".stripMargin
     val stages = (1 to Rounds).map { r =>
       val p = r - 1
@@ -212,7 +207,7 @@ object Bpe {
   private val tokenizeBpe: Q = (s, dir) => {
     val merges = learnedMerges(s, dir)
     val docsTok = Tables.load(s, dir, "documents")
-      .select(col("doc_id"), posexplode(toks(col("text"))))
+      .select(col("doc_id"), posexplode(LlmPipeline.tokens(col("text"))))
       .toDF("doc_id", "pos", "token")
     val encoded = encodeTokens(docsTok.select("token").distinct(), merges)
       .select(col("token"), concat_ws(" ", col("syms")).as("enc"),
@@ -231,7 +226,7 @@ object Bpe {
       .map(r => duckRewrite(s"v${r - 1}", s"v$r", r, "token"))
       .mkString(",\n")
     s"""WITH $learnChain,
-       |d AS (SELECT doc_id, $duckToks AS tk FROM documents),
+       |d AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |tok AS (
        |  SELECT doc_id, pos, tk[CAST(pos + 1 AS INT)] AS token
        |  FROM (SELECT doc_id, tk, unnest(range(len(tk))) AS pos FROM d)),

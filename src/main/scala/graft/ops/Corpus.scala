@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,9 +21,6 @@ object Corpus {
 
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.balanced(s, Tables.load(s, dir, "documents"))
-
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
   // ---- scrubbing ---------------------------------------------------------
 
@@ -156,7 +153,7 @@ object Corpus {
   }
 
   private val dedupSubstringOracle =
-    s"""WITH d AS (SELECT doc_id, $duckToks AS tk FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |base AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tok, tk FROM d WHERE len(tk) >= 8),
        |sh AS (
        |  SELECT doc_id, n_tok, i AS pos,
@@ -234,11 +231,11 @@ object Corpus {
         |CAST(LENGTH(text) - LENGTH(regexp_replace(text, '\b(customer|supplier)\b', '', 'g')) AS BIGINT) AS masked_chars
         |FROM documents ORDER BY doc_id""".stripMargin,
     "text_repetition" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($duckToks) AS w FROM documents),
+      s"""WITH tok AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
          |tc AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS n FROM tok GROUP BY doc_id, w),
          |ts AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_tok, CAST(COUNT(*) AS BIGINT) AS n_distinct, MAX(n) AS max_n FROM tc GROUP BY doc_id),
          |bi AS (SELECT doc_id, unnest(list_transform(range(0, greatest(len(toks)-1,1)), i -> concat_ws(' ', toks[i+1], toks[i+2]))) AS b
-         |       FROM (SELECT doc_id, $duckToks AS toks FROM documents)),
+         |       FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS toks FROM documents)),
          |bc AS (SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS n FROM bi WHERE strpos(b, ' ') > 0 GROUP BY doc_id, b),
          |bs AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_bi, CAST(COUNT(*) AS BIGINT) AS n_bi_distinct FROM bc GROUP BY doc_id)
          |SELECT ts.doc_id, ts.n_tok,
@@ -248,7 +245,7 @@ object Corpus {
          |FROM ts LEFT JOIN bs ON bs.doc_id = ts.doc_id ORDER BY ts.doc_id""".stripMargin,
     "dedup_substring" -> dedupSubstringOracle,
     "dedup_passage" ->
-      s"""WITH d AS (SELECT doc_id, $duckToks AS toks FROM documents),
+      s"""WITH d AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS toks FROM documents),
          |p AS (SELECT doc_id, unnest(CASE WHEN len(toks) // 8 >= 1
          |        THEN list_transform(range(0, len(toks) // 8), i -> concat_ws(' ', toks[i*8+1], toks[i*8+2], toks[i*8+3], toks[i*8+4], toks[i*8+5], toks[i*8+6], toks[i*8+7], toks[i*8+8]))
          |        ELSE [] END) AS passage FROM d)
@@ -262,7 +259,7 @@ object Corpus {
         s"(CASE WHEN b$b > 0 THEN CAST(1 AS BIGINT) ELSE 0 END << $b)").mkString(" | ")
       val bandArr = (0 until BANDS).map(b => s"(simhash >> ${b * 15}) & 32767").mkString(", ")
       s"""WITH tok AS (SELECT doc_id, $duckH15 AS h
-         |  FROM (SELECT doc_id, unnest($duckToks) AS w FROM documents)),
+         |  FROM (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS w FROM documents)),
          |sums AS (SELECT doc_id, $bitSums FROM tok GROUP BY doc_id),
          |sh AS (SELECT doc_id, $sig AS simhash FROM sums),
          |banded AS (SELECT doc_id, simhash, unnest(range(0, $BANDS)) AS band, unnest([$bandArr]) AS bandVal FROM sh),

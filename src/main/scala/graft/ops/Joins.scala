@@ -19,9 +19,6 @@ import graft.engine.Tables
   */
 object Joins {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Upsert = full-outer equi-join + row-wise source-wins projection —
     * `WHEN MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *` (ref: dbc
     * cmd13/14; kernel in [[graft.engine.Merge]] — a matched source row
@@ -33,10 +30,10 @@ object Joins {
   /** merge_upsert query: upsert an updated slice of customer into a base
     * slice, keyed on c_custkey (ref semantics: dbc cmd13). */
   private val mergeUpsertQ: Q = (s, dir) => {
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") % 3 === 0)
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-    val updates = t(s, dir, "customer")
+    val updates = Tables.load(s, dir, "customer")
       .filter(col("c_custkey") % 2 === 0)
       .select(col("c_custkey"), upper(col("c_name")).as("c_name"),
         lit("UPDATED").as("c_mktsegment"))
@@ -47,8 +44,8 @@ object Joins {
     * BroadcastHashJoinExec, no shuffle of the fact side (ref conf:
     * autoBroadcastJoinThreshold=20MB, dbc cmd0). */
   private val joinBroadcastEqui: Q = (s, dir) =>
-    t(s, dir, "lineitem")
-      .join(broadcast(t(s, dir, "part")), col("l_partkey") === col("p_partkey"))
+    Tables.load(s, dir, "lineitem")
+      .join(broadcast(Tables.load(s, dir, "part")), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
       .agg(count(lit(1)).as("n"),
         sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
@@ -58,8 +55,8 @@ object Joins {
     * conf: prefersortmergejoin=false, dbc cmd0) — explicit SHUFFLE_HASH
     * hint; both sides co-partition on the key, no sort. */
   private val joinShuffleHash: Q = (s, dir) =>
-    t(s, dir, "lineitem").hint("shuffle_hash")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+    Tables.load(s, dir, "lineitem").hint("shuffle_hash")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderstatus")
       .agg(count(lit(1)).as("n"),
         sum(col("l_extendedprice").cast("decimal(18,2)")).cast("double").as("rev"))
@@ -68,22 +65,22 @@ object Joins {
   /** Existence filter (EXISTS) — generalizes the reference's exclusion
     * list to table-driven form (SURVEY §2.3). */
   private val joinSemi: Q = (s, dir) =>
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
+    Tables.load(s, dir, "customer")
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_semi")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
 
   /** NOT EXISTS. */
   private val joinAnti: Q = (s, dir) =>
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
+    Tables.load(s, dir, "customer")
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_anti")
       .select("c_custkey", "c_name")
       .orderBy("c_custkey")
 
   /** Left outer join — the substrate of merge_upsert (dbc cmd13/14). */
   private val joinOuter: Q = (s, dir) =>
-    t(s, dir, "customer")
-      .join(t(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
+    Tables.load(s, dir, "customer")
+      .join(Tables.load(s, dir, "orders"), col("c_custkey") === col("o_custkey"), "left_outer")
       .groupBy("c_custkey")
       .agg(count(col("o_orderkey")).as("n_orders"))
       .orderBy("c_custkey")
@@ -95,7 +92,7 @@ object Joins {
     import s.implicits._
     val buckets = Seq((0, 10, "S"), (11, 25, "M"), (26, 50, "L"))
       .toDF("lo", "hi", "bucket")
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .join(broadcast(buckets),
         col("p_size") >= col("lo") && col("p_size") <= col("hi"))
       .groupBy("bucket")
@@ -141,7 +138,7 @@ object Joins {
     // piling 18% of events into one (width-10 measured 6.0 s, width-1
     // 4.3 s, decomposed form ~1.3 s warm).
     val band = 1.0
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val views = ev.filter(col("event_type") === "view")
       .select(col("value").as("pv"),
         floor(col("value") / band).cast("bigint").as("b"))
@@ -193,7 +190,7 @@ object Joins {
     // far below 2^53, so the double floor is exact.
     def epochSec(c: org.apache.spark.sql.Column) =
       floor(c.cast("double")).cast("long")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     val views = ev.filter(col("event_type") === "view")
       .select(epochSec(col("ts")).as("pt"))
       .withColumn("b", bandOf(col("pt")))
@@ -223,7 +220,7 @@ object Joins {
   private val ruleBandedJoin: Q = (s, dir) => {
     graft.engine.ConfScope.withConf(s,
       Seq("spark.graft.bandedRangeJoin" -> "true")) {
-      val ev = t(s, dir, "events").filter(col("event_id") % 10 === 0)
+      val ev = Tables.load(s, dir, "events").filter(col("event_id") % 10 === 0)
       val p = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("value"))
       val v = ev.filter(col("event_type") === "view")
@@ -243,8 +240,8 @@ object Joins {
     * At 100 TB: both sides hash-partition on the key (no broadcast needed),
     * and the aggregate is partial+final. */
   private val joinAsof: Q = (s, dir) => {
-    val e = t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
-    val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
+    val e = Tables.load(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
+    val o = Tables.load(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
     e.join(o, col("user_id") === col("o_custkey") && col("o_orderdate") <= col("ts"), "left")
       .groupBy("event_id", "user_id")
       .agg(max(col("o_orderdate")).cast("date").as("asof_date"))
@@ -289,8 +286,8 @@ object Joins {
 
   /** join_asof via the window form — same oracle as join_asof. */
   private val joinAsofWindow: Q = (s, dir) => {
-    val e = t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
-    val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
+    val e = Tables.load(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
+    val o = Tables.load(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
     asOfJoinWindow(e, "user_id", "ts", o, "o_custkey", "o_orderdate", "o_orderdate")
       .select(col("event_id"), col("user_id"), col("__asof").cast("date").as("asof_date"))
       .orderBy("event_id")

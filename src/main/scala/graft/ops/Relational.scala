@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -17,14 +16,11 @@ import graft.engine.Tables
   */
 object Relational {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- §2.1 scans & catalog -------------------------------------------
 
   /** Full scan (ref: `select * from {db}.{table}`, dbc cmd12/cmd18). */
   private val scanTable: Q = (s, dir) =>
-    t(s, dir, "region").orderBy("r_regionkey")
+    Tables.load(s, dir, "region").orderBy("r_regionkey")
 
   /** Catalog table enumeration (ref: `show tables`, dbc cmd7). */
   private val catalogListTables: Q = (s, dir) => {
@@ -38,7 +34,7 @@ object Relational {
     * metadata-only, zero jobs. */
   private val catalogDescribe: Q = (s, dir) => {
     import s.implicits._
-    t(s, dir, "lineitem").schema.fields.toSeq
+    Tables.load(s, dir, "lineitem").schema.fields.toSeq
       .map(f => (f.name, f.dataType.sql.toLowerCase, ""))
       .toDF("col_name", "data_type", "comment")
       .orderBy("col_name")
@@ -47,7 +43,7 @@ object Relational {
   /** 1-row column probe (ref: `select * from {t} limit 1`, dbc cmd12) —
     * made deterministic with an explicit order key. */
   private val columnsProbe: Q = (s, dir) =>
-    t(s, dir, "nation").orderBy("n_nationkey").limit(1)
+    Tables.load(s, dir, "nation").orderBy("n_nationkey").limit(1)
 
   // ---- §2.2 filters & projections -------------------------------------
 
@@ -64,14 +60,14 @@ object Relational {
 
   /** DESCRIBE-noise filter (ref: `instr(col_name,'#')=0`, dbc cmd12). */
   private val filterInstr: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .filter(instr(col("p_name"), "o") === 0)
       .select(col("p_partkey"), col("p_name"))
       .orderBy("p_partkey")
 
   /** Single-key equality lookup (ref: `where col_name = '{c}'`, dbc cmd12). */
   private val filterEqLookup: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(col("l_returnflag") === lit("A"))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
       .orderBy("l_orderkey", "l_linenumber")
@@ -79,14 +75,14 @@ object Relational {
   /** Literal provenance tags (ref: `.withColumn('Tname', lit(table))`,
     * dbc cmd12). */
   private val projectAddLiterals: Q = (s, dir) =>
-    t(s, dir, "nation")
+    Tables.load(s, dir, "nation")
       .withColumn("Tname", lit("nation"))
       .withColumn("DBname", lit("graft"))
       .orderBy("n_nationkey")
 
   /** Positional rename projection (ref: schemaSQL select, dbc cmd12). */
   private val projectRename: Q = (s, dir) =>
-    t(s, dir, "region")
+    Tables.load(s, dir, "region")
       .select(col("r_regionkey").as("regionKey"), col("r_name").as("regionName"))
       .orderBy("regionKey")
 
@@ -107,7 +103,7 @@ object Relational {
 
   /** Group cardinality (ref: `count(*) … group by {c}`, dbc cmd12). */
   private val aggCountStar: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n"))
       .orderBy("l_returnflag", "l_linestatus")
@@ -116,14 +112,14 @@ object Relational {
     * — keyed, sort_array'd, and rendered as a joined string so the
     * differential gate compares scalars (pandas can't hash array cells). */
   private val aggCollectList: Q = (s, dir) =>
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .groupBy("c_nationkey")
       .agg(array_join(sort_array(collect_list("c_name")), ",").as("names"))
       .orderBy("c_nationkey")
 
   /** SQL-`union` set dedup (ref: bare `union` accumulation, dbc cmd12). */
   private val aggDistinct: Q = (s, dir) =>
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select("o_orderstatus", "o_orderpriority")
       .distinct()
       .orderBy("o_orderstatus", "o_orderpriority")
@@ -141,7 +137,7 @@ object Relational {
     * the ANN recall gates (their raw production forms are registered as
     * the `*_raw`/index variants and exercised in specs). */
   private val aggApproxDistinct: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .agg(
         approx_count_distinct(col("l_partkey"), 0.02).as("ap"),
         approx_count_distinct(col("l_orderkey"), 0.02).as("ao"),
@@ -155,7 +151,7 @@ object Relational {
 
   /** Exact-distinct twin of the sketch, oracle-checked at test scale. */
   private val aggDistinctCount: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .agg(
         countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_orderkey")).as("n_orders"))
@@ -163,7 +159,7 @@ object Relational {
   /** Multi-level rollup over the meta-table key hierarchy (SURVEY §2.4
     * agg_grouping_sets). */
   private val aggGroupingSets: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .rollup("l_returnflag", "l_linestatus")
       .agg(count(lit(1)).as("n"),
         sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("sum_qty"))
@@ -172,22 +168,22 @@ object Relational {
   // ---- §2.6 sorts / limits / top-k ------------------------------------
 
   private val limitProbe: Q = (s, dir) =>
-    t(s, dir, "orders").orderBy("o_orderkey").limit(1)
+    Tables.load(s, dir, "orders").orderBy("o_orderkey").limit(1)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"))
 
   private val limitPreview: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"))
       .orderBy("l_orderkey", "l_linenumber", "l_returnflag").limit(1000)
 
   private val sortOrderBy: Q = (s, dir) =>
-    t(s, dir, "supplier")
+    Tables.load(s, dir, "supplier")
       .orderBy(desc("s_acctbal"), asc("s_suppkey"))
 
   /** Global top-k → TakeOrderedAndProject: no full sort, per-partition
     * heaps + single merge — the 100 TB-safe form of ORDER BY…LIMIT. */
   private val topkGlobal: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"))
       .orderBy(desc("l_extendedprice"), asc("l_orderkey"), asc("l_linenumber"))
       .limit(100)
@@ -195,35 +191,35 @@ object Relational {
   // ---- §2.7 set operations --------------------------------------------
 
   private val setopUnionDistinct: Q = (s, dir) =>
-    t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      .union(t(s, dir, "supplier").select(col("s_nationkey").as("k")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("k"))
+      .union(Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k")))
       .distinct()
       .orderBy("k")
 
   private val setopUnionAll: Q = (s, dir) =>
-    t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      .union(t(s, dir, "supplier").select(col("s_nationkey").as("k")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("k"))
+      .union(Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   private val setopIntersectAll: Q = (s, dir) =>
-    t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      .intersectAll(t(s, dir, "supplier").select(col("s_nationkey").as("k")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("k"))
+      .intersectAll(Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   private val setopExceptAll: Q = (s, dir) =>
-    t(s, dir, "supplier").select(col("s_nationkey").as("k"))
-      .exceptAll(t(s, dir, "customer").filter(col("c_custkey") < 5)
+    Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k"))
+      .exceptAll(Tables.load(s, dir, "customer").filter(col("c_custkey") < 5)
         .select(col("c_nationkey").as("k")))
       .orderBy("k")
 
   private val setopIntersect: Q = (s, dir) =>
-    t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      .intersect(t(s, dir, "supplier").select(col("s_nationkey").as("k")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("k"))
+      .intersect(Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   private val setopExcept: Q = (s, dir) =>
-    t(s, dir, "customer").select(col("c_nationkey").as("k"))
-      .except(t(s, dir, "supplier").select(col("s_nationkey").as("k")))
+    Tables.load(s, dir, "customer").select(col("c_nationkey").as("k"))
+      .except(Tables.load(s, dir, "supplier").select(col("s_nationkey").as("k")))
       .orderBy("k")
 
   // ---- §2.8 scalar functions ------------------------------------------
@@ -231,7 +227,7 @@ object Relational {
   /** Core string functions the reference exercises: instr, length, lit,
     * cast-to-string (dbc cmd12). */
   private val fnStringCore: Q = (s, dir) =>
-    t(s, dir, "part").select(
+    Tables.load(s, dir, "part").select(
       col("p_partkey"),
       instr(col("p_name"), "a").cast("bigint").as("pos_a"),
       length(col("p_name")).cast("bigint").as("name_len"),
@@ -246,7 +242,7 @@ object Relational {
   }
 
   private val fnStringExt: Q = (s, dir) =>
-    t(s, dir, "customer").select(
+    Tables.load(s, dir, "customer").select(
       col("c_custkey"),
       lower(col("c_name")).as("lo"),
       upper(col("c_mktsegment")).as("up"),
@@ -259,7 +255,7 @@ object Relational {
     .orderBy("c_custkey")
 
   private val fnDate: Q = (s, dir) =>
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"),
       year(col("o_orderdate")).cast("bigint").as("y"),
       month(col("o_orderdate")).cast("bigint").as("m"),
@@ -274,7 +270,7 @@ object Relational {
     * floor/ceil, IEEE-exact sqrt, x*x (not pow), round on integral doubles
     * (SURVEY §7.3 float-parity risk). */
   private val fnMath: Q = (s, dir) =>
-    t(s, dir, "lineitem").select(
+    Tables.load(s, dir, "lineitem").select(
       col("l_orderkey"), col("l_linenumber"),
       abs(col("l_discount") - 0.05).as("abs_d"),
       floor(col("l_extendedprice")).cast("bigint").as("fl"),
@@ -287,7 +283,7 @@ object Relational {
   /** Higher-order array functions over the embeddings fixture (SURVEY
     * §2.8 fn_array): size, element access, HOF aggregate/transform. */
   private val fnArray: Q = (s, dir) =>
-    t(s, dir, "embeddings").select(
+    Tables.load(s, dir, "embeddings").select(
       col("vec_id"),
       size(col("embedding")).cast("bigint").as("dim"),
       round(aggregate(col("embedding"), lit(0.0),
@@ -303,7 +299,7 @@ object Relational {
   /** JSON/map extraction over events.props (SURVEY §2.8 fn_map_json,
     * §2.10 multimodal_cols). */
   private val fnMapJson: Q = (s, dir) =>
-    t(s, dir, "events").select(
+    Tables.load(s, dir, "events").select(
       col("event_id"),
       get_json_object(col("props"), "$.k").as("k_str"),
       from_json(col("props"), org.apache.spark.sql.types.MapType(
@@ -315,7 +311,7 @@ object Relational {
     .orderBy("event_id")
 
   private val fnConditional: Q = (s, dir) =>
-    t(s, dir, "customer").select(
+    Tables.load(s, dir, "customer").select(
       col("c_custkey"),
       when(col("c_acctbal") < 0, lit("neg"))
         .when(col("c_acctbal") < 5000, lit("mid"))
@@ -326,7 +322,7 @@ object Relational {
 
   /** Bitwise function family over integer keys (SURVEY §2.8 extension). */
   private val fnBitwise: Q = (s, dir) =>
-    t(s, dir, "part").select(
+    Tables.load(s, dir, "part").select(
       col("p_partkey"),
       (col("p_partkey").bitwiseAND(lit(255L))).as("andv"),
       (col("p_partkey").bitwiseOR(lit(4096L))).as("orv"),
@@ -339,7 +335,7 @@ object Relational {
     * engines interpolate linearly over the same sorted values, so the
     * doubles match exactly (SURVEY §2.4 agg_stats extension). */
   private val aggPercentiles: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         expr("percentile(l_quantity, 0.5)").as("median_qty"),
@@ -357,7 +353,7 @@ object Relational {
     * merge-order-dependent sketch value stays out of the hash, but a
     * rank-error regression flips a boolean. */
   private val aggApproxPercentile: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_returnflag")
       .agg(
         expr("approx_percentile(l_quantity, 0.5, 1000)").as("am"),
@@ -378,7 +374,7 @@ object Relational {
 
   /** Padding/slicing string family (SURVEY §2.8 extension). */
   private val fnStringPad: Q = (s, dir) =>
-    t(s, dir, "region").select(
+    Tables.load(s, dir, "region").select(
       col("r_regionkey"),
       lpad(col("r_name"), 12, ".").as("lp"),
       rpad(col("r_name"), 12, "_").as("rp"),
@@ -390,14 +386,14 @@ object Relational {
 
   /** Explicit cross join of two small dims (SURVEY §2.3 completeness). */
   private val joinCross: Q = (s, dir) =>
-    t(s, dir, "region").crossJoin(t(s, dir, "nation"))
+    Tables.load(s, dir, "region").crossJoin(Tables.load(s, dir, "nation"))
       .select(col("r_regionkey"), col("n_nationkey"))
       .orderBy("r_regionkey", "n_nationkey")
 
   /** Argument-extrema aggregates: the value of one column at another's
     * max/min — deterministic because the argument key is unique. */
   private val aggMinmaxBy: Q = (s, dir) =>
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .groupBy("o_custkey")
       .agg(
         expr("max_by(o_orderstatus, o_orderkey)").as("latest_status"),
@@ -408,7 +404,7 @@ object Relational {
   /** Datetime part extraction over event time (SURVEY §2.8 fn_date ext);
     * dayofweek aligned across engines (Spark 1=Sunday, DuckDB 0=Sunday). */
   private val fnDatetimeParts: Q = (s, dir) =>
-    t(s, dir, "events").select(
+    Tables.load(s, dir, "events").select(
       col("event_id"),
       hour(col("ts")).cast("bigint").as("h"),
       minute(col("ts")).cast("bigint").as("mi"),
@@ -421,7 +417,7 @@ object Relational {
     * outputs sorted for cross-engine order independence and rendered as
     * joined strings (scalar cells keep the differential gate hashable). */
   private val fnArraySetops: Q = (s, dir) =>
-    t(s, dir, "customer").select(
+    Tables.load(s, dir, "customer").select(
       col("c_custkey"),
       array_join(sort_array(array_distinct(split(lower(col("c_name")), "0"))), "|").as("dedup"),
       array_join(sort_array(array_union(split(col("c_mktsegment"), "I"), array(lit("x")))), "|").as("uni"),
@@ -431,14 +427,14 @@ object Relational {
 
   /** Ordered string aggregation per group (LISTAGG pattern). */
   private val aggStringagg: Q = (s, dir) =>
-    t(s, dir, "nation")
+    Tables.load(s, dir, "nation")
       .groupBy("n_regionkey")
       .agg(concat_ws(",", sort_array(collect_list(col("n_name")))).as("names"))
       .orderBy("n_regionkey")
 
   /** Portable cryptographic hashes (content addressing at any scale). */
   private val fnHash: Q = (s, dir) =>
-    t(s, dir, "customer").select(
+    Tables.load(s, dir, "customer").select(
       col("c_custkey"),
       md5(col("c_name").cast("binary")).as("h_md5"),
       sha2(col("c_name").cast("binary"), 256).as("h_sha256"))

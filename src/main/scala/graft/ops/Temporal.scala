@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +17,6 @@ import graft.engine.Tables
   */
 object Temporal {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** SCD Type-2 dimension build from an event log: one row per
     * (user, event_type run), valid from its first event until the next
     * type change — `lag` flags change points, `lead` over the changes
@@ -29,7 +25,7 @@ object Temporal {
     * input, deterministic versioning, one shuffle on the business key. */
   private val scd2History: Q = (s, dir) => {
     val byUser = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    val changes = t(s, dir, "events")
+    val changes = Tables.load(s, dir, "events")
       .withColumn("prev_type", lag(col("event_type"), 1).over(byUser))
       .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))
     val byUserChanges = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
@@ -46,7 +42,7 @@ object Temporal {
     * and day-of-year parts — all clamping end-of-month semantics, which
     * Spark's add_months and DuckDB's INTERVAL MONTH share. */
   private val fnDateArith: Q = (s, dir) =>
-    t(s, dir, "orders").select(
+    Tables.load(s, dir, "orders").select(
       col("o_orderkey"),
       date_add(to_date(col("o_orderdate")), 7).as("plus7d"),
       add_months(to_date(col("o_orderdate")), 3).as("plus3m"),
@@ -62,7 +58,7 @@ object Temporal {
   private val winFirstLast: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         first(col("value")).over(w).as("first_v"),
         last(col("value")).over(w).as("last_v"),

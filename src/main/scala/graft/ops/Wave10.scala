@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 third wave: the curation pipeline end to end, plus the
   * distribution-health profilers a corpus team runs before a training
@@ -29,19 +28,6 @@ import graft.engine.Tables
   */
 object Wave10 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens
-    * (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
-
   // ---- pipeline_e2e: the whole curation funnel in one DAG --------------
 
   /** The production corpus-prep pipeline end to end, one query: the
@@ -63,13 +49,13 @@ object Wave10 {
   private val pipelineE2e: Q = (s, dir) => {
     val keepIds = Wave3.queries("corpus_filter")(s, dir)
       .filter(col("keep")).select("doc_id")
-    val kept = t(s, dir, "documents").join(keepIds, Seq("doc_id"))
+    val kept = Tables.load(s, dir, "documents").join(keepIds, Seq("doc_id"))
       .select(col("doc_id"), col("source"), col("text"),
         md5(col("text").cast("binary")).as("h"))
     val survivors = kept.groupBy("h").agg(min("doc_id").as("doc_id"))
     kept.join(survivors, Seq("h", "doc_id"))
       .select(Hashing.splitOf(col("text")).as("split"), col("source"),
-        size(toks(col("text"))).cast("long").as("n_tok"), col("doc_id"))
+        size(LlmPipeline.tokens(col("text"))).cast("long").as("n_tok"), col("doc_id"))
       .groupBy("split", "source")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tok_total"),
         sum("doc_id").as("id_sum"))
@@ -88,7 +74,7 @@ object Wave10 {
        |  FROM kept k JOIN surv USING (h, doc_id))
        |SELECT ${Hashing.duckSplitCase} AS split, source,
        |  CAST(count(*) AS BIGINT) AS n_docs,
-       |  CAST(SUM(CAST(len($duckToks) AS BIGINT)) AS BIGINT) AS tok_total,
+       |  CAST(SUM(CAST(len(${LlmPipeline.duckTokens}) AS BIGINT)) AS BIGINT) AS tok_total,
        |  CAST(SUM(doc_id) AS BIGINT) AS id_sum
        |FROM docs GROUP BY 1, 2 ORDER BY split, source""".stripMargin
   }
@@ -116,7 +102,7 @@ object Wave10 {
     * per-type max. A global-sort or per-type-window formulation dies at
     * 100 TB on exactly the skew this kernel was built for. */
   private val profileKs: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .filter(col("value").isNotNull)
       .select(col("event_type"), to_date(col("ts")).as("d"), col("value"))
     val bounds = ev.agg(
@@ -131,7 +117,7 @@ object Wave10 {
     val packed = cnt.withColumn("pk",
       col("n1") * lit(4294967296L) + col("n2"))
     val cum = Ranks.perGroupPrefixSum(packed, Seq("event_type"),
-      Seq(col("value")), col("pk"), "cumpk", parts(s))
+      Seq(col("value")), col("pk"), "cumpk", ConfScope.shufflePartitions(s))
     val dec = cum.select(col("event_type"),
       expr("cumpk DIV 4294967296").as("c1"),
       pmod(col("cumpk"), lit(4294967296L)).as("c2"))
@@ -198,8 +184,8 @@ object Wave10 {
     * The driver-side readback is the model-sized sketch plus 8 probe
     * rows — the same envelope as Ivf's centroids. */
   private val sketchCountmin: Q = (s, dir) => {
-    val tok = t(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("w"))
+    val tok = Tables.load(s, dir, "documents")
+      .select(explode(LlmPipeline.tokens(col("text"))).as("w"))
     val top = tok.groupBy("w").agg(count(lit(1)).as("n_exact"))
       .orderBy(col("n_exact").desc, col("w").asc).limit(8)
     val skBytes = tok
@@ -219,7 +205,7 @@ object Wave10 {
   }
 
   private val sketchCountminOracle =
-    s"""WITH tok AS (SELECT unnest($duckToks) AS w FROM documents)
+    s"""WITH tok AS (SELECT unnest(${LlmPipeline.duckTokens}) AS w FROM documents)
        |SELECT w AS term, CAST(count(*) AS BIGINT) AS n_exact,
        |  TRUE AS lower_ok, TRUE AS upper_ok
        |FROM tok GROUP BY w
@@ -242,9 +228,9 @@ object Wave10 {
     * even at web-scale document counts) and are reduced to ONE
     * broadcast row — all integer arithmetic, trivially cross-engine. */
   private val textHeaps: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val ranked = Ranks.perGroupRank(docs.select(col("doc_id")), Seq.empty,
-      Seq(col("doc_id")), rankCol = "rn", nCol = "nd", parts(s))
+      Seq(col("doc_id")), rankCol = "rn", nCol = "nd", ConfScope.shufflePartitions(s))
     val bCols = (1 to 10).map(i =>
       max(when(col("rn") === greatest(expr(s"(nd * $i) DIV 10"), lit(1L)),
         col("doc_id"))).as(s"b$i"))
@@ -254,13 +240,13 @@ object Wave10 {
       coalesce(sum(when(col("doc_id") <= col(s"b$i"), col("n_tok"))), lit(0L))
         .as(s"t$i")))
     val docAgg = docs
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("n_tok"))
+      .select(col("doc_id"), size(LlmPipeline.tokens(col("text"))).cast("long").as("n_tok"))
       .crossJoin(broadcast(bounds))
       .agg(docAggCols.head, docAggCols.tail: _*)
     val vocCols = (1 to 10).map(i =>
       count(when(col("fd") <= col(s"b$i"), 1)).as(s"v$i"))
     val vocAgg = docs
-      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+      .select(col("doc_id"), explode(LlmPipeline.tokens(col("text"))).as("w"))
       .groupBy("w").agg(min("doc_id").as("fd"))
       .crossJoin(broadcast(bounds))
       .agg(vocCols.head, vocCols.tail: _*)
@@ -272,7 +258,7 @@ object Wave10 {
   }
 
   private val textHeapsOracle =
-    s"""WITH tok AS (SELECT doc_id, unnest($duckToks) AS w FROM documents),
+    s"""WITH tok AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
        |rk AS (
        |  SELECT doc_id, CAST(row_number() OVER (ORDER BY doc_id) AS BIGINT) AS rn
        |  FROM documents),
@@ -281,7 +267,7 @@ object Wave10 {
        |  SELECT t.i AS decile, r.doc_id AS b
        |  FROM range(1, 11) t(i), n, rk r
        |  WHERE r.rn = GREATEST((n.nd * t.i) // 10, 1)),
-       |dt AS (SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tok FROM documents),
+       |dt AS (SELECT doc_id, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok FROM documents),
        |fi AS (SELECT w, MIN(doc_id) AS fd FROM tok GROUP BY w)
        |SELECT CAST(b.decile AS INT) AS decile,
        |  (SELECT CAST(count(*) AS BIGINT) FROM documents d

@@ -23,9 +23,6 @@ import graft.engine.Tables
   */
 object Wave11 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- eval_ann: recall@10 / nDCG@10 of the shipped LSH index ----------
 
   /** Number of evaluation queries (vec_id < NQ) and result depth. */
@@ -67,7 +64,7 @@ object Wave11 {
     * by eval_ann (metrics) and sim_ann_batch (the served results). */
   private[ops] def annPipeline(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val qs = e.filter(col("vec_id") < NQ)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     // exact ground truth: brute-force cosine top-K per query
@@ -239,7 +236,7 @@ object Wave11 {
     * events inflated ×200 on the hot user joined to the per-user event
     * dimension, aggregated to a skew-invariant per-band summary. */
   private[graft] def skewJoinFrame(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("value"))
     // spread the pre-join fact over 8 map outputs: AQE splits a skewed
     // reduce partition at MAP-OUTPUT boundaries, so a single-mapper

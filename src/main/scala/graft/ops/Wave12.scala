@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -24,20 +24,12 @@ import graft.engine.Tables
   */
 object Wave12 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- eval_minhash: MinHash estimate vs true shingle Jaccard ----------
 
   /** 3-word shingle set, identical to the minhash pipelines' (distinct,
     * max(size-2, 1) windows). */
   private def shingles(c: Column): Column = {
-    val tk = toks(c)
+    val tk = LlmPipeline.tokens(c)
     array_distinct(transform(
       sequence(lit(0), greatest(size(tk) - 3, lit(0))),
       i => concat_ws(" ", slice(tk, i + 1, lit(3)))))
@@ -62,7 +54,7 @@ object Wave12 {
     * ratio, so both engines agree bit-for-bit after round(…, 6). */
   private val evalMinhash: Q = (s, dir) => {
     val pairs = LlmPipeline.queries("dedup_minhash_md5")(s, dir)
-    val d = t(s, dir, "documents").select(col("doc_id"), shingles(col("text")).as("shs"))
+    val d = Tables.load(s, dir, "documents").select(col("doc_id"), shingles(col("text")).as("shs"))
     val ssz = d.select(col("doc_id"), size(col("shs")).cast("long").as("sz"))
     val sh = d.select(col("doc_id"), explode(col("shs")).as("sh"))
     val inter = pairs.select("i", "j")
@@ -85,7 +77,7 @@ object Wave12 {
     val mh = LlmPipeline.oracles("dedup_minhash_md5")
     s"""WITH pairs AS ($mh),
        |d AS (SELECT doc_id, $duckShingles AS shs
-       |      FROM (SELECT doc_id, $duckToks AS toks FROM documents)),
+       |      FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS toks FROM documents)),
        |ssz AS (SELECT doc_id, CAST(len(shs) AS BIGINT) AS sz FROM d),
        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM d),
        |inter AS (
@@ -121,11 +113,11 @@ object Wave12 {
   private val sinkEvolve: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "evolve")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "cust") // v1
-    val source = t(s, dir, "customer")
+    val source = Tables.load(s, dir, "customer")
       .filter(pmod(col("c_custkey"), lit(3)) === 0)
       .select(col("c_custkey"), col("c_name"),
         (col("c_acctbal").cast("decimal(18,2)") + lit(1000))
@@ -163,7 +155,7 @@ object Wave12 {
     * round-then-decimal-summed. Reported per type with the cell count
     * (dof = cells − 1 under a fixed weekday marginal). */
   private val profileChisq: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), dayofweek(to_date(col("ts"))).as("dow"))
     // UNPINNED (r11): the contingency table feeds four consumers, but the
     // r11 clean-window A/B — the same one that dropped the cramersPair

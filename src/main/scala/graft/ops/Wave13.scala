@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * it and proves reclamation touched nothing live.
   */
 object Wave13 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** VACUUM as a gated query: build 3 versions (write → rewriting MERGE
     * → copy-on-write DELETE), vacuum to retention 1, then read the
@@ -33,7 +29,7 @@ object Wave13 {
   private val sinkVacuum: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "vac")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "part")
+    val base = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("int").as("p_size"),
         col("p_retailprice").cast("decimal(18,2)").as("price"))
     store.write(base.repartitionByRange(4, col("p_partkey")), "p")      // v1

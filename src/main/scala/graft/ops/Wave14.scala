@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +15,6 @@ import graft.engine.Tables
   *   what the context-window choice actually costs in wasted tokens.
   */
 object Wave14 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- profile_fd: functional-dependency discovery ---------------------
 
@@ -54,7 +50,7 @@ object Wave14 {
           Seq(countDistinct(col(a)).as(s"l$i"),
             countDistinct(col(a), col(b)).as(s"p$i"))
         }
-        val row = t(s, dir, tbl).agg(aggs.head, aggs.tail: _*)
+        val row = Tables.load(s, dir, tbl).agg(aggs.head, aggs.tail: _*)
         row.select(explode(array(cands.zipWithIndex.map { case ((_, a, b), i) =>
           struct(lit(tbl).as("tbl"), lit(a).as("lhs"), lit(b).as("rhs"),
             col(s"l$i").as("n_lhs"), col(s"p$i").as("n_pairs"),

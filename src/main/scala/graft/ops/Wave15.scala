@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,14 +16,6 @@ import graft.engine.Tables
   */
 object Wave15 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** Contamination sweep: for each shingle size n, the distinct eval
     * (source 'src0') n-gram count, the number of train documents
     * sharing at least one eval n-gram, and their exact id-sum (pinning
@@ -38,8 +30,8 @@ object Wave15 {
     * sizes union as independent branches; at 100 TB you run the sweep
     * on a corpus sample, then the chosen n exactly once. */
   private val evalDecontaminate: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"), toks(col("text")).as("tk"))
+    val d = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"), LlmPipeline.tokens(col("text")).as("tk"))
     def branch(n: Int): DataFrame = {
       val sh = d.filter(size(col("tk")) >= n)
         .select(col("doc_id"), col("source"),
@@ -73,7 +65,7 @@ object Wave15 {
          |  (SELECT CAST(count(*) AS BIGINT) FROM ev$n) AS n_eval_shingles,
          |  (SELECT CAST(count(*) AS BIGINT) FROM bad$n) AS n_hit_docs,
          |  (SELECT CAST(COALESCE(SUM(doc_id), 0) AS BIGINT) FROM bad$n) AS hit_id_sum""".stripMargin
-    s"""WITH tk AS (SELECT doc_id, source, $duckToks AS tk FROM documents),
+    s"""WITH tk AS (SELECT doc_id, source, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |${Seq(3, 5, 8).map(cte).mkString(",\n")}
        |${Seq(3, 5, 8).map(row).mkString("\nUNION ALL\n")}
        |ORDER BY n""".stripMargin

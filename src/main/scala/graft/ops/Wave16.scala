@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -23,9 +23,6 @@ import graft.engine.Tables
   *   a heavy tail corrupts).
   */
 object Wave16 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Lookback window in days: a feature older than this never serves. */
   private val ToleranceDays = 30
@@ -50,8 +47,8 @@ object Wave16 {
   // ---- join_asof_tolerance --------------------------------------------
 
   private val joinAsofTolerance: Q = (s, dir) => {
-    val e = t(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
-    val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
+    val e = Tables.load(s, dir, "events").select(col("event_id"), col("user_id"), col("ts"))
+    val o = Tables.load(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
     asofTolerance(e, o).orderBy("event_id")
   }
 
@@ -83,10 +80,10 @@ object Wave16 {
     // micro-batches MERGEd exactly-once, not the full fixture volume —
     // each batch rewrites the whole (growing) result table, so the
     // fixture cost is ~quadratic in rows while the contract is not
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .filter(pmod(col("event_id"), lit(4)) === 0)
       .select(col("event_id"), col("user_id"), col("ts"))
-    val orders = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
+    val orders = Tables.load(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"))
     val incoming = s"$root/incoming"
     ev.repartition(3).write.mode("overwrite").parquet(incoming)
     val src = s.readStream.schema(ev.schema)
@@ -138,7 +135,7 @@ object Wave16 {
     * then one conditional-count pass. Robust where events_anomaly's
     * z-scores are not: quartiles ignore the tail they are fencing. */
   private val profileOutliers: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(col("event_type"), col("value"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("value"))
     val quarts = ev.groupBy("event_type")
       .agg(expr("percentile(value, 0.25)").as("q1raw"),
         expr("percentile(value, 0.75)").as("q3raw"),

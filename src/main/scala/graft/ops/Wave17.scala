@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 tenth wave: deterministic multi-source training order.
   *
@@ -16,9 +16,6 @@ import graft.engine.Tables
   * RNG) so a resumed or re-sharded job re-derives the identical stream.
   */
 object Wave17 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Round-robin interleave: within each source, documents order by
     * (md5(doc_id), doc_id) — shuffle_global's deterministic permutation
@@ -35,12 +32,12 @@ object Wave17 {
     * broadcast back; position arithmetic is a narrow map. No global
     * sort anywhere — the reader ORDER BYs pos per shard at read time. */
   private val corpusInterleave: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         md5(col("doc_id").cast("string").cast("binary")).as("h"))
     val ranked = Ranks.perGroupRank(d, Seq("source"),
       Seq(col("h"), col("doc_id")), rankCol = "r", nCol = "n_src",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     val sources = d.select("source").distinct().collect()
       .map(_.getString(0)).sorted
     val k = sources.length.toLong

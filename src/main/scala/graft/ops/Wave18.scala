@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave18 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** CDC apply in ONE commit: the feed carries op = D (matched rows
     * vanish), op = U (matched rows update, +500 balance), and op = I
     * rows under fresh keys (insert); a D for an absent key is a no-op.
@@ -30,7 +26,7 @@ object Wave18 {
   private val sinkMergeConditional: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "mergecond")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "cust") // v1
@@ -91,7 +87,7 @@ object Wave18 {
   private val sinkMergeGuarded: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "mergeguard")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "cust") // v1

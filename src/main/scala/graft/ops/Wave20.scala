@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 closing wave: nucleus (top-p) selection as a distributed
   * operator — keep the smallest heaviest prefix of each group that
@@ -14,9 +13,6 @@ import graft.engine.Tables
   * traffic" questions.
   */
 object Wave20 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Per event type, the smallest set of highest-value events covering
     * 90% of the type's total value mass: rows are taken in (value desc,
@@ -40,7 +36,7 @@ object Wave20 {
     val P = 0.9
     // exact integer micro-units: value has 6 significant decimals in
     // the fixture; (decimal(18,6) * 1e6) is an exact long per row
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), col("event_id"),
         (col("value").cast("decimal(18,6)") * lit(1000000))
           .cast("long").as("v_micro"))
@@ -50,7 +46,7 @@ object Wave20 {
     val cum = Ranks.perGroupRankAndPrefixSum(ev, Seq("event_type"),
       Seq(col("v_micro").desc, col("event_id").asc), col("v_micro"),
       "__rk", "n_total", "cum_micro", "tot_micro",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     // crossing rule kept in exact integers: keep while the mass BEFORE
     // this row is under P * total  <=>  10*(cum - v) < 9*total
     cum

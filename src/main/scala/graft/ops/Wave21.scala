@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 21: classic OLAP / data-mining operators the earlier
   * waves had not covered — the Pareto frontier (skyline), weighted
@@ -18,12 +17,6 @@ import graft.engine.Tables
   * DuckDB oracle replays bit-identical draws.
   */
 object Wave21 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- skyline_pareto: the Pareto frontier (maximize size, minimize
   // price) without an all-pairs dominance join ------------------------
@@ -41,7 +34,7 @@ object Wave21 {
     * sort-free rewrite. For higher-dimensional skylines the same
     * per-block pre-aggregation is the standard grid-pruning step. */
   private val skylinePareto: Q = (s, dir) => {
-    val p = t(s, dir, "part")
+    val p = Tables.load(s, dir, "part")
     val perSize = p.groupBy("p_size").agg(min("p_retailprice").as("minp"))
     val runmin = perSize.as("a")
       .join(perSize.as("b"), col("b.p_size") > col("a.p_size"), "left")
@@ -76,7 +69,7 @@ object Wave21 {
     val u = (pmod(Hashing.md5Long(
       concat(col("doc_id").cast("string"), lit(":wsample")).cast("binary")),
       lit(1073741824L)).cast("double") + 0.5) / 1073741824.0
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
         (log(u) / col("n_chars").cast("double")).as("k0"))
       .orderBy(col("k0").desc, col("doc_id").asc)
@@ -105,7 +98,7 @@ object Wave21 {
     * (micro-value x micro-seconds in DECIMAL(38,0)); the TWAP is one
     * floor-division then one rounded double division. */
   private val eventsTwap: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"), col("ts"),
       unix_micros(col("ts")).as("us"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v_micro"))
@@ -114,7 +107,7 @@ object Wave21 {
     // rank-kernel pass PLUS a data-sized shuffle self-join on
     // (event_type, r) for the same pairing (guide §2.4)
     val led = Ranks.perGroupLead(ev, Seq("event_type"),
-      Seq(col("ts"), col("event_id")), col("us"), "next_us", parts(s))
+      Seq(col("ts"), col("event_id")), col("us"), "next_us", ConfScope.shufflePartitions(s))
     led.filter(col("next_us").isNotNull)
       .withColumn("dur", col("next_us") - col("us"))
       .groupBy("event_type")
@@ -155,8 +148,9 @@ object Wave21 {
     * (|brands| rows) and the order total rides the same broadcast.
     * Ratios are single rounded divisions of exact counts. */
   private val miningAssoc: Q = (s, dir) => {
-    val basket = t(s, dir, "lineitem").select(col("l_orderkey").as("ok"), col("l_partkey"))
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand").as("brand")),
+    val basket = Tables.load(s, dir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey"))
+      .join(Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand").as("brand")),
         col("l_partkey") === col("p_partkey"))
       .select("ok", "brand").distinct()
     val singles = basket.groupBy("brand").agg(count(lit(1)).as("cnt"))
@@ -218,7 +212,7 @@ object Wave21 {
     * division. */
   private val eventsCusum: Q = (s, dir) => {
     val H = 1000000000L // 1000 value-units of accumulated drift, in micro
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"), col("ts"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v_micro"))
     val mu = ev.groupBy("event_type")
@@ -230,7 +224,7 @@ object Wave21 {
     // (guide §2.4 — the r9 form paid two full range shuffles +
     // checkpoints + offset collects for the same pair)
     val pmn = Ranks.perGroupPrefixSumMin(dev, Seq("event_type"), ord,
-      col("dev"), "cum", "pmin", parts(s))
+      col("dev"), "cum", "pmin", ConfScope.shufflePartitions(s))
     val scol = col("cum") - least(col("pmin"), lit(0L))
     pmn.withColumn("s", scol)
       .groupBy("event_type")
@@ -278,7 +272,7 @@ object Wave21 {
     * half-width are (singly-rounded) doubles. */
   private val profileBootstrap: Q = (s, dir) => {
     val B = 32
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v_micro"))
     val reps = ev.withColumn("r", explode(sequence(lit(0), lit(B - 1))))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.GraftNative
@@ -16,9 +16,6 @@ import graft.engine.Tables
   * supersteps.
   */
 object Wave22 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- join_bloom: explicit bloom-prefiltered fact-dim join ----------
 
@@ -36,14 +33,14 @@ object Wave22 {
     * while this operator guarantees the prune — at 25% dim
     * selectivity it cuts the fact shuffle ~4x. */
   private val joinBloom: Q = (s, dir) => {
-    val urgent = t(s, dir, "orders")
+    val urgent = Tables.load(s, dir, "orders")
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"), col("o_orderpriority"))
     val bf = urgent
       .agg(GraftNative.bloomAgg(xxhash64(col("o_orderkey")), 200000L, 1600000L)
         .as("bf"))
       .head.getAs[Array[Byte]]("bf")
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter(GraftNative.mightContain(lit(bf), xxhash64(col("l_orderkey"))))
       .join(urgent, col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
@@ -76,9 +73,9 @@ object Wave22 {
       df.select(mask(col(colName)).as("mask"))
         .groupBy("mask").agg(count(lit(1)).as("cnt"))
         .select(lit(colName).as("col_name"), col("mask"), col("cnt"))
-    of(t(s, dir, "part"), "p_brand")
-      .unionByName(of(t(s, dir, "orders"), "o_orderpriority"))
-      .unionByName(of(t(s, dir, "events"), "props"))
+    of(Tables.load(s, dir, "part"), "p_brand")
+      .unionByName(of(Tables.load(s, dir, "orders"), "o_orderpriority"))
+      .unionByName(of(Tables.load(s, dir, "events"), "props"))
       .orderBy("col_name", "mask")
   }
 
@@ -116,19 +113,19 @@ object Wave22 {
         .agg(count(lit(1)).as("n_child"),
           sum(when(col("__hit").isNull, 1L).otherwise(0L)).as("n_orphan"))
         .select(lit(name).as("relationship"), col("n_child"), col("n_orphan"))
-    val li = t(s, dir, "lineitem")
-    audit("customer.c_nationkey->nation", t(s, dir, "customer"), "c_nationkey",
-        t(s, dir, "nation"), "n_nationkey")
+    val li = Tables.load(s, dir, "lineitem")
+    audit("customer.c_nationkey->nation", Tables.load(s, dir, "customer"), "c_nationkey",
+        Tables.load(s, dir, "nation"), "n_nationkey")
       .unionByName(audit("lineitem.l_orderkey->orders", li, "l_orderkey",
-        t(s, dir, "orders"), "o_orderkey"))
+        Tables.load(s, dir, "orders"), "o_orderkey"))
       .unionByName(audit("lineitem.l_partkey->part", li, "l_partkey",
-        t(s, dir, "part"), "p_partkey"))
-      .unionByName(audit("nation.n_regionkey->region", t(s, dir, "nation"),
-        "n_regionkey", t(s, dir, "region"), "r_regionkey"))
-      .unionByName(audit("orders.o_custkey->customer", t(s, dir, "orders"),
-        "o_custkey", t(s, dir, "customer"), "c_custkey"))
-      .unionByName(audit("supplier.s_nationkey->nation", t(s, dir, "supplier"),
-        "s_nationkey", t(s, dir, "nation"), "n_nationkey"))
+        Tables.load(s, dir, "part"), "p_partkey"))
+      .unionByName(audit("nation.n_regionkey->region", Tables.load(s, dir, "nation"),
+        "n_regionkey", Tables.load(s, dir, "region"), "r_regionkey"))
+      .unionByName(audit("orders.o_custkey->customer", Tables.load(s, dir, "orders"),
+        "o_custkey", Tables.load(s, dir, "customer"), "c_custkey"))
+      .unionByName(audit("supplier.s_nationkey->nation", Tables.load(s, dir, "supplier"),
+        "s_nationkey", Tables.load(s, dir, "nation"), "n_nationkey"))
       .orderBy("relationship")
   }
 
@@ -169,7 +166,7 @@ object Wave22 {
     * scales with time range, never serializing. Values sum as exact
     * micro-unit longs. */
   private val streamTopk: Q = (s, dir) => {
-    val sums = t(s, dir, "events")
+    val sums = Tables.load(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(sum((col("value").cast("decimal(18,6)") * 1000000).cast("long"))
         .as("sv_micro"))
@@ -210,7 +207,7 @@ object Wave22 {
     * enumerates <=6-hop paths with a recursive CTE and takes MIN. */
   private val graphSssp: Q = (s, dir) => {
     val byUser = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    val edges = t(s, dir, "events")
+    val edges = Tables.load(s, dir, "events")
       .withColumn("nxt", lead(col("event_type"), 1).over(byUser))
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("src"), col("nxt").as("dst"))

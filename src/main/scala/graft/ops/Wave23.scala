@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * indices, and exact integer-weighted EWMA smoothing.
   */
 object Wave23 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- rank_rrf: hybrid lexical + dense retrieval --------------------
 
@@ -35,7 +31,7 @@ object Wave23 {
       .withColumn("r_lex", row_number()
         .over(Window.orderBy(desc("bm25"), asc("doc_id"))).cast("bigint"))
       .select(col("doc_id"), col("r_lex"))
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").as("v"))
     val qv = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val topC = e.crossJoin(broadcast(qv)).filter(col("vec_id") =!= 0)
@@ -88,7 +84,7 @@ object Wave23 {
     * pairwise corpus join at any scale. Per-query maxima are rounded
     * then summed in DECIMAL (order-independent, exact). */
   private val simMaxsim: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val q = e.filter(col("vec_id") < 4)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -129,7 +125,7 @@ object Wave23 {
     * aggregations over the same scan, the marginals broadcast back —
     * the contingency shape of profile_chisq, keyed by derived time. */
   private val profileSeasonality: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), hour(col("ts")).cast("bigint").as("hod"))
     val cell = ev.groupBy("event_type", "hod").agg(count(lit(1)).as("cnt"))
     val typeTot = ev.groupBy("event_type").agg(count(lit(1)).as("type_tot"))
@@ -170,7 +166,7 @@ object Wave23 {
   private val ewmaUser: Q = (s, dir) => {
     val w = Window.partitionBy("user_id", "event_type")
       .orderBy(asc("ts"), asc("event_id"))
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_id"), col("user_id"), col("event_type"), col("ts"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
     val terms = (0 until 20).map { i =>

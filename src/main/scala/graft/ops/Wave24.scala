@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 24: concentration and curation-policy evaluators — the
   * Gini coefficient on the distributed rank kernel, a quality-gate
@@ -13,12 +12,6 @@ import graft.engine.Tables
   * tokenizer-fit audit).
   */
 object Wave24 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- profile_gini: value concentration per group -------------------
 
@@ -33,11 +26,11 @@ object Wave24 {
     * (equal values commute in sum(i*x_i)), so the event_id tiebreak is
     * for determinism of the rank column alone. */
   private val profileGini: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v_micro"))
     val ranked = Ranks.perGroupRank(ev, Seq("event_type"),
-      Seq(col("v_micro").asc, col("event_id").asc), "i", "n", parts(s))
+      Seq(col("v_micro").asc, col("event_id").asc), "i", "n", ConfScope.shufflePartitions(s))
     ranked.groupBy("event_type")
       .agg(max("n").as("n"),
         sum((col("i") * col("v_micro")).cast("decimal(38,0)")).as("s1"),
@@ -130,8 +123,8 @@ object Wave24 {
   private val evalVocabCoverage: Q = (s, dir) => {
     val vocab = Wave4.vocabFrame(s, dir).select(col("token"),
       lit(1).as("__in_vocab"))
-    t(s, dir, "documents")
-      .select(col("source"), explode(Wave4.toks(col("text"))).as("token"))
+    Tables.load(s, dir, "documents")
+      .select(col("source"), explode(LlmPipeline.tokens(col("text"))).as("token"))
       .join(broadcast(vocab), Seq("token"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_tokens"),
@@ -147,9 +140,9 @@ object Wave24 {
        |  SELECT token FROM (
        |    SELECT token, CAST(count(*) AS BIGINT) AS freq,
        |      CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS token_id
-       |    FROM (SELECT unnest(${Wave4.duckToks}) AS token FROM documents) GROUP BY token)
+       |    FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents) GROUP BY token)
        |  WHERE token_id <= 256),
-       |occ AS (SELECT source, unnest(${Wave4.duckToks}) AS token FROM documents)
+       |occ AS (SELECT source, unnest(${LlmPipeline.duckTokens}) AS token FROM documents)
        |SELECT o.source, CAST(count(*) AS BIGINT) AS n_tokens,
        |  CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
        |  round(CAST(SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END) AS DOUBLE)

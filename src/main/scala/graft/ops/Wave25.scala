@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -13,9 +13,6 @@ import graft.engine.Tables
   * manifest (the data-card artifact a training run records).
   */
 object Wave25 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sim_ann_filtered: ANN under a metadata predicate --------------
 
@@ -31,7 +28,7 @@ object Wave25 {
     * engine-portable md5 plane bank — hash-checked end to end. */
   private val simAnnFiltered: Q = (s, dir) => {
     val masks = 0 +: (0 until 4).map(1 << _)
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
     def dot(tb: Int, p: Int): Column =
       aggregate(zip_with(col("v"), typedLit(Wave9.lshW(tb)(p)), (x, y) => x * y),
@@ -91,7 +88,7 @@ object Wave25 {
     * integer, DECIMAL(38,0)-summed; r_k is one rounded division. The
     * lag join keys on (type, dayidx + k) — co-partitioned, no window. */
   private val profileAutocorr: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("dayidx"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
@@ -155,7 +152,7 @@ object Wave25 {
     * doc) flips the checksum. One narrow map + one aggregation. */
   private val corpusManifest: Q = (s, dir) => {
     val h = md5(col("doc_id").cast("string").cast("binary"))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
         pmod(Hashing.md5HexLong(h), lit(8)).as("shard"),
         Hashing.md5Long(col("text").cast("binary")).as("chash"),

@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 26: the distributed interval sweep (peak concurrency),
   * the Lorenz curve (Gini's decile-resolved companion), hierarchical
@@ -13,12 +12,6 @@ import graft.engine.Tables
   * histogram of per-key cardinalities that predicts join skew).
   */
 object Wave26 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- events_concurrency: peak concurrent sessions by sweep ---------
 
@@ -35,7 +28,7 @@ object Wave26 {
     * session count. */
   private val eventsConcurrency: Q = (s, dir) => {
     val byUser = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    val sessions = t(s, dir, "events")
+    val sessions = Tables.load(s, dir, "events")
       .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
       .withColumn("new_session",
         when(col("prev_ts").isNull ||
@@ -57,7 +50,7 @@ object Wave26 {
         col("t_end").as("t"), lit(-1L).as("delta")))
     val swept = Ranks.perGroupPrefixSum(bounds, Seq.empty,
       Seq(col("t").asc, col("delta").asc, col("user_id").asc, col("session_id").asc),
-      col("delta"), "conc", parts(s))
+      col("delta"), "conc", ConfScope.shufflePartitions(s))
     // peak, its first timestamp, and the session count in ONE aggregate
     // pass: max(struct(conc, -t)) picks the max concurrency then the
     // smallest t among its rows — exactly the peak + min-t-filter pair
@@ -112,11 +105,11 @@ object Wave26 {
     * aggregate; shares are single rounded divisions. Reads with
     * profile_gini: the Gini is 1 - 2*AUC of this curve. */
   private val profileLorenz: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
     val ranked = Ranks.perGroupRank(ev, Seq("event_type"),
-      Seq(col("v").asc, col("event_id").asc), "i", "n", parts(s))
+      Seq(col("v").asc, col("event_id").asc), "i", "n", ConfScope.shufflePartitions(s))
     val byDecile = ranked
       .withColumn("decile", Ranks.ntileExpr(col("i"), col("n"), 10).cast("bigint"))
       .groupBy("event_type", "decile")
@@ -171,12 +164,12 @@ object Wave26 {
     * snowflake chain — fixed catalog dims (nation/region) broadcast,
     * the entity-scaled customer dim joins size-chosen. */
   private val aggShareOfParent: Q = (s, dir) => {
-    val rev = t(s, dir, "lineitem")
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+    val rev = Tables.load(s, dir, "lineitem")
+      .join(Tables.load(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       // customer is entity-scaled: size-chosen join, no forced broadcast
-      .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+      .join(Tables.load(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.load(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.load(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
       .select(col("r_name"), col("n_name"),
         (col("l_extendedprice").cast("decimal(18,6)") *
           (lit(1).cast("decimal(18,6)") - col("l_discount").cast("decimal(18,6)")))
@@ -227,7 +220,7 @@ object Wave26 {
     * high-k keys means salting; a point mass at k=1 means the key is
     * near-unique). Two chained aggregations, both map-side partial. */
   private val profileMultiplicity: Q = (s, dir) =>
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .groupBy("l_orderkey").agg(count(lit(1)).as("k"))
       .groupBy("k").agg(count(lit(1)).as("n_keys"))
       .select(col("k"), col("n_keys"),

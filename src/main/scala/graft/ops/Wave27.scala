@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 27: Jensen-Shannon source drift (the mixing-decision
   * divergence), gaps-and-islands over a sparse key domain, sequential
@@ -13,12 +12,6 @@ import graft.engine.Tables
   * and the null-safe equi-join.
   */
 object Wave27 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- text_jsd: Jensen-Shannon divergence per source ----------------
 
@@ -32,7 +25,7 @@ object Wave27 {
     * counts rounded to 9 then DECIMAL-summed (bm25's recipe — addition
     * order cannot flip the hash); the final JSD rounds once. */
   private val textJsd: Q = (s, dir) => {
-    val terms = t(s, dir, "documents")
+    val terms = Tables.load(s, dir, "documents")
       .select(col("source"), explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tfS = terms.groupBy("source", "token").agg(count(lit(1)).as("tf_s"))
     val totS = terms.groupBy("source").agg(count(lit(1)).as("t_s"))
@@ -95,7 +88,7 @@ object Wave27 {
     * is the right plan and the driver-bounded kernel would be the
     * mistake); the histogram is two aggregations. All exact integers. */
   private val eventsStreaks: Q = (s, dir) => {
-    val days = t(s, dir, "events")
+    val days = Tables.load(s, dir, "events")
       .select(col("user_id"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
       .distinct()
@@ -134,7 +127,7 @@ object Wave27 {
     * aggregation; the top-10 is TakeOrderedAndProject. */
   private val eventsPaths: Q = (s, dir) => {
     val byUser = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .withColumn("t2", lead(col("event_type"), 1).over(byUser))
       .withColumn("t3", lead(col("event_type"), 2).over(byUser))
       .filter(col("t3").isNotNull)
@@ -165,9 +158,9 @@ object Wave27 {
     * (2*cum >= total), and the selected PRICE is reported verbatim (no
     * float arithmetic at all). */
   private val aggWeightedMedian: Q = (s, dir) => {
-    val w = t(s, dir, "lineitem").groupBy("l_orderkey")
+    val w = Tables.load(s, dir, "lineitem").groupBy("l_orderkey")
       .agg(count(lit(1)).as("wgt"))
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .join(w, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_orderpriority"), col("o_orderkey"),
         col("o_totalprice"), col("wgt"))
@@ -176,7 +169,7 @@ object Wave27 {
     // re-derived both with a separate aggregate + broadcast join
     val cum = Ranks.perGroupRankAndPrefixSum(o, Seq("o_orderpriority"),
       Seq(col("o_totalprice").asc, col("o_orderkey").asc),
-      col("wgt"), "__rk", "n_orders", "cum_w", "tot_w", parts(s))
+      col("wgt"), "__rk", "n_orders", "cum_w", "tot_w", ConfScope.shufflePartitions(s))
     cum
       .filter(col("cum_w") * 2 >= col("tot_w") &&
         (col("cum_w") - col("wgt")) * 2 < col("tot_w"))
@@ -216,7 +209,7 @@ object Wave27 {
   private val joinNullSafe: Q = (s, dir) => {
     val seg = when(col("c_acctbal") < 0, lit(null).cast("string"))
       .otherwise(col("c_mktsegment"))
-    val c = t(s, dir, "customer").select(col("c_custkey"), seg.as("seg"))
+    val c = Tables.load(s, dir, "customer").select(col("c_custkey"), seg.as("seg"))
     val dim = c.groupBy("seg").agg(count(lit(1)).as("seg_size"))
     c.alias("c").join(broadcast(dim.alias("d")), col("c.seg") <=> col("d.seg"))
       .groupBy(col("d.seg").as("seg_label"))

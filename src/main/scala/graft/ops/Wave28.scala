@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 28: RFM customer scoring (three global quintile ranks
   * on the empty-group kernel), conversion-latency median by mass
@@ -12,12 +12,6 @@ import graft.engine.Tables
   * alternative to HLL when the id domain is dense).
   */
 object Wave28 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- events_rfm: recency/frequency/monetary quintile cells ---------
 
@@ -30,7 +24,7 @@ object Wave28 {
     * output is the 5x5x5 cell histogram — model-sized, the marketing
     * segmentation table. */
   private val eventsRfm: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
     // the global max day = max over users of their last day, so it
     // rides the per-user aggregate's checkpoint as an observed metric —
     // the r9 form paid a SECOND full events scan to build a one-row
@@ -54,7 +48,8 @@ object Wave28 {
         col("freq"), col("mon"))
     def quintile(df: DataFrame, order: Seq[org.apache.spark.sql.Column],
         out: String): DataFrame = {
-      val ranked = Ranks.perGroupRank(df, Seq.empty, order, "__r", "__n", parts(s))
+      val ranked = Ranks.perGroupRank(df, Seq.empty, order, "__r", "__n",
+        ConfScope.shufflePartitions(s))
       ranked.withColumn(out, Ranks.ntileExpr(col("__r"), col("__n"), 5).cast("bigint"))
         .drop("__r", "__n")
     }
@@ -108,7 +103,7 @@ object Wave28 {
     * kernel (weight 1 per conversion) — the distributed exact median,
     * no global sort. Latencies are whole seconds. */
   private val eventsTimeToConvert: Q = (s, dir) => {
-    val e = t(s, dir, "events")
+    val e = Tables.load(s, dir, "events")
     val v = e.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"), col("event_id").as("view_id"))
     val p = e.filter(col("event_type") === "purchase")
@@ -128,7 +123,7 @@ object Wave28 {
     // carries the total as a free column — the r9 form re-derived it
     // with a max aggregate + broadcast crossJoin
     val cum = Ranks.perGroupRank(first, Seq.empty,
-      Seq(col("latency_s").asc, col("view_id").asc), "cum", "tot", parts(s))
+      Seq(col("latency_s").asc, col("view_id").asc), "cum", "tot", ConfScope.shufflePartitions(s))
     cum
       .filter(col("cum") * 2 >= col("tot") && (col("cum") - 1) * 2 < col("tot"))
       .agg(min("latency_s").as("median_latency_s"), max("tot").as("n_conversions"))
@@ -169,7 +164,7 @@ object Wave28 {
     * per distinct value in the shuffle. The exact twin (countDistinct)
     * is joined in-query so the contract is self-checking. */
   private val aggBitmapDistinct: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(col("event_type"), col("user_id"))
+    val ev = Tables.load(s, dir, "events").select(col("event_type"), col("user_id"))
     val bm = ev
       .select(col("event_type"), (col("user_id") / 32).cast("long").as("chunk"),
         expr("CAST(1 AS BIGINT) << CAST(user_id % 32 AS INT)").as("bit"))

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 29: robust anomaly detection by median absolute
   * deviation (the estimator a heavy-tailed value column needs — both
@@ -14,12 +14,6 @@ import graft.engine.Tables
   * "is this a Poisson process" diagnostic).
   */
 object Wave29 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   /** Lower-median of `value` per group by the mass-crossing rule on the
     * prefix-sum kernel (weight 1 per row): the first value whose
@@ -52,17 +46,17 @@ object Wave29 {
     // MAD kernel AND the final aggregate — pin each once (narrow
     // projections, linear) so the events scan + join run once, not ~5×
     // through the two mass-crossing passes
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .localCheckpoint()
     val med = medianOf(ev, "event_type", "v", Seq(col("event_id").asc),
-      "med", parts(s))
+      "med", ConfScope.shufflePartitions(s))
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("adev", abs(col("v") - col("med")))
       .localCheckpoint()
     val mad = medianOf(dev, "event_type", "adev", Seq(col("event_id").asc),
-      "mad", parts(s))
+      "mad", ConfScope.shufflePartitions(s))
     dev.join(broadcast(mad), "event_type")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), max("med").as("median_micro"),
@@ -110,7 +104,7 @@ object Wave29 {
     * rounded expression per row is engine-stable (the bm25 recipe,
     * max instead of sum). */
   private val eventsInterarrival: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"), col("ts"),
       unix_micros(col("ts")).as("us"))
     // gaps via the LEAD kernel: ONE range shuffle + a partition-local
@@ -118,14 +112,14 @@ object Wave29 {
     // paid a full rank-kernel pass PLUS a data-sized shuffle self-join
     // on (event_type, r) for the same neighbor pairing (guide §2.4)
     val led = Ranks.perGroupLead(ev, Seq("event_type"),
-      Seq(col("ts"), col("event_id")), col("us"), "next_us", parts(s))
+      Seq(col("ts"), col("event_id")), col("us"), "next_us", ConfScope.shufflePartitions(s))
     val gaps = led.filter(col("next_us").isNotNull)
       .select(col("event_type"), col("event_id"),
         (col("next_us") - col("us")).as("gap_us"))
     val fit = gaps.groupBy("event_type")
       .agg(count(lit(1)).as("n_gaps"), sum("gap_us").as("sum_us"))
     val gr = Ranks.perGroupRank(gaps, Seq("event_type"),
-      Seq(col("gap_us").asc, col("event_id").asc), "i", "n", parts(s))
+      Seq(col("gap_us").asc, col("event_id").asc), "i", "n", ConfScope.shufflePartitions(s))
     val d = gr.join(broadcast(fit), "event_type")
       .withColumn("fexp",
         lit(1.0) - exp(lit(-1.0) * col("gap_us") * col("n_gaps") / col("sum_us")))

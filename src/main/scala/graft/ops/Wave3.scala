@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-3 operator wave: dedup clustering, stratified corpus sampling,
   * sequence packing, regexp/date-interval scalar families, IGNORE NULLS
@@ -20,16 +20,6 @@ import graft.engine.Tables
   * index.
   */
 object Wave3 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split (identical to LlmPipeline.tokens /
-    * its DuckDB twin, which the text_* oracles already pin). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
 
   // ---- dedup_components: connected components over near-dup pairs ------
 
@@ -181,7 +171,7 @@ object Wave3 {
     val dropped = jaccardComponents(s, dir)
       .filter(col("doc_id") =!= col("component"))
       .select("doc_id")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .join(dropped, Seq("doc_id"), "left_anti")
       .select("doc_id", "lang", "source", "n_chars")
       .orderBy("doc_id")
@@ -214,7 +204,7 @@ object Wave3 {
     * boundaries land identically. */
   private val profileNumericBins: Q = (s, dir) => {
     val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
     val mm = li.agg(
       cols.flatMap(c => Seq(min(col(c)).as(s"${c}_mn"), max(col(c)).as(s"${c}_mx"))).head,
       cols.flatMap(c => Seq(min(col(c)).as(s"${c}_mn"), max(col(c)).as(s"${c}_mx"))).tail: _*)
@@ -247,7 +237,7 @@ object Wave3 {
     * instead of errors/wraparound — the safe-ingestion arithmetic mode.
     * DuckDB expresses the same contracts with explicit guards. */
   private val fnTryArith: Q = (s, dir) =>
-    t(s, dir, "part")
+    Tables.load(s, dir, "part")
       .select(col("p_partkey"),
         expr("try_divide(p_retailprice, p_size - 25)").as("per_unit"),
         expr("try_add(9223372036854775807L, p_partkey)").as("overflowed"),
@@ -311,12 +301,12 @@ object Wave3 {
     * local windows, no vocabulary-sized single task even at web-scale
     * vocabularies (where Heaps' law stops saving the global window). */
   private val textRarity: Q = (s, dir) => {
-    val tok = t(s, dir, "documents")
-      .select(col("doc_id"), explode(toks(col("text"))).as("w"))
+    val tok = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), explode(LlmPipeline.tokens(col("text"))).as("w"))
     val freq = tok.groupBy("w").agg(count(lit(1)).as("n"))
     val ranks = Ranks.perGroupRank(freq, Seq.empty,
         Seq(col("n").desc, col("w").asc), rankCol = "rank", nCol = "__nvocab",
-        partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+        partitions = ConfScope.shufflePartitions(s))
       .select("w", "rank")
     tok.join(broadcast(ranks), "w")
       .groupBy("doc_id")
@@ -327,7 +317,7 @@ object Wave3 {
   }
 
   private val textRarityOracle =
-    s"""WITH tok AS (SELECT doc_id, unnest($duckToks) AS w FROM documents),
+    s"""WITH tok AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
        |ranks AS (SELECT w, CAST(ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, w ASC) AS BIGINT) AS rank
        |          FROM tok GROUP BY w)
        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tok,
@@ -344,7 +334,7 @@ object Wave3 {
     * layout-independent, a narrow map evaluated at the scan. */
   private val sampleStratified: Q = (s, dir) => {
     val h = Hashing.md5Bucket(col("doc_id").cast("string").cast("binary"), 100)
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .withColumn("bucket", h)
       .filter(col("bucket") < when(col("lang") === "en", 10).otherwise(50))
       .select("doc_id", "lang", "source", "bucket")
@@ -371,12 +361,12 @@ object Wave3 {
     // the running sum is two-phase (Ranks.perGroupPrefixSum), not a
     // per-stratum window: a dominant (lang, source) stratum would
     // serialize its whole token stream into one window task at scale
-    val base = t(s, dir, "documents")
+    val base = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
-        size(toks(col("text"))).cast("bigint").as("n_tok"))
+        size(LlmPipeline.tokens(col("text"))).cast("bigint").as("n_tok"))
     Ranks.perGroupPrefixSum(base, Seq("lang", "source"), Seq(col("doc_id")),
         col("n_tok"), "cum_tok",
-        partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+        partitions = ConfScope.shufflePartitions(s))
       .withColumn("pack_id", floor((col("cum_tok") - col("n_tok")) / 512).cast("bigint"))
       .orderBy("doc_id")
   }
@@ -385,7 +375,7 @@ object Wave3 {
     s"""SELECT doc_id, lang, source, n_tok,
        |  CAST(SUM(n_tok) OVER w AS BIGINT) AS cum_tok,
        |  CAST(FLOOR((SUM(n_tok) OVER w - n_tok) / 512) AS BIGINT) AS pack_id
-       |FROM (SELECT doc_id, lang, source, CAST(len($duckToks) AS BIGINT) AS n_tok FROM documents)
+       |FROM (SELECT doc_id, lang, source, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok FROM documents)
        |WINDOW w AS (PARTITION BY lang, source ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
        |ORDER BY doc_id""".stripMargin
 
@@ -409,9 +399,9 @@ object Wave3 {
     * source holding most of the corpus fills across many balanced
     * tasks instead of one per-source window task. */
   private val corpusMix: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       col("doc_id"), col("source"),
-      size(toks(col("text"))).cast("bigint").as("n_tok"),
+      size(LlmPipeline.tokens(col("text"))).cast("bigint").as("n_tok"),
       md5(col("doc_id").cast("string").cast("binary")).as("h"),
       (lit(1) + regexp_extract(col("source"), "[0-9]+", 0).cast("int") % 3)
         .cast("bigint").as("w"))
@@ -423,7 +413,7 @@ object Wave3 {
     // most of the corpus would otherwise fill inside ONE window task
     val cum = Ranks.perGroupPrefixSum(base, Seq("source"),
       Seq(col("h"), col("doc_id")), col("n_tok"), "cum_tok",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     cum
       .crossJoin(broadcast(tot)).crossJoin(broadcast(wsum))
       .withColumn("quota",
@@ -435,7 +425,7 @@ object Wave3 {
 
   private val corpusMixOracle =
     s"""WITH base AS (
-       |  SELECT doc_id, source, CAST(len($duckToks) AS BIGINT) AS n_tok,
+       |  SELECT doc_id, source, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok,
        |    md5(CAST(doc_id AS VARCHAR)) AS h,
        |    CAST(1 + CAST(regexp_extract(source, '[0-9]+') AS INT) % 3 AS BIGINT) AS w
        |  FROM documents),
@@ -456,8 +446,8 @@ object Wave3 {
     * / filter-count / fold (aggregate) — all codegen-able builtins, no
     * UDFs; DuckDB expresses the same via list_filter/list_aggregate. */
   private val fnArrayHof: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .select(col("doc_id"), toks(col("text")).as("tk"))
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), LlmPipeline.tokens(col("text")).as("tk"))
       .select(col("doc_id"),
         exists(col("tk"), x => x.startsWith("a")).as("has_a_word"),
         forall(col("tk"), x => length(x) < 20).as("all_short"),
@@ -471,7 +461,7 @@ object Wave3 {
        |  len(list_filter(tk, x -> NOT length(x) < 20)) = 0 AS all_short,
        |  CAST(len(list_filter(tk, x -> length(x) >= 6)) AS BIGINT) AS n_long,
        |  CAST(coalesce(list_aggregate(list_transform(tk, x -> length(x)), 'sum'), 0) AS BIGINT) AS total_chars
-       |FROM (SELECT doc_id, $duckToks AS tk FROM documents)
+       |FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents)
        |ORDER BY doc_id""".stripMargin
 
   // ---- fn_map_ops: map construction / filter / value transform ---------
@@ -483,9 +473,9 @@ object Wave3 {
     * throws on duplicate keys. The oracle computes the same entry set
     * list-wise (the map is an intermediate, not an output type). */
   private val fnMapOps: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
-        array_distinct(slice(toks(col("text")), 1, 3)).as("tk"))
+        array_distinct(slice(LlmPipeline.tokens(col("text")), 1, 3)).as("tk"))
       .select(col("doc_id"),
         map_from_arrays(col("tk"), transform(col("tk"), x => length(x))).as("m"))
       .select(col("doc_id"),
@@ -499,7 +489,7 @@ object Wave3 {
   private val fnMapOpsOracle =
     s"""SELECT doc_id, token, CAST(2 * length(token) AS BIGINT) AS double_len
        |FROM (SELECT doc_id, unnest(list_distinct(tk[1:3])) AS token
-       |      FROM (SELECT doc_id, $duckToks AS tk FROM documents))
+       |      FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents))
        |WHERE length(token) >= 4
        |ORDER BY doc_id, token""".stripMargin
 
@@ -508,7 +498,7 @@ object Wave3 {
   /** Regexp scalar family (both engines on RE2-safe patterns: plain
     * character classes, no lookaround/backrefs). */
   private val fnRegexp: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         regexp_extract(col("text"), "([0-9]+)", 1).as("first_num"),
         regexp_replace(col("text"), "[0-9]+", "#").as("no_digits"),
@@ -529,7 +519,7 @@ object Wave3 {
     * fixed epoch. */
   private val fnInterval: Q = (s, dir) => {
     val d = to_date(col("o_orderdate"))
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(col("o_orderkey"),
         d.as("d"),
         add_months(d, 3).as("plus3m"),
@@ -558,7 +548,7 @@ object Wave3 {
   private val winIgnoreNulls: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
     val wRows = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .withColumn("v", when(col("event_type") === "click", col("value")))
       .select(col("event_id"), col("user_id"), col("v"),
         lag(col("v"), 1, null, ignoreNulls = true).over(w).as("prev_click"),
@@ -584,7 +574,7 @@ object Wave3 {
     * top-k is two-phase (local top-3 per physical partition, then global
     * rank) so ranking parallelism is cluster-width, not #queries. */
   private val simKnnJoin: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val scored = e.crossJoin(broadcast(q))
@@ -618,7 +608,7 @@ object Wave3 {
     * the code array is rendered as a comma-joined string because the
     * differential gate hashes scalar cells only. */
   private val embedQuantize: Q = (s, dir) =>
-    t(s, dir, "embeddings")
+    Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         sqrt(aggregate(col("embedding"), lit(0d),
           (acc, x) => acc + x.cast("double") * x.cast("double"))).as("norm"))
@@ -643,7 +633,7 @@ object Wave3 {
   /** GROUPING SETS with grouping_id disambiguation (real NULLs vs
     * rollup NULLs). */
   private val aggGroupingId: Q = (s, dir) => {
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql("""SELECT o_orderstatus, o_orderpriority,
               CAST(grouping_id(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
               COUNT(*) AS n
@@ -697,7 +687,7 @@ object Wave3 {
   /** Batch twin of [[Streaming.staticEnrich]] (StreamingSpec drives the
     * readStream form and asserts equivalence). */
   private val streamStaticJoin: Q = (s, dir) =>
-    Streaming.staticEnrich(t(s, dir, "events"), t(s, dir, "customer"))
+    Streaming.staticEnrich(Tables.load(s, dir, "events"), Tables.load(s, dir, "customer"))
       .orderBy("c_mktsegment", "event_type")
 
   private val streamStaticJoinOracle =
@@ -711,7 +701,7 @@ object Wave3 {
   /** JSON path extraction from the props column (get_json_object — the
     * per-field probe, complementing fn_map_json's full from_json parse). */
   private val fnJsonPath: Q = (s, dir) =>
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"),
         get_json_object(col("props"), "$.k").as("k_str"),
         get_json_object(col("props"), "$.k").cast("bigint").as("k_num"),
@@ -732,8 +722,8 @@ object Wave3 {
     * into a ranked join (no per-row re-execution); the same query text
     * runs on both engines. */
   private val joinLateral: Q = (s, dir) => {
-    t(s, dir, "customer").createOrReplaceTempView("customer")
-    t(s, dir, "orders").createOrReplaceTempView("orders")
+    Tables.load(s, dir, "customer").createOrReplaceTempView("customer")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("orders")
     s.sql(
       """SELECT c.c_custkey, o.o_orderkey, o.o_totalprice
         |FROM customer c,
@@ -761,12 +751,12 @@ object Wave3 {
     * both engines. */
   private val flagshipStarJoin: Q = (s, dir) => {
     val cutoff = "1995-03-15"
-    val cust = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+    val cust = Tables.load(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       .select("c_custkey")
-    val ord = t(s, dir, "orders")
+    val ord = Tables.load(s, dir, "orders")
       .filter(to_date(col("o_orderdate")) < lit(cutoff))
       .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .filter(to_date(col("l_shipdate")) > lit(cutoff))
       .select(col("l_orderkey"),
         (col("l_extendedprice").cast("decimal(18,2)") *
@@ -812,7 +802,7 @@ object Wave3 {
     val dim = Seq(("A", "accepted"), ("N", "new"), ("R", "returned"))
       .toDF("flag", "meaning")
       .crossJoin(s.range(salts).select(col("id").cast("int").as("salt")))
-    val fact = t(s, dir, "lineitem")
+    val fact = Tables.load(s, dir, "lineitem")
       .withColumn("salt", pmod(xxhash64(col("l_orderkey"), col("l_linenumber")), lit(salts)).cast("int"))
     fact.join(dim, fact("l_returnflag") === dim("flag") && fact("salt") === dim("salt"))
       .groupBy("meaning")
@@ -838,7 +828,7 @@ object Wave3 {
   private val sinkTimeTravel: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "timetravel")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), year(col("o_orderdate")).as("oyear"))
     store.write(base, "orders")                                         // v1
     store.write(base.withColumn("o_totalprice",                          // v2
@@ -865,7 +855,7 @@ object Wave3 {
   private val sinkDelete: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "delete")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), year(col("o_orderdate")).as("oyear"))
     store.write(base.repartitionByRange(4, col("o_orderkey")), "orders")  // v1
     store.delete(s, "orders", col("oyear") === 1995)                      // v2
@@ -889,7 +879,7 @@ object Wave3 {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "clone")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "part")
+    val base = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("int").as("p_size"))
     store.write(base.repartitionByRange(4, col("p_partkey")), "part")
     store.shallowClone("part", "part_dev")
@@ -926,7 +916,7 @@ object Wave3 {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "history")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
     // insert keys start past the live maximum (model-sized agg), so the
     // upsert stays insert-only at ANY scale factor — a fixed shift would
@@ -965,7 +955,7 @@ object Wave3 {
   private val sinkConcurrentUpsert: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "occ")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "customer") // v1
     // B's inserts start past the live max (model-sized agg) so the two
     // writers stay key-disjoint at ANY scale factor
@@ -1012,8 +1002,8 @@ object Wave3 {
     * session, proving the text surface plans identically to the Column
     * API (same Catalyst plan, same broadcast/pushdown physics). */
   private val sqlTextAgg: Q = (s, dir) => {
-    t(s, dir, "orders").createOrReplaceTempView("sql_orders")
-    t(s, dir, "lineitem").createOrReplaceTempView("sql_lineitem")
+    Tables.load(s, dir, "orders").createOrReplaceTempView("sql_orders")
+    Tables.load(s, dir, "lineitem").createOrReplaceTempView("sql_lineitem")
     s.sql(
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
         |  CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS rev
@@ -1039,7 +1029,7 @@ object Wave3 {
   private val sinkRestore: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "restore")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), year(col("o_orderdate")).as("oyear"))
     store.write(base.repartitionByRange(4, col("o_orderkey")), "orders")  // v1
     store.upsert(s, "orders",                                             // v2: bad deploy
@@ -1062,7 +1052,7 @@ object Wave3 {
   private val sinkCdc: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "cdc")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), year(col("o_orderdate")).as("oyear"))
     store.write(base, "orders")                                          // v1
     val v2 = base.filter(col("oyear") =!= 1998)
@@ -1092,7 +1082,7 @@ object Wave3 {
     * computed at the scan, so the rollup is still a single Expand +
     * aggregate, no self-joins. */
   private val aggTimeRollup: Q = (s, dir) =>
-    t(s, dir, "orders")
+    Tables.load(s, dir, "orders")
       .select(year(col("o_orderdate")).as("y"),
         quarter(col("o_orderdate")).as("q"),
         month(col("o_orderdate")).as("m"),
@@ -1116,14 +1106,14 @@ object Wave3 {
     * element (plain explode silently drops them — fatal when the melted
     * row must keep 1:1 provenance with its document). */
   private val fnExplodeOuter: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
-        explode_outer(filter(toks(col("text")), x => length(x) >= 12)).as("longtok"))
+        explode_outer(filter(LlmPipeline.tokens(col("text")), x => length(x) >= 12)).as("longtok"))
       .orderBy(asc("doc_id"), asc_nulls_first("longtok"))
 
   private val fnExplodeOuterOracle =
     s"""SELECT doc_id, u.longtok FROM
-       |  (SELECT doc_id, list_filter($duckToks, x -> length(x) >= 12) AS lt FROM documents) d
+       |  (SELECT doc_id, list_filter(${LlmPipeline.duckTokens}, x -> length(x) >= 12) AS lt FROM documents) d
        |LEFT JOIN LATERAL (SELECT unnest(d.lt) AS longtok) u ON TRUE
        |ORDER BY doc_id, longtok NULLS FIRST""".stripMargin
 
@@ -1136,7 +1126,7 @@ object Wave3 {
     * 1996 rows discounted, every other year original. */
   private val sinkDynamicPartition: Q = (s, dir) => {
     val tmp = graft.engine.Fs.freshScratch(s, "dynpart") + "/orders"
-    val base = t(s, dir, "orders").withColumn("oyear", year(col("o_orderdate")))
+    val base = Tables.load(s, dir, "orders").withColumn("oyear", year(col("o_orderdate")))
     base.write.mode(SaveMode.Overwrite).partitionBy("oyear").parquet(tmp)
     // overwrite JUST the 1996 partition with adjusted prices (an exact
     // IEEE add — round(x*0.9, 2) differs between engines on .x05 halves)

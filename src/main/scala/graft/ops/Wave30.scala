@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * the tokenize→detokenize integrity audit.
   */
 object Wave30 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- graph_triangles: degree-ordered triangle counting -------------
 
@@ -73,7 +69,7 @@ object Wave30 {
     * accuracy sheet per true label. Scores round to 6 before the
     * argmax so both engines pick identical winners. */
   private val simNearestCentroid: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val cents = e.groupBy("label")
       .agg(graft.functions.Native.vecSumAgg(col("v")).as("vsum"),
@@ -141,7 +137,7 @@ object Wave30 {
     * equality per doc. */
   private val tokenizeRoundtrip: Q = (s, dir) => {
     val vocab = Wave4.vocabFrame(s, dir).select("token", "token_id")
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         posexplode(LlmPipeline.tokens(col("text"))).as(Seq("pos", "token")))
     val ids = toks.join(broadcast(vocab), Seq("token"), "left")
@@ -165,12 +161,12 @@ object Wave30 {
        |  SELECT token, token_id FROM (
        |    SELECT token, CAST(count(*) AS BIGINT) AS freq,
        |      CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS token_id
-       |    FROM (SELECT unnest(${Wave4.duckToks}) AS token FROM documents) GROUP BY token)
+       |    FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents) GROUP BY token)
        |  WHERE token_id <= 256),
        |toks AS (
        |  SELECT doc_id, source, u.pos, u.token FROM documents,
-       |    LATERAL (SELECT unnest(${Wave4.duckToks}) AS token,
-       |              generate_subscripts(${Wave4.duckToks}, 1) AS pos) u),
+       |    LATERAL (SELECT unnest(${LlmPipeline.duckTokens}) AS token,
+       |              generate_subscripts(${LlmPipeline.duckTokens}, 1) AS pos) u),
        |ids AS (
        |  SELECT t.doc_id, t.source, t.pos, COALESCE(v.token_id, 0) AS id, t.token
        |  FROM toks t LEFT JOIN vocab v ON t.token = v.token),

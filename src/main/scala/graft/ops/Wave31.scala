@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * smoother over the daily series.
   */
 object Wave31 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- join_scd2_pit: point-in-time dimension resolution -------------
 
@@ -32,7 +28,7 @@ object Wave31 {
     * so fan-out is bounded. */
   private val joinScd2Pit: Q = (s, dir) => {
     val byUser = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), col("ts"),
         unix_micros(col("ts")).as("us"))
     val flagged = ev
@@ -101,7 +97,7 @@ object Wave31 {
     * enters. Window partitions are per type over the daily table —
     * series-sized, not data-sized. */
   private val movingMedian: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("dayidx"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))

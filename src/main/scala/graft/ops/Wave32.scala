@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * residual) — the two remaining staples of the time-dimension toolkit.
   */
 object Wave32 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- events_survival: Kaplan-Meier with right-censoring ------------
 
@@ -30,7 +26,7 @@ object Wave32 {
     * duration table (time-bounded, model-sized), so engines agree
     * bit-for-bit. The at-risk count derives from cumulative counts. */
   private val eventsSurvival: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         floor(unix_timestamp(col("ts")) / 3600).cast("long").as("hr"))
     val life = ev.groupBy("user_id")
@@ -114,7 +110,7 @@ object Wave32 {
     * arithmetic exact integers until the final rounded divisions;
     * windows run over the model-sized daily table. */
   private val timeseriesDecompose: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 33: the A/B test read-out (two-proportion z on a
   * deterministic hash split), the cohort LTV curve (cumulative value
@@ -12,9 +11,6 @@ import graft.engine.Tables
   * classic entity-resolution alternative to hash blocking).
   */
 object Wave33 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- events_ab_test: two-proportion z over a hash split ------------
 
@@ -31,7 +27,7 @@ object Wave33 {
       concat(col("user_id").cast("string"), lit(":ab")).cast("binary")), lit(2))
     // conversion = purchased within 24h of first activity ("ever
     // purchased" saturates to 1.0 on a long window — degenerate z)
-    val users = t(s, dir, "events")
+    val users = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .groupBy("user_id")
@@ -103,7 +99,7 @@ object Wave33 {
     * model-sized cohort x age grid; LTV-per-user is a single rounded
     * division of exact micro sums. */
   private val eventsCohortLtv: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("user_id"),
       floor(unix_timestamp(col("ts")) / 604800).cast("long").as("week"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
@@ -154,12 +150,12 @@ object Wave33 {
     * equi-join — O(n * w) candidates, never all-pairs. Jaccard is
     * exact integer set arithmetic. */
   private val dedupSortedNeighborhood: Q = (s, dir) => {
-    val docs = t(s, dir, "documents").select(col("doc_id"),
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"),
       substring(lower(col("text")), 1, 24).as("skey"),
       array_distinct(LlmPipeline.tokens(col("text"))).as("tk"))
     val ranked = Ranks.perGroupRank(docs, Seq.empty,
       Seq(col("skey").asc, col("doc_id").asc), "r", "n",
-      s.conf.get("spark.sql.shuffle.partitions").toInt)
+      ConfScope.shufflePartitions(s))
     val probes = ranked.select(col("doc_id").as("id_a"), col("tk").as("tk_a"),
       explode(lit(Array(1, 2))).as("delta"), col("r"))
       .select(col("id_a"), col("tk_a"), (col("r") + col("delta")).as("r"))

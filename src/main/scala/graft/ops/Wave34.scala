@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -11,9 +11,6 @@ import graft.engine.Tables
   * from both sides' change feeds without ever recomputing the join.
   */
 object Wave34 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sink_ivm_join: delta-join view maintenance --------------------
 
@@ -36,9 +33,9 @@ object Wave34 {
   private val sinkIvmJoin: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "ivmjoin")
     val store = new graft.engine.VersionedStore(root)
-    val o = t(s, dir, "orders")
+    val o = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
-    val c = t(s, dir, "customer")
+    val c = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val isBase = coalesce(pmod(col("o_orderkey"), lit(2)) === 0, lit(true))
     store.write(o.filter(isBase).repartitionByRange(4, col("o_orderkey")), "orders")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 35: model-evaluation and robustness operators a
   * curation pipeline reads before shipping a classifier or a filter —
@@ -15,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave35 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** The langid-as-ranker score both eval queries grade: the English
     * stopword hit ratio over distinct tokens — an integer/integer
     * division, so both engines derive bit-identical doubles and ties
@@ -26,7 +23,7 @@ object Wave35 {
 
   private def scored(s: SparkSession, dir: String): DataFrame = {
     val toks = array_distinct(LlmPipeline.tokens(col("text")))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), toks.as("tk"))
       .withColumn("ntok", size(col("tk")).cast("bigint"))
       .filter(col("ntok") > 0)
@@ -60,7 +57,7 @@ object Wave35 {
     val g = scored(s, dir).groupBy("score")
       .agg(sum("pos").as("p"), (count(lit(1)) - sum("pos")).as("n"))
     val cum = Ranks.perGroupPrefixSum(g, Seq.empty, Seq(col("score").asc),
-      col("n"), "cumneg", s.conf.get("spark.sql.shuffle.partitions").toInt)
+      col("n"), "cumneg", ConfScope.shufflePartitions(s))
     cum.agg(sum("p").as("n_pos"), sum("n").as("n_neg"),
         sum(col("p") * (lit(2L) * (col("cumneg") - col("n")) + col("n"))).as("num2"))
       .select(col("n_pos"), col("n_neg"),
@@ -142,7 +139,7 @@ object Wave35 {
     * so only intersection tokens materialize), with exact integer
     * arithmetic (inter·5 >= 4·min). */
   private val dedupContainment: Q = (s, dir) => Codegen.materialized(s) {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         array_distinct(LlmPipeline.tokens(col("text"))).as("toks"))
     val tok = d.select(col("doc_id"), col("lang"), col("source"),
@@ -218,7 +215,7 @@ object Wave35 {
     val arm = pmod(Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":tt")).cast("binary")), lit(2))
     val v = col("value").cast("decimal(18,6)")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(arm.as("arm"), v.as("v"), (v * v).cast("decimal(38,12)").as("v2"))
     val arms = ev.groupBy("arm").agg(

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +16,6 @@ import graft.engine.Tables
   * these answer "how do columns RELATE".
   */
 object Wave36 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- profile_cramers_v: categorical association strength -----------
 
@@ -68,13 +65,13 @@ object Wave36 {
   }
 
   private val profileCramersV: Q = (s, dir) => {
-    val docs = cramersPair(t(s, dir, "documents"), "lang", "source",
+    val docs = cramersPair(Tables.load(s, dir, "documents"), "lang", "source",
       "documents:lang~source")
     val ev = cramersPair(
-      t(s, dir, "events").select(col("event_type"),
+      Tables.load(s, dir, "events").select(col("event_type"),
         dayofweek(to_date(col("ts"))).as("dow")),
       "event_type", "dow", "events:type~weekday")
-    val ord = cramersPair(t(s, dir, "orders"), "o_orderstatus",
+    val ord = cramersPair(Tables.load(s, dir, "orders"), "o_orderstatus",
       "o_orderpriority", "orders:status~priority")
     docs.unionAll(ev).unionAll(ord).orderBy("pair")
   }
@@ -149,9 +146,9 @@ object Wave36 {
       // Semantics preserved exactly: distinct() counts NULL as a value
       // (max-tag groupBy does too) while the inner equi-join never
       // matched NULL — the intersection count keeps k IS NOT NULL.
-      val tagged = t(s, dir, ta)
+      val tagged = Tables.load(s, dir, ta)
         .select(col(ca).cast("long").as("k"), lit(1L).as("ina"), lit(0L).as("inb"))
-        .unionAll(t(s, dir, tb)
+        .unionAll(Tables.load(s, dir, tb)
           .select(col(cb).cast("long").as("k"), lit(0L).as("ina"), lit(1L).as("inb")))
       tagged.groupBy("k").agg(max("ina").as("ina"), max("inb").as("inb"))
         .agg(coalesce(sum("ina"), lit(0L)).as("ndv_a"),

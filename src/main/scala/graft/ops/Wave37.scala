@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave37 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- text_readability: Flesch reading ease per source --------------
 
   /** Per-source readability: words (regex tokens), sentences
@@ -30,7 +26,7 @@ object Wave37 {
     * exact plan shape at 100 TB: narrow per-doc expressions, one
     * source-keyed exchange. */
   private val textReadability: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("source"),
         size(LlmPipeline.tokens(col("text"))).cast("bigint").as("w"),
         greatest(lit(1L), regexp_count(col("text"), lit("[.!?]+")).cast("bigint"))
@@ -85,7 +81,7 @@ object Wave37 {
     val shingles = array_distinct(transform(
       sequence(lit(0), greatest(size(tk) - 5, lit(0))),
       i => concat_ws(" ", slice(tk, i + 1, lit(5)))))
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .withColumn("__tk", LlmPipeline.tokens(col("text")))
       .select(col("doc_id"), col("source"), explode(shingles).as("sh"))
       .filter(size(split(col("sh"), " ")) === 5)

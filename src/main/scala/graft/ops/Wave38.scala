@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 38: leakage-safe group k-fold assignment (folds respect
   * near-duplicate clusters, so no eval fold ever contains a near-copy
@@ -14,12 +13,6 @@ import graft.engine.Tables
   * mean shifted, complementing events_cusum's "did it drift" alarm).
   */
 object Wave38 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- sample_group_kfold: cluster-aware cross-validation folds ------
 
@@ -37,7 +30,7 @@ object Wave38 {
   private val sampleGroupKfold: Q = (s, dir) => {
     val comp = Wave3.queries("dedup_components")(s, dir)
       .select(col("doc_id"), col("component"))
-    val grp = t(s, dir, "documents").select(col("doc_id"))
+    val grp = Tables.load(s, dir, "documents").select(col("doc_id"))
       .join(comp, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("component"), col("doc_id")).as("grp"))
@@ -75,7 +68,7 @@ object Wave38 {
     * deterministic earliest-τ tie-break. The "WHERE did the level
     * shift" read that turns events_cusum's alarm into an action. */
   private val eventsChangepoint: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), col("event_id"), col("ts"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
     val ord = Seq(col("ts").asc, col("event_id").asc)
@@ -85,7 +78,7 @@ object Wave38 {
     // broadcast join — all four columns derive from the same
     // (partition × group) offset table
     val cum = Ranks.perGroupRankAndPrefixSum(ev, Seq("event_type"), ord,
-      col("v"), "t", "n", "cum", "sn", parts(s))
+      col("v"), "t", "n", "cum", "sn", ConfScope.shufflePartitions(s))
     val stat = cum
       .filter(col("t") < col("n"))
       .withColumn("g",

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave39 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- dedup_stats: per-source drop-rate report ----------------------
 
   /** The dedup data card: per source, corpus size, how many documents
@@ -31,7 +27,7 @@ object Wave39 {
     val dropped = Wave3.queries("dedup_components")(s, dir)
       .filter(col("doc_id") =!= col("component"))
       .select(col("doc_id"), lit(1L).as("is_drop"))
-    t(s, dir, "documents").select(col("doc_id"), col("source"))
+    Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
       .join(dropped, Seq("doc_id"), "left")
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
@@ -67,7 +63,7 @@ object Wave39 {
   private val evalScoreCorr: Q = (s, dir) => {
     val toks = LlmPipeline.tokens(col("text"))
     val enStop = Seq("the", "and", "of", "to", "in", "is", "a", "that")
-    val base = t(s, dir, "documents")
+    val base = Tables.load(s, dir, "documents")
       .select(col("source"), col("text"),
         size(array_distinct(toks)).cast("bigint").as("ntok"),
         size(toks).cast("bigint").as("w"),

@@ -19,16 +19,6 @@ import graft.engine.Tables
   */
 object Wave4 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens and
-    * its DuckDB twin (pinned by the text_* oracles). */
-  private[ops] def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private[ops] val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- decontaminate: train/eval n-gram overlap removal ----------------
 
   /** Benchmark decontamination: drop every training document that shares
@@ -52,7 +42,7 @@ object Wave4 {
     * documents table. */
   def testDecontaminate(documents: DataFrame): DataFrame = {
     val docs = documents
-      .select(col("doc_id"), col("lang"), col("source"), toks(col("text")).as("tk"))
+      .select(col("doc_id"), col("lang"), col("source"), LlmPipeline.tokens(col("text")).as("tk"))
     val shingles = docs
       .filter(size(col("tk")) >= 5)
       .select(col("doc_id"), col("source"),
@@ -69,10 +59,10 @@ object Wave4 {
       .orderBy("doc_id")
   }
 
-  private val decontaminate: Q = (s, dir) => testDecontaminate(t(s, dir, "documents"))
+  private val decontaminate: Q = (s, dir) => testDecontaminate(Tables.load(s, dir, "documents"))
 
   private val decontaminateOracle =
-    s"""WITH tk AS (SELECT doc_id, lang, source, $duckToks AS tk FROM documents),
+    s"""WITH tk AS (SELECT doc_id, lang, source, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |sh AS (
        |  SELECT doc_id, source,
        |    unnest(list_transform(generate_series(1, len(tk) - 4),
@@ -101,7 +91,7 @@ object Wave4 {
     val h = md5(col("doc_id").cast("string").cast("binary"))
     val shard = pmod(Hashing.md5HexLong(h), lit(8))
     val w = Window.partitionBy("shard").orderBy("h", "doc_id")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), h.as("h"), shard.as("shard"))
       .withColumn("pos", row_number().over(w).cast("bigint"))
       .select("doc_id", "shard", "pos")
@@ -135,20 +125,20 @@ object Wave4 {
     * place the tokenization-to-tf semantics live, so text_tfidf and
     * rank_bm25 (and both oracles) can never drift apart. */
   private[ops] def termStats(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val terms = docs.select(col("doc_id"), explode(toks(col("text"))).as("token"))
+    val terms = docs.select(col("doc_id"), explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tf = terms.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     (tf, dfreq, n)
   }
   private[ops] val duckTermStats =
-    s"""terms AS (SELECT doc_id, unnest($duckToks) AS token FROM documents),
+    s"""terms AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM terms GROUP BY doc_id, token),
        |df AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY token),
        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM documents)""".stripMargin
 
   private val textTfidf: Q = (s, dir) => {
-    val (tf, dfreq, n) = termStats(t(s, dir, "documents"))
+    val (tf, dfreq, n) = termStats(Tables.load(s, dir, "documents"))
     tf.join(dfreq, Seq("token"))
       .crossJoin(broadcast(n))
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
@@ -181,8 +171,8 @@ object Wave4 {
     // integer ceil((len-64)/48) + 1 == floor((len-17)/48) + 1 for len > 64
     val nChunks = when(len <= 64, lit(1))
       .otherwise(floor((len - 17).cast("double") / 48.0).cast("int") + 1)
-    t(s, dir, "documents")
-      .select(col("doc_id"), toks(col("text")).as("tk"))
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), LlmPipeline.tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("tk"),
         explode(sequence(lit(0), nChunks - 1)).as("chunk_id"))
       .select(col("doc_id"), col("chunk_id").cast("bigint").as("chunk_id"),
@@ -194,7 +184,7 @@ object Wave4 {
   }
 
   private val chunkStrideOracle =
-    s"""WITH tk AS (SELECT doc_id, $duckToks AS tk FROM documents),
+    s"""WITH tk AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |c AS (SELECT doc_id, tk,
        |        CASE WHEN len(tk) <= 64 THEN 1
        |             ELSE CAST(floor((len(tk) - 17) / 48.0) AS INT) + 1 END AS n_chunks
@@ -224,7 +214,7 @@ object Wave4 {
     * all-pairs. The kept set is provably pairwise non-near within every
     * cell (any near pair would have dropped its larger member). */
   private val semDedup: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val seeds: Array[(Int, Seq[Float])] = e.filter(col("vec_id") < 8)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Float](1)))
@@ -285,9 +275,10 @@ object Wave4 {
     * — shared by rank_bm25 and the hybrid fusion (rank_rrf, Wave23) so
     * the lexical scoring semantics live in exactly one place. */
   private[ops] def bm25Scores(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val (tf, dfreq, n) = termStats(docs)
-    val dl = docs.select(col("doc_id"), size(toks(col("text"))).cast("double").as("dl"))
+    val dl = docs.select(col("doc_id"),
+      size(LlmPipeline.tokens(col("text"))).cast("double").as("dl"))
     val avgdl = dl.agg(avg("dl").as("avgdl"))
     val q = Seq("table", "spark", "query")
     tf.filter(col("token").isin(q: _*))
@@ -325,7 +316,7 @@ object Wave4 {
     * lengths + avgdl), used by rank_bm25 here and rank_rrf (Wave23). */
   private[ops] val duckBm25Prelude =
     s"""$duckTermStats,
-       |dl AS (SELECT doc_id, CAST(len($duckToks) AS DOUBLE) AS dl FROM documents),
+       |dl AS (SELECT doc_id, CAST(len(${LlmPipeline.duckTokens}) AS DOUBLE) AS dl FROM documents),
        |a AS (SELECT avg(dl) AS avgdl FROM dl)""".stripMargin
 
   private val rankBm25Oracle =
@@ -344,8 +335,8 @@ object Wave4 {
     * window runs over the <= 256 surviving rows, bounded by the literal
     * k, not the vocabulary. */
   private[ops] def vocabFrame(s: SparkSession, dir: String): DataFrame = {
-    val terms = t(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("token"))
+    val terms = Tables.load(s, dir, "documents")
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
     val freq = terms.groupBy("token").agg(count(lit(1)).as("freq"))
     val top = freq.orderBy(desc("freq"), asc("token")).limit(256)
     top.withColumn("token_id",
@@ -359,7 +350,7 @@ object Wave4 {
     s"""SELECT token_id, token, freq FROM (
        |  SELECT token, CAST(count(*) AS BIGINT) AS freq,
        |    CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS token_id
-       |  FROM (SELECT unnest($duckToks) AS token FROM documents) GROUP BY token)
+       |  FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents) GROUP BY token)
        |WHERE token_id <= 256 ORDER BY token_id""".stripMargin
 
   /** Numericization: every document's token stream mapped to vocabulary
@@ -374,8 +365,8 @@ object Wave4 {
     * array_sort of (pos, id) structs, not a window. */
   private val tokenizeIds: Q = (s, dir) => {
     val vocab = vocabFrame(s, dir).select(col("token"), col("token_id"))
-    t(s, dir, "documents")
-      .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "token")))
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), posexplode(LlmPipeline.tokens(col("text"))).as(Seq("pos", "token")))
       .join(broadcast(vocab), Seq("token"), "left")
       .withColumn("id", coalesce(col("token_id"), lit(0L)))
       .groupBy("doc_id")
@@ -391,10 +382,10 @@ object Wave4 {
     s"""WITH v AS (
        |  SELECT token, token_id FROM (
        |    SELECT token, CAST(row_number() OVER (ORDER BY count(*) DESC, token) AS BIGINT) AS token_id
-       |    FROM (SELECT unnest($duckToks) AS token FROM documents) GROUP BY token)
+       |    FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents) GROUP BY token)
        |  WHERE token_id <= 256),
        |p AS (SELECT doc_id, unnest(tk) AS token, generate_subscripts(tk, 1) AS pos
-       |      FROM (SELECT doc_id, $duckToks AS tk FROM documents)),
+       |      FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents)),
        |j AS (SELECT doc_id, pos, coalesce(token_id, 0) AS id
        |      FROM p LEFT JOIN v USING (token))
        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok,
@@ -427,7 +418,7 @@ object Wave4 {
       transform(sequence(lit(0), greatest(size(tk) - 3, lit(0))),
         i => concat_ws(" ", slice(tk, i + 1, lit(3)))), x => x =!= ""))
     def prep(d: DataFrame) = d
-      .select(col("doc_id"), sh3(toks(col("text"))).as("sh"),
+      .select(col("doc_id"), sh3(LlmPipeline.tokens(col("text"))).as("sh"),
         md5(lower(trim(col("text"))).cast("binary")).as("h"))
     val existing = prep(existingDocs)
     val incoming = prep(incomingDocs)
@@ -452,7 +443,7 @@ object Wave4 {
   }
 
   private val dedupIncremental: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
     incrementalDedup(d.filter(col("doc_id") < 400), d.filter(col("doc_id") >= 400))
   }
 
@@ -462,7 +453,7 @@ object Wave4 {
 
   private val dedupIncrementalOracle =
     s"""WITH d AS (SELECT doc_id, $duckSh3 AS sh, md5(lower(trim(text))) AS h
-       |           FROM (SELECT doc_id, text, $duckToks AS tk FROM documents)),
+       |           FROM (SELECT doc_id, text, ${LlmPipeline.duckTokens} AS tk FROM documents)),
        |ex AS (SELECT * FROM d WHERE doc_id < 400),
        |inc AS (SELECT * FROM d WHERE doc_id >= 400),
        |exsh AS (SELECT DISTINCT unnest(sh) AS s FROM ex),
@@ -488,9 +479,9 @@ object Wave4 {
     * hash aggregation over narrow per-row maps; avg is exact-integer
     * sum / count so the double division is engine-identical. */
   private val corpusStats: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("lang"), col("source"),
-        size(toks(col("text"))).cast("bigint").as("n_tok"),
+        size(LlmPipeline.tokens(col("text"))).cast("bigint").as("n_tok"),
         col("n_chars"),
         md5(lower(trim(col("text"))).cast("binary")).as("h"))
       .groupBy("lang", "source")
@@ -505,7 +496,7 @@ object Wave4 {
        |  CAST(count(DISTINCT h) AS BIGINT) AS n_uniq,
        |  CAST(sum(n_tok) AS BIGINT) AS tok_total,
        |  round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS avg_chars
-       |FROM (SELECT lang, source, n_chars, CAST(len($duckToks) AS BIGINT) AS n_tok,
+       |FROM (SELECT lang, source, n_chars, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok,
        |        md5(lower(trim(text))) AS h FROM documents)
        |GROUP BY lang, source ORDER BY lang, source""".stripMargin
 

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave40 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_backtest: rolling-origin OLS one-step backtest ---------
 
   /** Rolling-origin backtest of the linear-trend forecaster on daily
@@ -32,7 +28,7 @@ object Wave40 {
     * the trend fit earns its keep. The only data-sized work is the
     * daily aggregate — the backtest itself costs #days per type. */
   private val eventsBacktest: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
       .agg(sum((col("value").cast("decimal(18,6)") * 1000000).cast("long"))
@@ -131,7 +127,7 @@ object Wave40 {
   private val featTargetEncode: Q = (s, dir) => {
     val fold = pmod(Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":fe")).cast("binary")), lit(5))
-    val cells = t(s, dir, "events")
+    val cells = Tables.load(s, dir, "events")
       .select(col("event_type"), fold.as("fold"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .groupBy("event_type", "fold")

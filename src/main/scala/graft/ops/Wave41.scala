@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave41 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_cuped: variance-reduced experiment read-out ------------
 
   /** CUPED: per user, pre-period and post-period value sums (split at
@@ -32,7 +28,7 @@ object Wave41 {
     * deltas and the variance-reduction share (= ρ², the whole point
     * of the method). */
   private val eventsCuped: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("user_id"),
       floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
@@ -145,7 +141,7 @@ object Wave41 {
   private val profileSubgroups: Q = (s, dir) => {
     val toks = LlmPipeline.tokens(col("text"))
     val enStop = Seq("the", "and", "of", "to", "in", "is", "a", "that")
-    val scored = t(s, dir, "documents")
+    val scored = Tables.load(s, dir, "documents")
       .select(col("lang"), col("source"),
         size(array_distinct(toks)).cast("bigint").as("ntok"),
         size(array_intersect(array_distinct(toks), typedLit(enStop)))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave42 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- profile_mmd: mean-embedding drift between label cohorts -------
 
   /** Linear-kernel MMD between every label pair: ||mean_a − mean_b||₂
@@ -30,7 +26,7 @@ object Wave42 {
     * DECIMAL(28,12) before the final exact sum. The "did this week's
     * crawl shift the embedding space" read. */
   private val profileMmd: Q = (s, dir) => {
-    val cells = t(s, dir, "embeddings")
+    val cells = Tables.load(s, dir, "embeddings")
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
       .select(col("label"), col("dim"),
         floor(col("x").cast("double") * 1e9).cast("long").as("xn"))
@@ -81,7 +77,7 @@ object Wave42 {
     * three global scalars — the standard "is this column worth
     * encoding" read before feature work. */
   private val featWoe: Q = (s, dir) => {
-    val cells = t(s, dir, "documents")
+    val cells = Tables.load(s, dir, "documents")
       .select(col("source"),
         when(col("lang") === "en", 1L).otherwise(0L).as("g"))
       .groupBy("source")

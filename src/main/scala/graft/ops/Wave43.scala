@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave43 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private def d38(c: org.apache.spark.sql.Column) = c.cast(DecimalType(38, 0))
 
   // ---- events_did: difference-in-differences ------------------------
@@ -30,7 +26,7 @@ object Wave43 {
     * as DECIMAL(38,0) micro-units — no float accumulation). One
     * user-level aggregate, one 2-row arm aggregate. */
   private val eventsDid: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("user_id"),
       floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
@@ -110,7 +106,7 @@ object Wave43 {
     * (z = 0.841621): n = 2σ²(z_α + z_β)²/Δ². One aggregate; the rest
     * is closed-form arithmetic on a #types-sized table. */
   private val eventsPower: Q = (s, dir) => {
-    val m = t(s, dir, "events")
+    val m = Tables.load(s, dir, "events")
       .select(col("event_type"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .groupBy("event_type")
@@ -161,7 +157,7 @@ object Wave43 {
     * the stratified mean at fixed budget. Allocations floor(x + 0.5)
     * and cap at N_h. One stratum aggregate + a broadcast scalar. */
   private val sampleNeyman: Q = (s, dir) => {
-    val m = t(s, dir, "documents")
+    val m = Tables.load(s, dir, "documents")
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_h"), sum("n_chars").as("sx"),
         sum(d38(col("n_chars")) * col("n_chars")).as("sxx"))
@@ -206,7 +202,7 @@ object Wave43 {
     * burst. Per-(token, doc) counts are the only data-sized pass. */
   private val textBurstiness: Q = (s, dir) => {
     val toks = LlmPipeline.tokens(col("text"))
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val nd = docs.agg(count(lit(1)).as("n_docs"))
     val perDoc = docs.select(col("doc_id"), explode(toks).as("w"))
       .groupBy("w", "doc_id").agg(count(lit(1)).as("c"))

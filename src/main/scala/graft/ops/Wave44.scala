@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -17,9 +17,6 @@ import graft.engine.Tables
   */
 object Wave44 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- price_elasticity: log-log OLS per brand -----------------------
 
   /** Demand elasticity per part brand: OLS slope of ln(quantity) on
@@ -33,9 +30,9 @@ object Wave44 {
     * part join is size-chosen. */
   private val priceElasticity: Q = (s, dir) => {
     def lnq(c: Column) = floor(log(c) * 1e9 + 0.5).cast("long")
-    val joined = t(s, dir, "lineitem")
+    val joined = Tables.load(s, dir, "lineitem")
       // part is entity-scaled: size-chosen join, no forced broadcast
-      .join(t(s, dir, "part").select(col("p_partkey"), col("p_brand")),
+      .join(Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand")),
         col("l_partkey") === col("p_partkey"))
       .select(col("p_brand"),
         lnq(col("l_extendedprice").cast("double") / col("l_quantity").cast("double"))
@@ -109,7 +106,7 @@ object Wave44 {
     val arm = pmod(Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":ab")).cast("binary")), lit(2))
     def d38(c: Column) = c.cast(DecimalType(38, 0))
-    val cells = t(s, dir, "events")
+    val cells = Tables.load(s, dir, "events")
       .select(col("event_type"), arm.as("arm"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .groupBy("event_type", "arm")
@@ -213,7 +210,7 @@ object Wave44 {
   private val sinkMergeSync: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "mergesync")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "cust") // v1

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -17,9 +17,6 @@ import graft.engine.Tables
   * relevance label (the standard ranking-eval read).
   */
 object Wave45 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val Iters = 12
 
@@ -51,7 +48,7 @@ object Wave45 {
     // Quantization floor(x·1e9 + 0.5) is the same IEEE expression,
     // evaluated in Scala.
     import s.implicits._
-    val cellsRaw = t(s, dir, "embeddings")
+    val cellsRaw = Tables.load(s, dir, "embeddings")
       .select(col("embedding")).as[Seq[Float]]
       .mapPartitions { it =>
         val hi = new Array[Long](64 * 64)
@@ -128,7 +125,7 @@ object Wave45 {
     val wFin = matvec(v)
     val numRaw = dims.map(i => wFin(i) * v(i)).sum
     val vv = dims.map(i => BigInt(v(i)) * v(i)).sum
-    val nRows = t(s, dir, "embeddings").count()
+    val nRows = Tables.load(s, dir, "embeddings").count()
     val num2 = numRaw.signum * (numRaw.abs / 1000000L)
     val den2 = vv * nRows * 1000L
     val lamMicro = num2.signum *
@@ -201,7 +198,7 @@ object Wave45 {
     val nClean = length(regexp_replace(col("text"), "[^a-zA-Z0-9 ]", "")).cast("bigint")
     val stopHits = size(array_intersect(array_distinct(toks), typedLit(enStop)))
       .cast("bigint")
-    val scored = t(s, dir, "documents")
+    val scored = Tables.load(s, dir, "documents")
       .filter(nTok > 0 && nChars > 0)
       .select(col("doc_id"),
         when(col("lang") === "en", 1L).otherwise(0L).as("rel"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -17,9 +17,6 @@ import graft.engine.Tables
   */
 object Wave46 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private def d38(c: Column) = c.cast(DecimalType(38, 0))
 
   // ---- profile_vif: variance inflation over 3 numerics ---------------
@@ -30,7 +27,7 @@ object Wave46 {
     * R²₁ = (r₁₂² + r₁₃² − 2·r₁₂·r₁₃·r₂₃)/(1 − r₂₃²), VIF = 1/(1−R²).
     * The "are these features redundant" read before any regression. */
   private val profileVif: Q = (s, dir) => {
-    val m = t(s, dir, "lineitem")
+    val m = Tables.load(s, dir, "lineitem")
       .select((col("l_quantity").cast("decimal(18,2)") * 100).cast("long").as("a"),
         (col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long").as("b"),
         (col("l_discount").cast("decimal(18,2)") * 100).cast("long").as("c"))
@@ -112,7 +109,7 @@ object Wave46 {
     * deterministic "which arm gets the next pull" ranking. One
     * type-keyed aggregate + one broadcast global. */
   private val eventsBandit: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(col("event_type"),
+    val ev = Tables.load(s, dir, "events").select(col("event_type"),
       (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
     val glob = ev.agg(count(lit(1)).as("nn"), sum("v").as("sv"))
     def dbl(c: String) = col(c).cast("double")
@@ -165,7 +162,7 @@ object Wave46 {
     * multi-epoch diminishing-returns regime); effective tokens cap at
     * 4 passes. One source aggregate + a broadcast scalar. */
   private val corpusEpochs: Q = (s, dir) => {
-    val toks = t(s, dir, "documents")
+    val toks = Tables.load(s, dir, "documents")
       .groupBy("source")
       .agg(sum(size(LlmPipeline.tokens(col("text"))).cast("bigint")).as("tok"))
     val tot = toks.agg(sum("tok").as("tot"), count(lit(1)).as("k"))

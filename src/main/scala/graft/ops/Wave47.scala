@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +16,6 @@ import graft.engine.Tables
   * pipeline needs).
   */
 object Wave47 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private def d38(c: Column) = c.cast(DecimalType(38, 0))
 
@@ -45,8 +42,8 @@ object Wave47 {
     * of it on every executor and the driver.)
     * Output: every customer hub score and supplier authority score. */
   private val graphHits: Q = (s, dir) =>
-    hits(t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-      .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
+    hits(Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+      .join(Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
         col("o_orderkey") === col("l_orderkey"))
       .groupBy(col("o_custkey").as("c"), col("l_suppkey").as("p"))
       .agg(count(lit(1)).as("w")))
@@ -176,7 +173,7 @@ object Wave47 {
     * user-days overlap its weekly window and the total/max overlap —
     * the "who was active while the campaign ran" read. */
   private val joinIntervalOverlap: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
     val userDay = ev
@@ -235,7 +232,7 @@ object Wave47 {
       .cast("bigint")
     val hits = size(array_intersect(
       array_distinct(LlmPipeline.tokens(col("text"))), typedLit(kw))).cast("bigint")
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .filter(nChars > 0)
       .select(col("doc_id"), nChars.as("n_chars"), nSym.as("n_sym"),
         hits.as("kw_hits"),

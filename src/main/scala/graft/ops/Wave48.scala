@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +15,6 @@ import graft.engine.Tables
   * distinct scales).
   */
 object Wave48 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val K = 10
   private val PeelRounds = 12
@@ -36,8 +33,8 @@ object Wave48 {
     // edge aggregate — is the loop input: pinned and counted under the
     // session conf, then peeled in the superstep scope
     graft.engine.ConfScope.superstepOver(
-        t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
-          .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
+        Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
+          .join(Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
             col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("c"), col("l_suppkey").as("p"))
           .distinct()) { (edges0, ne, _) =>
@@ -106,7 +103,7 @@ object Wave48 {
     * day axis. Never materializes a distinct set per window — the
     * only shape that survives at 100 TB. */
   private val winRunningDistinct: Q = (s, dir) => {
-    val firstDay = t(s, dir, "events")
+    val firstDay = Tables.load(s, dir, "events")
       .select(col("event_type"), col("user_id"),
         floor(unix_timestamp(col("ts")) / 86400).cast("long").as("day"))
       .groupBy("event_type", "user_id")

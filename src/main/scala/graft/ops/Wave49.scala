@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * mix a transition snapshot implies).
   */
 object Wave49 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   private val SketchK = 64
   private val ChainIters = 12
@@ -34,7 +30,7 @@ object Wave49 {
   private val sketchKmvIntersect: Q = (s, dir) => {
     val h = Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":kmv")).cast("binary"))
-    val hashed = t(s, dir, "events")
+    val hashed = Tables.load(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type"), col("user_id"))
       .distinct()
@@ -65,7 +61,7 @@ object Wave49 {
       .withColumn("rk", row_number().over(Window.orderBy("h")))
       .filter(col("rk") <= SketchK)
       .agg(max("rk").cast("long").as("cnt_u"), max("h").as("ku"))
-    val exact = t(s, dir, "events")
+    val exact = Tables.load(s, dir, "events")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy("user_id").agg(count(lit(1)).as("nt"))
@@ -136,7 +132,7 @@ object Wave49 {
     * model-sized; only the lag pass touches data. */
   private val eventsMarkovSteady: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    val trans = t(s, dir, "events")
+    val trans = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("next_type", lead("event_type", 1).over(w))

@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-4 scoring wave: unigram language-model scoring (the perplexity
   * proxy a curation pipeline filters on), curriculum binning of the
@@ -19,16 +19,6 @@ import graft.engine.Tables
   * same way the Wave3/Wave4 corpus families do (SURVEY §2.10).
   */
 object Wave5 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens and
-    * Wave4.toks (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
 
   // ---- text_unigram_lp: unigram LM scoring (perplexity proxy) ----------
 
@@ -55,7 +45,8 @@ object Wave5 {
     * Exposed as a kernel over any (doc_id, text) frame so the curriculum
     * query and the spec share the exact production path. */
   def unigramLp(documents: DataFrame): DataFrame = {
-    val terms = documents.select(col("doc_id"), explode(toks(col("text"))).as("token"))
+    val terms = documents.select(col("doc_id"),
+      explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tf = terms.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val cnt = terms.groupBy("token").agg(count(lit(1)).as("c"))
     val tot = terms.agg(count(lit(1)).cast("double").as("t_total"))
@@ -70,13 +61,13 @@ object Wave5 {
   }
 
   private val textUnigramLp: Q = (s, dir) =>
-    unigramLp(t(s, dir, "documents")).orderBy("doc_id")
+    unigramLp(Tables.load(s, dir, "documents")).orderBy("doc_id")
 
   /** Shared CTE prefix computing the same decimal-summed per-doc score.
     * (Package-visible: Wave6's adaptive filter thresholds the same
     * score, so its oracle reuses this prefix verbatim.) */
   private[ops] val duckLpCte =
-    s"""terms AS (SELECT doc_id, unnest($duckToks) AS token FROM documents),
+    s"""terms AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM terms GROUP BY doc_id, token),
        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS c FROM terms GROUP BY token),
        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS t_total FROM terms),
@@ -110,12 +101,12 @@ object Wave5 {
     * stages in closed form. Byte-equivalence with the window form is
     * pinned by RanksSpec; the DuckDB oracle still uses plain ntile. */
   private val corpusCurriculum: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val scored = unigramLp(docs)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     val ranked = Ranks.perGroupRank(scored, Seq("lang"),
       Seq(col("mean_lp"), col("doc_id")), rankCol = "rk", nCol = "n_lang",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     val staged = ranked.withColumn("stage",
       Ranks.ntileExpr(col("rk"), col("n_lang"), 4))
     staged.groupBy("lang", "stage")
@@ -155,7 +146,7 @@ object Wave5 {
     * sketch-sized (4-KB registers), not row-sized; the exact twin is one
     * two-phase distinct. No data moves twice. */
   private val aggHllMergeable: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), to_date(col("ts")).as("d"), col("user_id"))
     val fine = ev.groupBy("event_type", "d")
       .agg(hll_sketch_agg(col("user_id")).as("sk"))
@@ -191,8 +182,8 @@ object Wave5 {
     * partial-aggregated pass whose shuffled state is the sketch, not the
     * corpus. */
   private val textHeavyHitters: Q = (s, dir) => {
-    val terms = t(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("token"))
+    val terms = Tables.load(s, dir, "documents")
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
     val exact = terms.groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token")).limit(10)
     val sketched = terms
@@ -208,7 +199,7 @@ object Wave5 {
   }
 
   private val textHeavyHittersOracle =
-    s"""WITH terms AS (SELECT unnest($duckToks) AS token FROM documents),
+    s"""WITH terms AS (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |exact AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM terms
        |          GROUP BY token ORDER BY cnt DESC, token LIMIT 10)
        |SELECT token, cnt, TRUE AS sketch_exact

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave50 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_shapley: exact Shapley channel attribution -------------
 
   /** Exact Shapley attribution over the 4 non-purchase channels:
@@ -30,7 +26,7 @@ object Wave50 {
     * holds by construction and is spec-asserted. */
   private val eventsShapley: Q = (s, dir) => {
     val chans = Seq("click", "view", "signup", "error")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"), col("event_id"))
     // first-purchase time via a per-user aggregate window instead of the
@@ -124,7 +120,7 @@ object Wave50 {
     * share of total mass. The joint read that exposes correlation
     * structure 1-D histograms hide. */
   private val profileHistogram2d: Q = (s, dir) => {
-    val binned = t(s, dir, "lineitem")
+    val binned = Tables.load(s, dir, "lineitem")
       .select(
         floor(col("l_extendedprice").cast("double") / 10000.0).cast("long").as("price_bin"),
         floor(col("l_quantity").cast("double") / 10.0).cast("long").as("qty_bin"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave51 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- source_merge_schema: parquet schema evolution read ------------
 
   /** Writes the same entity at two schema versions — v1 files carry
@@ -29,7 +25,7 @@ object Wave51 {
     * evolved column) is fully determined by `customer`. */
   private val sourceMergeSchema: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "mergeschema")
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"),
         col("c_acctbal").cast("decimal(18,2)").as("acctbal"),
         col("c_mktsegment"))
@@ -67,7 +63,7 @@ object Wave51 {
   private val sourceCorruptJson: Q = (s, dir) => {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "corruptjson")
-    val lines = t(s, dir, "documents")
+    val lines = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
       .select(when(pmod(col("doc_id"), lit(7)) === 0,
           concat(lit("{\"doc_id\": "), col("doc_id").cast("string"), lit(", \"n_ch")))

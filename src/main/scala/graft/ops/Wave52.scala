@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -14,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave52 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- profile_moments: skewness + kurtosis --------------------------
 
   /** Third and fourth standardized moments per event type: one pass of
@@ -27,7 +24,7 @@ object Wave52 {
     * kurtosis = m₄/m₂² − 3. */
   private val profileMoments: Q = (s, dir) => {
     def d38(c: Column) = c.cast(DecimalType(38, 0))
-    val m = t(s, dir, "events")
+    val m = Tables.load(s, dir, "events")
       .select(col("event_type"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .groupBy("event_type")
@@ -96,7 +93,7 @@ object Wave52 {
     * traffic. One hash aggregate. */
   private val eventsHourHeatmap: Q = (s, dir) => {
     val sec = unix_timestamp(col("ts"))
-    val binned = t(s, dir, "events")
+    val binned = Tables.load(s, dir, "events")
       .select(pmod(floor(sec / 86400L) + 4L, lit(7L)).cast("long").as("dow"),
         pmod(floor(sec / 3600L), lit(24L)).cast("long").as("hour"))
     val tot = binned.agg(count(lit(1)).as("tot"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,9 +13,6 @@ import graft.engine.Tables
   * integers.
   */
 object Wave53 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Top-20 supplier pairs by customer-set Jaccard: distinct
     * (customer, supplier) edges once; pairs via the per-customer

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,16 +15,6 @@ import graft.engine.Tables
   * growth decomposition every activity dashboard is built on).
   */
 object Wave54 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens
-    * (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
 
   // ---- dedup_prefix_filter: PPJoin-style prefix-filtered sim join ----
 
@@ -56,9 +45,9 @@ object Wave54 {
     * this library ships alongside. */
   private val dedupPrefixFilter: Q = (s, dir) => {
     val tau = 0.5
-    val docToks = t(s, dir, "documents")
+    val docToks = Tables.load(s, dir, "documents")
       .filter(col("source") === "src0")
-      .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("w"))
+      .select(col("doc_id"), explode(array_distinct(LlmPipeline.tokens(col("text")))).as("w"))
       .localCheckpoint()
     val sizes = docToks.groupBy("doc_id").agg(count(lit(1)).as("n"))
     // global ascending document frequency; (df, w) is a total order
@@ -95,7 +84,7 @@ object Wave54 {
 
   private val dedupPrefixFilterOracle =
     s"""WITH dt AS MATERIALIZED (
-       |  SELECT doc_id, unnest(list_distinct($duckToks)) AS w
+       |  SELECT doc_id, unnest(list_distinct(${LlmPipeline.duckTokens})) AS w
        |  FROM documents WHERE source = 'src0'),
        |sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM dt GROUP BY 1),
        |inter AS (
@@ -122,7 +111,7 @@ object Wave54 {
     * active(w−1) = retained(w) + churned(w) on the week-sized table,
     * which the spec pins. */
   private val eventsGrowthAccounting: Q = (s, dir) => {
-    val uw = t(s, dir, "events")
+    val uw = Tables.load(s, dir, "events")
       .select(col("user_id"),
         expr("floor(unix_timestamp(ts) / 86400) div 7").cast("long").as("wk"))
       .distinct()

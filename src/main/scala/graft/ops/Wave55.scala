@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +17,6 @@ import graft.engine.Tables
   * trained counterpart of the heuristic `text_langid`.
   */
 object Wave55 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Absorption supersteps. The reported quantity is the K-step
     * absorption probability — deterministic and engine-exact by
@@ -48,7 +45,7 @@ object Wave55 {
     * identical integer orbit. */
   private val eventsAttributionMarkov: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))
       .withColumn("rn", row_number().over(w))
@@ -191,12 +188,6 @@ object Wave55 {
 
   // ---- ml_naive_bayes: trained multinomial NB language classifier ----
 
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens. */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** ln quantized to nano-unit longs over INTEGER-valued arguments —
     * both engines take ln of exactly-representable doubles, so the
     * quantized value is engine-identical (the wave-44 discipline). */
@@ -216,9 +207,9 @@ object Wave55 {
     * (doc, lang) — never a doc×vocab product; the per-doc argmax
     * window has 5-row groups. */
   private val mlNaiveBayes: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(col("doc_id"), col("lang"))
-    val docToks = t(s, dir, "documents")
-      .select(col("doc_id"), col("lang"), explode(toks(col("text"))).as("w"))
+    val base = Tables.load(s, dir, "documents").select(col("doc_id"), col("lang"))
+    val docToks = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("lang"), explode(LlmPipeline.tokens(col("text"))).as("w"))
       .localCheckpoint()
     val dtc = docToks.groupBy("doc_id", "w").agg(count(lit(1)).as("m"))
     val docM = docToks.groupBy("doc_id").agg(count(lit(1)).as("mm"))
@@ -252,7 +243,7 @@ object Wave55 {
 
   private val mlNaiveBayesOracle =
     s"""WITH tok AS MATERIALIZED (
-       |  SELECT doc_id, lang, unnest($duckToks) AS w FROM documents),
+       |  SELECT doc_id, lang, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
        |dtc AS (SELECT doc_id, w, CAST(count(*) AS BIGINT) AS m FROM tok GROUP BY 1, 2),
        |docm AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS mm FROM tok GROUP BY 1),
        |ltc AS MATERIALIZED (

@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 56: probabilistic record linkage + rank correlation —
   * a Fellegi–Sunter linkage evaluation table (agreement-pattern
@@ -30,9 +30,6 @@ object Wave56 {
     * count the plan AND the spec share. */
   private[graft] def saltsOf(blockRows: Long, cap: Long = LinkBlockCap): Int =
     math.min(LinkMaxSalts.toLong, 1L + (blockRows - 1).max(0L) / cap).toInt
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- link_fellegi_sunter: agreement-pattern linkage weights ---------
 
@@ -63,7 +60,7 @@ object Wave56 {
   private val linkFellegiSunter: Q = (s, dir) => Codegen.materialized(s) {
     def lnq(c: Column): Column =
       floor(log(c.cast("double")) * 1e9 + lit(0.5)).cast("long")
-    val cust = t(s, dir, "customer").select(
+    val cust = Tables.load(s, dir, "customer").select(
       col("c_custkey").as("k"),
       col("c_mktsegment").as("seg"),
       expr("(cast(round(c_acctbal * 100) as long) + 10000000) div 100000")
@@ -210,9 +207,9 @@ object Wave56 {
   private val profileSpearman: Q = (s, dir) => {
     val B1 = 1000000000L
     val B2 = 1000L
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = ConfScope.shufflePartitions(s)
     val cols0 = Seq("q", "e", "d")
-    val li = t(s, dir, "lineitem").select(
+    val li = Tables.load(s, dir, "lineitem").select(
       round(col("l_quantity") * 100).cast("long").as("q"),
       round(col("l_extendedprice") * 100).cast("long").as("e"),
       round(col("l_discount") * 100).cast("long").as("d"))

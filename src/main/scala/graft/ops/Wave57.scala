@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * matrix-profile read at calendar granularity).
   */
 object Wave57 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- multimodal_phash: banded average-hash near-dup -----------------
 
@@ -37,7 +33,7 @@ object Wave57 {
     * (class-size products; distance 0 = within-class pairs) — the
     * artifact a dedup policy decision actually consumes. */
   private val multimodalPhash: Q = (s, dir) => {
-    val chars = t(s, dir, "documents")
+    val chars = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")
       .select(col("doc_id"), pmod(ascii(col("ch")), lit(64)).as("bk"))
@@ -125,7 +121,7 @@ object Wave57 {
     * profile bound), joined per offset so distances are one grouped
     * sum of integer squares. */
   private val timeseriesMotif: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(expr("floor(unix_timestamp(ts) / 86400)").cast("long").as("day"))
       .agg(sum(expr("cast(round(value * 100) as long)")).as("cents"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))

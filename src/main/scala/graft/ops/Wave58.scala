@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,14 +15,6 @@ import graft.engine.Tables
   */
 object Wave58 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- text_novelty: incremental trigram novelty by position ----------
 
   /** Trigram novelty by corpus-position decile: a doc's distinct word
@@ -35,8 +26,8 @@ object Wave58 {
     * a per-pair comparison); the decile bound is two scalar aggregates
     * broadcast. Shares are micro rationals, engine-exact. */
   private val textNovelty: Q = (s, dir) => {
-    val tri = t(s, dir, "documents")
-      .select(col("doc_id"), toks(col("text")).as("tk"))
+    val tri = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), LlmPipeline.tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 3)
       .select(col("doc_id"),
         explode(expr(
@@ -55,7 +46,7 @@ object Wave58 {
         min("doc_id").over(Window.partitionBy("g")))
       .select(col("doc_id"),
         (col("first_doc") === col("doc_id")).cast("long").as("novel"))
-    val bounds = t(s, dir, "documents")
+    val bounds = Tables.load(s, dir, "documents")
       .agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
     flagged.crossJoin(broadcast(bounds))
       .withColumn("decile",
@@ -70,7 +61,7 @@ object Wave58 {
   }
 
   private val textNoveltyOracle =
-    s"""WITH d AS (SELECT doc_id, $duckToks AS tk FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |tri AS MATERIALIZED (
        |  SELECT DISTINCT doc_id, g FROM (
        |    SELECT doc_id, array_to_string(tk[i + 1 : i + 3], ' ') AS g
@@ -111,7 +102,7 @@ object Wave58 {
     * The oracle replays the identical integer DP as materialized CTE
     * steps. */
   private val profileVoptimal: Q = (s, dir) => {
-    val vc = t(s, dir, "lineitem")
+    val vc = Tables.load(s, dir, "lineitem")
       .groupBy(expr("cast(round(l_quantity * 100) as long)").as("v"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 59: table branching + budgeted selection — git-style
   * branch / edit-both-sides / three-way merge on the VersionedStore
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * a single-partition window).
   */
 object Wave59 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sink_branch_merge: branch, diverge, three-way merge ------------
 
@@ -37,7 +33,7 @@ object Wave59 {
   private val sinkBranchMerge: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "branchmerge")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer").select(col("c_custkey").as("k"),
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey").as("k"),
       expr("cast(round(c_acctbal * 100) as long)").as("bal"))
     store.write(base.repartitionByRange(4, col("k")), "t")
     val baseVersion = store.shallowClone("t", "t_branch")
@@ -89,11 +85,6 @@ object Wave59 {
 
   // ---- corpus_knapsack: budgeted selection by value density -----------
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** Budget-constrained corpus selection: every doc has weight = token
     * count and value = DISTINCT token count (lexical information mass);
     * greedy by value density (micro-rational value/weight, ties by
@@ -106,9 +97,9 @@ object Wave59 {
     * per-source selection: docs and tokens chosen — the "what does the
     * budget buy, from where" read of corpus curation. */
   private val corpusKnapsack: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), col("source"), toks(col("text")).as("tk"))
+    val parts = ConfScope.shufflePartitions(s)
+    val d = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"), LlmPipeline.tokens(col("text")).as("tk"))
       .select(col("doc_id"), col("source"),
         size(col("tk")).cast("long").as("w"),
         size(array_distinct(col("tk"))).cast("long").as("v"))
@@ -132,8 +123,8 @@ object Wave59 {
   private val corpusKnapsackOracle =
     s"""WITH d AS (
        |  SELECT doc_id, source,
-       |    CAST(len($duckToks) AS BIGINT) AS w,
-       |    CAST(len(list_distinct($duckToks)) AS BIGINT) AS v
+       |    CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS w,
+       |    CAST(len(list_distinct(${LlmPipeline.duckTokens})) AS BIGINT) AS v
        |  FROM documents),
        |d2 AS (
        |  SELECT *, (2 * v * 1000000 + w) // (2 * w) AS dens

@@ -1,12 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-4 analytics wave: reshaping (pivot), whole-profile correlation,
   * trailing-window anomaly flags, OHLC downsampling, equi-depth
@@ -20,9 +20,6 @@ import graft.engine.Tables
   * at the boundary.
   */
 object Wave6 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- agg_pivot: long-to-wide reshaping ------------------------------
 
@@ -38,7 +35,7 @@ object Wave6 {
   private val types = Seq("click", "error", "purchase", "signup", "view")
 
   private val aggPivot: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(to_date(col("ts")).as("d"), col("event_type"))
     ev.groupBy("d")
       .pivot("event_type", types)
@@ -88,7 +85,7 @@ object Wave6 {
     val B1 = 1000000000L
     val B2 = 1000L
     val dec = corrCols.map(c => round(col(c) * 100).cast("long").as(c))
-    val li = t(s, dir, "lineitem").select(dec: _*)
+    val li = Tables.load(s, dir, "lineitem").select(dec: _*)
     val prods = corrCols.map(c => (Seq(c, c), s"q_$c")) ++
       corrCols.combinations(2).map { case Seq(a, b) => (Seq(a, b), s"p_${a}_$b") }.toSeq
     val withP = li.select(corrCols.map(col) ++
@@ -172,7 +169,7 @@ object Wave6 {
     * the window sort is model-sized. The 7-row frame bounds state.
     */
   private val eventsAnomaly: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"), to_date(col("ts")).as("d"))
       .agg(count(lit(1)).as("cnt"))
     val w = Window.partitionBy("event_type").orderBy("d").rowsBetween(-7, -1)
@@ -230,7 +227,7 @@ object Wave6 {
     * keeping the float sum independent of partial-aggregation order.
     */
   private val timeseriesResample: Q = (s, dir) => {
-    val ev = t(s, dir, "events").select(
+    val ev = Tables.load(s, dir, "events").select(
       col("event_type"), to_date(col("ts")).as("d"),
       col("ts"), col("event_id"), col("value"))
     ev.groupBy("event_type", "d")
@@ -266,13 +263,6 @@ object Wave6 {
       |  round(CAST(SUM(CAST(round(value, 6) AS DECIMAL(18,6))) AS DOUBLE), 6) AS volume
       |FROM base GROUP BY event_type, d ORDER BY event_type, d""".stripMargin
 
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens /
-    * Wave4.toks / Wave5.toks (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- corpus_adaptive_filter: percentile-thresholded quality gate -----
 
   /** Adaptive corpus filtering: instead of a fixed quality cutoff, each
@@ -296,7 +286,7 @@ object Wave6 {
     * same plan shape (the agg_approx_percentile twin pins that path).
     */
   private val corpusAdaptiveFilter: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val scored = Wave5.unigramLp(docs)
       .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
     val thr = scored.groupBy("lang")
@@ -343,12 +333,12 @@ object Wave6 {
     * identically even where equal prices straddle a boundary.
     */
   private val profileEquidepth: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       .select(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber"))
     val ranked = Ranks.perGroupRank(li, Seq.empty,
       Seq(col("l_extendedprice"), col("l_orderkey"), col("l_linenumber")),
       rankCol = "rk", nCol = "n_all",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     ranked
       .withColumn("bucket", Ranks.ntileExpr(col("rk"), col("n_all"), 10).cast("int"))
       .groupBy("bucket")
@@ -393,7 +383,7 @@ object Wave6 {
   private def freqPairs(docs: DataFrame): (DataFrame, DataFrame) = {
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val td = docs
-      .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("token"))
+      .select(col("doc_id"), explode(array_distinct(LlmPipeline.tokens(col("text")))).as("token"))
     // pinned: df is vocabulary-sized but its subtree is a full corpus
     // explode+aggregate pass — text_keyphrases broadcasts df TWICE
     // (both pair ends), which without the checkpoint replays that
@@ -413,7 +403,7 @@ object Wave6 {
   }
 
   private val textCooccur: Q = (s, dir) => {
-    val (_, pairs) = freqPairs(t(s, dir, "documents"))
+    val (_, pairs) = freqPairs(Tables.load(s, dir, "documents"))
     pairs
       .select("t1", "t2", "n_docs_both")
       .orderBy(col("n_docs_both").desc, col("t1"), col("t2"))
@@ -422,7 +412,7 @@ object Wave6 {
 
   private val textCooccurOracle =
     s"""WITH td AS (
-       |  SELECT DISTINCT doc_id, unnest($duckToks) AS token FROM documents),
+       |  SELECT DISTINCT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |n AS (SELECT count(*) AS n_docs FROM documents),
        |freq AS (SELECT token FROM td GROUP BY token
        |         HAVING count(*) >= (SELECT n_docs FROM n) * 0.05),
@@ -449,8 +439,8 @@ object Wave6 {
     * predicate cheap enough to run inside the broadcast loop.
     */
   private val joinFuzzy: Q = (s, dir) => {
-    val terms = t(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("token"))
+    val terms = Tables.load(s, dir, "documents")
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
     val counts = terms.groupBy("token").agg(count(lit(1)).as("cnt"))
     val dict = counts
       .orderBy(col("cnt").desc, col("token")).limit(100)
@@ -466,7 +456,7 @@ object Wave6 {
   }
 
   private val joinFuzzyOracle =
-    s"""WITH terms AS (SELECT unnest($duckToks) AS token FROM documents),
+    s"""WITH terms AS (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |counts AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM terms GROUP BY token),
        |dict AS (SELECT token AS dict_term FROM counts
        |         ORDER BY cnt DESC, token LIMIT 100)
@@ -507,13 +497,13 @@ object Wave6 {
   private val trIters = 8
 
   private val textTextrank: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     // corpus size stays IN-PLAN (broadcast one-row crossJoin, the
     // unigramLp pattern) — no driver sync between building the
     // frequency filter and using it
     val nDocs = docs.agg(count(lit(1)).as("__n_docs"))
     val td = docs
-      .select(col("doc_id"), explode(array_distinct(toks(col("text")))).as("token"))
+      .select(col("doc_id"), explode(array_distinct(LlmPipeline.tokens(col("text")))).as("token"))
     val freq = td.groupBy("token").agg(count(lit(1)).as("df"))
       .crossJoin(broadcast(nDocs))
       .filter(col("df") >= col("__n_docs") * 0.05)
@@ -577,7 +567,7 @@ object Wave6 {
 
   private val textTextrankOracle = {
     val graph =
-      s"""td AS (SELECT DISTINCT doc_id, unnest($duckToks) AS token FROM documents),
+      s"""td AS (SELECT DISTINCT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
          |nd AS (SELECT count(*) AS n_docs FROM documents),
          |freq AS (SELECT token FROM td GROUP BY token
          |         HAVING count(*) >= (SELECT n_docs FROM nd) * 0.05),
@@ -621,7 +611,7 @@ object Wave6 {
   private val sinkPointLookup: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "ptlookup")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     store.write(base.repartitionByRange(8, col("c_custkey")), "customer")
     store.buildKeyIndex(s, "customer", "c_custkey")
@@ -648,7 +638,7 @@ object Wave6 {
   private val sinkChecked: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "checked")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey"), col("c_acctbal"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "c")
     store.addCheck(s, "c", "bal_floor", "c_acctbal >= -1000.0")
     import s.implicits._
@@ -686,8 +676,8 @@ object Wave6 {
     * starts from.
     */
   private val corpusSplit: Q = (s, dir) =>
-    t(s, dir, "documents")
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("n_tok"),
+    Tables.load(s, dir, "documents")
+      .select(col("doc_id"), size(LlmPipeline.tokens(col("text"))).cast("long").as("n_tok"),
         Hashing.splitOf(col("text")).as("split"))
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"), sum("n_tok").as("tok_total"))
@@ -695,7 +685,7 @@ object Wave6 {
 
   private val corpusSplitOracle =
     s"""WITH b AS (
-       |  SELECT doc_id, CAST(len($duckToks) AS BIGINT) AS n_tok,
+       |  SELECT doc_id, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok,
        |    ${Hashing.duckSplitCase} AS split
        |  FROM documents)
        |SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
@@ -720,10 +710,10 @@ object Wave6 {
     * many.
     */
   private val sampleBalanced: Q = (s, dir) => {
-    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("label"))
+    val emb = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("label"))
     val (ranked, totals) = Ranks.perGroupRankWithTotals(emb, Seq("label"),
       Seq(col("vec_id")), rankCol = "rk", nCol = "n_label",
-      partitions = s.conf.get("spark.sql.shuffle.partitions").toInt)
+      partitions = ConfScope.shufflePartitions(s))
     val minN = if (totals.isEmpty) 0L else totals.values.min
     ranked.filter(col("rk") <= lit(minN))
       .groupBy("label")
@@ -761,7 +751,7 @@ object Wave6 {
     * day (one scalar percentile), so both engines cut identical halves.
     */
   private val profilePsi: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), to_date(col("ts")).as("d"), col("value"))
     val bounds = ev.agg(min("value").as("vmin"), max("value").as("vmax"),
       expr("percentile(datediff(d, DATE '1970-01-01'), 0.5)").as("mid"))
@@ -846,13 +836,13 @@ object Wave6 {
   private val chunkB = 32
 
   private val chunkSentences: Q = (s, dir) => {
-    val sents = t(s, dir, "documents")
+    val sents = Tables.load(s, dir, "documents")
       .select(col("doc_id"), posexplode(
         filter(transform(split(col("text"), "[.!?]+"), x => trim(x)), x => x =!= ""))
         .as(Seq("sidx", "sent")))
     val pieces = sents
       .select(col("doc_id"), col("sidx"),
-        posexplode(toks(col("sent"))).as(Seq("tpos", "token")))
+        posexplode(LlmPipeline.tokens(col("sent"))).as(Seq("tpos", "token")))
       .withColumn("piece", floor(col("tpos") / wrapW).cast("int"))
       .groupBy("doc_id", "sidx", "piece")
       .agg(count(lit(1)).as("n_tok"),
@@ -911,7 +901,7 @@ object Wave6 {
     * round at the output.
     */
   private val textKeyphrases: Q = (s, dir) => {
-    val (df, pairs) = freqPairs(t(s, dir, "documents"))
+    val (df, pairs) = freqPairs(Tables.load(s, dir, "documents"))
     val d1 = df.select(col("token").as("t1"), col("df").as("c1"))
     val d2 = df.select(col("token").as("t2"), col("df").as("c2"))
     pairs
@@ -925,7 +915,7 @@ object Wave6 {
 
   private val textKeyphrasesOracle =
     s"""WITH td AS (
-       |  SELECT DISTINCT doc_id, unnest($duckToks) AS token FROM documents),
+       |  SELECT DISTINCT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |n AS (SELECT count(*) AS n_docs FROM documents),
        |df AS (SELECT token, count(*) AS df FROM td GROUP BY token),
        |freq AS (SELECT token FROM df WHERE df >= (SELECT n_docs FROM n) * 0.05),
@@ -956,9 +946,9 @@ object Wave6 {
     * the skew path at scale.
     */
   private val joinAsofNearest: Q = (s, dir) => {
-    val e = t(s, dir, "events").select(col("event_id"), col("user_id"),
+    val e = Tables.load(s, dir, "events").select(col("event_id"), col("user_id"),
       to_date(col("ts")).as("ed"))
-    val o = t(s, dir, "orders").select(col("o_custkey"),
+    val o = Tables.load(s, dir, "orders").select(col("o_custkey"),
       col("o_orderdate").cast("date").as("od"))
     e.join(o, col("user_id") === col("o_custkey"), "left")
       .withColumn("dist", abs(datediff(col("od"), col("ed"))))
@@ -993,7 +983,7 @@ object Wave6 {
     * the tail mass directly.
     */
   private val profileWinsorized: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem").select(col("l_returnflag"), col("l_extendedprice"))
+    val li = Tables.load(s, dir, "lineitem").select(col("l_returnflag"), col("l_extendedprice"))
     val thr = li.groupBy("l_returnflag").agg(
       expr("percentile(l_extendedprice, 0.05)").as("p5"),
       expr("percentile(l_extendedprice, 0.95)").as("p95"))
@@ -1036,7 +1026,7 @@ object Wave6 {
     */
   private val eventsSessionize: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .filter(col("user_id") < 200)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
     ev.withColumn("prev", lag(col("ts"), 1).over(w))
@@ -1086,7 +1076,7 @@ object Wave6 {
     * broadcast, corpus never shuffles, two-phase per-query top-k.
     */
   private val simHardNegatives: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings")
+    val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), col("embedding").as("v"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("label").as("qlabel"), col("v").as("qv"))
@@ -1121,7 +1111,7 @@ object Wave6 {
     * top-k shape; the overlap join is top-k-sized.
     */
   private val embedMatryoshka: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     def topk(sim: Column): DataFrame = {
@@ -1183,7 +1173,7 @@ object Wave6 {
   private val sinkIncrementalRollup: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "increll")
     val store = new graft.engine.VersionedStore(root)
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_id"), to_date(col("ts")).as("d"), col("event_type"))
     // a TOTAL even/odd partition (coalesce makes NULL and negative ids
     // land deterministically in the base half instead of vanishing)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave60 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- graph_modularity: Newman Q of the nation partition -------------
 
   /** Modularity contribution per community: suppliers partition by
@@ -31,7 +27,7 @@ object Wave60 {
     * shop apart. */
   private val graphModularity: Q = (s, dir) => {
     val pairW = SupplierGraph.pairWeights(s, dir)
-    val nat = t(s, dir, "supplier")
+    val nat = Tables.load(s, dir, "supplier")
       .select(col("s_suppkey").as("p"), col("s_nationkey").as("nation"))
     val withNat = pairW
       .join(nat.select(col("p").as("p1"), col("nation").as("n1")), "p1")
@@ -104,7 +100,7 @@ object Wave60 {
   private val textEntropyCompress: Q = (s, dir) => {
     def lnq(c: org.apache.spark.sql.Column) =
       floor(log(c.cast("double")) * 1e9 + lit(0.5)).cast("long")
-    val chars = t(s, dir, "documents")
+    val chars = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave61 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- timeseries_trend_mk: Mann-Kendall per event type ---------------
 
   /** Mann–Kendall per event type over the daily total-value series:
@@ -30,7 +26,7 @@ object Wave61 {
     * divide — all correctly-rounded operations on identical inputs),
     * rounded to 6dp. */
   private val timeseriesTrendMk: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"),
         expr("floor(unix_timestamp(ts) / 86400)").cast("long").as("day"))
       .agg(sum(expr("cast(round(value * 100) as long)")).as("x"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,9 +14,6 @@ import graft.engine.Tables
   * equi-join reduction, PROVABLY complete, never a θ-join).
   */
 object Wave62 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sink_reproducible_build: lineage-pinned derived table ----------
 
@@ -32,7 +29,7 @@ object Wave62 {
   private val sinkReproducibleBuild: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "repro")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer").select(col("c_custkey").as("k"),
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey").as("k"),
       col("c_mktsegment").as("seg"),
       expr("cast(round(c_acctbal * 100) as long)").as("bal"))
     val v1 = store.write(base.repartitionByRange(4, col("k")), "src")
@@ -78,10 +75,10 @@ object Wave62 {
     * exact distance-mass sums — the density read that decides whether
     * a spatial index is worth building. */
   private val joinGridNeighbors: Q = (s, dir) => {
-    val li = t(s, dir, "lineitem")
+    val li = Tables.load(s, dir, "lineitem")
       // the brand slice of part is ~4% of an entity-scaled table - still
       // linear in the data; size-chosen join, no forced broadcast
-      .join(t(s, dir, "part")
+      .join(Tables.load(s, dir, "part")
         .filter(col("p_brand") === "Brand#2").select("p_partkey"),
         col("l_partkey") === col("p_partkey"))
       .select(col("l_orderkey").as("ok"), col("l_linenumber").as("ln"),

@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 63: systematic sampling + recency weighting — every
   * k-th document in a deterministic global order (the survey-sampling
@@ -14,9 +13,6 @@ import graft.engine.Tables
   * decay so distributed summation is order-free).
   */
 object Wave63 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sample_systematic: every k-th in hash order --------------------
 
@@ -29,13 +25,13 @@ object Wave63 {
     * doc-id checksum (pins WHICH rows), and exact 20x-expansion error
     * vs the source's true size. */
   private val sampleSystematic: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val d = t(s, dir, "documents")
+    val parts = ConfScope.shufflePartitions(s)
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("source"), md5(col("text").cast("binary")).as("h"))
     val ranked = Ranks.perGroupRank(d, Seq.empty,
       Seq(col("h"), col("doc_id")), rankCol = "rk", nCol = "nn",
       partitions = parts)
-    val src = t(s, dir, "documents").groupBy("source")
+    val src = Tables.load(s, dir, "documents").groupBy("source")
       .agg(count(lit(1)).as("n_total"))
     ranked.filter(pmod(col("rk"), lit(20)) === 1)
       .groupBy("source")
@@ -74,7 +70,7 @@ object Wave63 {
     * score with exact raw totals alongside — the "who is active NOW"
     * leaderboard vs the all-time one. */
   private val winDecayScore: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), unix_timestamp(col("ts")).as("sec"),
         expr("cast(round(value * 100) as long)").as("cents"))
     val anchor = ev.agg(max("sec").as("t0"))

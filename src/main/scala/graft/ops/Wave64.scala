@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +16,6 @@ import graft.engine.Tables
   */
 object Wave64 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_srm: sample-ratio-mismatch chi-square -------------------
 
   /** SRM check per event type: users assign to A/B by the md5 parity
@@ -30,7 +27,7 @@ object Wave64 {
     * distinct per type), exact integer arithmetic: with E = n/2 per
     * cell, χ² = (a − b)²/n — a single rational, micro-quantized. */
   private val eventsSrm: Q = (s, dir) => {
-    val ua = t(s, dir, "events")
+    val ua = Tables.load(s, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .withColumn("arm",
         pmod(graft.ops.Hashing.md5Long(col("user_id").cast("string")), lit(2)))
@@ -82,7 +79,7 @@ object Wave64 {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "schemareject")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "nation")
+    val base = Tables.load(s, dir, "nation")
       .select(col("n_nationkey").as("k"), col("n_name").as("name"))
     store.write(base, "t")
     val n0 = store.read(s, "t").count()

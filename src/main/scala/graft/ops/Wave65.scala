@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -17,14 +17,6 @@ import graft.engine.Tables
   */
 object Wave65 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   private def lnq(c: Column): Column =
     floor(log(c.cast("double")) * 1e9 + lit(0.5)).cast("long")
 
@@ -39,9 +31,9 @@ object Wave65 {
     * both engines, rounded to 6dp. One token aggregation per side —
     * vocabulary-sized everything after. */
   private val textFightinWords: Q = (s, dir) => {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select((col("lang") === "en").as("is_en"),
-        explode(toks(col("text"))).as("w"))
+        explode(LlmPipeline.tokens(col("text"))).as("w"))
     val counts = tok.groupBy("w").agg(
       sum(when(col("is_en"), 1L).otherwise(0L)).as("a"),
       sum(when(col("is_en"), 0L).otherwise(1L)).as("b"))
@@ -70,7 +62,7 @@ object Wave65 {
     def ln(x: String) =
       s"CAST(FLOOR(ln(CAST($x AS DOUBLE)) * 1e9 + 0.5) AS BIGINT)"
     s"""WITH tok AS MATERIALIZED (
-       |  SELECT lang = 'en' AS is_en, unnest($duckToks) AS w FROM documents),
+       |  SELECT lang = 'en' AS is_en, unnest(${LlmPipeline.duckTokens}) AS w FROM documents),
        |counts AS (
        |  SELECT w,
        |    CAST(SUM(CASE WHEN is_en THEN 1 ELSE 0 END) AS BIGINT) AS a,
@@ -110,7 +102,7 @@ object Wave65 {
     * k = 50 (a stability probe: wildly different α̂ across k means
     * the tail is not Pareto-like). */
   private val profileTailHill: Q = (s, dir) => {
-    val cents = t(s, dir, "events")
+    val cents = Tables.load(s, dir, "events")
       .select(expr("cast(round(value * 100) as long)").as("c"))
       .filter(col("c") > 0)
     def hillAt(k: Int): DataFrame = {

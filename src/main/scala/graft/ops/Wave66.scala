@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave66 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- profile_hdr_latency: log-bucketed quantiles --------------------
 
   /** HDR-style histogram over positive event values (cents as a stand-in
@@ -31,7 +27,7 @@ object Wave66 {
     * construction, the property that lets percentile dashboards
     * aggregate billions of points without a sort. */
   private val profileHdrLatency: Q = (s, dir) => {
-    val c = t(s, dir, "events")
+    val c = Tables.load(s, dir, "events")
       .select(expr("cast(round(value * 100) as long)").as("c"))
       .filter(col("c") > 0)
     val bucketed = c
@@ -106,7 +102,7 @@ object Wave66 {
   // aggregate compiles several one-shot generated classes whose JIT the
   // single pass never amortizes. Scope dropped; A/B wall-clock decides.
   private val textScriptMix: Q = (s, dir) => {
-    val chars = t(s, dir, "documents")
+    val chars = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")
       .withColumn("cp", ascii(col("ch")))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +17,6 @@ import graft.engine.Tables
   */
 object Wave67 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_wilson_ci: adoption-rate Wilson intervals ---------------
 
   /** Per event type: the share of ALL users who ever did it, with the
@@ -29,10 +26,10 @@ object Wave67 {
     * integers, rounded to 6dp. */
   private val eventsWilsonCi: Q = (s, dir) => {
     val z = 1.959963984540054 // Phi^-1(0.975)
-    val adopters = t(s, dir, "events")
+    val adopters = Tables.load(s, dir, "events")
       .select(col("event_type"), col("user_id")).distinct()
       .groupBy("event_type").agg(count(lit(1)).as("k"))
-    val users = t(s, dir, "events")
+    val users = Tables.load(s, dir, "events")
       .agg(countDistinct("user_id").as("n"))
     adopters.crossJoin(broadcast(users))
       .withColumn("ph", col("k").cast("double") / col("n").cast("double"))
@@ -83,7 +80,7 @@ object Wave67 {
     val arm = pmod(Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":ab")).cast("binary")), lit(2))
     def d38(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val cells = t(s, dir, "events")
+    val cells = Tables.load(s, dir, "events")
       .select(col("event_type"), arm.as("arm"),
         (col("value").cast("decimal(18,6)") * 1000000).cast("long").as("v"))
       .groupBy("event_type", "arm")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,14 +13,6 @@ import graft.engine.Tables
   */
 object Wave68 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- corpus_overlap_matrix: source-pair 5-gram overlap --------------
 
   /** Source×source 5-gram overlap: each source's DISTINCT word 5-gram
@@ -33,8 +24,8 @@ object Wave68 {
     * a large one, which Jaccard hides); micro rationals, top-20 pairs
     * by Jaccard. */
   private val corpusOverlapMatrix: Q = (s, dir) => {
-    val grams = t(s, dir, "documents")
-      .select(col("source"), toks(col("text")).as("tk"))
+    val grams = Tables.load(s, dir, "documents")
+      .select(col("source"), LlmPipeline.tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 5)
       .select(col("source"),
         explode(expr(
@@ -64,7 +55,7 @@ object Wave68 {
   }
 
   private val corpusOverlapMatrixOracle =
-    s"""WITH d AS (SELECT source, $duckToks AS tk FROM documents),
+    s"""WITH d AS (SELECT source, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |grams AS MATERIALIZED (
        |  SELECT DISTINCT source, g FROM (
        |    SELECT source, array_to_string(tk[i + 1 : i + 5], ' ') AS g
@@ -97,7 +88,7 @@ object Wave68 {
     * the median is one scalar percentile broadcast. All cent-integer
     * arithmetic. */
   private val eventsPeakDetection: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(expr("floor(unix_timestamp(ts) / 86400)").cast("long").as("day"))
       .agg(sum(expr("cast(round(value * 100) as long)")).as("v"))
     val bounds = daily.agg(min("day").as("d0"), max("day").as("d1"))

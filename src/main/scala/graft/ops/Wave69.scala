@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave69 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_exposure_curve: value by nth exposure -------------------
 
   /** Mean event value by exposure index (a user's 1st, 2nd, ... 10th+
@@ -30,7 +26,7 @@ object Wave69 {
     * multiplier a frequency cap reads. */
   private val eventsExposureCurve: Q = (s, dir) => {
     val w = Window.partitionBy("user_id", "event_type").orderBy("sec", "event_id")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"),
         expr("cast(round(value * 100) as long)").as("cents"))
@@ -83,7 +79,7 @@ object Wave69 {
   private val splitDrift: Q = (s, dir) => {
     def lnq(c: org.apache.spark.sql.Column) =
       floor(log(c.cast("double")) * 1e9 + lit(0.5)).cast("long")
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("n_chars"), Hashing.splitOf(col("text")).as("split"))
       .filter(col("split").isin("train", "val"))
     val bounds = d.agg(min("n_chars").as("lo"), max("n_chars").as("hi"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -32,16 +32,6 @@ import graft.engine.Tables
   */
 object Wave7 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens
-    * (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- text_bigram_lp: add-k smoothed bigram LM scoring ----------------
 
   /** Per-document mean bigram log-probability under the corpus's own
@@ -66,14 +56,14 @@ object Wave7 {
     // filtered rows
     val pairs = transform(sequence(lit(0), greatest(size(tk) - 2, lit(0))),
       i => struct(try_element_at(tk, i + 1).as("prev"), try_element_at(tk, i + 2).as("tok")))
-    docs.select(col("doc_id"), toks(col("text")).as("tk"))
+    docs.select(col("doc_id"), LlmPipeline.tokens(col("text")).as("tk"))
       .select(col("doc_id"), explode(pairs).as("pr"))
       .filter(col("pr.prev").isNotNull && col("pr.tok").isNotNull)
       .select(col("doc_id"), col("pr.prev").as("prev"), col("pr.tok").as("tok"))
   }
 
   private val textBigramLp: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
     val pp = bigramPairs(docs)
     val pf = pp.groupBy("doc_id", "prev", "tok").agg(count(lit(1)).as("tf"))
     // the model side (c2/c1) derives from the shared materialized bigram
@@ -82,7 +72,7 @@ object Wave7 {
       .select(col("w1").as("prev"), col("w2").as("tok"), col("c12"))
     val c2 = counts.select(col("prev"), col("tok"), col("c12").as("c2"))
     val c1 = counts.groupBy("prev").agg(sum("c12").as("c1"))
-    val vv = docs.select(explode(toks(col("text"))).as("token"))
+    val vv = docs.select(explode(LlmPipeline.tokens(col("text"))).as("token"))
       .agg(countDistinct("token").cast("double").as("v"))
     val addend = round(col("tf") *
         log((col("c2") + lit(0.5)) / (col("c1") + lit(0.5) * col("v"))), 6)
@@ -97,7 +87,7 @@ object Wave7 {
   }
 
   private val textBigramLpOracle =
-    s"""WITH d AS (SELECT doc_id, $duckToks AS tk FROM documents),
+    s"""WITH d AS (SELECT doc_id, ${LlmPipeline.duckTokens} AS tk FROM documents),
        |pp AS (SELECT doc_id, pr.prev AS prev, pr.tok AS tok FROM (
        |  SELECT doc_id, unnest(list_transform(range(1, len(tk)),
        |    i -> struct_pack(prev := tk[i], tok := tk[i+1]))) AS pr FROM d)),
@@ -105,7 +95,7 @@ object Wave7 {
        |c2 AS (SELECT prev, tok, CAST(count(*) AS BIGINT) AS c2 FROM pp GROUP BY prev, tok),
        |c1 AS (SELECT prev, CAST(count(*) AS BIGINT) AS c1 FROM pp GROUP BY prev),
        |vv AS (SELECT CAST(COUNT(DISTINCT token) AS DOUBLE) AS v
-       |       FROM (SELECT unnest($duckToks) AS token FROM documents)),
+       |       FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents)),
        |lp AS (SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_pairs,
        |  round(CAST(SUM(CAST(round(tf * ln((c2+0.5)/(c1+0.5*v)),6) AS DECIMAL(18,6))) AS DOUBLE)/SUM(tf),6) AS mean_lp2
        |  FROM pf JOIN c2 USING (prev, tok) JOIN c1 USING (prev), vv GROUP BY doc_id)
@@ -142,7 +132,7 @@ object Wave7 {
   /** The heuristic gate being distilled — the exact text_quality score
     * (LlmPipeline.textQuality: punct + stopword halves). */
   private[ops] def qualityLabel: Column = {
-    val tk = toks(col("text"))
+    val tk = LlmPipeline.tokens(col("text"))
     val punct = (length(col("text")) -
       length(regexp_replace(col("text"), "[^a-zA-Z0-9 ]", ""))).cast("double") /
       length(col("text"))
@@ -153,10 +143,10 @@ object Wave7 {
   }
 
   private val qualityClassifier: Q = (s, dir) => {
-    val labeled = t(s, dir, "documents")
+    val labeled = Tables.load(s, dir, "documents")
       .select(col("doc_id"), qualityLabel.as("y"), col("text"))
     val pres = labeled
-      .select(col("doc_id"), col("y"), explode(toks(col("text"))).as("token"))
+      .select(col("doc_id"), col("y"), explode(LlmPipeline.tokens(col("text"))).as("token"))
       .select(col("doc_id"), col("y"),
         Hashing.md5Bucket(col("token"), nBuckets).as("bk"))
       .distinct()
@@ -196,10 +186,10 @@ object Wave7 {
     val p0 = "((COALESCE(n0j,0)+1)/(n0+2))"
     s"""WITH lab AS (SELECT doc_id,
        |  CASE WHEN (1.0 - CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) / LENGTH(text)) * 0.5
-       |     + (CAST(len(list_intersect(list_distinct($duckToks), ['the','and','of','to','in','is','a','that'])) AS DOUBLE) / len($duckToks)) * 0.5 >= 0.52
+       |     + (CAST(len(list_intersect(list_distinct(${LlmPipeline.duckTokens}), ['the','and','of','to','in','is','a','that'])) AS DOUBLE) / len(${LlmPipeline.duckTokens})) * 0.5 >= 0.52
        |  THEN 1 ELSE 0 END AS y, text FROM documents),
        |pres AS (SELECT DISTINCT doc_id, y, CAST(concat('0x', substr(md5(token),1,15)) AS BIGINT) % $nBuckets AS bk
-       |         FROM (SELECT doc_id, y, unnest($duckToks) AS token FROM lab)),
+       |         FROM (SELECT doc_id, y, unnest(${LlmPipeline.duckTokens}) AS token FROM lab)),
        |tot AS (SELECT CAST(SUM(y) AS DOUBLE) AS n1, CAST(COUNT(*) - SUM(y) AS DOUBLE) AS n0
        |        FROM (SELECT DISTINCT doc_id, y FROM pres)),
        |cnt AS (SELECT bk, CAST(SUM(y) AS DOUBLE) AS n1j, CAST(COUNT(*) - SUM(y) AS DOUBLE) AS n0j FROM pres GROUP BY bk),
@@ -231,12 +221,12 @@ object Wave7 {
     * narrow accept map — the same linear tfidf-class shape; nothing is
     * all-pairs and no RNG state exists anywhere. */
   private val corpusDsir: Q = (s, dir) => {
-    val docs = t(s, dir, "documents")
-    val terms = docs.select(col("doc_id"), explode(toks(col("text"))).as("token"))
+    val docs = Tables.load(s, dir, "documents")
+    val terms = docs.select(col("doc_id"), explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tf = terms.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
     val raw = terms.groupBy("token").agg(count(lit(1)).as("cr"))
     val tgtTerms = docs.filter(col("lang") === "en")
-      .select(explode(toks(col("text"))).as("token"))
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tgt = tgtTerms.groupBy("token").agg(count(lit(1)).as("ct"))
     val consts = raw.agg(sum("cr").cast("double").as("tr"),
         count(lit(1)).cast("double").as("v"))
@@ -273,10 +263,10 @@ object Wave7 {
   }
 
   private val corpusDsirOracle =
-    s"""WITH terms AS (SELECT doc_id, unnest($duckToks) AS token FROM documents),
+    s"""WITH terms AS (SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS token FROM documents),
        |tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM terms GROUP BY doc_id, token),
        |raw AS (SELECT token, CAST(count(*) AS BIGINT) AS cr FROM terms GROUP BY token),
-       |tgtterms AS (SELECT unnest($duckToks) AS token FROM documents WHERE lang='en'),
+       |tgtterms AS (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents WHERE lang='en'),
        |tgt AS (SELECT token, CAST(count(*) AS BIGINT) AS ct FROM tgtterms GROUP BY token),
        |consts AS (SELECT (SELECT CAST(SUM(cr) AS DOUBLE) FROM raw) AS tr,
        |                  (SELECT CAST(COUNT(*) AS DOUBLE) FROM raw) AS v,
@@ -308,7 +298,7 @@ object Wave7 {
   private val pipelineObserve: Q = (s, dir) => {
     import s.implicits._
     val obs = org.apache.spark.sql.Observation(s"corpus_gate_${System.nanoTime}")
-    val gated = t(s, dir, "documents")
+    val gated = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("text"), qualityLabel.as("keep"))
       .observe(obs,
         count(lit(1)).as("n_docs"),
@@ -324,7 +314,7 @@ object Wave7 {
   private val pipelineObserveOracle =
     s"""SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
        |  CAST(SUM(CASE WHEN (1.0 - CAST(LENGTH(text) - LENGTH(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS DOUBLE) / LENGTH(text)) * 0.5
-       |     + (CAST(len(list_intersect(list_distinct($duckToks), ['the','and','of','to','in','is','a','that'])) AS DOUBLE) / len($duckToks)) * 0.5 >= 0.52
+       |     + (CAST(len(list_intersect(list_distinct(${LlmPipeline.duckTokens}), ['the','and','of','to','in','is','a','that'])) AS DOUBLE) / len(${LlmPipeline.duckTokens})) * 0.5 >= 0.52
        |  THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
        |  CAST(SUM(LENGTH(text)) AS BIGINT) AS n_chars
        |FROM documents""".stripMargin
@@ -347,18 +337,18 @@ object Wave7 {
     * rounded and decimal-summed so partial-aggregation order cannot
     * flip the hash. */
   private val flagshipSnowflakeJoin: Q = (s, dir) => {
-    val region = t(s, dir, "region").filter(col("r_name") === "ASIA")
-    val nat = t(s, dir, "nation")
-    val regionalSup = t(s, dir, "supplier")
+    val region = Tables.load(s, dir, "region").filter(col("r_name") === "ASIA")
+    val nat = Tables.load(s, dir, "nation")
+    val regionalSup = Tables.load(s, dir, "supplier")
       .join(broadcast(nat.join(broadcast(region),
         col("n_regionkey") === col("r_regionkey"))),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
-    val ord = t(s, dir, "orders")
+    val ord = Tables.load(s, dir, "orders")
       .filter(col("o_orderdate") >= "1996-01-01" && col("o_orderdate") < "1997-01-01")
       .select("o_orderkey", "o_custkey")
-    val cust = t(s, dir, "customer").select("c_custkey", "c_nationkey")
-    val li = t(s, dir, "lineitem")
+    val cust = Tables.load(s, dir, "customer").select("c_custkey", "c_nationkey")
+    val li = Tables.load(s, dir, "lineitem")
       .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
     val addend = round(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 6)
       .cast(DecimalType(18, 6))

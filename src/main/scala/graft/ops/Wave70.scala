@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave70 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- dedup_keep_best: quality-ranked cluster survivors --------------
 
   /** The kept corpus under the BEST-survivor policy: within each
@@ -31,7 +27,7 @@ object Wave70 {
     * the policy choice actually changes the corpus). */
   private val dedupKeepBest: Q = (s, dir) => {
     val comp = Wave3.queries("dedup_components")(s, dir)
-    val richness = t(s, dir, "documents")
+    val richness = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         size(array_distinct(filter(split(lower(col("text")), "[^a-z0-9]+"),
           x => x =!= ""))).cast("long").as("rich"))
@@ -40,7 +36,7 @@ object Wave70 {
       .agg(max_by(col("doc_id"),
         struct(col("rich"), -col("doc_id"))).as("keep_id"))
     val minPolicy = comp.groupBy("component").agg(min("doc_id").as("min_id"))
-    val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
+    val docs = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
     val inCluster = comp.select("doc_id").distinct()
     val kept = docs.join(inCluster, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("source"))
@@ -99,7 +95,7 @@ object Wave70 {
     import s.implicits._
     val root = graft.engine.Fs.freshScratch(s, "versiondiff")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer").select(col("c_custkey").as("k"),
+    val base = Tables.load(s, dir, "customer").select(col("c_custkey").as("k"),
       expr("cast(round(c_acctbal * 100) as long)").as("bal"))
     store.write(base.repartitionByRange(4, col("k")), "t")         // v1
     store.upsert(s, "t",                                           // v2: +100 new

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   */
 object Wave71 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- events_event_study: leads/lags around the treatment week -------
 
   /** Event-study curve for the hash-assigned A/B split: per relative
@@ -30,7 +26,7 @@ object Wave71 {
   private val eventsEventStudy: Q = (s, dir) => {
     val arm = pmod(Hashing.md5Long(
       concat(col("user_id").cast("string"), lit(":ab")).cast("binary")), lit(2))
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(arm.as("arm"),
         expr("floor(unix_timestamp(ts) / 86400) div 7").cast("long").as("wk"),
         expr("cast(round(value * 100) as long)").as("cents"))
@@ -92,9 +88,6 @@ object Wave71 {
 
   // ---- text_hapax: hapax legomena richness per source -----------------
 
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** Vocabulary richness per source: vocabulary size, hapax count
     * (terms occurring exactly once WITHIN the source), the hapax share
     * of the vocabulary, and tokens-per-vocab (the inverse richness).
@@ -103,7 +96,7 @@ object Wave71 {
     * separator. One (source, term) aggregation; everything after is
     * vocabulary-sized. */
   private val textHapax: Q = (s, dir) => {
-    val tf = t(s, dir, "documents")
+    val tf = Tables.load(s, dir, "documents")
       .select(col("source"),
         explode(filter(split(lower(col("text")), "[^a-z0-9]+"),
           x => x =!= "")).as("w"))
@@ -125,7 +118,7 @@ object Wave71 {
   private val textHapaxOracle =
     s"""WITH tf AS (
        |  SELECT source, w, CAST(count(*) AS BIGINT) AS c
-       |  FROM (SELECT source, unnest($duckToks) AS w FROM documents)
+       |  FROM (SELECT source, unnest(${LlmPipeline.duckTokens}) AS w FROM documents)
        |  GROUP BY 1, 2),
        |g AS (
        |  SELECT source, CAST(count(*) AS BIGINT) AS vocab,

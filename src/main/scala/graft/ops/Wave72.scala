@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave72 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- profile_eta_squared: variance explained by factors -------------
 
   /** η² of event value for three candidate factors (event type, hour
@@ -29,7 +26,7 @@ object Wave72 {
     * decision. */
   private val profileEtaSquared: Q = (s, dir) => {
     def d38(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 0))
-    val base = t(s, dir, "events").select(
+    val base = Tables.load(s, dir, "events").select(
       col("event_type"),
       expr("pmod(floor(unix_timestamp(ts) / 3600), 24)").cast("long").as("hour"),
       expr("cast(floor(unix_timestamp(ts) / 86400) % 7 as long)").as("dow"),
@@ -87,11 +84,6 @@ object Wave72 {
 
   // ---- eval_ngram_coverage: train -> val n-gram support ---------------
 
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   /** Coverage of validation n-grams by the training split, for
     * n = 1, 2, 3 (the content-hash split — shared splitOf): how much
     * of what the model is evaluated on did it ever see. One distinct
@@ -99,8 +91,8 @@ object Wave72 {
     * gram key; micro shares. Falling coverage with n is the expected
     * shape — flat-at-1.0 means the val split leaks training text. */
   private val evalNgramCoverage: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
-      .select(Hashing.splitOf(col("text")).as("split"), toks(col("text")).as("tk"))
+    val d = Tables.load(s, dir, "documents")
+      .select(Hashing.splitOf(col("text")).as("split"), LlmPipeline.tokens(col("text")).as("tk"))
       .filter(col("split").isin("train", "val"))
       .localCheckpoint()
     val grams = (1 to 3).map { n =>
@@ -134,7 +126,7 @@ object Wave72 {
          |GROUP BY 1, 2, 3""".stripMargin
     }.mkString("\nUNION ALL ")
     s"""WITH d AS MATERIALIZED (
-       |  SELECT ${Hashing.duckSplitCase} AS split, $duckToks AS tk
+       |  SELECT ${Hashing.duckSplitCase} AS split, ${LlmPipeline.duckTokens} AS tk
        |  FROM documents),
        |d2 AS (SELECT * FROM d WHERE split IN ('train', 'val')),
        |grams AS MATERIALIZED (

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +17,6 @@ import graft.engine.Tables
   */
 object Wave74 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- ml_decision_stump: best single-feature threshold ----------------
 
   /** Best threshold split per feature (char-length and token-count
@@ -33,7 +30,7 @@ object Wave74 {
     * quantized half-up so both engines pick identical argmins
     * (ties break on the lower bucket, then feature name). */
   private val mlDecisionStump: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       (col("lang") === "en").cast("long").as("pos"),
       expr("length(text) div 100").as("len_b100"),
       expr("size(filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')) div 10")
@@ -149,7 +146,7 @@ object Wave74 {
     * the final /16 (exact in IEEE for < 2^53) and the micro-quantized
     * relative error. */
   private val sketchAmsF2: Q = (s, dir) => {
-    val tf = t(s, dir, "documents")
+    val tf = Tables.load(s, dir, "documents")
       .select(explode(LlmPipeline.tokens(col("text"))).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("tf"))
       .localCheckpoint()

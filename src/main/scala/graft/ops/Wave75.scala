@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 wave 75: mixture design + retrieval eval — DoReMi-style
   * domain reweighting (each source's excess loss = its KL divergence
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * retrieval number that accuracy-style sheets miss).
   */
 object Wave75 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- corpus_doremi: excess-loss domain reweighting -------------------
 
@@ -32,7 +28,7 @@ object Wave75 {
     * token budget re-allocates the corpus total by the new weights.
     * ONE (source, token) aggregation is the only data-sized pass. */
   private val corpusDoremi: Q = (s, dir) => {
-    val terms = t(s, dir, "documents")
+    val terms = Tables.load(s, dir, "documents")
       .select(col("source"), explode(LlmPipeline.tokens(col("text"))).as("token"))
     val tfS = terms.groupBy("source", "token").agg(count(lit(1)).as("tf_s"))
     val totS = terms.groupBy("source").agg(count(lit(1)).as("t_s"))
@@ -112,8 +108,8 @@ object Wave75 {
     * the final /R is one rational. P@10 / P@100 fall out of the same
     * pass. */
   private val evalAveragePrecision: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val d = t(s, dir, "documents").select(
+    val parts = ConfScope.shufflePartitions(s)
+    val d = Tables.load(s, dir, "documents").select(
       col("doc_id"),
       (col("lang") === "en").cast("long").as("rel"),
       LlmPipeline.hits("en").as("score"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * step is engine-exact.
   */
 object Wave76 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- ml_logreg_newton: 1-feature logistic regression -----------------
 
@@ -35,7 +31,7 @@ object Wave76 {
     * coefficients, training accuracy and the confusion counts of the
     * σ(η) > 1/2 gate (exact integers). */
   private val mlLogregNewton: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       (col("lang") === "en").cast("long").as("y"),
       expr("""(2 * 1000 * size(array_intersect(array_distinct(
           filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')),

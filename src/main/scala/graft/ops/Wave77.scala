@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * return-level read capacity planning runs on peak load).
   */
 object Wave77 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- ml_ols_cramer: exact closed-form 2-feature regression -----------
 
@@ -30,9 +26,9 @@ object Wave77 {
     * identity, and R² = 1 − SSE/SST is one final rational (micro² vs
     * milli² bookkeeping documented inline). */
   private val mlOlsCramer: Q = (s, dir) => {
-    val orders = t(s, dir, "orders")
+    val orders = Tables.load(s, dir, "orders")
       .select(col("o_orderkey").as("ok"), round(col("o_totalprice")).cast("long").as("y"))
-      .join(t(s, dir, "lineitem").groupBy(col("l_orderkey").as("ok"))
+      .join(Tables.load(s, dir, "lineitem").groupBy(col("l_orderkey").as("ok"))
         .agg(count(lit(1)).as("x1"), sum(col("l_quantity")).cast("long").as("x2")),
         "ok")
       .select("y", "x1", "x2")
@@ -158,7 +154,7 @@ object Wave77 {
     * quantized input, so both engines emit the same rounded-6
     * numbers. */
   private val profileExtremeGumbel: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"),
         expr("cast(round(value * 100) as long)").as("c"))

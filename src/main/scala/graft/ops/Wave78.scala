@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +16,6 @@ import graft.engine.Tables
   */
 object Wave78 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- timeseries_holt: double exponential smoothing -------------------
 
   /** Holt linear smoothing (α = β = 1/2) of daily event value per
@@ -33,7 +29,7 @@ object Wave78 {
     * and the one-step MAE — the honesty column for whether the
     * smoother actually tracked the series. */
   private val timeseriesHolt: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"),
         expr("cast(round(value * 100) as long)").as("c"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +15,6 @@ import graft.engine.Tables
   * MK gives trend significance, Theil-Sen gives its magnitude).
   */
 object Wave79 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- eval_perplexity_kn: held-out KN bigram cross-entropy ------------
 
@@ -45,7 +42,7 @@ object Wave79 {
     * log-probs nano-quantized before the exact per-source sum (the
     * JSD addend discipline); ppl = exp(ce) on the rounded value. */
   private val evalPerplexityKn: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .withColumn("split", Hashing.splitOf(col("text")))
       .filter(col("split").isin("train", "val"))
     // ONE tokenize+explode pass builds both splits' bigram tables
@@ -153,7 +150,7 @@ object Wave79 {
     * significance AND magnitude. Pair count is calendar², bounded by
     * construction. */
   private val profileTheilSen: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"),
         expr("cast(round(value * 100) as long)").as("c"))

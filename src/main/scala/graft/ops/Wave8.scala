@@ -1,11 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-6 curation-analytics wave: the corpus-level decisions a
   * production LLM-data pipeline makes AFTER the per-document gates —
@@ -25,19 +24,6 @@ import graft.engine.Tables
   * operand order matches, and the oracles mirror operand order exactly.
   */
 object Wave8 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens
-    * (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
-  private def parts(s: SparkSession): Int =
-    s.conf.get("spark.sql.shuffle.partitions").toInt
 
   // ---- corpus_temperature: temperature-scaled source mixing ------------
 
@@ -64,9 +50,9 @@ object Wave8 {
     * floor() from rounded doubles, so membership is exact in both
     * engines. */
   private val corpusTemperature: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       col("doc_id"), col("source"),
-      size(toks(col("text"))).cast("bigint").as("n_tok"),
+      size(LlmPipeline.tokens(col("text"))).cast("bigint").as("n_tok"),
       Hashing.md5Bucket(col("doc_id").cast("string").cast("binary"), 1000000)
         .as("u"))
     val per = base.groupBy("source")
@@ -96,7 +82,7 @@ object Wave8 {
 
   private val corpusTemperatureOracle =
     s"""WITH base AS (
-       |  SELECT doc_id, source, CAST(len($duckToks) AS BIGINT) AS n_tok,
+       |  SELECT doc_id, source, CAST(len(${LlmPipeline.duckTokens}) AS BIGINT) AS n_tok,
        |    CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000000 AS u
        |  FROM documents),
        |per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
@@ -136,7 +122,7 @@ object Wave8 {
     * Determinism: counts are exact; the single ln() per cell rounds to
     * 6; MI sums the rounded n/N-weighted addends in DECIMAL. */
   private val profileMutualInfo: Q = (s, dir) => {
-    val cells = t(s, dir, "documents")
+    val cells = Tables.load(s, dir, "documents")
       .groupBy("lang", "source").agg(count(lit(1)).as("n"))
     val margL = cells.groupBy("lang").agg(sum("n").as("n_l"))
     val margS = cells.groupBy("source").agg(sum("n").as("n_s"))
@@ -194,11 +180,11 @@ object Wave8 {
     * The final scalar aggregate reduces #partitions pre-aggregated rows
     * — the one place a SinglePartition exchange is the correct plan. */
   private val textZipf: Q = (s, dir) => {
-    val tf = t(s, dir, "documents")
-      .select(explode(toks(col("text"))).as("token"))
+    val tf = Tables.load(s, dir, "documents")
+      .select(explode(LlmPipeline.tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
     val ranked = Ranks.perGroupRank(tf, Seq.empty, Seq(col("n").desc, col("token")),
-      rankCol = "rk", nCol = "n_terms", partitions = parts(s))
+      rankCol = "rk", nCol = "n_terms", partitions = ConfScope.shufflePartitions(s))
     val pts = ranked.select(
       col("n_terms"),
       round(log(col("rk").cast("double")), 6).as("x"),
@@ -224,7 +210,7 @@ object Wave8 {
   private val textZipfOracle =
     s"""WITH tf AS (
        |  SELECT token, CAST(count(*) AS BIGINT) AS n
-       |  FROM (SELECT unnest($duckToks) AS token FROM documents) GROUP BY token),
+       |  FROM (SELECT unnest(${LlmPipeline.duckTokens}) AS token FROM documents) GROUP BY token),
        |rk AS (SELECT n, row_number() OVER (ORDER BY n DESC, token) AS rk FROM tf),
        |pts AS (SELECT round(ln(CAST(rk AS DOUBLE)), 6) AS x,
        |               round(ln(CAST(n AS DOUBLE)), 6) AS y FROM rk),
@@ -256,7 +242,7 @@ object Wave8 {
     * as conditional sums in ONE pass; no per-stage rescans. */
   private val pipelineFunnel: Q = (s, dir) => {
     val f = Wave3.queries("corpus_filter")(s, dir)
-    val src = t(s, dir, "documents").select("doc_id", "source")
+    val src = Tables.load(s, dir, "documents").select("doc_id", "source")
     val s1 = col("lang_ok")
     val s2 = s1 && col("quality") >= 0.4
     val s3 = s2 && col("top_token_ratio") <= 0.2 && col("dup_bigram_ratio") <= 0.3

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,9 +13,6 @@ import graft.engine.{ConfScope, Tables}
   */
 object Wave80 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- corpus_ccnet_buckets: head/middle/tail by LM score --------------
 
   /** CCNet-style tiering (Wenzek et al. 2020): every document's mean
@@ -28,8 +24,8 @@ object Wave80 {
     * rational). Rank comes from the Ranks two-phase kernel + the
     * closed-form ntile — no global window. */
   private val corpusCcnetBuckets: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val lp = Wave5.unigramLp(t(s, dir, "documents"))
+    val parts = ConfScope.shufflePartitions(s)
+    val lp = Wave5.unigramLp(Tables.load(s, dir, "documents"))
       .select(col("doc_id"), col("mean_lp"))
     val ranked = Ranks.perGroupRank(lp, Seq.empty,
       Seq(col("mean_lp").desc, col("doc_id").asc), rankCol = "rk",
@@ -38,7 +34,7 @@ object Wave80 {
       .withColumn("tier",
         when(col("tier_n") === 1, "head")
           .when(col("tier_n") === 2, "middle").otherwise("tail"))
-    val src = t(s, dir, "documents").select(col("doc_id"), col("source"))
+    val src = Tables.load(s, dir, "documents").select(col("doc_id"), col("source"))
     val cells = ranked.join(src, "doc_id")
       .withColumn("lp6", round(col("mean_lp") * 1e6).cast("long"))
       .groupBy("source", "tier")
@@ -92,8 +88,8 @@ object Wave80 {
     * per-cluster size, standardized centroid, raw-feature means, and
     * the exact within-cluster inertia. */
   private val mlKmeansRfm: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val cust = t(s, dir, "orders")
+    val parts = ConfScope.shufflePartitions(s)
+    val cust = Tables.load(s, dir, "orders")
       .groupBy(col("o_custkey").as("ck"))
       .agg(count(lit(1)).as("f"),
         sum(round(col("o_totalprice")).cast("long")).as("m"))

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +16,6 @@ import graft.engine.Tables
   */
 object Wave81 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- timeseries_haar: wavelet energy by scale -------------------------
 
   /** Haar decomposition of the 30-day daily value series per type
@@ -29,7 +26,7 @@ object Wave81 {
     * swings) carries the variance. All state is model-sized
     * (types × ≤32 coefficients). */
   private val timeseriesHaar: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"),
         expr("cast(round(value * 100) as long)").as("c"))
@@ -122,7 +119,7 @@ object Wave81 {
       floor(-log((Hashing.md5Long(
         concat(lit(s"dp#$tag#"), col("event_type")).cast("binary")) + 1)
         .cast("double") / lit(1152921504606846976.0))).cast("long")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .groupBy("event_type").agg(count(lit(1)).as("true_n"))
       .withColumn("noise", g("a") - g("b"))
       .select(col("event_type"), lit(1.0).as("eps"), col("true_n"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,9 +14,6 @@ import graft.engine.Tables
   * assignments), both engine-exact through quantized state.
   */
 object Wave82 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- graph_ktruss: edge-cohesion peeling ------------------------------
 
@@ -129,7 +126,7 @@ object Wave82 {
     * Output: mixing weight, both components' mean/sd in σ units, and
     * the soft count of component 1. */
   private val mlEmGmm: Q = (s, dir) => Codegen.materialized(s) {
-    val cust = t(s, dir, "orders")
+    val cust = Tables.load(s, dir, "orders")
       .select(round(col("o_totalprice")).cast("long").as("m"))
     val mo = cust.agg(count(lit(1)).as("n"), sum("m").as("sm"),
         sum(expr("cast(m as decimal(38,0)) * m")).as("smm"))

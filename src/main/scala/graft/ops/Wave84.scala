@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +15,6 @@ import graft.engine.Tables
   * product reviews actually track).
   */
 object Wave84 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- ml_tree_depth2: greedy two-level decision tree -------------------
 
@@ -68,7 +65,7 @@ object Wave84 {
     * column — interactions the single stump cannot see show up as the
     * branches choosing DIFFERENT features. */
   private val mlTreeDepth2: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       (col("lang") === "en").cast("long").as("pos"),
       expr("length(text) div 100").as("len_b100"),
       expr("size(filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')) div 10")
@@ -206,7 +203,7 @@ object Wave84 {
     * 7-day band — data×7, never a sliding distinct window), ratio as
     * the exact micro rational. */
   private val eventsStickiness: Q = (s, dir) => {
-    val ud = t(s, dir, "events")
+    val ud = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"),
         col("user_id"))

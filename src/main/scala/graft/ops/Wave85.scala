@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * why forests beat trees).
   */
 object Wave85 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- text_generate_greedy: decode from the bigram LM -------------------
 
@@ -103,7 +99,7 @@ object Wave85 {
     * the shared ensemble_accuracy column is the variance-reduction
     * read (ensemble ≥ most individual bags). */
   private val mlBaggedStumps: Q = (s, dir) => {
-    val base = t(s, dir, "documents").select(
+    val base = Tables.load(s, dir, "documents").select(
       (col("lang") === "en").cast("long").as("pos"),
       pmod(Hashing.md5Long(concat(col("text"), lit("#bag")).cast("binary")),
         lit(8)).cast("long").as("bag"),

@@ -25,12 +25,9 @@ import graft.engine.Tables
   */
 object Wave86 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Quantized corpus: (vec_id, q = floor(x·1e6) longs). */
   private def qemb(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings").select(col("vec_id"),
+    Tables.load(s, dir, "embeddings").select(col("vec_id"),
       transform(col("embedding"),
         x => floor(x.cast("double") * 1e6)).as("q"))
 

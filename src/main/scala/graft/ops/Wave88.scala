@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave88 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- pii_scan: column-level PII audit ----------------------------------
 
   /** Profile every scannable customer column for identifier risk in
@@ -32,7 +28,7 @@ object Wave88 {
     * column-count-sized. */
   private val piiScan: Q = (s, dir) => {
     val cols = Seq("c_custkey", "c_name", "c_mktsegment")
-    val cust = t(s, dir, "customer")
+    val cust = Tables.load(s, dir, "customer")
     val melted = cust.select(explode(array(cols.map(c =>
         struct(lit(c).as("col"), col(c).cast("string").as("v"))): _*)).as("x"))
       .select(col("x.col").as("col"), col("x.v").as("v"))
@@ -87,7 +83,7 @@ object Wave88 {
     * no shuffle at any scale; output order is by pseudonym so nothing
     * leaks the original key order. */
   private val piiPseudonymize: Q = (s, dir) =>
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .select(
         substring(md5(concat(lit("cust#"), col("c_custkey").cast("string"))
           .cast("binary")), 1, 16).as("pseudo_id"),
@@ -117,7 +113,7 @@ object Wave88 {
     * over class-count-sized data; the class-size histogram itself is
     * at most corpus-max-class rows. */
   private val privacyKAnonymity: Q = (s, dir) =>
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .groupBy(col("c_nationkey").cast("int").as("nationkey"),
         col("c_mktsegment").as("mktsegment"),
         (floor(col("c_acctbal") / 1000) * 1000).cast("long").as("bal_b"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -16,9 +15,6 @@ import graft.engine.Tables
   */
 object Wave89 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- timeseries_acf: exact-integer autocorrelation ---------------------
 
   /** ACF of the zero-filled daily count series per event type, lags
@@ -33,7 +29,7 @@ object Wave89 {
     * model-sized at any corpus scale. */
   private val timeseriesAcf: Q = (s, dir) => {
     val d38 = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"))
       .agg(count(lit(1)).as("x"))
@@ -130,7 +126,7 @@ object Wave89 {
     * groups) — trivially map-side combinable at any scale. */
   private val eventsAbtest: Q = (s, dir) => {
     val d38 = DecimalType(38, 0)
-    val users = t(s, dir, "events")
+    val users = Tables.load(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(sum(when(col("event_type") === "purchase",
         round(col("value") * 100).cast("long")).otherwise(0L)).as("cents"))

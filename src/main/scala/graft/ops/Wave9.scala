@@ -21,16 +21,6 @@ import graft.engine.Tables
   */
 object Wave9 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
-  /** Whitespace/punct token split — identical to LlmPipeline.tokens
-    * (pinned by the text_* oracles). */
-  private def toks(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), x => x =!= "")
-  private val duckToks =
-    "list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x->x<>'')"
-
   // ---- sink_delete_dv: merge-on-read DELETE via deletion vectors -------
 
   /** DELETE as a deletion vector: two MOR deletes against a 4-file part
@@ -49,7 +39,7 @@ object Wave9 {
   private val sinkDeleteDv: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "dv")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "part")
+    val base = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("int").as("p_size"),
         col("p_retailprice"))
     store.write(base.repartitionByRange(4, col("p_partkey")), "part") // v1
@@ -93,7 +83,7 @@ object Wave9 {
   private val sinkOptimizeSmall: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "optsmall")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "orders")
+    val base = Tables.load(s, dir, "orders")
       .select(col("o_orderkey"),
         col("o_totalprice").cast("double").as("o_totalprice"))
     val maxK = base.agg(max("o_orderkey")).head().getLong(0)
@@ -146,7 +136,7 @@ object Wave9 {
   private val sinkReplicate: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "repl")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
     store.write(base, "src")                                     // v1
     store.write(base, "replica")                                 // synced @ v1
@@ -213,7 +203,7 @@ object Wave9 {
   private val sinkSkippingRead: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "skip")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "part")
+    val base = Tables.load(s, dir, "part")
       .select(col("p_partkey"), col("p_size").cast("int").as("p_size"))
     store.write(base.repartitionByRange(8, col("p_partkey")), "part")
     val maxK = base.agg(max("p_partkey")).head().getLong(0)
@@ -247,7 +237,7 @@ object Wave9 {
   private val sinkCountMeta: Q = (s, dir) => {
     val root = graft.engine.Fs.freshScratch(s, "cntmeta")
     val store = new graft.engine.VersionedStore(root)
-    val base = t(s, dir, "customer")
+    val base = Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"))
     store.write(base.repartitionByRange(4, col("c_custkey")), "customer")
     store.deleteMor(s, "customer", col("c_nationkey") === 3)
@@ -279,8 +269,8 @@ object Wave9 {
     // many by design — search_inverted and search_phrase share one copy
     val root = postingCache.computeIfAbsent((s.sparkContext.applicationId, dir), { _ =>
       val out = graft.engine.Fs.freshScratch(s, "postings")
-      t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(toks(col("text"))).as(Seq("pos", "term")))
+      Tables.load(s, dir, "documents")
+        .select(col("doc_id"), posexplode(LlmPipeline.tokens(col("text"))).as(Seq("pos", "term")))
         .repartitionByRange(8, col("term"))
         .sortWithinPartitions("term", "doc_id", "pos")
         .write.mode("overwrite").parquet(out)
@@ -313,7 +303,7 @@ object Wave9 {
 
   private val searchInvertedOracle =
     s"""WITH p AS (
-       |  SELECT doc_id, unnest($duckToks) AS term FROM documents)
+       |  SELECT doc_id, unnest(${LlmPipeline.duckTokens}) AS term FROM documents)
        |SELECT doc_id,
        |  CAST(SUM(CASE WHEN term='hash' THEN 1 ELSE 0 END) AS BIGINT) AS n_hash,
        |  CAST(SUM(CASE WHEN term='join' THEN 1 ELSE 0 END) AS BIGINT) AS n_join,
@@ -348,7 +338,7 @@ object Wave9 {
     s"""WITH p AS (
        |  SELECT doc_id, unnest(t) AS term,
        |         generate_subscripts(t, 1) - 1 AS pos
-       |  FROM (SELECT doc_id, $duckToks AS t FROM documents)),
+       |  FROM (SELECT doc_id, ${LlmPipeline.duckTokens} AS t FROM documents)),
        |a AS (SELECT doc_id, pos FROM p WHERE term = 'hash'),
        |b AS (SELECT doc_id, pos FROM p WHERE term = 'join')
        |SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_occ,
@@ -388,7 +378,7 @@ object Wave9 {
     // superstep scope: Catalyst's UnionLoop re-plans each iteration
     // under AQE, paying 2-3 stage-jobs per hop for a graph that is a few
     // hundred rows at any data scale.
-    graft.engine.ConfScope.superstepOver(t(s, dir, "events")
+    graft.engine.ConfScope.superstepOver(Tables.load(s, dir, "events")
         .select(col("user_id"), col("event_id"),
           concat(col("event_type"), lit("#"), band.cast("string")).as("src"))
         .withColumn("dst", lead("src", 1).over(w))
@@ -452,7 +442,7 @@ object Wave9 {
     * oracle replays ALL 8 greedy steps as a generated CTE chain (the
     * vocab_bpe precedent). */
   private val simTopkMmr: Q = (s, dir) => {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
     val cand = e.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= 0)
@@ -569,7 +559,7 @@ object Wave9 {
     * equi-join, exact-cosine top-10. Single-probe is masks=[0];
     * multi-probe adds the radius-1 flips (Lv et al., VLDB 2007). */
   private def lshMd5TopK(s: SparkSession, dir: String, masks: Seq[Int]): DataFrame = {
-    val e = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
+    val e = Tables.load(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
     def dot(tb: Int, p: Int): Column =
       aggregate(zip_with(col("v"), typedLit(lshW(tb)(p)), (x, y) => x * y),
         lit(0.0), (a, x) => a + x)
@@ -636,7 +626,7 @@ object Wave9 {
   private val eventsPattern: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("user_id").orderBy("event_id")
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"))
       .withColumn("p1", lag("event_type", 1).over(w))
       .withColumn("p2", lag("event_type", 2).over(w))
@@ -674,7 +664,7 @@ object Wave9 {
     import org.apache.spark.sql.types.DecimalType
     val digit = substring(regexp_replace(
       format_number(abs(col("value")), 10), "[0.,]", ""), 1, 1).cast("int")
-    val counts = t(s, dir, "events")
+    val counts = Tables.load(s, dir, "events")
       // magnitude floor, not just nonzero: below 5e-11 the 10-decimal
       // rendering rounds to all zeros and the digit extraction yields
       // NULL in Spark but a hard cast error in DuckDB — the guard keeps
@@ -730,7 +720,7 @@ object Wave9 {
     * all regression algebra on the model-sized daily table; the
     * 3-horizon explode is per type. */
   private val timeseriesForecast: Q = (s, dir) => {
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .select(col("event_type"),
         datediff(to_date(col("ts")), lit(java.sql.Date.valueOf("1970-01-01")))
           .cast("long").as("d"))
@@ -801,7 +791,7 @@ object Wave9 {
     // split assignment and fingerprints come from the SHARED definitions
     // (Hashing.splitOf, LlmPipeline.minShingleFp) so the audited
     // partition can never drift from the produced one
-    val b = t(s, dir, "documents").select(
+    val b = Tables.load(s, dir, "documents").select(
       col("doc_id"),
       Hashing.splitOf(col("text")).as("split"),
       md5(col("text").cast("binary")).as("doc_hash"),
@@ -830,7 +820,7 @@ object Wave9 {
        |    list_min(list_transform(
        |      list_transform(range(0, greatest(len(toks)-2, 1)), i -> concat_ws(' ', toks[i+1], toks[i+2], toks[i+3])),
        |      sh -> CAST(concat('0x', substr(md5(concat('0#', sh)), 1, 15)) AS BIGINT))) AS fp
-       |  FROM (SELECT doc_id, text, $duckToks AS toks FROM documents)),
+       |  FROM (SELECT doc_id, text, ${LlmPipeline.duckTokens} AS toks FROM documents)),
        |dh AS (SELECT CAST(COUNT(*) AS BIGINT) AS doc_hash_leaked_fps,
        |         CAST(COALESCE(SUM(nd), 0) AS BIGINT) AS doc_hash_leaked_docs
        |       FROM (SELECT doc_hash, COUNT(DISTINCT split) AS ns, COUNT(*) AS nd
@@ -856,7 +846,7 @@ object Wave9 {
     * data-sized shuffle), then per-type k/l/min over the model-sized
     * class table. Integer metrics end-to-end. */
   private val profileKanonymity: Q = (s, dir) => {
-    val classes = t(s, dir, "events")
+    val classes = Tables.load(s, dir, "events")
       .select(col("event_type"),
         (dayofweek(col("ts")) - lit(1)).as("dow"),
         least(floor(col("value") / 50.0), lit(9.0)).cast("int").as("band"),
@@ -895,7 +885,7 @@ object Wave9 {
     * TakeOrdered (bounded, never a global sort); the two global scalars
     * ride a broadcast. */
   private val profileHotkeys: Q = (s, dir) => {
-    val counts = t(s, dir, "events")
+    val counts = Tables.load(s, dir, "events")
       .groupBy("user_id").agg(count(lit(1)).as("n"))
     val tot = counts.agg(
       sum("n").as("total"), count(lit(1)).as("n_keys"), max("n").as("max_n"))

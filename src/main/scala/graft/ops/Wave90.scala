@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -16,9 +16,6 @@ import graft.engine.Tables
   */
 object Wave90 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   // ---- dq_expectations: declarative constraint suite ---------------------
 
   /** Constraint catalog evaluated in ONE aggregate per table (every
@@ -30,18 +27,18 @@ object Wave90 {
     * job asserts on. */
   private val dqExpectations: Q = (s, dir) => {
     def viol(c: Column): Column = sum(when(c, 1L).otherwise(0L))
-    val ord = t(s, dir, "orders").agg(
+    val ord = Tables.load(s, dir, "orders").agg(
       count(lit(1)).as("n"),
       viol(col("o_orderkey").isNull).as("v_nn"),
       (count(lit(1)) - countDistinct(col("o_orderkey"))).as("v_uq"),
       viol(!col("o_orderstatus").isin("O", "F", "P")).as("v_acc"),
       viol(col("o_totalprice") <= 0).as("v_rng"))
-    val li = t(s, dir, "lineitem").agg(
+    val li = Tables.load(s, dir, "lineitem").agg(
       count(lit(1)).as("n"),
       viol(col("l_orderkey").isNull).as("v_nn"),
       viol(col("l_quantity") < 1 || col("l_quantity") > 50).as("v_qty"),
       viol(col("l_discount") < 0 || col("l_discount") > 0.1).as("v_dis"))
-    val cust = t(s, dir, "customer").agg(
+    val cust = Tables.load(s, dir, "customer").agg(
       count(lit(1)).as("n"),
       (count(lit(1)) - countDistinct(col("c_custkey"))).as("v_uq"),
       viol(!col("c_mktsegment").isin(
@@ -129,22 +126,22 @@ object Wave90 {
         .select(lit(fk).as("fk"), col("child_rows"), col("orphans"),
           (col("orphans") === 0L).as("pass"))
     }
-    val li = t(s, dir, "lineitem"); val ord = t(s, dir, "orders")
+    val li = Tables.load(s, dir, "lineitem"); val ord = Tables.load(s, dir, "orders")
     Seq(
       edge("lineitem.l_orderkey->orders", li, "l_orderkey",
         ord, "o_orderkey", bcast = false),
       // part/supplier/customer parents are entity-scaled: size-chosen
       // joins (bcast=false) - only the fixed catalog dims force-broadcast
       edge("lineitem.l_partkey->part", li, "l_partkey",
-        t(s, dir, "part"), "p_partkey", bcast = false),
+        Tables.load(s, dir, "part"), "p_partkey", bcast = false),
       edge("lineitem.l_suppkey->supplier", li, "l_suppkey",
-        t(s, dir, "supplier"), "s_suppkey", bcast = false),
+        Tables.load(s, dir, "supplier"), "s_suppkey", bcast = false),
       edge("orders.o_custkey->customer", ord, "o_custkey",
-        t(s, dir, "customer"), "c_custkey", bcast = false),
-      edge("customer.c_nationkey->nation", t(s, dir, "customer"),
-        "c_nationkey", t(s, dir, "nation"), "n_nationkey", bcast = true),
-      edge("nation.n_regionkey->region", t(s, dir, "nation"),
-        "n_regionkey", t(s, dir, "region"), "r_regionkey", bcast = true))
+        Tables.load(s, dir, "customer"), "c_custkey", bcast = false),
+      edge("customer.c_nationkey->nation", Tables.load(s, dir, "customer"),
+        "c_nationkey", Tables.load(s, dir, "nation"), "n_nationkey", bcast = true),
+      edge("nation.n_regionkey->region", Tables.load(s, dir, "nation"),
+        "n_regionkey", Tables.load(s, dir, "region"), "r_regionkey", bcast = true))
       .reduce(_.unionByName(_))
       .orderBy("fk")
   }
@@ -182,7 +179,7 @@ object Wave90 {
     * flag. One (type)-keyed max aggregate + one global max — both
     * map-side combinable. */
   private val dqFreshness: Q = (s, dir) => {
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .select(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"))
     val hwm = ev.agg(max("day").as("now_day"))

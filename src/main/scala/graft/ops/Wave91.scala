@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * the event stream (the funnel family's strict-pattern sibling).
   */
 object Wave91 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- sink_quarantine: route invalid rows, publish the rest -------------
 
@@ -39,7 +35,7 @@ object Wave91 {
       col("l_linenumber").cast("string"), lit("#"),
       col("l_partkey").cast("string"), lit("#"),
       col("l_suppkey").cast("string"))
-    val batch = t(s, dir, "lineitem")
+    val batch = Tables.load(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"),
         when(Hashing.md5Bucket(concat(key, lit("#q")).cast("binary"), 20) === 0,
@@ -106,7 +102,7 @@ object Wave91 {
     * events_funnel. */
   private val eventsSeqPattern: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    val ev = t(s, dir, "events")
+    val ev = Tables.load(s, dir, "events")
       .filter(col("event_type").isin("view", "click", "purchase"))
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_timestamp(col("ts")).as("sec"))

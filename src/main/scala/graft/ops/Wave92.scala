@@ -1,10 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-7 wave 92: multimodal frame-sampling manifests + the missing
   * retrieval-eval metric. Frame sampling is the video-pipeline step
@@ -14,9 +13,6 @@ import graft.engine.Tables
   * (eval_ndcg, eval_average_precision).
   */
 object Wave92 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- multimodal_framesample: decode-plan manifest ----------------------
 
@@ -31,7 +27,7 @@ object Wave92 {
     * 100 TB the manifest shuffles nothing and the decode stage reads
     * it as its work list. */
   private val multimodalFramesample: Q = (s, dir) =>
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         expr("length(text) div 256").cast("long").as("n_frames"))
       .filter(col("n_frames") > 0)
@@ -70,8 +66,8 @@ object Wave92 {
     * reciprocal sums are micro-quantized per query BEFORE the final
     * mean, so the aggregate is order-independent. */
   private val evalMrr: Q = (s, dir) => {
-    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val scored = t(s, dir, "documents").select(
+    val parts = ConfScope.shufflePartitions(s)
+    val scored = Tables.load(s, dir, "documents").select(
       col("doc_id"), col("source"),
       (col("lang") === "en").cast("long").as("rel"),
       length(col("text")).cast("long").as("score"))

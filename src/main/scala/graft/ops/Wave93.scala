@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -14,9 +13,6 @@ import graft.engine.Tables
   */
 object Wave93 {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Additive HW, α=β=γ=1/2, period 7, on the ZERO-FILLED daily cents
     * series (milli-cent units so half-up halving keeps sub-cent
     * precision): init level = week-1 mean, trend = (week-2 mean −
@@ -29,7 +25,7 @@ object Wave93 {
     * 7-day seasonal forecast per type plus the final level/trend. */
   private val timeseriesHoltWinters: Q = (s, dir) => {
     import s.implicits._
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"))
       .agg(sum(expr("cast(round(value * 100) as long)")).as("yc"))

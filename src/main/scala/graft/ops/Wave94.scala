@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -13,9 +12,6 @@ import graft.engine.Tables
   * mean-centered daily series, all in exact integers.
   */
 object Wave94 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Quantized trig constants, cos/sin(2π·phase/p)·1e6 half-up — built
     * ONCE in Scala and inlined as identical literals into the Spark
@@ -38,7 +34,7 @@ object Wave94 {
     * the dominant-period flag (ties to the smaller period). */
   private val timeseriesPeriodogram: Q = (s, dir) => {
     import s.implicits._
-    val daily = t(s, dir, "events")
+    val daily = Tables.load(s, dir, "events")
       .groupBy(col("event_type"),
         expr("cast(floor(unix_timestamp(ts) / 86400) as long)").as("day"))
       .agg(count(lit(1)).as("x"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,9 +13,6 @@ import graft.engine.Tables
   * RLHF preference-pair mining (chosen/rejected by score margin).
   */
 object Wave95 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- eval_pass_at_k: unbiased pass@k over md5-derived samples -------
 
@@ -55,7 +51,7 @@ object Wave95 {
       concat(col("doc_id").cast("string"), lit("#"), col("s").cast("string"),
         lit("#pass")).cast("binary"), 100) <
       (lit(20) + pmod(col("doc_id"), lit(7)) * 10)
-    val perTask = t(s, dir, "documents")
+    val perTask = Tables.load(s, dir, "documents")
       .select(col("doc_id"), explode(sequence(lit(0), lit(PassN - 1))).as("s"))
       .select(col("doc_id"), when(correct, 1L).otherwise(0L).as("ok"))
       .groupBy("doc_id").agg(sum("ok").cast("int").as("c"))
@@ -134,7 +130,7 @@ object Wave95 {
 
   private val privacyDpCounts: Q = (s, dir) => {
     import s.implicits._
-    val truth = t(s, dir, "customer")
+    val truth = Tables.load(s, dir, "customer")
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n_true"))
     val u = pmod(Hashing.md5Long(
@@ -178,7 +174,7 @@ object Wave95 {
   private val evalPreferencePairs: Q = (s, dir) => {
     val toks = array_distinct(LlmPipeline.tokens(col("text")))
     val enStop = Seq("the", "and", "of", "to", "in", "is", "a", "that")
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"), toks.as("tk"))
       .withColumn("ntok", size(col("tk")).cast("bigint"))
       .filter(col("ntok") > 0)

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
@@ -12,9 +11,6 @@ import graft.engine.Tables
   * audit already ships as Wave9's profile_benford.
   */
 object Wave96 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- corpus_span_corruption: deterministic denoising manifest -------
 
@@ -30,7 +26,7 @@ object Wave96 {
   private val CorruptPct = 15
 
   private val corpusSpanCorruption: Q = (s, dir) => {
-    val d = t(s, dir, "documents")
+    val d = Tables.load(s, dir, "documents")
       .select(col("doc_id"), posexplode(LlmPipeline.tokens(col("text"))))
       .withColumnRenamed("pos", "p")
       .withColumn("cell", expr(s"p div $CellW"))

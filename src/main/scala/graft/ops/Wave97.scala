@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -18,9 +17,6 @@ import graft.engine.Tables
   * pairwise preference mining — wave 95 — and a reward model).
   */
 object Wave97 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- multimodal_decode_audio: real WAV codec roundtrip --------------
 
@@ -115,7 +111,7 @@ object Wave97 {
     * itself measures ~70 ms for all 500 sf0.1 clips single-threaded). */
   private val multimodalDecodeAudio: Q = (s, dir) => {
     import s.implicits._
-    t(s, dir, "documents")
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         Hashing.md5Long(concat(col("doc_id").cast("string"), lit("#audio"))
           .cast("binary")).as("hv"))
@@ -167,7 +163,7 @@ object Wave97 {
     * threshold implies — the DISTRIBUTION is the contract). Scales as
     * one narrow pass + a doc-keyed aggregate; no vocabulary state. */
   private val textWatermarkDetect: Q = (s, dir) => {
-    val tok = t(s, dir, "documents")
+    val tok = Tables.load(s, dir, "documents")
       .select(col("doc_id"), posexplode(LlmPipeline.tokens(col("text"))))
       .withColumnRenamed("pos", "p").withColumnRenamed("col", "w")
     val prev = lag(col("w"), 1).over(
@@ -226,7 +222,7 @@ object Wave97 {
     * constant — fixture-pin ledger class "symmetric"). */
   private val evalBradleyTerry: Q = (s, dir) => {
     import s.implicits._
-    val docs = t(s, dir, "documents")
+    val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), col("source"),
         size(LlmPipeline.tokens(col("text"))).cast("long").as("sc"))
     val w = Window.partitionBy("lang").orderBy("doc_id")

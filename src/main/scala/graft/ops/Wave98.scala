@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,9 +17,6 @@ import graft.engine.Tables
   * embedding-cosine).
   */
 object Wave98 {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   // ---- graph_label_prop: synchronous weighted LPA ---------------------
 
@@ -128,7 +125,7 @@ object Wave98 {
   private val EditMax = 16
 
   private val dedupEditdist: Q = (s, dir) => {
-    val n = t(s, dir, "documents")
+    val n = Tables.load(s, dir, "documents")
       .select(col("doc_id"), col("lang"), lower(trim(col("text"))).as("t"))
       .withColumn("band", expr("length(t) div 32"))
       .withColumn("pfx", substring(col("t"), 1, 12))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,9 +14,6 @@ import graft.engine.Tables
   * absent from the engine surface: they serialize onto one task.
   */
 object Windows {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
 
   /** Top-K most frequent values per column of one table — the profiler's
     * "top 10 values" UX over the histogram (SURVEY §2.5
@@ -51,7 +47,7 @@ object Windows {
   private val winTopkDeclarative: Q = (s, dir) => {
     val w = Window.partitionBy("c_nationkey")
       .orderBy(desc("c_acctbal"), asc("c_custkey"))
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"),
         row_number().over(w).cast("bigint").as("rn"))
       .filter(col("rn") <= 3)
@@ -61,7 +57,7 @@ object Windows {
   /** Ranking family: rank / dense_rank / ntile (SURVEY §2.5 win_rank_dense). */
   private val winRankDense: Q = (s, dir) => {
     val w = Window.partitionBy("c_nationkey").orderBy(asc("c_acctbal"), asc("c_custkey"))
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal"),
         rank().over(w).cast("bigint").as("rnk"),
         dense_rank().over(w).cast("bigint").as("drnk"),
@@ -73,7 +69,7 @@ object Windows {
     * (SURVEY §2.5 win_analytic). */
   private val winAnalytic: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         lag(col("value"), 1).over(w).as("prev_value"),
         lead(col("event_type"), 1).over(w).as("next_type"),
@@ -87,7 +83,7 @@ object Windows {
   private val winFrameAgg: Q = (s, dir) => {
     val w = Window.partitionBy("user_id").orderBy(asc("ts"), asc("event_id"))
       .rowsBetween(-6, 0)
-    t(s, dir, "events")
+    Tables.load(s, dir, "events")
       .select(col("event_id"), col("user_id"),
         sum(col("value").cast("decimal(18,2)")).over(w).cast("double").as("mov_sum"),
         count(lit(1)).over(w).as("mov_n"))
@@ -98,7 +94,7 @@ object Windows {
     * identical formulas in both engines (SURVEY §2.5 ranking family). */
   private val winDistribution: Q = (s, dir) => {
     val w = Window.partitionBy("c_nationkey").orderBy(asc("c_acctbal"), asc("c_custkey"))
-    t(s, dir, "customer")
+    Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"),
         percent_rank().over(w).as("prank"),
         cume_dist().over(w).as("cdist"))

@@ -90,7 +90,7 @@ class BroadcastAuditSpec extends AnyFunSuite {
       "value-band histogram: bounded band domain",
     ("ops/Joins.scala", "buckets") ->
       "3-row literal interval table",
-    ("ops/Joins.scala", "t(s, dir, \"part\")") ->
+    ("ops/Joins.scala", "Tables.load(s, dir, \"part\")") ->
       "operator contract: join_broadcast_equi IS the broadcast-join demo (plan-asserted in JoinsSpec); a production caller sizes the dim",
     ("ops/LlmPipeline.scala", "q") ->
       "query row(s): single probe vector / its bucket cells",
@@ -176,9 +176,9 @@ class BroadcastAuditSpec extends AnyFunSuite {
       "query row(s): single probe vector / its bucket cells",
     ("ops/Wave26.scala", "byRegion") ->
       "per-region totals: 5-region catalog domain",
-            ("ops/Wave26.scala", "t(s, dir, \"nation\")") ->
+    ("ops/Wave26.scala", "Tables.load(s, dir, \"nation\")") ->
       "fixed catalog dim (nation/region <= 25 rows)",
-    ("ops/Wave26.scala", "t(s, dir, \"region\")") ->
+    ("ops/Wave26.scala", "Tables.load(s, dir, \"region\")") ->
       "fixed catalog dim (nation/region <= 25 rows)",
     ("ops/Wave26.scala", "total") ->
       "one-row scalar aggregate",

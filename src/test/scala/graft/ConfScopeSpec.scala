@@ -110,6 +110,26 @@ class ConfScopeSpec extends SparkSuite {
     assert(spark.conf.get(Width) === before)
   }
 
+  test("shufflePartitions from another thread reads the session's width, not a scope's") {
+    val session = spark.conf.get(Width).toInt
+    assert(session > 1, "the test session must be wider than the scope")
+    val read = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val reader = new Thread(() => read.set(ConfScope.shufflePartitions(spark)))
+    val inside = ConfScope.superstep(spark) { w =>
+      reader.start()
+      // hold the width-1 scope until the reader waits on the lock
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (reader.getState != Thread.State.BLOCKED && reader.isAlive &&
+        System.nanoTime() < deadline) Thread.sleep(1)
+      assert(reader.getState === Thread.State.BLOCKED,
+        "the reader did not wait for the scope")
+      (w, ConfScope.shufflePartitions(spark))
+    }
+    reader.join(60000)
+    assert(inside === ((1, 1)), "on the scope's own thread the read sees its width")
+    assert(read.get === session, "another thread took the scope's transient width")
+  }
+
   test("graph_reachability leaves the session's temp views as it found them") {
     // a fresh session: the shared one may hold views earlier suites left
     val s = spark.newSession()

@@ -257,13 +257,12 @@ class VersionedStoreSpec extends SparkSuite {
     store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "t")
     val t = new java.io.File(s"$root/t")
     // one leftover per crash point: a stage dir mid-write, a manifest
-    // temp that never linked, a pointer temp that never moved
+    // temp that never linked
     val stageDir = new java.io.File(t, "_stage_0123456789ab")
     stageDir.mkdirs()
     new java.io.File(stageDir, "part-00000.parquet").createNewFile()
     val leftovers = Seq(stageDir,
-      new java.io.File(t, "_v2-0123456789ab.manifest.tmp"),
-      new java.io.File(t, "_current-0123456789ab.tmp"))
+      new java.io.File(t, "_v2-0123456789ab.manifest.tmp"))
     leftovers.drop(1).foreach(_.createNewFile())
     val hourAgo = System.currentTimeMillis() - 3600L * 1000
     leftovers.foreach(_.setLastModified(hourAgo))
@@ -278,12 +277,11 @@ class VersionedStoreSpec extends SparkSuite {
     val store = new VersionedStore(root)
     store.write(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), "t")
     val t = new java.io.File(s"$root/t")
-    // fresh: a stage dir, a manifest temp and a pointer temp just made
+    // fresh: a stage dir and a manifest temp just made
     val fresh = new java.io.File(t, "_stage_0123456789ab")
     fresh.mkdirs()
     new java.io.File(fresh, "part-00000.parquet").createNewFile()
-    val temps = Seq(new java.io.File(t, "_v2-0123456789ab.manifest.tmp"),
-      new java.io.File(t, "_current-0123456789ab.tmp"))
+    val temps = Seq(new java.io.File(t, "_v2-0123456789ab.manifest.tmp"))
     temps.foreach(_.createNewFile())
     // a stage dir set up an hour ago whose write job is still running:
     // its task output under _temporary is fresh
@@ -1276,6 +1274,23 @@ class VersionedStoreSpec extends SparkSuite {
     val after = spark.sparkContext.getPersistentRDDs.keySet
     assert(added.forall(id => !after.contains(id)),
       s"checkpoint RDDs $added still registered after free")
+  }
+
+  test("manifest stats round-trip a numeric column whose name needs JSON escaping") {
+    val root = java.nio.file.Files.createTempDirectory("graft-versions").toString
+    val name = "k\"q\\z"  // a double quote and a backslash
+    val writer = new VersionedStore(root)
+    writer.write(Seq(1L, 5L, 3L).toDF(name), "t")
+    val mf = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "t", "v1.manifest")))
+    assert(mf.contains(",\"k\\\"q\\\\z\":[\""), s"escaped stats key expected in:\n$mf")
+    val reader = new VersionedStore(root)  // cold cache: parses from disk
+    val stats = reader.manifestWithStats("t", 1L)._2.map(_.stats)
+    assert(stats.nonEmpty && stats.forall(_.contains(name)))
+    assert(stats === writer.manifestWithStats("t", 1L)._2.map(_.stats))
+    assert(stats.map(_(name)._1.toLong).min === 1L)
+    assert(stats.map(_(name)._2.toLong).max === 5L)
+    assert(reader.read(spark, "t").filter(col(name) === 5L).count() === 1L)
   }
 
   test("manifest cache: a committing instance's parsed view is byte-equal " +

@@ -30,6 +30,7 @@ PLAN_SUITES=(
   graft.Wave26Spec           # sweep kernel + single-partition-exchange budget
   graft.Wave28Spec           # rfm triple-kernel plan contract
   graft.WindowAuditSpec      # r9: global-window registry (plan sweep + source lint)
+  graft.OpsLintSpec          # one owner each: Tables.load, tokenizer pair, shuffle width
 )
 
 if [[ "${1:-}" == "--full" ]]; then
