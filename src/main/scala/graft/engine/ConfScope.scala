@@ -1,8 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.graftx.Internals
+import org.apache.spark.storage.StorageLevel
 
 /** Mutually-exclusive session-conf override scope.
   *
@@ -27,6 +28,18 @@ import org.apache.spark.sql.graftx.Internals
   * session, a streaming tiny-merge writer included, blocks until that
   * query finishes. The monitor is reentrant,
   * so such bodies may nest [[superstep]] scopes.
+  *
+  * Superstep loops pin their input and every round's state through one
+  * entry point, [[pin]]:
+  *  - the pin is an eager `localCheckpoint` in serialized storage
+  *    (`MEMORY_AND_DISK_SER`), so a loop's state costs its bytes, not
+  *    one object per row;
+  *  - its rows are counted on the pin's own job, and the pinned frame
+  *    reports that measured row count (and a size derived from it) as
+  *    its statistics, not the optimizer's estimate, which multiplies
+  *    through every join of the earlier rounds;
+  *  - a pin that holds one partition reports `SinglePartition`, so the
+  *    single-partition joins of a width-1 superstep read it in place.
   */
 object ConfScope {
   private val lock = new Object
@@ -83,6 +96,16 @@ object ConfScope {
     * The width is passed to `body` for explicit `repartition(width, ...)`
     * layouts.
     *
+    * `spark.sql.maxSinglePartitionBytes` is `Long.MaxValue` in the scope.
+    * Spark re-shuffles a single-partition join input whose estimated size
+    * is above that bound (128 MiB by default) to gain parallelism, and a
+    * join's estimate multiplies its inputs', so a hop over a few thousand
+    * labels can be estimated far above it. Here the width is already
+    * sized from a measured row count, so at width 1 one partition is the
+    * intended layout; with the planner strategy
+    * `graftx.OnePartitionJoins` (which applies only under this setting) a
+    * chain of width-1 joins and aggregates runs without an exchange.
+    *
     * WHEN it is wrong: any data-sized pass (scan, join, explode, wide
     * groupBy). Such a pass must materialize eagerly BEFORE the scope, so
     * it runs under the session's AQE with skew mitigation: a loop over
@@ -96,18 +119,41 @@ object ConfScope {
     val width = math.max(1L, math.min(session, rows / rowsPerTask + 1L)).toInt
     withConf(s, Seq(
       "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.shuffle.partitions" -> width.toString))(body(width))
+      "spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.maxSinglePartitionBytes" -> Long.MaxValue.toString))(body(width))
+  }
+
+  /** A [[pin]]: the pinned frame, its row count, and the values of the
+    * metrics observed on the pin's job (`rows` included), by name. */
+  final case class Pinned(df: DataFrame, rows: Long, metrics: Map[String, Any])
+
+  /** The loop-state pin (the policy is in the object's Scaladoc): `df`
+    * checkpointed eagerly in serialized storage, with its row count and
+    * `metrics` observed on that one job. The pinned frame reports the
+    * measured statistics, and `SinglePartition` when it holds one
+    * partition. A metric must not be named `rows`.
+    *
+    * The pin truncates lineage, so it is freed only by
+    * `Internals.freeLocalCheckpoint` or when its RDD is collected. */
+  def pin(df: DataFrame, metrics: Column*): Pinned = {
+    val obs = Observation()
+    val checkpointed = df.observe(obs, count(lit(1)).as("rows"), metrics: _*)
+      .localCheckpoint(eager = true, StorageLevel.MEMORY_AND_DISK_SER)
+    val seen = obs.get
+    val rows = seen("rows").asInstanceOf[Long]
+    Pinned(Internals.measured(checkpointed, rows), rows, seen)
   }
 
   /** The loop-input policy: a [[superstep]] loop over one data-sized
     * `input`, in four steps.
-    *  1. `input` is pinned eagerly with `localCheckpoint`, under the
-    *     session conf, so AQE's skew handling stays available to the one
-    *     pass whose size follows the data.
+    *  1. `input` is [[pin]]ned under the session conf, so AQE's skew
+    *     handling stays available to the one pass whose size follows the
+    *     data.
     *  2. Its row count rides that same job as an observed metric, so the
     *     pin and the count are one Spark job. (`persist` plus a count is
     *     one more job, and `Dataset.count` adds a global-count shuffle.)
-    *  3. `body(pinned, rows, width)` runs in `superstep(s, rows)`.
+    *  3. `body(pinned, rows, width)` runs in `superstep(s, rows)`; every
+    *     round's state is pinned with [[pin]] too.
     *  4. The pin is freed when the scope exits, also when `body` throws.
     *     So `body` must return something that no longer reads `pinned`:
     *     a checkpoint, a frame over checkpoints, or a collected value.
@@ -117,11 +163,8 @@ object ConfScope {
     * its own state in the same way, so a lineage-keeping pin of the
     * input alone would not make the loop recoverable. */
   def superstepOver[A](input: DataFrame)(body: (DataFrame, Long, Int) => A): A = {
-    val obs = Observation()
-    val pinned = input.observe(obs, count(lit(1)).as("rows")).localCheckpoint()
-    try {
-      val rows = obs.get("rows").asInstanceOf[Long]
-      superstep(input.sparkSession, rows)(width => body(pinned, rows, width))
-    } finally Internals.freeLocalCheckpoint(pinned)
+    val p = pin(input)
+    try superstep(input.sparkSession, p.rows)(width => body(p.df, p.rows, width))
+    finally Internals.freeLocalCheckpoint(p.df)
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.LongType
 
-import org.apache.spark.sql.graftx.{CosineSim, DotF, LshBuckets, SimhashAgg, VecSumAgg, ZValue}
+import org.apache.spark.sql.graftx.{CosineSim, DotF, LshBuckets, OnePartitionJoins, SimhashAgg,
+  VecSumAgg, ZValue}
 
 /** SparkSessionExtensions registration for the engine's native
   * expressions, making them available to SQL text as `cosine_sim(a, b)`
@@ -35,6 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // opt-in banded range-join rewrite: abs(a-b) <= c theta joins become
     // hash equi-joins on a band key under spark.graft.bandedRangeJoin
     e.injectOptimizerRule(graft.plans.BandedRangeJoinRewrite)
+    // superstep scopes: shuffled joins of one-partition inputs report
+    // SinglePartition, so a chain of hops never re-shuffles at width 1
+    e.injectPlannerStrategy(OnePartitionJoins)
 
     e.injectFunction((
       FunctionIdentifier("cosine_sim"),

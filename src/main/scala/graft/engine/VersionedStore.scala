@@ -206,15 +206,17 @@ class VersionedStore(root: String) {
       .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
         new org.apache.hadoop.fs.Path(absPath(name, dv)))
       .withConf(spark.sessionState.newHadoopConf()).build()
+    try deadRows(Iterator.continually(reader.read()).takeWhile(_ != null)
+      .map(g => (g.getString("__file", 0), g.getLong("__pos", 0))))
+    finally reader.close()
+  }
+
+  /** Per-file dead sets of (data file, position) pairs. */
+  private def deadRows(hits: Iterator[(String, Long)]): DeadRows = {
     val sets = scala.collection.mutable.HashMap[String, Roaring64Bitmap]()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        sets.getOrElseUpdate(g.getString("__file", 0), new Roaring64Bitmap)
-          .addLong(g.getLong("__pos", 0))
-        g = reader.read()
-      }
-    } finally reader.close()
+    hits.foreach { case (file, pos) =>
+      sets.getOrElseUpdate(file, new Roaring64Bitmap).addLong(pos)
+    }
     sets.valuesIterator.foreach(_.runOptimize())
     sets.toMap
   }
@@ -972,30 +974,42 @@ class VersionedStore(root: String) {
     }
   }
 
-  /** Write a deletion-vector parquet into `files/`, returning its name.
-    * Its rows are (`__file` data-file name, `__pos` physical row index);
-    * positions are the parquet reader's stable `_metadata.row_index` —
-    * data files are immutable, so a position marked dead stays the same
-    * physical row forever. One output file: a DV is deleted-rows-sized by
-    * construction (the whole point of merge-on-read is that the delete
-    * is tiny next to the data), so a single columnar file is the right
-    * shape — the per-commit analog of Delta's per-file roaring bitmaps,
-    * carrying the same (file, position) information, which
-    * [[readVector]] turns back into per-file bitmaps. */
-  private def stageDv(hits: DataFrame, name: String): String = {
+  /** The vector file schema [[readVector]] parses: one row per dead row,
+    * (`__file` data-file name, `__pos` physical row index). */
+  private val DvSchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+    "message dv { required binary __file (STRING); required int64 __pos; }")
+
+  /** Write `dead` as a deletion-vector parquet into `files/`, returning
+    * its name. Positions are the parquet reader's stable
+    * `_metadata.row_index` — data files are immutable, so a position
+    * marked dead stays the same physical row forever. A vector is
+    * deleted-rows-sized by construction (the whole point of merge-on-read
+    * is that the delete is tiny next to the data), and the caller already
+    * holds it on the driver as per-file bitmaps, so the driver writes the
+    * one columnar file itself with parquet-mr, in file then position
+    * order: no Spark job. Like a data file it is written under a
+    * `_stage_*` dir and moved into `files/` whole. */
+  private def stageDv(spark: SparkSession, name: String, dead: DeadRows): String = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     val tok = newToken()
     val stageDir = new java.io.File(tdir(name), s"_stage_$tok")
-    // repartition, NOT coalesce: coalesce(1) would propagate up the
-    // narrow lineage and serialize the whole hit-detection scan onto one
-    // task; the shuffle boundary moves only the deleted-rows-sized
-    // (file, pos) output while the scan stays cluster-wide
-    hits.repartition(1).write.mode(SaveMode.Overwrite).parquet(stageDir.getAbsolutePath)
+    val staged = new java.io.File(stageDir, "dv.parquet")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(staged.getAbsolutePath))
+      .withConf(spark.sessionState.newHadoopConf())
+      .withType(DvSchema)
+      .build()
+    val rows = new SimpleGroupFactory(DvSchema)
+    try dead.toSeq.sortBy(_._1).foreach { case (file, positions) =>
+      val it = positions.getLongIterator
+      while (it.hasNext) writer.write(rows.newGroup().append("__file", file)
+        .append("__pos", it.next()))
+    } finally writer.close()
     val fd = filesDir(name)
     fd.mkdirs()
-    val part = stageDir.listFiles.toSeq
-      .filter(f => f.isFile && f.getName.endsWith(".parquet")).head
     val nm = s"dv-$tok.parquet"
-    java.nio.file.Files.move(part.toPath, new java.io.File(fd, nm).toPath,
+    java.nio.file.Files.move(staged.toPath, new java.io.File(fd, nm).toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     Fs.deleteRec(stageDir)
     nm
@@ -1009,11 +1023,13 @@ class VersionedStore(root: String) {
     * deletion-vector DELETE / Iceberg v2 position deletes: at 100 TB,
     * deleting 0.1% of rows scattered across every file would force
     * copy-on-write to rewrite the whole table, while merge-on-read writes
-    * kilobytes and touches no data file. The call reads its staged vector
-    * back once, on the driver, for both the hit files and the parsed-
-    * vector cache, so no later read pays a job to load it; [[optimize]]
-    * compacts the debt away (its rewrite reads through the vectors and
-    * stages clean files with no dv association).
+    * kilobytes and touches no data file. The call is one Spark job: the
+    * (file, position) hits are collected once, and the driver builds the
+    * per-file dead sets from them, writes the vector file from those sets
+    * ([[stageDv]]) and fills the parsed-vector cache with them, so no
+    * later read pays a job to load it; [[optimize]] compacts the debt
+    * away (its rewrite reads through the vectors and stages clean files
+    * with no dv association).
     *
     * Positions are computed on THIS snapshot's live view (already-dead
     * rows are excluded by the read path, though re-marking would be
@@ -1031,18 +1047,17 @@ class VersionedStore(root: String) {
     val cur = currentVersion(name).getOrElse(sys.error(s"no version for $name"))
     val (tSchema, entries) = manifestWithStats(name, cur)
     if (entries.isEmpty) return cur
-    val hits = readEntries(spark, name, tSchema, entries, withMeta = true)
+    // the one job: the hits, as per-file dead sets that give the hit
+    // files, the vector file's rows and, once committed, the cached sets
+    // every later read filters with
+    val dv = deadRows(readEntries(spark, name, tSchema, entries, withMeta = true)
       .filter(condition)
       .select(col("__file"), col("__pos"))
-    val dvFile = stageDv(hits, name)
-    // the one read of the staged vector gives the hit files and, once
-    // committed, the cached dead sets every later read filters with
-    val dv = readVector(spark, name, dvFile)
+      .collect().iterator
+      .map(r => (r.getString(0), r.getLong(1))))
     val hitFiles = dv.keySet
-    if (hitFiles.isEmpty) {
-      new java.io.File(absPath(name, dvFile)).delete()
-      return cur
-    }
+    if (hitFiles.isEmpty) return cur
+    val dvFile = stageDv(spark, name, dv)
     val v = commitLoop("deleteMor", name, Seq(dvFile)) { head =>
       val (headSchema, headEntries) = manifestWithStats(name, head)
       if (!hitFiles.subsetOf(headEntries.map(_.file).toSet) ||

@@ -112,7 +112,7 @@ object Bpe {
           merges += ((r, x, y, c))
           // localCheckpoint truncates the per-round HOF lineage so round
           // R's plan does not re-derive rounds 1..R-1
-          words = words.withColumn("syms", mergeExpr(x, y)).localCheckpoint()
+          words = graft.engine.ConfScope.pin(words.withColumn("syms", mergeExpr(x, y))).df
         }
       }
     }

@@ -45,13 +45,11 @@ object Wave3 {
     *    join of that layout against the label table, which is already
     *    hash-partitioned on the node at the same width (a checkpointed
     *    or aggregated label table), then one min-label aggregate. The
-    *    join reads both sides in place; only the aggregate shuffles. (At
-    *    width 1, below 65536 edges, the cached scan reports no hash
-    *    partitioning, so the second hop re-shuffles its join inputs: two
-    *    more single-task stages per superstep, over at most that many
-    *    rows.) The self-loop keeps a node's own label, so the label
-    *    table is read once per hop and the superstep plan is a chain,
-    *    not a DAG (plans/r12 holds the plan pair).
+    *    join reads both sides in place; only the aggregate shuffles, and
+    *    at width 1 nothing does: the superstep is one job of one stage
+    *    (plans/r14 holds the plan pair). The self-loop keeps a node's own
+    *    label, so the label table is read once per hop and the superstep
+    *    plan is a chain, not a DAG.
     *  - Labels are NODE-sized, so they are never broadcast: a broadcast
     *    collects all of them into one process and copies them to every
     *    executor, and under AQE each one was a job of its own.
@@ -62,8 +60,8 @@ object Wave3 {
     *  (warm, perfbench `iterative`; 21 with the persisted edge pin).
     *
     * Each superstep runs two hops and pins its state with
-    * localCheckpoint, truncating the lineage: a lazy loop stacks all
-    * rounds into one deep plan that re-runs every earlier round
+    * [[graft.engine.ConfScope.pin]], truncating the lineage: a lazy loop
+    * stacks all rounds into one deep plan that re-runs every earlier round
     * (measured 36 s at sf0.1), and persist+unpersist chains are no better
     * because Spark's non-cascading unpersist (SPARK-24596) marks the
     * dependent round's cache for rebuild (measured 55 s).
@@ -78,7 +76,7 @@ object Wave3 {
     * the decimal itself nulls out and the loop fails loudly rather than
     * faking convergence. */
   def connectedComponents(pairs: DataFrame): DataFrame =
-    graft.engine.ConfScope.superstepOver(
+    ConfScope.superstepOver(
         pairs.toDF("i", "j").select(expr("stack(2, i, j, j, i) AS (src, dst)"))) {
         (edges, ne, width) =>
       // every node is a src of the symmetric edge set, so this gives
@@ -94,13 +92,11 @@ object Wave3 {
         // silently compare equal across rounds and fake convergence; with
         // at least one edge the node set is non-empty, so its sum is set
         def ckptWithSum(l: DataFrame): (DataFrame, java.math.BigDecimal) = {
-          val obs = org.apache.spark.sql.Observation()
-          val out = l.observe(obs,
-            sum(col("lbl").cast("decimal(38,0)")).as("ls")).localCheckpoint()
-          val s = obs.get("ls").asInstanceOf[java.math.BigDecimal]
+          val p = ConfScope.pin(l, sum(col("lbl").cast("decimal(38,0)")).as("ls"))
+          val s = p.metrics("ls").asInstanceOf[java.math.BigDecimal]
           require(ne == 0L || s != null,
             "connectedComponents: label sum overflowed decimal(38,0)")
-          (out, s)
+          (p.df, s)
         }
         // the self-loops are the node set, each node labeled by itself
         var (lbl, prevSum) = ckptWithSum(bySrc.filter(col("src") === col("dst"))

@@ -94,18 +94,17 @@ object Wave47 {
         val q = df.withColumn("q",
           if (longSafe) signum(col(raw)).cast("long") * expr(s"abs($raw) div 1000")
           else signum(col(raw)).cast(DecimalType(38, 0)) * expr(s"abs($raw) div 1000"))
-        val obs = org.apache.spark.sql.Observation()
-        val pinned = q.observe(obs, sum(d38(col("q")) * d38(col("q"))).as("n2"))
-          .localCheckpoint()
+        val pinned = graft.engine.ConfScope.pin(q,
+          sum(d38(col("q")) * d38(col("q"))).as("n2"))
         // same arithmetic as the former n2-column path: decimal -> double
         // cast, then identical IEEE sqrt/divide/floor
-        val n2 = lit(obs.get("n2")).cast("double")
-        pinned.select(col(key),
+        val n2 = lit(pinned.metrics("n2")).cast("double")
+        pinned.df.select(col(key),
           floor(col("q").cast("double") * 1e9 / sqrt(n2) + 0.5)
             .cast("long").as("v"))
       }
-      var h = edgesByC.select(col("c")).distinct()
-        .withColumn("v", lit(1000000000L)).localCheckpoint()
+      var h = graft.engine.ConfScope.pin(edgesByC.select(col("c")).distinct()
+        .withColumn("v", lit(1000000000L))).df
       var a: DataFrame = null
       for (_ <- 1 to HitsIters) {
         val araw = edgesByC

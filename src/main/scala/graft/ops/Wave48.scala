@@ -56,15 +56,14 @@ object Wave48 {
         .filter(col("dc") >= K)
       val pDeg = edges.groupBy("p").agg(count(lit(1)).as("dp"))
         .filter(col("dp") >= K)
-      val obs = org.apache.spark.sql.Observation()
-      edges = edges
-        .join(cDeg.select("c"), Seq("c"), "left_semi")
-        .join(pDeg.select("p"), Seq("p"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val n = obs.get("n").asInstanceOf[Long]
-      converged = n == prevCount
-      prevCount = n
+      // shuffle-hashed, not broadcast: the degree tables are measured
+      // small, and in the superstep scope every broadcast is a job
+      val pinned = graft.engine.ConfScope.pin(edges
+        .join(cDeg.select("c").hint("shuffle_hash"), Seq("c"), "left_semi")
+        .join(pDeg.select("p").hint("shuffle_hash"), Seq("p"), "left_semi"))
+      edges = pinned.df
+      converged = pinned.rows == prevCount
+      prevCount = pinned.rows
     }
     val cOut = edges.groupBy("c").agg(count(lit(1)).as("degree"))
       .select(lit("customer").as("side"), col("c").as("id"), col("degree"))

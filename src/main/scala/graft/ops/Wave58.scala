@@ -143,25 +143,25 @@ object Wave58 {
             .cast("long"))
           .select("hiv", "lov", "sse_q")) { (seg, _, _) =>
       // dp_1 = whole prefix as one bucket
-      var dp = seg.filter(col("lov") === Long.MinValue)
-        .select(col("hiv").as("j"), col("sse_q").as("cost"))
-        .localCheckpoint()
+      var dp = graft.engine.ConfScope.pin(seg.filter(col("lov") === Long.MinValue)
+        .select(col("hiv").as("j"), col("sse_q").as("cost"))).df
       val last = vc.agg(max("v").as("j"))
       var out = dp.join(broadcast(last), "j")
         .select(lit(1).as("k"), col("cost"))
       for (k <- 2 to VoptMaxK) {
         val prev = dp.select(col("j").as("i"), col("cost").as("pc"))
-        dp = seg.filter(col("lov") =!= Long.MinValue)
-          .join(prev, col("i") === col("lov"))
+        // shuffle-hashed, not broadcast: dp is measured small, and in the
+        // superstep scope every broadcast is a job
+        dp = graft.engine.ConfScope.pin(seg.filter(col("lov") =!= Long.MinValue)
+          .join(prev.hint("shuffle_hash"), col("i") === col("lov"))
           .groupBy(col("hiv").as("j"))
           .agg(min(col("pc") + col("sse_q")).as("cost"))
           .union(dp.select(col("j"), col("cost")))
-          .groupBy("j").agg(min("cost").as("cost"))
-          .localCheckpoint()
+          .groupBy("j").agg(min("cost").as("cost"))).df
         out = out.union(dp.join(broadcast(last), "j")
           .select(lit(k).as("k"), col("cost")))
       }
-      out.localCheckpoint()
+      graft.engine.ConfScope.pin(out).df
     }
     outPinned.select(col("k"), col("cost").cast("double").as("sse"))
       .orderBy("k")

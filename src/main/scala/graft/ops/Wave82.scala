@@ -54,14 +54,14 @@ object Wave82 {
     for (_ <- 1 to 8 if !converged) {
       // the surviving-edge count rides the round's checkpoint job as an
       // observed metric (as in graph_kcore), not a separate count() job
-      val obs = org.apache.spark.sql.Observation()
-      lastSupported = edges.join(support(edges), Seq("u", "v"), "left")
-        .select(col("u"), col("v"),
-          coalesce(col("supp"), lit(0L)).as("supp"))
-        .observe(obs, count_if(col("supp") >= 2).as("n"))
-        .localCheckpoint()
+      val pinned = graft.engine.ConfScope.pin(
+        edges.join(support(edges), Seq("u", "v"), "left")
+          .select(col("u"), col("v"),
+            coalesce(col("supp"), lit(0L)).as("supp")),
+        count_if(col("supp") >= 2).as("n"))
+      lastSupported = pinned.df
       edges = lastSupported.filter(col("supp") >= 2).select("u", "v")
-      val n = obs.get("n").asInstanceOf[Long]
+      val n = pinned.metrics("n").asInstanceOf[Long]
       converged = n == prev
       prev = n
     }

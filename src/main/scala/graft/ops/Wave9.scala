@@ -389,7 +389,7 @@ object Wave9 {
       // other's edges), dropped once the pinned result no longer needs it
       val view = "graft_edges_" + java.util.UUID.randomUUID().toString.replace('-', '_')
       edges.createTempView(view)
-      try s.sql(
+      try graft.engine.ConfScope.pin(s.sql(
         s"""WITH RECURSIVE reach(node, hops) AS (
           |  SELECT 'click#0', 0
           |  UNION ALL
@@ -398,8 +398,7 @@ object Wave9 {
           |  WHERE r.hops < 3)
           |SELECT node, CAST(MIN(hops) AS INT) AS min_hops,
           |  CAST(COUNT(*) AS BIGINT) AS n_walks
-          |FROM reach GROUP BY node ORDER BY node""".stripMargin)
-        .localCheckpoint()
+          |FROM reach GROUP BY node ORDER BY node""".stripMargin)).df
       finally s.catalog.dropTempView(view)
     }
   }

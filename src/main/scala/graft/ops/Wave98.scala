@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.Q
-import graft.engine.Tables
+import graft.engine.{ConfScope, Tables}
 
 /** Round-9 wave 98: synchronous label propagation (the near-linear
   * community-detection workhorse — distinct from wave 3's min-label
@@ -29,47 +29,48 @@ object Wave98 {
     * PREVIOUS round's labels — deterministic, so both engines replay
     * the same [[LpaRounds]] supersteps (unrolled as MATERIALIZED CTEs
     * in the oracle; symmetric constant per the fixture-pin ledger).
-    * Scale shape: per round one join of the edge list against the
-    * node-sized label table keyed by supplier + one (node, label)
-    * aggregate. The join is chosen by the label table's size: under the
-    * broadcast threshold (at sf0.01 the checkpoint holds 100 rows) every
-    * round runs a one-task broadcast job for it, and the cached edge
-    * layout, partitioned by `s` rather than the join key `nb`, is read
-    * in place instead of shuffled again; above it, the edges re-shuffle
-    * each round. The superstep pins via localCheckpoint exactly like
-    * the wave-3/47 loops. Output: each node's community plus its size. */
+    * Output: each node's community plus its size. */
   private val graphLabelProp: Q = (s, dir) =>
     labelPropagation(SupplierGraph.pairWeights(s, dir))
 
-  /** Sync LPA over a weighted pair list (p1, p2, w). The undirected edge
-    * list (each pair both ways, 2·ne rows) is the loop input of
-    * [[graft.engine.ConfScope.superstepOver]]: the data-sized
-    * pair-weight aggregate behind it — the one skew-prone shuffle here —
-    * runs in that pin, under the session conf. The fixed-shape rounds run
-    * in the superstep scope, and the cached edge layout is released on
-    * every exit. */
+  /** Sync LPA over a weighted pair list (p1, p2, w), on the
+    * connected-components recipe ([[Wave3.connectedComponents]]):
+    *  - The undirected edge list (each pair both ways, 2·ne rows) is the
+    *    loop input of [[graft.engine.ConfScope.superstepOver]]: the
+    *    data-sized pair-weight aggregate behind it — the one skew-prone
+    *    shuffle here — runs in that pin, under the session conf.
+    *  - In the superstep scope the edges are cached keyed by the join key
+    *    `nb`, and a round is one SHUFFLE_HASH join of that layout against
+    *    the node-sized label table (never broadcast: under the hint no
+    *    round runs a broadcast job), one (node, label) weight aggregate
+    *    and the per-node pick, pinned with [[graft.engine.ConfScope.pin]].
+    *    At width 1 a round is one job of one stage.
+    *  - The community sizes and the supplier order are built on the last
+    *    pin inside the scope and pinned too, so the query's action reads
+    *    one pin in one job.
+    * The cached edge layout is released on every exit. */
   private[graft] def labelPropagation(e: DataFrame): DataFrame =
-    graft.engine.ConfScope.superstepOver(
+    ConfScope.superstepOver(
         e.select(expr("stack(2, p1, p2, w, p2, p1, w) AS (s, nb, w)"))) {
-        (edges, _, superParts) =>
-      val und = edges.repartition(superParts, col("s")).persist()
+        (edges, _, width) =>
+      val byNb = edges.repartition(width, col("nb")).persist()
       try {
-        var lab = und.select(col("s")).distinct()
-          .withColumn("lab", col("s")).localCheckpoint()
+        // the edge list is symmetric, so its nb values are the node set
+        var lab = ConfScope.pin(byNb.select(col("nb").as("s")).distinct()
+          .withColumn("lab", col("s"))).df
         for (_ <- 1 to LpaRounds) {
-          val votes = und
-            .join(lab.select(col("s").as("nb"), col("lab")), Seq("nb"))
+          val votes = byNb
+            .join(lab.select(col("s").as("nb"), col("lab")).hint("shuffle_hash"), Seq("nb"))
             .groupBy("s", "lab").agg(sum("w").as("sw"))
           val pick = Window.partitionBy("s").orderBy(desc("sw"), asc("lab"))
-          lab = votes.withColumn("rn", row_number().over(pick))
-            .filter(col("rn") === 1).select(col("s"), col("lab"))
-            .localCheckpoint()
+          lab = ConfScope.pin(votes.withColumn("rn", row_number().over(pick))
+            .filter(col("rn") === 1).select(col("s"), col("lab"))).df
         }
         val sizes = lab.groupBy("lab").agg(count(lit(1)).as("csize"))
-        lab.join(sizes, "lab")
+        ConfScope.pin(lab.join(sizes.hint("shuffle_hash"), "lab")
           .select(col("s").as("supplier"), col("lab").as("community"), col("csize"))
-          .orderBy("supplier")
-      } finally und.unpersist(false)
+          .orderBy("supplier")).df
+      } finally byNb.unpersist(false)
     }
 
   private val graphLabelPropOracle: String = {

@@ -223,6 +223,39 @@ class ConfScopeSpec extends SparkSuite {
     assert(warns.isEmpty, s"warnings logged around superstepOver: ${warns.toArray.mkString("; ")}")
   }
 
+  test("pin: a one-partition pin reports SinglePartition and its measured row count") {
+    import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
+    val p = ConfScope.pin(spark.range(0L, 1000L, 1L, 1).toDF())
+    assert(p.rows === 1000L)
+    assert(p.df.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(1000)))
+    assert(p.df.queryExecution.executedPlan.outputPartitioning === SinglePartition)
+    // a pin of several partitions keeps the partitioning it was built with
+    val wide = ConfScope.pin(spark.range(0L, 1000L, 1L, 3).toDF())
+    assert(wide.df.queryExecution.executedPlan.outputPartitioning.numPartitions === 3)
+    org.apache.spark.sql.graftx.Internals.freeLocalCheckpoint(p.df)
+    org.apache.spark.sql.graftx.Internals.freeLocalCheckpoint(wide.df)
+  }
+
+  test("pin: chained round pins report measured sizes, not compounded join estimates") {
+    import org.apache.spark.sql.functions.col
+    var cur = ConfScope.pin(spark.range(0L, 200L, 1L, 1)
+      .select(col("id").as("k"), (col("id") % 7L).as("v"))).df
+    for (_ <- 1 to 6) {
+      cur = ConfScope.pin(cur.as("a").join(cur.as("b"), col("a.k") === col("b.k"))
+        .select(col("a.k").as("k"), ((col("a.v") + col("b.v")) % 7L).as("v"))).df
+    }
+    val stats = cur.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount === Some(BigInt(200)))
+    // 200 rows of (8-byte row header + two longs)
+    assert(stats.sizeInBytes === BigInt(200 * 24))
+  }
+
+  test("superstep: single partitions are never re-shuffled for parallelism") {
+    assert(ConfScope.superstep(spark) { _ =>
+      spark.conf.get("spark.sql.maxSinglePartitionBytes")
+    } === Long.MaxValue.toString)
+  }
+
   test("superstepOver: an empty input gives rows 0 and width 1, and the body runs") {
     import spark.implicits._
     for (empty <- Seq(Seq.empty[Long].toDF("v"), spark.range(10L).filter("id < 0").toDF())) {

@@ -1081,6 +1081,24 @@ class VersionedStoreSpec extends SparkSuite {
     assert(coldJobs === 1)
   }
 
+  test("deleteMor runs one Spark job: the hits' collect") {
+    val store = freshStore()
+    twoFileBase(store)
+    // the driver writes the vector file from the collected hits, so no
+    // shuffle into one task and no write job follow the hit scan
+    val (v, jobs) = withJobCount(store.deleteMor(spark, "t", $"k" >= 50L && $"k" <= 149L))
+    assert(v === 2L)
+    assert(jobs === 1)
+    assert(store.read(spark, "t").count() === 100L)
+    // the vector file parses back to the same dead rows on a cold instance
+    val cold = new VersionedStore(storeRoot(store))
+    assert(cold.read(spark, "t").collect().map(_.getLong(0)).toSet ===
+      ((0L to 49L) ++ (150L to 199L)).toSet)
+    // no hit: no vector file and no commit
+    val (same, missJobs) = withJobCount(store.deleteMor(spark, "t", $"k" === 100000L))
+    assert(same === 2L && missJobs === 1)
+  }
+
   test("the deletion-vector read plans no broadcast and no anti-join") {
     import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike

@@ -58,6 +58,34 @@ class Wave3Spec extends SparkSuite {
     assert(comp.count() === 14L)
   }
 
+  test("a width-1 connectedComponents superstep plans no exchange") {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val pins = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (f == "localCheckpoint") pins.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // 26 edges: width 1
+      assert(Wave3.connectedComponents(chainPairs).count() === 14L)
+      org.apache.spark.graftspec.Bus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // a superstep pin joins twice; the cached edge layout's own exchange
+    // sits inside its InMemoryRelation, so it is not collected here
+    val supersteps = pins.toArray(Array.empty[SparkPlan])
+      .filter(_.collect { case j: ShuffledHashJoinExec => j }.size == 2)
+    assert(supersteps.length === 7)
+    supersteps.foreach { p =>
+      assert(p.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"a one-partition hop re-shuffled:\n$p")
+    }
+  }
+
   test("connectedComponents leaves no cached frame behind") {
     import spark.implicits._
     val sc = spark.sparkContext

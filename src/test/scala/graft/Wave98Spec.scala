@@ -67,6 +67,43 @@ class Wave98Spec extends SparkSuite {
       s"pair sets diverge: extra=${got -- expect} missing=${expect -- got}")
   }
 
+  /** `body`'s result and the number of Spark jobs it launched, counted on
+    * a job group of its own once the listener bus has drained. */
+  private def withJobCount[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"wave98spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    org.apache.spark.graftspec.Bus.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "labelPropagation job budget")
+    try {
+      val out = body
+      org.apache.spark.graftspec.Bus.drain(sc)
+      (out, jobs.get)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+  }
+
+  test("graph_label_prop runs one job per round") {
+    import spark.implicits._
+    // the pair weights as a local frame, so only the kernel's jobs count
+    val pw = graft.ops.SupplierGraph.pairWeights(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      .toSeq.toDF("p1", "p2", "w")
+    val (rows, jobs) = withJobCount(graft.ops.Wave98.labelPropagation(pw).collect())
+    assert(rows.nonEmpty)
+    // 6 rounds; the rest is the input pin, the initial label table, the
+    // sized and ordered result's pin and the action that reads it. No
+    // round broadcasts its label table, and the action is not an AQE
+    // sort of its own
+    val rounds = 6
+    assert(jobs <= rounds + 4, s"$jobs jobs for $rounds rounds")
+  }
+
   test("graph_label_prop leaves no cached frame behind") {
     import spark.implicits._
     val q = SparkEntry.queries("graph_label_prop")

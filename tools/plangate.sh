@@ -31,6 +31,8 @@ PLAN_SUITES=(
   graft.Wave28Spec           # rfm triple-kernel plan contract
   graft.WindowAuditSpec      # r9: global-window registry (plan sweep + source lint)
   graft.OpsLintSpec          # one owner each: Tables.load, tokenizer pair, shuffle width
+  graft.Wave3Spec            # CC superstep: one job per superstep, no width-1 exchange
+  graft.Wave98Spec           # LPA: one job per round, no cached frame left behind
 )
 
 if [[ "${1:-}" == "--full" ]]; then
